@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE (byte-pair-encoding) vocabulary training — the
   * Sennrich-style merge learner every tokenizer build starts from,
@@ -10,18 +15,22 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): one corpus-sized shuffle builds the word
   * frequency table (map-side partial counts into a Heaps-law-bounded
-  * vocabulary, orders of magnitude smaller than the corpus); every
-  * merge iteration after that is (a) one hash aggregate over the
-  * vocab table for adjacent-pair counts, (b) a 1-row argmax collect,
-  * (c) a map-only fold rewriting each word's symbol array. Driver
-  * state is the merge list — O(nMerges). Lineage is truncated per
-  * iteration ([[graft.util.Caches.snapshot]]) so the loop's plan
-  * stays constant-size.
+  * vocabulary, orders of magnitude smaller than the corpus). The merge
+  * loop then runs over a cached RDD of (word, freq, symbols), ONE
+  * Spark job per merge: the map side folds the previous merge into
+  * each word ([[fold]]) and emits its adjacent pairs, which
+  * `reduceByKey` combines per map partition in a hash map and sums
+  * into `parts` partitions, each of which keeps only its local best; the driver collects at most
+  * `parts` candidates and picks the exact global argmax. No pair table
+  * ever reaches the driver — its state is O(nMerges + parts). Lineage
+  * is truncated every iteration by the rule of
+  * [[graft.util.Caches.snapshot]] and each superseded state released,
+  * so the loop's plan and its cache footprint stay constant-size.
   *
   * Determinism: argmax ties break (count DESC, left ASC, right ASC)
-  * on binary string order; the merge fold is the standard leftmost
-  * non-overlapping rewrite (an "aaa" with pair (a,a) folds to
-  * ["aa","a"]), exact by construction.
+  * in Spark's UTF-8 byte order ([[Utf8Order]]); the merge fold is the
+  * standard leftmost non-overlapping rewrite (an "aaa" with pair (a,a)
+  * folds to ["aa","a"]), exact by construction.
   */
 object TextBpe {
 
@@ -57,17 +66,31 @@ object TextBpe {
       .agg(sum(col("freq")).as("cnt"))
   }
 
-  /** Leftmost non-overlapping rewrite of (l, r) -> l+r in every
-    * word's symbol array — a single codegen'd fold, no shuffle. */
-  def applyMerge(wordSyms: DataFrame, l: String, r: String): DataFrame =
-    wordSyms.withColumn("syms",
-      aggregate(col("syms"),
-        array().cast("array<string>"),
-        (acc, s) =>
-          when(size(acc) > 0 &&
-              element_at(acc, -1) === lit(l) && s === lit(r),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-            .otherwise(concat(acc, array(s)))))
+  /** Leftmost non-overlapping rewrite of (l, r) -> l+r in one word's
+    * symbol array — the fold both the trainer and [[encodeWords]]
+    * apply. */
+  def fold(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = new mutable.ArrayBuilder.ofRef[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+        out += l + r; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
+  }
+
+  /** Spark's string order (`UTF8String.binaryCompare`: unsigned UTF-8
+    * bytes, i.e. code points) — NOT `String.compareTo`, whose UTF-16
+    * code units put supplementary-plane characters before U+E000. */
+  private val Utf8Order: Ordering[String] = (a: String, b: String) =>
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** Argmax order over (l, r, cnt) candidates: cnt DESC, l ASC, r ASC. */
+  private val Rank: Ordering[(String, String, Long)] =
+    Ordering.by[(String, String, Long), Long](t => -t._3)
+      .orElse(Ordering.by[(String, String, Long), String](_._1)(Utf8Order))
+      .orElse(Ordering.by[(String, String, Long), String](_._2)(Utf8Order))
 
   /** Target vocab rows per partition for the merge loop. The vocab
     * table is Heaps-law-bounded (≈√corpus): at test scale it fits one
@@ -76,29 +99,19 @@ object TextBpe {
     * ~100M-word vocab still spreads over ~200 partitions. */
   val RowsPerPartition: Long = 500000L
 
-  /** Merge-fold iterations between lineage truncations: re-running a
-    * ≤4-deep fold chain per pair count is cheaper than a checkpoint
-    * job per merge, and the analyzed plan stays constant-bounded. */
-  val SnapshotEvery: Int = 4
-
   /** Apply a learned merge list to the corpus vocabulary: the
     * distinct-word table with each word's final symbol array, token
     * count and space-joined tokenization. This is how BPE encodes at
     * corpus scale — tokenize the Heaps-bounded vocab once, then
     * join-back to the token stream by word; never fold per token
-    * occurrence. Same lineage-truncation cadence as the trainer. */
+    * occurrence. Every merge is applied in ONE map pass. */
   def encodeWords(docs: DataFrame, merges: Seq[Merge],
       textCol: String = "text"): DataFrame = {
-    var ws = graft.util.Caches.snapshot(wordSymbols(docs, textCol))
-    var since = 0
-    merges.foreach { m =>
-      ws = applyMerge(ws, m.l_sym, m.r_sym)
-      since += 1
-      if (since >= SnapshotEvery) {
-        ws = graft.util.Caches.snapshot(ws); since = 0
-      }
-    }
-    decorate(ws)
+    val foldAll = udf((syms: Seq[String]) =>
+      merges.foldLeft(syms.toArray)((s, m) => fold(s, m.l_sym, m.r_sym))
+        .toSeq)
+    decorate(wordSymbols(docs, textCol)
+      .withColumn("syms", foldAll(col("syms"))))
   }
 
   /** Learn `nMerges` merges. Returns (merge table, initial pair-count
@@ -108,48 +121,90 @@ object TextBpe {
     * the pair table drains. */
   def train(docs: DataFrame, nMerges: Int, textCol: String = "text")
       : (Seq[Merge], DataFrame) = {
-    val (merges, init, _) = trainFull(docs, nMerges, textCol)
-    (merges, init)
+    val t = trainFull(docs, nMerges, textCol)
+    t.release()
+    (t.merges, pairCounts(wordSymbols(docs, textCol)))
   }
 
-  /** [[train]] plus the trainer's FINAL folded vocabulary — the
-    * encode path reuses it instead of re-folding every merge over
-    * the vocab from scratch (measured: halves llm_bpe_encode). */
+  /** A trained model: the merge list, the initial (pre-merge) pair
+    * count of every learned pair whose two sides are initial symbols,
+    * and the FINAL folded vocabulary (word, freq, syms) — which the
+    * encode path reuses instead of re-folding the vocab from scratch.
+    * `vocab` reads the trainer's last cached state: consume it before
+    * `release()`. */
+  final case class Trained(merges: Seq[Merge],
+      initCounts: Map[(String, String), Long], vocab: DataFrame,
+      release: () => Unit)
+
+  private type State = RDD[(String, Long, Array[String])]
+
+  /** The merge loop — see the object doc for its job shape. */
   def trainFull(docs: DataFrame, nMerges: Int, textCol: String = "text")
-      : (Seq[Merge], DataFrame, DataFrame) = {
-    var ws = graft.util.Caches.snapshot(wordSymbols(docs, textCol))
-    // one count on the checkpointed table sizes the loop's layout
-    val vocabRows = ws.count()
-    val parts = math.max(1L, math.min(ws.rdd.getNumPartitions.toLong,
+      : Trained = {
+    val sc = docs.sparkSession.sparkContext
+    val symbols: State = wordSymbols(docs, textCol)
+      .select(col("word"), col("freq"), col("syms")).rdd
+      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
+    val first = graft.util.Caches.snapshotRdd(symbols)
+    // one count materializes the first state and sizes the loop's layout
+    val vocabRows = first.count()
+    val parts = math.max(1L, math.min(first.getNumPartitions.toLong,
       vocabRows / RowsPerPartition + 1)).toInt
-    if (parts < ws.rdd.getNumPartitions)
-      ws = graft.util.Caches.snapshot(ws.coalesce(parts))
-    var init: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var rank = 1
-    var sinceSnapshot = 0
+    val base = if (parts < first.getNumPartitions) first.coalesce(parts)
+      else first
+    // `base` may be a coalesced view: its blocks are `first`'s
+    def release(s: State): Unit =
+      (if (s eq base) first else s).unpersist(blocking = false)
+    def folded(s: State, l: String, r: String): State =
+      s.map { case (w, f, syms) => (w, f, fold(syms, l, r)) }
+    val merges = mutable.ArrayBuffer.empty[Merge]
+    var state: State = base
+    var pending: Option[(String, String)] = None
     var drained = false
-    while (rank <= nMerges && !drained) {
-      val pc = pairCounts(ws)
-      if (rank == 1) { init = graft.util.Caches.materialize(pc) }
-      val top = (if (rank == 1) init else pc)
-        .orderBy(col("cnt").desc, col("l"), col("r")).limit(1).collect()
-      if (top.isEmpty) drained = true
-      else {
-        val l = top(0).getString(0)
-        val r = top(0).getString(1)
-        merges += Merge(rank, l, r, l + r, top(0).getLong(2))
-        ws = applyMerge(ws, l, r)
-        sinceSnapshot += 1
-        if (sinceSnapshot >= SnapshotEvery) {
-          ws = graft.util.Caches.snapshot(ws)
-          sinceSnapshot = 0
-        }
-        rank += 1
+    while (merges.size < nMerges && !drained) {
+      val cur = pending match {
+        case Some((l, r)) => graft.util.Caches.snapshotRdd(folded(state, l, r))
+        case None => state
+      }
+      val best = pairTotals(cur, parts, _ => true)
+        .mapPartitions(it => it.map { case ((l, r), c) => (l, r, c) }
+          .minOption(Rank).iterator)
+        .collect().minOption(Rank)
+      // `cur` is materialized now; its predecessor is superseded
+      if (cur ne state) { if (state ne base) release(state); state = cur }
+      best match {
+        case Some((l, r, c)) =>
+          merges += Merge(merges.size + 1, l, r, l + r, c)
+          pending = Some((l, r))
+        case None =>
+          drained = true; pending = None
       }
     }
-    (merges.toSeq, init, ws)
+    val wanted = sc.broadcast(merges.map(m => (m.l_sym, m.r_sym)).toSet)
+    val initCounts = pairTotals(base, parts, p => wanted.value.contains(p))
+      .collect().toMap
+    wanted.destroy()
+    if (state ne base) release(base)
+    val last = pending match {
+      case Some((l, r)) => folded(state, l, r)
+      case None => state
+    }
+    val vocab = docs.sparkSession.createDataFrame(
+      last.map { case (w, f, s) => Row(w, f, s.toSeq) },
+      StructType(Seq(StructField("word", StringType),
+        StructField("freq", LongType, nullable = false),
+        StructField("syms", ArrayType(StringType, containsNull = false)))))
+    Trained(merges.toSeq, initCounts, vocab, () => release(state))
   }
+
+  /** Frequency-weighted adjacent-pair totals of `state` over the pairs
+    * `keep` admits, summed into `parts` reduce partitions
+    * (`reduceByKey` first combines each map partition in a hash map). */
+  private def pairTotals(state: State, parts: Int,
+      keep: ((String, String)) => Boolean): RDD[((String, String), Long)] =
+    state.flatMap { case (_, f, s) =>
+      s.iterator.zip(s.iterator.drop(1)).filter(keep).map(_ -> f)
+    }.reduceByKey(_ + _, parts)
 
   /** Decorate a folded vocabulary (word, freq, syms) with token count
     * and the space-joined tokenization. */

@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 object Caches {
@@ -62,4 +63,15 @@ object Caches {
       else df.localCheckpoint(true)
     org.apache.spark.sql.GraftBridge.capLeafStats(chk, BigInt(2).pow(50))
   }
+
+  /** [[snapshot]]'s rule for an RDD, applied lazily: the next job over
+    * `rdd` materializes it — no job of its own without a checkpoint
+    * dir — and truncates its lineage when it finishes. For iterative
+    * RDD kernels whose every iteration is already one job. */
+  def snapshotRdd[T](rdd: RDD[T]): RDD[T] =
+    if (rdd.sparkContext.getCheckpointDir.isDefined) {
+      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+      rdd
+    } else rdd.localCheckpoint()
 }

@@ -67,8 +67,14 @@ object FrameMemo {
     * and writing it on first use. Column order/types round-trip
     * through parquet unchanged. */
   def cached(s: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame =
+    cached(s, dir, name, dirFingerprint(dir))(build)
+
+  /** [[cached]] under a fingerprint the caller already computed, so a
+    * caller keying its own state by the same fingerprint cannot see a
+    * different dir version than the memo. */
+  def cached(s: SparkSession, dir: String, name: String, fp: String)
       (build: => DataFrame): DataFrame = {
-    val fp = dirFingerprint(dir)
     val path = memo.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, fp, name), {
         val key = java.util.UUID.nameUUIDFromBytes(

@@ -105,17 +105,17 @@ object Round9Props extends Properties("Round9") {
       Prop(m1 == m2 && monotone) :| s"merges=$m1"
     }
 
-  property("BPE applyMerge preserves concatenated word content") =
+  property("BPE fold preserves concatenated word content") =
     forAll(corpusGen) { texts =>
       import spark.implicits._
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      var ws = TextBpe.wordSymbols(docs)
       val (merges, _) = TextBpe.train(docs, 4)
-      merges.foreach(m => ws = TextBpe.applyMerge(ws, m.l_sym, m.r_sym))
-      val ok = ws.select(col("word"), concat_ws("", col("syms")).as("j"))
-        .collect()
-        .forall(r => r.getString(1) == r.getString(0) + TextBpe.EndToken)
+      val ok = TextBpe.wordSymbols(docs).collect().forall { r =>
+        val folded = merges.foldLeft(r.getSeq[String](2).toArray)(
+          (s, m) => TextBpe.fold(s, m.l_sym, m.r_sym))
+        folded.mkString == r.getString(0) + TextBpe.EndToken
+      }
       Prop(ok)
     }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.operators.TextBpe
 
@@ -41,14 +43,18 @@ class TextBpeSpec extends AnyFunSuite {
     assert(ip(("w", "</w>")) == 5L)
   }
 
-  test("applyMerge is leftmost non-overlapping") {
-    import spark.implicits._
-    val ws = Seq(("aaa", 1L)).toDF("word", "freq")
-      .withColumn("syms",
-        concat(split(col("word"), ""), array(lit(TextBpe.EndToken))))
-    val folded = TextBpe.applyMerge(ws, "a", "a")
-      .select("syms").head().getSeq[String](0)
-    assert(folded == Seq("aa", "a", TextBpe.EndToken))
+  test("fold is leftmost non-overlapping") {
+    val folded = TextBpe.fold(Array("a", "a", "a", TextBpe.EndToken), "a", "a")
+    assert(folded.toSeq == Seq("aa", "a", TextBpe.EndToken))
+  }
+
+  test("ties break in UTF-8 byte order, not UTF-16") {
+    // both pairs count 1: U+E000 is EE 80 80 in UTF-8 and sorts before
+    // U+1F600 (F0 ...), whose UTF-16 lead surrogate D83D sorts first
+    val emoji = new String(Character.toChars(0x1f600))
+    val (merges, _) = TextBpe.train(docsOf(s"$emoji \ue000"), 1)
+    assert(merges.map(m => (m.l_sym, m.r_sym, m.pair_count)) ==
+      Seq(("\ue000", TextBpe.EndToken, 1L)))
   }
 
   test("aaa corpus: second merge sees the folded symbols") {
@@ -80,5 +86,41 @@ class TextBpeSpec extends AnyFunSuite {
     val (merges, _) = TextBpe.train(docsOf("x x"), 5)
     assert(merges.map(m => (m.l_sym, m.r_sym, m.pair_count)) ==
       Seq(("x", TextBpe.EndToken, 2L)))
+  }
+
+  test("train runs at most one Spark job per merge plus four") {
+    // job counts are deterministic where wall time is not: this pins
+    // the one-job-per-merge shape of the merge loop
+    val docs = docsOf(
+      "low low low low low",
+      "lower lower",
+      "newest newest newest newest newest newest",
+      "widest widest widest")
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val marker = "textbpe-job-count-marker"
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.job.description") == marker)
+          markerSeen = true
+        else jobs.incrementAndGet()
+    }
+    val n = 8
+    sc.addSparkListener(listener)
+    try {
+      val (merges, _) = TextBpe.train(docs, n)
+      assert(merges.size == n)
+      // listener delivery is async but ordered: once the marker job is
+      // seen, every job the trainer started has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "the marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= n + 4, s"train($n) ran ${jobs.get} jobs")
   }
 }
