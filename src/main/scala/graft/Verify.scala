@@ -6,6 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run and its
+    // oracle_sql.json to those entries (a recorded verify leaves it
+    // unset and covers all). A name that is no entry refuses before
+    // any work: it would otherwise vanish silently.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no registry entry: " +
+      unknown.toSeq.sorted.mkString(", "))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,10 +32,6 @@ object Verify {
     // silently vanishing from the correctness file (round-6 lesson:
     // 5 breakages read as "fewer queries").
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run (the
-    // driver never sets it, so the recorded verify always covers all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -61,7 +66,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.iterator
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors

@@ -1998,10 +1998,10 @@ object SystemQueries {
     val t = SyntheticTrades.trades(s, dir)
       .select(col("trade_id").cast("long").as("tid"), col("underlying"),
         col("amount"), date_format(col("timestamp"), "yyyyMM").as("month"))
-    SnapshotStore.commitAppendPartitioned(
-      t.filter(col("tid") % 2 === 0), root, Seq("month"))
-    SnapshotStore.commitAppendPartitioned(
-      t.filter(col("tid") % 2 === 1), root, Seq("month", "underlying"))
+    SnapshotStore.commitAppend(
+      t.filter(col("tid") % 2 === 0), root, spec = Seq("month"))
+    SnapshotStore.commitAppend(
+      t.filter(col("tid") % 2 === 1), root, spec = Seq("month", "underlying"))
     SnapshotStore.readEvolved(s, root)
       .groupBy(col("month"), col("underlying"))
       .agg(count(lit(1)).as("n_rows"), dsum(col("amount")).as("amount_sum"))
@@ -2190,9 +2190,9 @@ object SystemQueries {
     SnapshotStore.commitAppendWithStats(
       t.filter(col("tid") % 2 === 0).select(col("tid"), col("amount")),
       root, "tid", nFiles)
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       t.filter(col("tid") % 2 === 1).repartition(4, col("month")),
-      root, Seq("month"))
+      root, spec = Seq("month"))
     BloomIndex.build(s, root, "tid")
     val hi = maxTid / 4
     val rangePlan = SnapshotRead.plan(s, root, range = Some(("tid", 0L, hi)))
@@ -2551,9 +2551,9 @@ object SystemQueries {
       SnapshotStore.commitAppendWithStats(
         t.filter(col("tid") % 2 === 0).select(col("tid"), col("amount")),
         root, "tid", nFiles)
-      SnapshotStore.commitAppendPartitioned(
+      SnapshotStore.commitAppend(
         t.filter(col("tid") % 2 === 1).repartition(4, col("shard")),
-        root, Seq("shard"))
+        root, spec = Seq("shard"))
       BloomIndex.build(s, root, "tid")
     }
     s.conf.set("spark.sql.catalog.graft_snap",
@@ -2898,9 +2898,9 @@ object SystemQueries {
       SnapshotStore.commitAppendWithStats(
         t.filter(col("tid") % 2 === 0 && col("tid") % 10 =!= 0)
           .select(col("tid"), col("amount")), root, "tid", nFiles)
-      SnapshotStore.commitAppendPartitioned(
+      SnapshotStore.commitAppend(
         t.filter(col("tid") % 2 === 1).repartition(4, col("shard")),
-        root, Seq("shard"))
+        root, spec = Seq("shard"))
       s.conf.set("spark.sql.catalog.graft_snap",
         classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graft_snap.warehouse", catalogWarehouse)
@@ -3109,8 +3109,8 @@ object SystemQueries {
     * file stats-skipped) can only hold if the INSERT's files carry
     * bounds — pinned through BOTH faces (Scala ledger + SQL
     * planned-file count). Round18bSpec pins exact per-commit sidecar
-    * line counts and the conservative legacy (`freshStats = false`)
-    * path. */
+    * line counts and the conservative path for a file that lacks the
+    * indexed column. */
   def s46AppendStats(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{SnapshotRead, SnapshotStore}
     val root = s"$catalogWarehouse/trades_as"

@@ -36,18 +36,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * `VERSION AS OF` string resolves as a TAG name — the natural SQL
   * spelling for pinned snapshots.
   *
-  * DML routes THROUGH the commit API, never around it: INSERT INTO
-  * is a [[SnapshotStore.commitAppend]], INSERT OVERWRITE a
-  * [[SnapshotStore.commitReplace]], DELETE FROM the copy-on-write
-  * [[SnapshotStore.deleteRows]], CREATE TABLE an empty pinned-schema
-  * manifest ([[SnapshotDml]]) — the CAS publish stays the single
-  * serialization point, committed files stay immutable, and every
-  * prior version keeps reading its exact files. Maintenance is the
-  * `CALL system.*` procedures; ALTER TABLE ADD COLUMN is a
-  * metadata-only schema-widening commit; DROP/RENAME and every
-  * non-additive ALTER still refuse (destroying or re-rooting a
-  * versioned store is a deliberate out-of-band act, not a statement
-  * to run by accident). */
+  * DML routes THROUGH the store's one commit path, never around it:
+  * INSERT INTO is a [[SnapshotStore.commitAppend]] and INSERT
+  * OVERWRITE a [[SnapshotStore.commitReplace]] (both under the
+  * table's default spec, [[SnapshotDml]]), `writeStream.toTable` the
+  * staged append/replace commits ([[SnapshotStreaming]]), UPDATE,
+  * MERGE INTO and subquery DELETEs the staged replace
+  * ([[SnapshotRowLevel]]), DELETE FROM the copy-on-write
+  * [[SnapshotStore.deleteRows]], CREATE TABLE
+  * [[SnapshotStore.createEmpty]] and ALTER TABLE ADD COLUMN the
+  * metadata-only [[SnapshotStore.addColumns]]; the `CALL system.*`
+  * procedures reach compaction, re-indexing, `set_spec` and
+  * `merge_rows`. Each is a caller of the same core, so the CAS
+  * publish stays the single serialization point, the writer-token
+  * check and header carry rule apply to every kind, committed files
+  * stay immutable, and every prior version keeps reading its exact
+  * files. DROP/RENAME and every non-additive ALTER still refuse
+  * (destroying or re-rooting a versioned store is a deliberate
+  * out-of-band act, not a statement to run by accident). */
 class GraftCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
 

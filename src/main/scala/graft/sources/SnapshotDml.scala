@@ -9,11 +9,12 @@ import org.apache.spark.sql.sources.InsertableRelation
 
 /** SQL DML for the snapshot store — the write half of the catalog
   * face. `INSERT INTO` / `INSERT OVERWRITE` / `DELETE FROM` route
-  * THROUGH the same CAS commit primitives as the Scala API, never
-  * around them: an insert is a [[SnapshotStore.commitAppend]] (new
-  * data directory + manifest published via the atomic hard-link
-  * race), an overwrite is a [[SnapshotStore.commitReplace]], a delete
-  * is the copy-on-write [[SnapshotStore.deleteRows]]. Committed data
+  * THROUGH the store's one commit path, never around it: an insert is
+  * a [[SnapshotStore.commitAppend]] (new data directory + manifest
+  * published via the atomic hard-link race), an overwrite is a
+  * [[SnapshotStore.commitReplace]] — each one call under the table's
+  * default spec — and a delete is the copy-on-write
+  * [[SnapshotStore.deleteRows]]. Committed data
   * files are still never mutated, every prior version keeps reading
   * its exact files, and two racing SQL writers resolve exactly like
   * two racing Scala committers (one wins the manifest link, the loser
@@ -69,17 +70,10 @@ private[graft] object SnapshotDml {
             // the table's DEFAULT spec (CREATE ... PARTITIONED BY /
             // CALL system.set_spec) applies to THIS write only —
             // committed layouts never rewrite (Iceberg spec evolution)
-            val spec = SnapshotStore.currentSpec(root)
-            (overwrite || ov, spec.isEmpty) match {
-              case (true, true) =>
-                SnapshotStore.commitReplace(data, root, token)
-              case (true, false) =>
-                SnapshotStore.commitReplacePartitioned(data, root, spec, token)
-              case (false, true) =>
-                SnapshotStore.commitAppend(data, root, token)
-              case (false, false) =>
-                SnapshotStore.commitAppendPartitioned(data, root, spec, token)
-            }
+            val commit =
+              if (overwrite || ov) SnapshotStore.commitReplace _
+              else SnapshotStore.commitAppend _
+            commit(data, root, token, SnapshotStore.currentSpec(root))
             ()
           }
         }

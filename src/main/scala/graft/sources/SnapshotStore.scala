@@ -4,8 +4,11 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max, max_by, min, not, struct, unix_micros}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Manifest-based snapshot isolation over plain parquet — the
   * time-travel core of a lakehouse table format (Delta/Iceberg's
@@ -25,13 +28,21 @@ import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max,
   *    (replace-commit of the same logical rows) changes no reader's
   *    result at any version.
   *
-  * Commit kinds: [[commitAppend]] (new manifest = previous files +
-  * the new write's files) and [[commitReplace]] (new manifest = only
-  * the new write's files — full-table rewrite/compaction). At 100 TB
-  * the manifest is file-count-sized (KBs per commit), the data path
-  * is ordinary distributed parquet IO, and version resolution is
-  * driver-side metadata — the same asymmetry the real table formats
-  * rely on.
+  * One commit path: every public commit (append, replace, create,
+  * merge, delete, compaction, spec/schema evolution, the stats
+  * commits and the streaming/row-level staged commits) is a caller of
+  * the private [[commit]] core. A caller says which base files the
+  * new version keeps, which fresh files it adds (a frame the core
+  * writes, or files a distributed writer staged) and how the headers
+  * change; the core alone runs the writer-token replay check, pins
+  * the base version, maintains the stats sidecar and publishes the
+  * manifest. Carry rule: `#spec` and `#statcol` are TABLE metadata
+  * and travel from the base unless the commit sets them — a replace,
+  * merge or row-level rewrite changes data, never the table's layout
+  * default or its index. At 100 TB the manifest is file-count-sized
+  * (KBs per commit), the data path is ordinary distributed parquet
+  * IO, and version resolution is driver-side metadata — the same
+  * asymmetry the real table formats rely on.
   *
   * Concurrency: optimistic, Iceberg-style. Data files are written
   * FIRST under a commit-unique directory (never colliding), and the
@@ -62,15 +73,7 @@ object SnapshotStore {
     new File(manifestDir(root), s"v$v.list")
 
   /** Highest committed version, 0 when none. */
-  def latestVersion(root: String): Int = {
-    val d = manifestDir(root)
-    if (!d.isDirectory) 0
-    else
-      d.listFiles().map(_.getName)
-        .collect { case s if s.matches("v\\d+\\.list") =>
-          s.stripPrefix("v").stripSuffix(".list").toInt }
-        .foldLeft(0)(math.max)
-  }
+  def latestVersion(root: String): Int = versions(root).lastOption.getOrElse(0)
 
   private def manifestLines(root: String, v: Int): Seq[String] = {
     val f = manifestFile(root, v)
@@ -87,19 +90,20 @@ object SnapshotStore {
     * header lines — durable table metadata, unlike filesystem mtimes
     * (a backup/restore or `cp -r` rewrites every mtime; Iceberg/Delta
     * store the commit instant in the snapshot metadata for exactly
-    * this reason). Keys in use: `ts` (publication instant, epoch-ms)
-    * and `writer` (streaming idempotence token, see
-    * [[committedVersionFor]]). Legacy manifests without headers
-    * return an empty map and fall back to mtime-era behavior. */
+    * this reason). Keys in use: `ts` (publication instant, epoch-ms),
+    * `writer` (streaming idempotence token, see
+    * [[committedVersionFor]]), `schema`, `spec` and `statcol`. */
   private[graft] def manifestMeta(root: String, v: Int)
       : Map[String, String] =
-    manifestLines(root, v).filter(_.startsWith("#"))
-      .flatMap { l =>
-        l.drop(1).split("\t", 2) match {
-          case Array(k, value) => Some(k -> value)
-          case _ => None
-        }
-      }.toMap
+    headerMap(manifestLines(root, v).filter(_.startsWith("#")))
+
+  private def headerMap(lines: Seq[String]): Map[String, String] =
+    lines.flatMap { l =>
+      l.drop(1).split("\t", 2) match {
+        case Array(k, value) => Some(k -> value)
+        case _ => None
+      }
+    }.toMap
 
   /** Publish version `v`'s manifest — the commit's serialization
     * point. `Files.createLink` is atomic create-fail-if-exists (an
@@ -184,119 +188,32 @@ object SnapshotStore {
       manifestMeta(root, v).get("writer").contains(token))
       .orElse(tokenLog(root).get(token))
 
-  /** Header keys that travel from a version to its successor the same
-    * way stats sidecar lines do: `statcol` (which columns the stats
-    * sidecar indexes — the SQL face's pushdown pruning keeps working
-    * after later appends carry the stats forward) and `spec` (the
-    * table's DEFAULT partition spec for future writes — the knob
-    * `CREATE TABLE ... PARTITIONED BY` sets and `CALL
-    * system.set_spec` evolves; committed layouts are untouched by
-    * either, exactly Iceberg's spec evolution). */
-  private def carriedMeta(root: String, prev: Int): Map[String, String] =
-    if (prev == 0) Map.empty
-    else manifestMeta(root, prev).filter { case (k, _) =>
-      k == "statcol" || k == "spec" }
-
   /** The table's default partition spec for NEW writes — the `#spec`
     * header of the latest manifest (empty = unpartitioned appends).
     * Purely a forward-looking default: readers resolve every file
     * against the spec its own commit recorded. */
-  def currentSpec(root: String): Seq[String] = {
-    val v = latestVersion(root)
-    if (v == 0) Seq.empty
-    else manifestMeta(root, v).get("spec").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Evolve the table's DEFAULT partition spec — a METADATA-ONLY
-    * commit: the new version lists the same files, every committed
-    * layout stays exactly as written (spec-per-commit is the whole
-    * point — nothing rewrites), and only writes AFTER this commit
-    * land under the new spec. Empty `spec` = future writes are
-    * unpartitioned. Same CAS publish as every commit. */
-  def setSpec(root: String, spec: Seq[String]): Int = {
-    val prev = latestVersion(root)
-    if (prev == 0)
-      throw new graft.QueryError(s"no snapshot table under $root")
-    // validate against the pinned schema when one exists — a typo'd
-    // column should refuse HERE, not at the next insert's partitionBy
-    // (an evolved store without a pin defers to that loud failure)
-    manifestMeta(root, prev).get("schema")
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .foreach { pinned =>
-        spec.find(c => !pinned.fieldNames.contains(c)).foreach(c =>
-          throw new graft.QueryError(
-            s"partition column $c is not in the table schema"))
-      }
-    val meta = carriedMeta(root, prev) - "spec"
-    val withSpec =
-      if (spec.isEmpty) meta
-      else meta + ("spec" -> spec.mkString(","))
-    val v = prev + 1
-    writeManifest(root, v, filesAt(root, prev),
-      withSpec ++ manifestMeta(root, prev).filter(_._1 == "schema"))
-    val prior = statsLinesAt(root, prev)
-    if (prior.nonEmpty) writeStatsLines(root, v, prior)
-    v
-  }
-
-  /** The `#schema` header for a commit that adds `df`'s rows on top of
-    * version `prev` — the table schema PINNED in manifest metadata so
-    * the SQL face's `loadTable` never has to infer it from data-file
-    * footers (plan-time IO proportional to the table at 100 TB file
-    * counts). The pinned schema is the MERGE of the previous pinned
-    * schema with the incoming frame's (schema evolution widens the
-    * union; a same-schema append is a no-op merge). A legacy store
-    * whose previous version carries no header stays header-less —
-    * only footer inference can know the union of its historic commits
-    * — and upgrades at its next replace-shaped commit. An
-    * un-mergeable evolution (a column changing to an incompatible
-    * type) also drops the header: readers fall back to footer
-    * inference, never to a wrong pinned schema. */
-  private def mergedSchemaMeta(df: DataFrame, root: String, prev: Int)
-      : Map[String, String] =
-    mergedSchemaMetaOf(df.schema, root, prev)
-
-  private def mergedSchemaMetaOf(
-      schema: org.apache.spark.sql.types.StructType, root: String,
-      prev: Int): Map[String, String] = {
-    import org.apache.spark.sql.types.StructType
-    val merged: Option[StructType] =
-      if (prev == 0) Some(schema)
-      else manifestMeta(root, prev).get("schema").flatMap { ddl =>
-        try Some(graft.util.SchemaMerge.merge(StructType.fromDDL(ddl), schema))
-        catch { case _: Exception => None }
-      }
-    merged.map(m => "schema" -> m.toDDL).toMap
-  }
-
-  /** `#schema` for a replace-shaped commit (full rewrite / MERGE):
-    * the table IS the incoming frame, so its schema pins directly. */
-  private def replaceSchemaMeta(df: DataFrame): Map[String, String] =
-    Map("schema" -> df.schema.toDDL)
+  def currentSpec(root: String): Seq[String] = pin(root).spec
 
   /** Which columns version `v`'s stats sidecar indexes, as
-    * column → kind, parsed from the manifest's `#statcol` header.
-    * Header grammar: a comma-separated list of `name:kind` entries;
-    * a bare `name` (every manifest written before typed stats) is the
-    * legacy single Long column. Kinds in use: `long` (integral) and
-    * `ts` (timestamp, bounds stored as epoch-micros). EVERY consumer
-    * of the sidecar must resolve the pruned column through this map —
-    * pruning against bounds that index a DIFFERENT column silently
-    * drops rows, the one failure mode a reader can never have. */
-  private[graft] def statCols(root: String, v: Int)
-      : scala.collection.immutable.ListMap[String, String] =
-    manifestMeta(root, v).get("statcol") match {
-      case None => scala.collection.immutable.ListMap.empty
-      case Some(h) =>
-        scala.collection.immutable.ListMap(
-          h.split(",").toSeq.filter(_.nonEmpty).map { e =>
-            e.split(":", 2) match {
-              case Array(n, k) => n -> k
-              case Array(n) => n -> "long"
-            }
-          }: _*)
-    }
+    * column → kind, parsed from the manifest's `#statcol` header: a
+    * comma-separated list of `name:kind` entries. Kinds in use: `long`
+    * (integral), `ts` (timestamp, bounds stored as epoch-micros) and
+    * `str`. EVERY consumer of the sidecar must resolve the pruned
+    * column through this map — pruning against bounds that index a
+    * DIFFERENT column silently drops rows, the one failure mode a
+    * reader can never have. */
+  private[graft] def statCols(root: String, v: Int): ListMap[String, String] =
+    parseStatCols(manifestMeta(root, v).get("statcol"), s"$root v$v")
+
+  private def parseStatCols(header: Option[String], where: String)
+      : ListMap[String, String] =
+    ListMap(header.toSeq.flatMap(_.split(",")).filter(_.nonEmpty).map { e =>
+      e.split(":", 2) match {
+        case Array(n, k) if n.nonEmpty && k.nonEmpty => n -> k
+        case _ => throw new graft.QueryError(
+          s"malformed #statcol entry '$e' in $where (expected name:kind)")
+      }
+    }: _*)
 
   /** Commit-unique suffix so two optimistic committers never collide
     * on a data directory (the loser's dir becomes an orphan, cleaned
@@ -304,92 +221,234 @@ object SnapshotStore {
   private def commitToken(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  private[graft] def writeData(df: DataFrame, root: String, v: Int)
-      : Seq[String] = {
+  /** Write `df` as one commit's data directory — the data phase of
+    * every frame-fed commit, before [[writeManifest]] publishes. A
+    * non-empty `spec` writes Hive-style partition directories and
+    * records the spec in a `_spec.list` marker (self-describing: no
+    * shared mutable metadata file to race on); non-empty `clusterBy`
+    * range-partitions the frame into `nFiles` files on those columns
+    * in order (first = primary clustering) so per-file bounds are
+    * tight and mostly disjoint. Every directory gets the frame's
+    * schema as a `_schema.ddl` marker, so the SQL face resolves a
+    * layout group's schema without opening any data-file footer.
+    * Returns the leaf parquet files, sorted. */
+  private[graft] def writeData(df: DataFrame, root: String, v: Int,
+      spec: Seq[String] = Seq.empty, clusterBy: Seq[String] = Seq.empty,
+      nFiles: Int = 8): Seq[String] = {
     val dir = new File(new File(root, "data"), s"c$v-${commitToken()}")
-    df.write.parquet(dir.getPath)
-    // per-commit schema marker (DDL): lets the SQL face resolve a
-    // layout group's schema without opening any data-file footer
+    val clustered =
+      if (clusterBy.isEmpty) df
+      else df.repartitionByRange(nFiles, clusterBy.map(col): _*)
+    if (spec.isEmpty) clustered.write.parquet(dir.getPath)
+    else {
+      clustered.write.partitionBy(spec: _*).parquet(dir.getPath)
+      Files.write(new File(dir, "_spec.list").toPath,
+        spec.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    }
     Files.write(new File(dir, "_schema.ddl").toPath,
       df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
-    dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.getPath).toSeq.sorted
+    leafParquet(dir)
   }
 
-  /** Append commit: the new version sees every previous file plus the
-    * incoming frame's files. Returns the new version number.
-    *
-    * `writerToken` is the streaming-replay idempotence key (use
-    * `"<queryName>:<batchId>"` from a foreachBatch body): when a live
-    * manifest already carries it, the frame was committed by a
-    * previous delivery of the same micro-batch and this call returns
-    * that version WITHOUT writing — exactly-once into the store under
-    * Structured Streaming's at-least-once foreachBatch re-delivery.
-    *
-    * Index maintenance: when the store carries a `#statcol` index and
-    * `freshStats` is on (the default), the fresh files' typed bounds
-    * are recorded in the same commit — without this, every append
-    * (each SQL INSERT, each streaming micro-batch) dilutes the
-    * skipping index with unindexed files until a full re-cluster, and
-    * range queries degrade linearly with ingest age. Iceberg records
-    * per-file bounds on EVERY write for exactly this reason (from
-    * parquet footers — same numbers; here it is one bounded-output
-    * aggregate pass over the fresh files). Indexed columns the frame
-    * lacks (or whose type no longer matches the recorded kind) simply
-    * get no lines — conservative, never wrong. `freshStats = false`
-    * preserves the legacy stats-less append (tests of the
-    * conservative keep path use it). */
-  def commitAppend(df: DataFrame, root: String,
-      writerToken: Option[String] = None,
-      freshStats: Boolean = true): Int =
+  private def leafParquet(dir: File): Seq[String] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    def rec(f: File): Unit =
+      if (f.isDirectory) f.listFiles().foreach(rec)
+      else if (f.getName.endsWith(".parquet")) buf += f.getPath
+    rec(dir)
+    buf.toSeq.sorted
+  }
+
+  // ---- the commit core ----
+
+  /** The version a commit builds on, pinned ONCE: number, file list
+    * and headers all come from one manifest read (version 0 = no
+    * table yet: no files, no headers). */
+  private final case class Base(root: String, version: Int,
+      files: Seq[String], meta: Map[String, String]) {
+    def schema: Option[StructType] = meta.get("schema").map(StructType.fromDDL)
+    def spec: Seq[String] =
+      meta.get("spec").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    def statCols: ListMap[String, String] =
+      parseStatCols(meta.get("statcol"), s"$root v$version")
+    def requireTable(): Unit =
+      if (version == 0)
+        throw new graft.QueryError(s"no snapshot table under $root")
+  }
+
+  private def pin(root: String): Base = {
+    val v = latestVersion(root)
+    if (v == 0) Base(root, 0, Seq.empty, Map.empty)
+    else {
+      val (header, files) = manifestLines(root, v).partition(_.startsWith("#"))
+      Base(root, v, files, headerMap(header))
+    }
+  }
+
+  /** A commit's fresh files: a frame the core writes through
+    * [[writeData]] (optionally partitioned and/or range-clustered), or
+    * files a distributed writer already staged under `<root>/data`
+    * (the streaming sink, the row-level rewrite) with their schema. */
+  private sealed trait Fresh
+  private final case class Frame(df: DataFrame, spec: Seq[String] = Seq.empty,
+      clusterBy: Seq[String] = Seq.empty, nFiles: Int = 8) extends Fresh
+  private final case class Staged(files: Seq[String], schema: StructType)
+    extends Fresh
+  private val NoFiles = Staged(Seq.empty, new StructType())
+
+  /** What a commit writes as `#schema` — the table schema PINNED in
+    * manifest metadata so the SQL face's `loadTable` never infers it
+    * from data-file footers (plan-time IO proportional to the table at
+    * 100 TB file counts). */
+  private sealed trait SchemaHeader
+  /** Metadata-only and rewrite commits: the base's header, unchanged. */
+  private case object KeepSchema extends SchemaHeader
+  /** Partitioned writes pin nothing: their per-commit `_schema.ddl`
+    * markers and footers are the schema source. */
+  private case object NoSchema extends SchemaHeader
+  /** Replace-shaped commits: the table IS the new data. */
+  private final case class PinSchema(s: StructType) extends SchemaHeader
+  /** Append-shaped commits: the base's pinned schema widened by the
+    * incoming one through [[graft.util.SchemaMerge]]. A base that pins
+    * no schema stays header-less — only footer inference can know the
+    * union of its historic commits — and so does an un-mergeable
+    * evolution (a column changing to an incompatible type): readers
+    * fall back to inference, never to a wrong pinned schema. */
+  private final case class MergeSchema(s: StructType) extends SchemaHeader
+
+  /** One commit's effect on its base: the base files it keeps, the
+    * fresh files it adds, and its header changes. `spec`/`statCols`
+    * of None carry the base's header (the carry rule). */
+  private final case class Change(keep: Seq[String], fresh: Fresh,
+      schema: SchemaHeader, spec: Option[Seq[String]] = None,
+      statCols: Option[Seq[(String, String)]] = None)
+
+  /** THE commit path. In order:
+    *  1. the writer-token replay check: a token already committed
+    *     returns its version and writes nothing (exactly-once under
+    *     Structured Streaming's at-least-once re-delivery);
+    *  2. pin the base (one manifest read); `expectedBase` refuses with
+    *     the retryable [[CommitConflictException]] when the head moved
+    *     past a base the caller computed its change against;
+    *  3. `plan` turns the base into a [[Change]], or None for a no-op
+    *     (the base version is returned);
+    *  4. data phase: write the frame (or take the staged files) and,
+    *     when the new version keeps a `#statcol` index, compute the
+    *     fresh files' bounds in one bounded aggregate — append-time
+    *     index maintenance, so no write dilutes the skipping index;
+    *  5. publish version base+1 through the CAS [[writeManifest]] — a
+    *     concurrent commit since step 2 makes it throw, never lose a
+    *     commit;
+    *  6. write the stats sidecar: the base's lines for kept files plus
+    *     the fresh lines.
+    * A crash before 5 leaves only orphaned data (swept by
+    * [[expireVersions]]); a crash between 5 and 6 leaves a version
+    * whose files have no bounds, which readers keep conservatively. */
+  private def commit(root: String, writerToken: Option[String] = None,
+      expectedBase: Option[Int] = None)(plan: Base => Option[Change]): Int =
     writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      val v = prev + 1
-      val fresh = writeData(df, root, v)
-      val base = if (prev == 0) Seq.empty else filesAt(root, prev)
-      writeManifest(root, v, base ++ fresh,
-        carriedMeta(root, prev) ++ mergedSchemaMeta(df, root, prev) ++
-          writerToken.map("writer" -> _).toMap)
-      // stats travel with their surviving files; fresh files are
-      // indexed in place when the store carries an index (above)
-      val prior = statsLinesAt(root, prev)
-      val freshLines =
-        if (!freshStats || prev == 0) Seq.empty
-        else statsForFiles(df.sparkSession, fresh,
-          usableKinds(df, statCols(root, prev)))
-      if (prior.nonEmpty || freshLines.nonEmpty)
-        writeStatsLines(root, v, prior ++ freshLines)
-      v
+      val base = pin(root)
+      if (expectedBase.exists(_ != base.version))
+        throw new CommitConflictException(root, base.version + 1)
+      plan(base).fold(base.version) { c =>
+        val v = base.version + 1
+        val statCols = c.statCols.getOrElse(base.statCols.toSeq)
+        // a partitioned write records no bounds: range reads keep its
+        // files conservatively and its directories prune instead
+        val (fresh, indexable, spark) = c.fresh match {
+          case Frame(df, spec, clusterBy, nFiles) =>
+            (writeData(df, root, v, spec, clusterBy, nFiles),
+              if (spec.isEmpty) df.schema else new StructType(),
+              () => df.sparkSession)
+          case Staged(files, schema) =>
+            (files, schema, () => SparkSession.active)
+        }
+        val freshLines =
+          statsForFiles(spark(), fresh, usableKinds(indexable, statCols))
+        val schemaDdl = c.schema match {
+          case KeepSchema => base.meta.get("schema")
+          case NoSchema => None
+          case PinSchema(s) => Some(s.toDDL)
+          case MergeSchema(s) =>
+            if (base.version == 0) Some(s.toDDL)
+            else base.schema.flatMap { pinned =>
+              try Some(graft.util.SchemaMerge.merge(pinned, s).toDDL)
+              catch { case _: Exception => None }
+            }
+        }
+        val spec = c.spec.getOrElse(base.spec).mkString(",")
+        val statcol = statCols.map { case (n, k) => s"$n:$k" }.mkString(",")
+        val meta = Seq("schema" -> schemaDdl,
+          "spec" -> Some(spec).filter(_.nonEmpty),
+          "statcol" -> Some(statcol).filter(_.nonEmpty),
+          "writer" -> writerToken)
+          .collect { case (k, Some(value)) => k -> value }.toMap
+        writeManifest(root, v, c.keep ++ fresh, meta)
+        val kept = c.keep.toSet
+        val lines = statsLinesAt(root, base.version)
+          .filter(l => kept(l.path)) ++ freshLines
+        if (lines.nonEmpty) writeStatsLines(root, v, lines)
+        v
+      }
     }
 
-  /** The `#statcol` entries a frame can honestly produce bounds for:
-    * the column must exist in the frame AND derive the SAME kind the
+  /** The `#statcol` entries files of `schema` can honestly produce
+    * bounds for: the column must exist AND derive the SAME kind the
     * header records — bounds in a different domain would prune
-    * wrongly, the one failure mode a reader can never have. */
-  private def usableKinds(df: DataFrame,
-      kinds: scala.collection.immutable.ListMap[String, String])
-      : Seq[(String, String)] = usableKindsOf(df.schema, kinds)
-
-  private def usableKindsOf(schema: org.apache.spark.sql.types.StructType,
-      kinds: scala.collection.immutable.ListMap[String, String])
-      : Seq[(String, String)] =
-    kinds.toSeq.filter { case (c, k) =>
+    * wrongly. Indexed columns a write lacks simply get no lines —
+    * conservative, never wrong. */
+  private def usableKinds(schema: StructType,
+      kinds: Seq[(String, String)]): Seq[(String, String)] =
+    kinds.filter { case (c, k) =>
       schema.fieldNames.contains(c) &&
         (try kindOfType(schema(c).dataType) == k
          catch { case _: graft.QueryError => false })
     }
 
-  /** Replace commit (full rewrite / compaction): the new version sees
-    * ONLY the incoming frame's files; older versions keep reading the
-    * files they always listed. Returns the new version number.
-    * `writerToken` as in [[commitAppend]]. */
+  // ---- commit faces: each a caller of the core ----
+
+  /** Append commit: the new version sees every previous file plus the
+    * incoming frame's files. Returns the new version number.
+    *
+    * `writerToken` is the streaming-replay idempotence key (use
+    * `"<queryName>:<batchId>"` from a foreachBatch body): when the
+    * token was already committed, the frame was committed by a
+    * previous delivery of the same micro-batch and this call returns
+    * that version WITHOUT writing.
+    *
+    * A non-empty `spec` writes THIS commit's files under that
+    * partition spec — the layout knob a long-lived table re-tunes as
+    * it grows (month-only early, then (month, underlying) once a
+    * month's volume outgrows one prune unit). Earlier commits keep
+    * their own layout — Iceberg's partition-spec evolution, where old
+    * files are NEVER rewritten to the new spec. The manifest lists the
+    * leaf parquet files as usual, so every other store operation
+    * (expire, tags, diff, stats carry) works unchanged. A partitioned
+    * append pins no `#schema`.
+    *
+    * On an indexed store the fresh files' typed bounds are recorded
+    * in the same commit (see [[commit]]); Iceberg records per-file
+    * bounds on EVERY write for the same reason. */
+  def commitAppend(df: DataFrame, root: String,
+      writerToken: Option[String] = None,
+      spec: Seq[String] = Seq.empty): Int =
+    commit(root, writerToken) { b =>
+      Some(Change(b.files, Frame(df, spec),
+        if (spec.isEmpty) MergeSchema(df.schema) else NoSchema))
+    }
+
+  /** Replace commit (full rewrite / compaction / `INSERT OVERWRITE`):
+    * the new version sees ONLY the incoming frame's files, written
+    * under `spec` when non-empty; older versions keep reading the
+    * files they always listed. Table metadata (`#spec`, `#statcol`)
+    * carries. Returns the new version number. `writerToken` as in
+    * [[commitAppend]]. */
   def commitReplace(df: DataFrame, root: String,
-      writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val v = latestVersion(root) + 1
-      writeManifest(root, v, writeData(df, root, v),
-        replaceSchemaMeta(df) ++ writerToken.map("writer" -> _).toMap)
-      v
+      writerToken: Option[String] = None,
+      spec: Seq[String] = Seq.empty): Int =
+    commit(root, writerToken) { _ =>
+      Some(Change(Seq.empty, Frame(df, spec),
+        if (spec.isEmpty) PinSchema(df.schema) else NoSchema))
     }
 
   /** Create an EMPTY versioned table: version 1 lists no files and
@@ -399,55 +458,35 @@ object SnapshotStore {
     * first INSERT is an ordinary append commit. A non-empty `spec`
     * records the DEFAULT partition spec for future writes (`CREATE
     * TABLE ... PARTITIONED BY`); it must name schema columns. */
-  def createEmpty(root: String,
-      schema: org.apache.spark.sql.types.StructType,
-      spec: Seq[String] = Seq.empty): Int = {
-    require(versions(root).isEmpty, s"table already exists under $root")
+  def createEmpty(root: String, schema: StructType,
+      spec: Seq[String] = Seq.empty): Int =
+    commit(root) { b =>
+      require(b.version == 0, s"table already exists under $root")
+      requireColumns(schema, spec)
+      Some(Change(Seq.empty, NoFiles, PinSchema(schema), spec = Some(spec)))
+    }
+
+  private def requireColumns(schema: StructType, spec: Seq[String]): Unit =
     spec.find(c => !schema.fieldNames.contains(c)).foreach(c =>
       throw new graft.QueryError(
         s"partition column $c is not in the table schema"))
-    writeManifest(root, 1, Seq.empty, Map("schema" -> schema.toDDL) ++
-      (if (spec.isEmpty) Map.empty[String, String]
-       else Map("spec" -> spec.mkString(","))))
-    1
-  }
 
   /** Append commit over files a DISTRIBUTED WRITER already staged
     * under `<root>/data` — the driver half of the streaming sink
     * ([[SnapshotStreaming]]): tasks write their parquet files first
     * (never colliding — task-attempt-unique names), this publishes
-    * the manifest listing them, under the same CAS and the same
-    * writer-token replay check as every commit. A replayed epoch
-    * whose token is already live no-ops and its re-staged files
-    * become ordinary orphans (swept by maintenance, like CAS losers).
-    * On an indexed store the staged files' bounds are recorded in the
-    * same commit (append-time index maintenance). */
-  private[sources] def commitStagedAppend(spark: SparkSession,
-      root: String, staged: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
+    * the manifest listing them. A replayed epoch whose token is
+    * already committed no-ops and its re-staged files become ordinary
+    * orphans (swept by maintenance, like CAS losers). */
+  private[graft] def commitStagedAppend(root: String,
+      staged: Seq[String], schema: StructType,
       writerToken: Option[String]): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      val v = prev + 1
-      val base = if (prev == 0) Seq.empty else filesAt(root, prev)
-      writeManifest(root, v, base ++ staged,
-        carriedMeta(root, prev) ++ mergedSchemaMetaOf(schema, root, prev) ++
-          writerToken.map("writer" -> _).toMap)
-      val prior = statsLinesAt(root, prev)
-      val freshLines =
-        if (prev == 0) Seq.empty
-        else statsForFiles(spark, staged,
-          usableKindsOf(schema, statCols(root, prev)))
-      if (prior.nonEmpty || freshLines.nonEmpty)
-        writeStatsLines(root, v, prior ++ freshLines)
-      v
+    commit(root, writerToken) { b =>
+      Some(Change(b.files, Staged(staged, schema), MergeSchema(schema)))
     }
 
   /** Replace commit over staged files — the streaming sink's
-    * COMPLETE-mode epoch and the row-level rewrites' publish. Carried
-    * headers (`statcol`, `spec`) survive: an UPDATE/MERGE replaces
-    * DATA, not table metadata — without the carry a row-level
-    * statement would silently un-partition future writes.
+    * COMPLETE-mode epoch and the row-level rewrites' publish.
     *
     * `expectedPrev` is the optimistic-concurrency guard for callers
     * whose replacement was COMPUTED against a pinned base (the
@@ -457,18 +496,25 @@ object SnapshotStore {
     * streaming complete-mode caller passes None (its epochs replace
     * serially from one writer — the MV pattern). */
   private[graft] def commitStagedReplace(root: String,
-      staged: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      staged: Seq[String], schema: StructType,
       writerToken: Option[String],
       expectedPrev: Option[Int] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      if (expectedPrev.exists(_ != prev))
-        throw new CommitConflictException(root, prev + 1)
-      val v = prev + 1
-      writeManifest(root, v, staged,
-        carriedMeta(root, prev) ++ Map("schema" -> schema.toDDL) ++
-          writerToken.map("writer" -> _).toMap)
-      v
+    commit(root, writerToken, expectedPrev) { _ =>
+      Some(Change(Seq.empty, Staged(staged, schema), PinSchema(schema)))
+    }
+
+  /** Evolve the table's DEFAULT partition spec — a METADATA-ONLY
+    * commit: the new version lists the same files, every committed
+    * layout stays exactly as written (spec-per-commit is the whole
+    * point — nothing rewrites), and only writes AFTER this commit
+    * land under the new spec. Empty `spec` = future writes are
+    * unpartitioned. A typo'd column refuses HERE when the table pins
+    * its schema, not at the next insert's partitionBy. */
+  def setSpec(root: String, spec: Seq[String]): Int =
+    commit(root) { b =>
+      b.requireTable()
+      b.schema.foreach(requireColumns(_, spec))
+      Some(Change(b.files, NoFiles, KeepSchema, spec = Some(spec)))
     }
 
   /** `ALTER TABLE ADD COLUMN` — a METADATA-ONLY commit: the new
@@ -478,34 +524,24 @@ object SnapshotStore {
     * merge marks it nullable) and the next INSERT may populate it.
     * Zero data IO at any table size — additive DDL on a 100 TB table
     * is a manifest write. Refuses loudly when the column already
-    * exists, and on a legacy store that pins no `#schema` (the union
-    * of its historic commits is unknowable without footer IO — publish
-    * one replace-shaped commit first). Stats sidecar lines carry: the
-    * files are unchanged, so their bounds still hold. Same CAS
-    * publish as every commit. Returns the new version. */
-  def addColumns(root: String,
-      cols: Seq[org.apache.spark.sql.types.StructField]): Int = {
-    import org.apache.spark.sql.types.StructType
+    * exists, and on a store that pins no `#schema` (the union of its
+    * historic commits is unknowable without footer IO — publish one
+    * replace-shaped commit first). Returns the new version. */
+  def addColumns(root: String, cols: Seq[StructField]): Int = {
     require(cols.nonEmpty, "ADD COLUMN needs at least one column")
-    val prev = latestVersion(root)
-    if (prev == 0)
-      throw new graft.QueryError(s"no snapshot table under $root")
-    val pinned = manifestMeta(root, prev).get("schema")
-      .map(StructType.fromDDL).getOrElse(throw new graft.QueryError(
-        s"cannot ADD COLUMN under $root: version $prev pins no #schema " +
-          "header (legacy store) — publish one replace-shaped commit first"))
-    cols.find(c => pinned.fieldNames.contains(c.name)).foreach(c =>
-      throw new graft.QueryError(
-        s"cannot ADD COLUMN ${c.name}: it already exists in $root"))
-    val widened = graft.util.SchemaMerge.merge(pinned,
-      StructType(cols.map(_.copy(nullable = true))))
-    val v = prev + 1
-    writeManifest(root, v, filesAt(root, prev),
-      carriedMeta(root, prev) + ("schema" -> widened.toDDL))
-    val prior = statsLinesAt(root, prev)
-    if (prior.nonEmpty) writeStatsLines(root, v, prior)
-    v
+    commit(root) { b =>
+      b.requireTable()
+      val pinned = b.schema.getOrElse(throw new graft.QueryError(
+        s"cannot ADD COLUMN under $root: version ${b.version} pins no " +
+          "#schema header — publish one replace-shaped commit first"))
+      cols.find(c => pinned.fieldNames.contains(c.name)).foreach(c =>
+        throw new graft.QueryError(
+          s"cannot ADD COLUMN ${c.name}: it already exists in $root"))
+      Some(Change(b.files, NoFiles, PinSchema(graft.util.SchemaMerge.merge(
+        pinned, StructType(cols.map(_.copy(nullable = true)))))))
+    }
   }
+
 
   /** Snapshot read at a version (defaults to latest). */
   def read(spark: SparkSession, root: String,
@@ -518,21 +554,20 @@ object SnapshotStore {
 
   /** A manifest's publication instant: the `#ts` header the commit
     * wrote into the manifest CONTENT (durable — survives
-    * backup/restore, `cp -r`, coarse-mtime filesystems), falling back
-    * to the file mtime only for legacy manifests written before
-    * headers existed. */
+    * backup/restore, `cp -r`, coarse-mtime filesystems). Every commit
+    * stamps it, so a manifest without one is corrupt and refuses
+    * loudly. */
   private def publishedAt(root: String, v: Int): Long =
-    manifestMeta(root, v).get("ts").map(_.toLong)
-      .getOrElse(manifestFile(root, v).lastModified())
+    manifestMeta(root, v).getOrElse("ts", throw new graft.QueryError(
+      s"manifest v$v under $root carries no #ts header")).toLong
 
   /** Version visible at `tsMillis`: the HIGHEST version whose
     * manifest was published at or before that instant (publication
     * time = the `#ts` instant the commit stamped into the manifest at
-    * its serialization point; mtime only for legacy manifests). Ties
-    * (same-millisecond publications) resolve to the later version,
-    * matching "the state a reader at that wall-clock instant would
-    * have seen". Throws the typed [[graft.QueryError]] when the table
-    * did not exist yet. */
+    * its serialization point). Ties (same-millisecond publications)
+    * resolve to the later version, matching "the state a reader at
+    * that wall-clock instant would have seen". Throws the typed
+    * [[graft.QueryError]] when the table did not exist yet. */
   def versionAsOf(root: String, tsMillis: Long): Int = {
     val vs = versions(root).filter(publishedAt(root, _) <= tsMillis)
     if (vs.isEmpty)
@@ -564,73 +599,6 @@ object SnapshotStore {
       .mkString("\n").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestFile(root, v).toPath,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  // ---- partition evolution (Iceberg-style spec-per-commit) ----
-
-  /** Append commit written under a PARTITION SPEC — the layout knob
-    * a long-lived table re-tunes as it grows (month-only early, then
-    * (month, underlying) once a month's volume outgrows one prune
-    * unit). The spec applies to THIS commit's files only; earlier
-    * commits keep their own layout — Iceberg's partition-spec
-    * evolution, where old files are NEVER rewritten to the new spec
-    * (rewriting 100 TB to re-bucket it is exactly what spec-per-
-    * commit avoids). The spec is recorded in a `_spec.list` marker
-    * inside the commit directory (self-describing — no shared
-    * mutable metadata file to race on), and the manifest lists the
-    * leaf parquet files as usual, so every other store operation
-    * (expire, tags, diff, stats carry) works unchanged. */
-  def commitAppendPartitioned(df: DataFrame, root: String,
-      spec: Seq[String], writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      require(spec.nonEmpty, "partition spec must name at least one column")
-      val prev = latestVersion(root)
-      val v = prev + 1
-      val dir = new File(new File(root, "data"), s"c$v-${commitToken()}")
-      df.write.partitionBy(spec: _*).parquet(dir.getPath)
-      Files.write(new File(dir, "_spec.list").toPath,
-        spec.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      // full frame schema (partition columns included) — the SQL
-      // face's zero-IO schema source for this layout group
-      Files.write(new File(dir, "_schema.ddl").toPath,
-        df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
-      val fresh = leafParquet(dir)
-      val base = if (prev == 0) Seq.empty else filesAt(root, prev)
-      writeManifest(root, v, base ++ fresh,
-        carriedMeta(root, prev) ++ writerToken.map("writer" -> _).toMap)
-      val prior = statsLinesAt(root, prev)
-      if (prior.nonEmpty) writeStatsLines(root, v, prior)
-      v
-    }
-
-  /** REPLACE commit under a partition spec — `INSERT OVERWRITE` on a
-    * spec'd table: the new version lists ONLY the fresh partitioned
-    * files; older versions keep reading theirs. Spec/statcol headers
-    * carry (the overwrite re-tunes data, not table metadata). */
-  def commitReplacePartitioned(df: DataFrame, root: String,
-      spec: Seq[String], writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      require(spec.nonEmpty, "partition spec must name at least one column")
-      val prev = latestVersion(root)
-      val v = prev + 1
-      val dir = new File(new File(root, "data"), s"c$v-${commitToken()}")
-      df.write.partitionBy(spec: _*).parquet(dir.getPath)
-      Files.write(new File(dir, "_spec.list").toPath,
-        spec.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.write(new File(dir, "_schema.ddl").toPath,
-        df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
-      writeManifest(root, v, leafParquet(dir),
-        carriedMeta(root, prev) ++ writerToken.map("writer" -> _).toMap)
-      v
-    }
-
-  private def leafParquet(dir: File): Seq[String] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    def rec(f: File): Unit =
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      else if (f.getName.endsWith(".parquet")) buf += f.getPath
-    rec(dir)
-    buf.toSeq.sorted
   }
 
   /** Layout-aware snapshot read: manifest files are grouped by their
@@ -694,43 +662,30 @@ object SnapshotStore {
     * at 100 TB, re-copying the healthy gigabyte files is exactly the
     * cost incremental compaction exists to avoid). Nothing is
     * deleted, so every older version (and every tag) keeps reading
-    * its original files. Stats lines survive for carried-over files,
-    * and on an indexed store the MERGED files are re-indexed in the
-    * same commit (one bounded aggregate — OPTIMIZE must not dilute
-    * the skipping index). No-op (returns
-    * the current version) when nothing is small enough.
-    * Returns (version, nSmallMerged, nCarried). */
+    * its original files. A compaction rewrites bytes, not the table:
+    * the pinned schema carries, stats lines survive for carried-over
+    * files, and on an indexed store the MERGED files are re-indexed in
+    * the same commit. No-op (returns the current version) when nothing
+    * is small enough. Returns (version, nSmallMerged, nCarried). */
   def compactSmall(spark: SparkSession, root: String, minBytes: Long,
       targetFiles: Int = 1): (Int, Int, Int) = {
-    val prev = latestVersion(root)
-    val files = filesAt(root, prev)
-    val (small, big) =
-      files.partition(f => new File(f).length() < minBytes)
-    if (small.isEmpty) (prev, 0, big.size)
-    else {
-      val v = prev + 1
+    var counts = (0, 0)
+    val v = commit(root) { b =>
+      b.requireTable()
+      val (small, big) =
+        b.files.partition(f => new File(f).length() < minBytes)
+      counts = (small.size, big.size)
       // spec-aware read: a small file under an evolved layout carries
       // column VALUES in its directory names — a flat parquet read
       // would silently drop them from the merged rewrite. The merged
       // files then store those columns as ordinary (string) data,
       // which the evolved union surfaces identically.
-      val mergedDf = readFilesEvolved(spark, root, small)
-        .coalesce(targetFiles)
-      val merged = writeData(mergedDf, root, v)
-      // a compaction rewrites bytes, not the table: carry the pinned
-      // schema with the statcol header
-      writeManifest(root, v, big ++ merged, carriedMeta(root, prev) ++
-        manifestMeta(root, prev).filter(_._1 == "schema"))
-      val bigSet = big.toSet
-      val carried = statsLinesAt(root, prev).filter(l => bigSet(l.path))
-      // merged files stay indexed: OPTIMIZE must not dilute the
-      // skipping index (same maintenance contract as commitAppend)
-      val freshLines = statsForFiles(spark, merged,
-        usableKinds(mergedDf, statCols(root, prev)))
-      if (carried.nonEmpty || freshLines.nonEmpty)
-        writeStatsLines(root, v, carried ++ freshLines)
-      (v, small.size, big.size)
+      if (small.isEmpty) None
+      else Some(Change(big, Frame(
+        readFilesEvolved(spark, root, small).coalesce(targetFiles)),
+        KeepSchema))
     }
+    (v, counts._1, counts._2)
   }
 
   /** Copy-on-write row-level DELETE — the takedown / right-to-be-
@@ -765,59 +720,49 @@ object SnapshotStore {
     * version, 0, fileCount) when nothing matches. */
   def deleteRows(spark: SparkSession, root: String, predicate: Column,
       pruneRange: Option[(String, Long, Long)] = None): (Int, Int, Int) = {
-    val prev = latestVersion(root)
-    val all = filesAt(root, prev)
-    val candidates = pruneRange match {
-      case Some((c, lo, hi)) => pruneFiles(root, c, lo, hi, Some(prev))._1
-      case None => all
+    var counts = (0, 0)
+    val v = commit(root) { b =>
+      b.requireTable()
+      val candidates = pruneRange match {
+        case Some((c, lo, hi)) =>
+          pruneFiles(root, c, lo, hi, Some(b.version))._1
+        case None => b.files
+      }
+      // spec-aware reads throughout: files under an evolved layout keep
+      // their directory-encoded column values through both the probe
+      // and the rewrite (a flat read would drop them from the rewritten
+      // rows — silent data loss), and a predicate over a partition
+      // column resolves instead of failing
+      val hit: Set[String] =
+        if (candidates.isEmpty) Set.empty
+        else readFilesEvolved(spark, root, candidates)
+          .filter(predicate)
+          .select(input_file_name().as("f")).distinct()
+          .collect()
+          .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+      val keep = b.files.filterNot(hit)
+      counts = (hit.size, keep.size)
+      if (hit.isEmpty) None
+      else Some(Change(keep, Frame(
+        readFilesEvolved(spark, root, hit.toSeq.sorted)
+          .filter(not(coalesce(predicate, lit(false))))),
+        KeepSchema))
     }
-    // spec-aware reads throughout: files under an evolved layout keep
-    // their directory-encoded column values through both the probe and
-    // the rewrite (a flat read would drop them from the rewritten
-    // rows — silent data loss), and a predicate over a partition
-    // column resolves instead of failing
-    val hit: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readFilesEvolved(spark, root, candidates)
-        .filter(predicate)
-        .select(input_file_name().as("f")).distinct()
-        .collect()
-        .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    if (hit.isEmpty) (prev, 0, all.size)
-    else {
-      val v = prev + 1
-      val keep = all.filterNot(hit)
-      val rewriteDf = readFilesEvolved(spark, root, hit.toSeq.sorted)
-        .filter(not(coalesce(predicate, lit(false))))
-      val fresh = writeData(rewriteDf, root, v)
-      writeManifest(root, v, keep ++ fresh, carriedMeta(root, prev) ++
-        manifestMeta(root, prev).filter(_._1 == "schema"))
-      val keepSet = keep.toSet
-      val carried = statsLinesAt(root, prev).filter(l => keepSet(l.path))
-      // rewritten survivors stay indexed: a takedown delete must not
-      // dilute the skipping index (same maintenance as commitAppend)
-      val freshLines = statsForFiles(spark, fresh,
-        usableKinds(rewriteDf, statCols(root, prev)))
-      if (carried.nonEmpty || freshLines.nonEmpty)
-        writeStatsLines(root, v, carried ++ freshLines)
-      (v, hit.size, keep.size)
-    }
+    (v, counts._1, counts._2)
   }
 
   /** MERGE INTO — the lakehouse upsert commit that closes the write
     * surface (append / replace / delete / compact / merge). Reads the
-    * snapshot at the CURRENT latest version (file list pinned at call
-    * time), applies an SCD1 latest-wins changelog via
-    * [[graft.operators.CdcMerge]] ('U' upserts, 'D' deletes, untouched
-    * rows carry), and publishes the merged state as a replace-commit
-    * under the SAME CAS guard as every other commit: the target
-    * version number is pinned BEFORE the (slow) distributed write, so
-    * a concurrent commit that lands in between makes the manifest
-    * link fail with [[CommitConflictException]] — which is exactly
-    * right, because this merge was computed against a base that is no
-    * longer the head (a lost-update otherwise). Retry = re-read, re-
-    * merge, re-commit. Pre-merge versions keep reading the old rows
-    * (their manifests pin the original files).
+    * snapshot at the base version the core pinned, applies an SCD1
+    * latest-wins changelog via [[graft.operators.CdcMerge]] ('U'
+    * upserts, 'D' deletes, untouched rows carry), and publishes the
+    * merged state as a replace-commit: the target version is pinned
+    * BEFORE the (slow) distributed write, so a concurrent commit that
+    * lands in between makes the manifest link fail with
+    * [[CommitConflictException]] — exactly right, because this merge
+    * was computed against a base that is no longer the head (a
+    * lost-update otherwise). Retry = re-read, re-merge, re-commit.
+    * Pre-merge versions keep reading the old rows.
     *
     * Contract: the stored table's schema is (`keyCol`, val, us) — the
     * shape [[graft.operators.CdcMerge.merge]] applies changes to;
@@ -829,19 +774,15 @@ object SnapshotStore {
   def commitMerge(spark: SparkSession, root: String, changes: DataFrame,
       keyCol: String, opCol: String, valCol: String, usCol: String,
       idCol: String, writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      require(prev >= 1, s"no snapshot to merge into under $root")
-      val base = readEvolved(spark, root, Some(prev))
+    commit(root, writerToken) { b =>
+      b.requireTable()
+      val base = readFilesEvolved(spark, root, b.files)
         .select(col(keyCol), col("val"), col("us"))
       val latest = graft.operators.CdcMerge.latestState(
         changes, keyCol, opCol, valCol, usCol, idCol)
       val merged = graft.operators.CdcMerge.merge(base, latest, keyCol)
         .select(col(keyCol), col("val"), col("last_us").as("us"))
-      val v = prev + 1
-      writeManifest(root, v, writeData(merged, root, v),
-        replaceSchemaMeta(merged) ++ writerToken.map("writer" -> _).toMap)
-      v
+      Some(Change(Seq.empty, Frame(merged), PinSchema(merged.schema)))
     }
 
   /** MERGE INTO for a snapshotted table of ARBITRARY schema — the
@@ -860,19 +801,16 @@ object SnapshotStore {
     * collapsed keys (broadcast when the changelog is small — the
     * typical late-correction batch — so the 100 TB base never
     * shuffles) plus a union with the upserts. Same CAS discipline as
-    * every commit: the target version pins BEFORE the distributed
-    * write, a concurrent commit makes the manifest link throw
-    * [[CommitConflictException]], retry = re-read + re-merge.
-    * Pre-merge versions keep reading the original files. */
+    * [[commitMerge]]. Pre-merge versions keep reading the original
+    * files. */
   def commitMergeRows(spark: SparkSession, root: String,
       changes: DataFrame, keyCol: String, opCol: String, seqCol: String,
       idCol: String, writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      require(prev >= 1, s"no snapshot to merge into under $root")
+    commit(root, writerToken) { b =>
+      b.requireTable()
       // evolved-safe: directory-encoded columns surface (as strings)
       // and ride into the merged replace-commit as data columns
-      val base = readEvolved(spark, root, Some(prev))
+      val base = readFilesEvolved(spark, root, b.files)
       val cols = base.columns.toSeq
       require(cols.contains(keyCol), s"key column $keyCol not in table")
       val payload = cols.filterNot(_ == keyCol) :+ opCol
@@ -887,10 +825,7 @@ object SnapshotStore {
         .join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
         .unionByName(upserts)
         .select(cols.map(col): _*)
-      val v = prev + 1
-      writeManifest(root, v, writeData(merged, root, v),
-        replaceSchemaMeta(merged) ++ writerToken.map("writer" -> _).toMap)
-      v
+      Some(Change(Seq.empty, Frame(merged), PinSchema(merged.schema)))
     }
 
   /** All committed version numbers, ascending (empty when none). */
@@ -1076,28 +1011,22 @@ object SnapshotStore {
   private[sources] final case class ColStats(path: String, col: String,
       kind: String, mn: String, mx: String)
 
-  /** All stats lines at version `v`, both formats: legacy 3-field
-    * lines (`path min max` — the single Long column the manifest's
-    * bare `#statcol` names) normalize to typed lines, 5-field lines
-    * (`path col kind min max`) parse directly. Files committed
-    * without stats simply have no line (and are never skipped). */
+  /** All stats lines at version `v` (`path col kind min max`, tab-
+    * separated). Files committed without stats simply have no line
+    * (and are never skipped); a line of any other shape is a corrupt
+    * sidecar and refuses loudly. */
   private[graft] def statsLinesAt(root: String, v: Int): Seq[ColStats] = {
     val f = statsFile(root, v)
     if (!f.isFile) Seq.empty
-    else {
-      lazy val legacyCol =
-        statCols(root, v).headOption.map(_._1).getOrElse("")
-      new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .flatMap { line =>
-          line.split("\t") match {
-            case Array(p, mn, mx) =>
-              Some(ColStats(p, legacyCol, "long", mn, mx))
-            case Array(p, c, k, mn, mx) => Some(ColStats(p, c, k, mn, mx))
-            case _ => None
-          }
+    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
+      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+      .map { line =>
+        line.split("\t") match {
+          case Array(p, c, k, mn, mx) => ColStats(p, c, k, mn, mx)
+          case _ => throw new graft.QueryError(
+            s"malformed stats line in ${f.getPath}: $line")
         }
-    }
+      }
   }
 
   private def writeStatsLines(root: String, v: Int,
@@ -1149,13 +1078,18 @@ object SnapshotStore {
     * (bounds base64-coded). Anything else can't be min/max-indexed
     * here — fail loudly rather than write bounds that would prune
     * wrongly. */
-  private def statKindOf(df: DataFrame, c: String): String =
-    try kindOfType(df.schema(c).dataType)
-    catch {
-      case _: graft.QueryError => throw new graft.QueryError(
-        s"stats column $c has unsupported type ${df.schema(c).dataType} " +
-          "(supported: integral, timestamp, string)")
+  private def statKinds(df: DataFrame, cols: Seq[String])
+      : Seq[(String, String)] = {
+    require(cols.nonEmpty, "need at least one stats column")
+    cols.map { c =>
+      try c -> kindOfType(df.schema(c).dataType)
+      catch {
+        case _: graft.QueryError => throw new graft.QueryError(
+          s"stats column $c has unsupported type ${df.schema(c).dataType} " +
+            "(supported: integral, timestamp, string)")
+      }
     }
+  }
 
   private def kindOfType(dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types._
@@ -1173,73 +1107,37 @@ object SnapshotStore {
     * per-column bounds, so ONE read can prune by a time range AND a
     * second dimension at once (the reference's headline time-range
     * pruning, applied to the snapshot path, without giving up the
-    * second index). The frame is range-partitioned on the stat
-    * columns in order (first = primary clustering) so files hold
-    * tight, mostly-disjoint ranges — stats only skip when the layout
-    * clusters. Bounds for the fresh files come from ONE distributed
-    * pass (a production impl reads parquet footers — same
-    * information, zero extra IO); prior versions' lines carry
-    * forward, and the `#statcol` header merges prior entries with
-    * this commit's `name:kind` list so every consumer resolves
-    * column identity before pruning. All-null columns in a file get
-    * no line (conservatively never skipped). */
+    * second index). The frame is range-clustered on the stat columns
+    * in order (first = primary clustering) so files hold tight,
+    * mostly-disjoint ranges — stats only skip when the layout
+    * clusters. The `#statcol` header merges the base's entries with
+    * this commit's `name:kind` list so every consumer resolves column
+    * identity before pruning; the core indexes the fresh files on
+    * every listed column they can honestly bound. */
   def commitAppendWithStatsMulti(df: DataFrame, root: String,
       statColumns: Seq[String], nFiles: Int = 8,
       writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val prev = latestVersion(root)
-      val v = prev + 1
-      val (fresh, freshStats, kinds) =
-        writeDataWithStats(df, root, v, statColumns, nFiles)
-      val base = if (prev == 0) Seq.empty else filesAt(root, prev)
-      // record WHICH columns the stats sidecar indexes (name:kind list)
-      // — the pruning faces need the identity, not just the numbers
-      val prevCols =
-        if (prev == 0) scala.collection.immutable.ListMap.empty[String, String]
-        else statCols(root, prev)
-      val hdr = (prevCols ++ kinds)
-        .map { case (c, k) => s"$c:$k" }.mkString(",")
-      writeManifest(root, v, base ++ fresh,
-        Map("statcol" -> hdr) ++ mergedSchemaMeta(df, root, prev) ++
-          writerToken.map("writer" -> _).toMap)
-      writeStatsLines(root, v, statsLinesAt(root, prev) ++ freshStats)
-      v
+    commit(root, writerToken) { b =>
+      Some(Change(b.files, Frame(df, clusterBy = statColumns, nFiles = nFiles),
+        MergeSchema(df.schema),
+        statCols = Some((b.statCols ++ statKinds(df, statColumns)).toSeq)))
     }
 
   /** REPLACE commit with typed stats on every requested column — the
     * re-indexing rewrite behind `CALL system.index(...)`: the whole
     * table re-clusters by the stat columns and the new version's
-    * sidecar indexes ONLY the fresh files (replace semantics — old
-    * stats die with the files they described; old VERSIONS keep
-    * reading their original files as always). */
+    * `#statcol` and sidecar index ONLY those columns over the fresh
+    * files (replace semantics — old stats die with the files they
+    * described; old VERSIONS keep reading their original files as
+    * always). */
   def commitReplaceWithStatsMulti(df: DataFrame, root: String,
       statColumns: Seq[String], nFiles: Int = 8,
       writerToken: Option[String] = None): Int =
-    writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
-      val v = latestVersion(root) + 1
-      val (fresh, freshStats, kinds) =
-        writeDataWithStats(df, root, v, statColumns, nFiles)
-      val hdr = kinds.map { case (c, k) => s"$c:$k" }.mkString(",")
-      writeManifest(root, v, fresh,
-        Map("statcol" -> hdr) ++ replaceSchemaMeta(df) ++
-          writerToken.map("writer" -> _).toMap)
-      writeStatsLines(root, v, freshStats)
-      v
+    commit(root, writerToken) { _ =>
+      Some(Change(Seq.empty,
+        Frame(df, clusterBy = statColumns, nFiles = nFiles),
+        PinSchema(df.schema), statCols = Some(statKinds(df, statColumns))))
     }
-
-  /** Shared stats-commit core: range-partition `df` on the stat
-    * columns, write version `v`'s data files, and compute per-file
-    * typed bounds in ONE distributed pass (bounded collect — one row
-    * per fresh file). Returns (files, stats lines, name→kind list). */
-  private def writeDataWithStats(df: DataFrame, root: String, v: Int,
-      statColumns: Seq[String], nFiles: Int)
-      : (Seq[String], Seq[ColStats], Seq[(String, String)]) = {
-    require(statColumns.nonEmpty, "need at least one stats column")
-    val kinds = statColumns.map(c => c -> statKindOf(df, c))
-    val fresh = writeData(
-      df.repartitionByRange(nFiles, statColumns.map(col): _*), root, v)
-    (fresh, statsForFiles(df.sparkSession, fresh, kinds), kinds)
-  }
 
   /** Typed per-file [min, max] bounds of already-written `files` on
     * `kinds` — the core the stats commits AND append-time index
@@ -1247,8 +1145,9 @@ object SnapshotStore {
     * bounded by the file count, not the row count (a production
     * implementation reads parquet footers — the same numbers with
     * zero extra IO). All-null columns in a file get no line
-    * (conservatively never skipped). */
-  private def statsForFiles(spark: SparkSession, files: Seq[String],
+    * (conservatively never skipped). No files or no kinds: no job,
+    * and `spark` is never evaluated. */
+  private def statsForFiles(spark: => SparkSession, files: Seq[String],
       kinds: Seq[(String, String)]): Seq[ColStats] = {
     if (files.isEmpty || kinds.isEmpty) return Seq.empty
     val aggs = kinds.flatMap { case (c, k) =>

@@ -4,7 +4,6 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
@@ -74,8 +73,7 @@ private[graft] object SnapshotStreaming {
       } else if (staged.nonEmpty) {
         Files.write(new File(stageDir(epochId), "_schema.ddl").toPath,
           schema.toDDL.getBytes(StandardCharsets.UTF_8))
-        SnapshotStore.commitStagedAppend(SparkSession.active, root,
-          staged, schema, token)
+        SnapshotStore.commitStagedAppend(root, staged, schema, token)
         ()
       } // an empty append epoch publishes nothing — no version churn
     }

@@ -779,11 +779,9 @@ class Round12Spec extends AnyFunSuite {
     assert(pruned.length == 501)
     assert(pruned.map(_.getAs[Double]("v")).sum
       == (1000L to 1500L).map(_ * 2.0).sum)
-    // a commit WITHOUT stats lines (freshStats off — the legacy
-    // append shape) is conservatively kept even out of range
-    SnapshotStore.commitAppend(
-      Seq((9999L, 1.0)).toDF("k", "v").coalesce(1), root,
-      freshStats = false)
+    // a file WITHOUT a stats line (its frame lacks the indexed
+    // column) is conservatively kept even out of range
+    SnapshotStore.commitAppend(Seq(1.0).toDF("v").coalesce(1), root)
     val (k2, s2) = SnapshotStore.pruneFiles(root, "k", 1000L, 1500L)
     assert(k2.size == kept.size + 1 && s2.size == skipped.size)
     assert(SnapshotStore

@@ -19,8 +19,8 @@ class Round15cSpec extends AnyFunSuite {
     val root = graft.util.TempDirs.scoped("r15c-pevo")
     val a = store((1L to 10L).map(i => (i, if (i % 2 == 0) "x" else "y", i * 1.0)))
     val b = store((11L to 20L).map(i => (i, if (i % 3 == 0) "x" else "y", i * 1.0)))
-    SnapshotStore.commitAppendPartitioned(a, root, Seq("cat"))
-    SnapshotStore.commitAppendPartitioned(b, root, Seq("cat", "k"))
+    SnapshotStore.commitAppend(a, root, spec = Seq("cat"))
+    SnapshotStore.commitAppend(b, root, spec = Seq("cat", "k"))
     val out = SnapshotStore.readEvolved(spark, root)
     assert(out.count() == 20)
     assert(out.select(sum(col("v"))).as[Double].head() == (1 to 20).sum.toDouble)
@@ -33,8 +33,8 @@ class Round15cSpec extends AnyFunSuite {
   test("a plain commit and a partitioned commit coexist in one evolved read") {
     val root = graft.util.TempDirs.scoped("r15c-mixed")
     SnapshotStore.commitAppend(store(Seq((1L, "x", 1.0), (2L, "y", 2.0))), root)
-    SnapshotStore.commitAppendPartitioned(
-      store(Seq((3L, "x", 3.0))), root, Seq("cat"))
+    SnapshotStore.commitAppend(
+      store(Seq((3L, "x", 3.0))), root, spec = Seq("cat"))
     val out = SnapshotStore.readEvolved(spark, root)
     assert(out.count() == 3)
     assert(out.filter(col("cat") === "x").count() == 2)
@@ -42,8 +42,8 @@ class Round15cSpec extends AnyFunSuite {
 
   test("filter on the evolved column partition-prunes the new-spec commit") {
     val root = graft.util.TempDirs.scoped("r15c-prune")
-    SnapshotStore.commitAppendPartitioned(
-      store((1L to 40L).map(i => (i, s"c${i % 4}", 1.0))), root, Seq("cat"))
+    SnapshotStore.commitAppend(
+      store((1L to 40L).map(i => (i, s"c${i % 4}", 1.0))), root, spec = Seq("cat"))
     val q = SnapshotStore.readEvolved(spark, root)
       .filter(col("cat") === "c1")
     val scans = q.queryExecution.executedPlan.collect {

@@ -1,8 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -55,10 +53,10 @@ class Round16Spec extends AnyFunSuite {
     val root = graft.util.TempDirs.scoped("r16-idem4")
     val p = Seq((1L, "202601", 1.0), (2L, "202602", 2.0))
       .toDF("tid", "month", "amount")
-    assert(SnapshotStore.commitAppendPartitioned(
-      p, root, Seq("month"), Some("pq:0")) == 1)
-    assert(SnapshotStore.commitAppendPartitioned(
-      p, root, Seq("month"), Some("pq:0")) == 1)
+    assert(SnapshotStore.commitAppend(
+      p, root, Some("pq:0"), spec = Seq("month")) == 1)
+    assert(SnapshotStore.commitAppend(
+      p, root, Some("pq:0"), spec = Seq("month")) == 1)
     assert(SnapshotStore.latestVersion(root) == 1)
     val root2 = graft.util.TempDirs.scoped("r16-idem5")
     val t = Seq((1L, 1.0), (2L, 2.0)).toDF("tid", "amount")
@@ -105,24 +103,6 @@ class Round16Spec extends AnyFunSuite {
     assert(SnapshotStore.versionAsOf(root, t0 + 999L) == 1)
     assert(SnapshotStore.versionAsOf(root, t0 + 1000L) == 2)
     assert(SnapshotStore.readAsOf(spark, root, t0 + 500L).count() == 1)
-  }
-
-  test("legacy header-less manifests fall back to mtime") {
-    val root = graft.util.TempDirs.scoped("r16-legacy")
-    val t0 = 1700000000000L
-    SnapshotStore.commitAppend(
-      Seq((1L, 1.0)).toDF("k", "v").coalesce(1), root)
-    // strip the headers a pre-round-16 store never wrote
-    val f = manifest(root, 1)
-    val legacy = new String(Files.readAllBytes(f.toPath),
-      StandardCharsets.UTF_8).split("\n")
-      .filterNot(_.startsWith("#")).mkString("\n")
-    Files.write(f.toPath, legacy.getBytes(StandardCharsets.UTF_8))
-    assert(f.setLastModified(t0))
-    assert(SnapshotStore.versionAsOf(root, t0) == 1)
-    intercept[graft.QueryError] { SnapshotStore.versionAsOf(root, t0 - 1) }
-    assert(SnapshotStore.read(spark, root).count() == 1,
-      "filesAt must read a header-less manifest unchanged")
   }
 
   test("tokenizer trainers retrain when the dir is regenerated") {

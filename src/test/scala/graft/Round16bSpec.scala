@@ -21,9 +21,9 @@ class Round16bSpec extends AnyFunSuite {
     SnapshotStore.commitAppendWithStats(
       t.filter(col("tid") % 2 === 0).select(col("tid"), col("amount")),
       root, "tid", 4)
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       t.filter(col("tid") % 2 === 1).repartition(2, col("month")),
-      root, Seq("month"))
+      root, spec = Seq("month"))
     BloomIndex.build(spark, root, "tid")
     root
   }
@@ -152,9 +152,9 @@ class Round16bSpec extends AnyFunSuite {
     // column, the union surfaces it as a string like readEvolved
     val wh = graft.util.TempDirs.scoped("r16b-evo")
     val root = s"$wh/evo"
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       Seq((1L, "a", "202601"), (2L, "b", "202602"))
-        .toDF("k", "v", "month"), root, Seq("month"))
+        .toDF("k", "v", "month"), root, spec = Seq("month"))
     spark.conf.set("spark.sql.catalog.g16evo", classOf[
       graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g16evo.warehouse", wh)

@@ -99,7 +99,7 @@ class Round17Spec extends AnyFunSuite {
     val root = graft.util.TempDirs.scoped("r17-conf")
     val t = spark.range(6).select(col("id").as("tid"),
       (col("id") % 2).cast("string").as("p"))
-    SnapshotStore.commitAppendPartitioned(t, root, Seq("p"))
+    SnapshotStore.commitAppend(t, root, spec = Seq("p"))
     val key = "spark.sql.session.timeZone"
     val orig = spark.conf.get(key)
     try {

@@ -151,24 +151,4 @@ class Round17bSpec extends AnyFunSuite {
     assert(!SnapshotStore.manifestMeta(root, v5).contains("schema"),
       "un-mergeable evolution must not pin a wrong schema")
   }
-
-  test("legacy 3-field stats lines still parse and prune") {
-    val root = s"$wh/legacy_stats"
-    val t = spark.range(40).select(col("id").as("tid"))
-    SnapshotStore.commitAppendWithStats(t, root, "tid", 4)
-    // rewrite the sidecar to the legacy 3-field format and the header
-    // to the legacy bare name
-    val sf = new java.io.File(s"$root/_manifests/v1.stats")
-    val legacy = SnapshotStore.statsLinesAt(root, 1)
-      .map(l => s"${l.path}\t${l.mn}\t${l.mx}").mkString("\n")
-    java.nio.file.Files.write(sf.toPath, legacy.getBytes)
-    val mf = new java.io.File(s"$root/_manifests/v1.list")
-    val rewritten = new String(java.nio.file.Files.readAllBytes(mf.toPath))
-      .replace("#statcol\ttid:long", "#statcol\ttid")
-    java.nio.file.Files.write(mf.toPath, rewritten.getBytes)
-    assert(SnapshotStore.statCols(root, 1) == Map("tid" -> "long"))
-    val p = SnapshotRead.plan(spark, root, range = Some(("tid", 0L, 5L)))
-    assert(p.statsSkipped > 0, "legacy lines prune")
-    assert(p.df.count() == 6)
-  }
 }

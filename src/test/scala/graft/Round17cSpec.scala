@@ -30,9 +30,9 @@ class Round17cSpec extends AnyFunSuite {
       SnapshotStore.commitAppendWithStats(
         t.filter(col("tid") % 2 === 0).select(col("tid"), col("amount")),
         root, "tid", 4)
-      SnapshotStore.commitAppendPartitioned(
+      SnapshotStore.commitAppend(
         t.filter(col("tid") % 2 === 1).repartition(2, col("month")),
-        root, Seq("month"))
+        root, spec = Seq("month"))
       BloomIndex.build(spark, root, "tid")
     }
     root
@@ -99,8 +99,8 @@ class Round17cSpec extends AnyFunSuite {
 
   test("schema evolution ACROSS layouts: new column, old rows null") {
     val root = s"$wh/evo_wide"
-    SnapshotStore.commitAppendPartitioned(
-      Seq((1L, "202601")).toDF("k", "month"), root, Seq("month"))
+    SnapshotStore.commitAppend(
+      Seq((1L, "202601")).toDF("k", "month"), root, spec = Seq("month"))
     SnapshotStore.commitAppend(
       Seq((2L, 9.5)).toDF("k", "score"), root)
     registerCatalog()
@@ -117,8 +117,8 @@ class Round17cSpec extends AnyFunSuite {
     // month is a LONG data column in v1, a directory STRING in v2
     SnapshotStore.commitAppend(
       Seq((1L, 202601L)).toDF("k", "month"), root)
-    SnapshotStore.commitAppendPartitioned(
-      Seq((2L, "202602")).toDF("k", "month"), root, Seq("month"))
+    SnapshotStore.commitAppend(
+      Seq((2L, "202602")).toDF("k", "month"), root, spec = Seq("month"))
     registerCatalog()
     val e = intercept[Exception] {
       spark.sql("SELECT * FROM r17c_snap.evo_conflict").collect()
@@ -144,11 +144,11 @@ class Round17cSpec extends AnyFunSuite {
     val root = s"$wh/evo_uniform"
     // two commits under the SAME spec: both groups project identically
     // onto the unified schema, so the union scan stays columnar
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       Seq((1L, "202601"), (2L, "202602")).toDF("k", "month"),
-      root, Seq("month"))
-    SnapshotStore.commitAppendPartitioned(
-      Seq((3L, "202601")).toDF("k", "month"), root, Seq("month"))
+      root, spec = Seq("month"))
+    SnapshotStore.commitAppend(
+      Seq((3L, "202601")).toDF("k", "month"), root, spec = Seq("month"))
     registerCatalog()
     val df = spark.sql("SELECT k, month FROM r17c_snap.evo_uniform")
     assert(df.queryExecution.executedPlan.exists(

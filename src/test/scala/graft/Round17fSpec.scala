@@ -107,8 +107,8 @@ class Round17fSpec extends AnyFunSuite {
 
   test("DROP and RENAME still refuse; evolved tables accept SQL writes") {
     val root = s"$wh/ro"
-    SnapshotStore.commitAppendPartitioned(
-      Seq((1L, "202601")).toDF("tid", "month"), root, Seq("month"))
+    SnapshotStore.commitAppend(
+      Seq((1L, "202601")).toDF("tid", "month"), root, spec = Seq("month"))
     registerCatalog()
     intercept[Exception] { spark.sql("DROP TABLE r17f_snap.ro") }
     intercept[Exception] {

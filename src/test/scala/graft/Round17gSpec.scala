@@ -22,9 +22,9 @@ class Round17gSpec extends AnyFunSuite {
     SnapshotStore.commitAppend(
       Seq((1L, 10.0, "202601"), (2L, 20.0, "202602"))
         .toDF("tid", "amount", "month"), root)
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       Seq((3L, 30.0, "202601"), (4L, 40.0, "202602"))
-        .toDF("tid", "amount", "month"), root, Seq("month"))
+        .toDF("tid", "amount", "month"), root, spec = Seq("month"))
     root
   }
 

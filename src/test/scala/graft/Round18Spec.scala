@@ -141,9 +141,9 @@ class Round18Spec extends AnyFunSuite {
     SnapshotStore.commitAppendWithStats(
       t.filter(col("tid") % 2 === 0).select(col("tid"), col("amount")),
       root, "tid", 4)
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       t.filter(col("tid") % 2 === 1).repartition(4, col("shard")),
-      root, Seq("shard"))
+      root, spec = Seq("shard"))
     root
   }
 
@@ -231,10 +231,10 @@ class Round18Spec extends AnyFunSuite {
     val root = s"$wh/legacyac"
     // a partitioned commit carries no #schema header (the union of an
     // evolved store's layouts lives in per-commit markers instead)
-    SnapshotStore.commitAppendPartitioned(
+    SnapshotStore.commitAppend(
       spark.range(6).select(col("id").as("tid"),
         (col("id") % 2).cast("string").as("p")),
-      root, Seq("p"))
+      root, spec = Seq("p"))
     intercept[graft.QueryError] {
       spark.sql("ALTER TABLE r18_snap.legacyac ADD COLUMN c INT")
     }
