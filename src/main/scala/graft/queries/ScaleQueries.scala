@@ -386,7 +386,7 @@ object ScaleQueries {
     * never loses a key. Driver-side work: one 1-row max aggregate
     * for the probe key + the file-count-sized sidecar read. */
   def x9FileBloomIndex(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, SnapshotStore}
+    import graft.sources.{BloomIndex, SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("x9-bloom")
     val ev = graft.util.Tables.load(s, dir, "events")
       .select(col("event_id"), col("value"))
@@ -394,11 +394,11 @@ object ScaleQueries {
     BloomIndex.build(s, root, "event_id")
     val mx = ev.agg(max(col("event_id"))).head.getLong(0)
     def probe(name: String, key: Long): DataFrame = {
-      val (keep, total) = BloomIndex.survivors(s, root, "event_id", key)
-      BloomIndex.lookup(s, root, "event_id", key)
+      val p = SnapshotRead.plan(s, root, point = Some(("event_id", key)))
+      p.df
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("value_sum"))
         .select(lit(name).as("probe"), col("n_rows"), col("value_sum"),
-          lit(keep.size * 2 <= total).as("files_pruned"))
+          lit(p.filesAfterBloom * 2 <= p.filesTotal).as("files_pruned"))
     }
     probe("present", mx).unionAll(probe("absent", mx + 1))
   }

@@ -53,7 +53,8 @@ object SystemQueries {
     // small sizes by IngestSpec
     Backfill.collect(s, new FixturePager(fixture), "BTC", startMs, endMs,
       target, ckpt, pageSize = 1000, batchSize = 50000)
-    s.read.parquet(s"$target/batch_token=*")
+    // the directory itself: partition discovery surfaces batch_token
+    s.read.parquet(target)
       .groupBy(col("underlying"))
       .agg(
         count(lit(1)).as("n_trades"),
@@ -1026,7 +1027,7 @@ object SystemQueries {
     * actually dropped files. Driver-side work is file-count-sized
     * metadata plus one 1-row bounds aggregate. */
   def s21ManifestPrune(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotStore
+    import graft.sources.{SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("s21-prune")
     val ev = graft.util.Tables.load(s, dir, "events")
       .select(col("event_id"), col("value"))
@@ -1039,7 +1040,7 @@ object SystemQueries {
     val (mn, mx) = (b.getAs[Long]("mn"), b.getAs[Long]("mx"))
     val lo = mn + (mx - mn) / 4
     val hi = mn + (mx - mn) / 2
-    SnapshotStore.readPruned(s, root, "event_id", lo, hi)
+    SnapshotRead.plan(s, root, range = Some(("event_id", lo, hi))).df
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("event_id")).as("n_ids"),
         dsum(col("value")).as("value_sum"))
@@ -1316,7 +1317,7 @@ object SystemQueries {
     * never delete data files. `release` tags the compacted head. The
     * oracle restates both snapshots' contents from the base table. */
   def s22SnapshotTag(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotStore
+    import graft.sources.{SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("s22-tag")
     val t = SyntheticTrades.trades(s, dir)
       .select(col("trade_id").cast("long").as("tid"), col("amount"))
@@ -1327,7 +1328,7 @@ object SystemQueries {
       SnapshotStore.read(s, root).coalesce(2), root)
     SnapshotStore.tag(root, "release")
     Seq("baseline", "release").map { tg =>
-      SnapshotStore.readTag(s, root, tg)
+      SnapshotRead.plan(s, root, tag = Some(tg)).df
         .agg(count(lit(1)).as("n_rows"), dsum(col("amount")).as("amount_sum"))
         .select(lit(tg).as("tag"), col("n_rows"), col("amount_sum"))
     }.reduce(_.unionAll(_))
@@ -1648,7 +1649,7 @@ object SystemQueries {
     * states from the base table; the boolean columns pin the
     * expire/fail/purge mechanics. */
   def s28ExpireSnapshots(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotStore
+    import graft.sources.{SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("s28-expire")
     val ev = graft.util.Tables.load(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -1680,7 +1681,7 @@ object SystemQueries {
       lit(onDisk == referenced && res.deletedFiles > 0)
         .as("orphans_purged") ::
       lit(res.expired == Seq(2)).as("expired_v2") :: Nil
-    Seq("tagged_v1" -> SnapshotStore.readTag(s, root, "audit"),
+    Seq("tagged_v1" -> SnapshotRead.plan(s, root, tag = Some("audit")).df,
         "head" -> SnapshotStore.read(s, root)).map { case (phase, df) =>
       df.agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("value_sum"))
         .select(lit(phase).as("phase") +: col("n_rows") +:
@@ -1921,7 +1922,7 @@ object SystemQueries {
     * files, and the baseline tag still reads a non-empty subset of
     * the input. */
   def st18StreamVacuum(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotStore
+    import graft.sources.{SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("st18-snap")
     val src = graft.util.TempDirs.scoped("st18-src")
     val ckpt = graft.util.TempDirs.scoped("st18-ckpt")
@@ -1961,7 +1962,7 @@ object SystemQueries {
     try q.processAllAvailable() finally q.stop()
     maintain()
     val bounded = SnapshotStore.versions(root).size <= 3
-    val baseline = SnapshotStore.readTag(s, root, "baseline")
+    val baseline = SnapshotRead.plan(s, root, tag = Some("baseline")).df
     val baselineIntact =
       baseline.count() > 0 && baseline.exceptAll(t).count() == 0
     SnapshotStore.read(s, root)
@@ -1985,7 +1986,7 @@ object SystemQueries {
 
   /** S32: partition-spec evolution — v1 lands month-partitioned, v2
     * lands (month, underlying)-partitioned, and the layout-aware read
-    * ([[graft.sources.SnapshotStore.readEvolved]]) unions both
+    * ([[graft.sources.SnapshotRead]]'s evolved scan) unions both
     * layouts by name WITHOUT rewriting v1's files to the new spec
     * (the Iceberg contract: re-bucketing 100 TB is exactly what
     * spec-per-commit avoids). Round15cSpec pins that a filter on the
@@ -2002,7 +2003,7 @@ object SystemQueries {
       t.filter(col("tid") % 2 === 0), root, spec = Seq("month"))
     SnapshotStore.commitAppend(
       t.filter(col("tid") % 2 === 1), root, spec = Seq("month", "underlying"))
-    SnapshotStore.readEvolved(s, root)
+    SnapshotStore.read(s, root)
       .groupBy(col("month"), col("underlying"))
       .agg(count(lit(1)).as("n_rows"), dsum(col("amount")).as("amount_sum"))
   }
@@ -2131,7 +2132,7 @@ object SystemQueries {
     * clocks; Round15fSpec covers the pre-table QueryError and the
     * same-millisecond tie. */
   def s34TimeTravel(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotStore
+    import graft.sources.{SnapshotRead, SnapshotStore}
     val root = graft.util.TempDirs.scoped("s34-tt")
     val t0 = 1700000000000L
     val t = SyntheticTrades.trades(s, dir)
@@ -2142,7 +2143,7 @@ object SystemQueries {
     SnapshotStore.commitAppend(t.filter(col("tid") % 2 === 1), root)
     SnapshotStore.stampManifest(root, 2, t0 + 10000L)
     def probe(phase: String, ts: Long): DataFrame =
-      SnapshotStore.readAsOf(s, root, ts)
+      SnapshotRead.plan(s, root, asOfMillis = Some(ts)).df
         .agg(count(lit(1)).as("n_rows"), dsum(col("amount")).as("amount_sum"))
         .select(lit(phase).as("phase"), col("n_rows"), col("amount_sum"))
     probe("mid", t0 + 5000L).unionAll(probe("late", t0 + 20000L))
@@ -2523,14 +2524,14 @@ object SystemQueries {
     * on tid at the head. The catalog plans it as a per-layout union
     * ([[graft.sources.EvolvedTable]]): each commit's files resolve
     * under ITS spec (month surfaces as a string exactly like
-    * `readEvolved`), sidecar pruning runs once over the union, and
+    * `SnapshotStore.read`), sidecar pruning runs once over the union, and
     * each group receives only the predicates it can evaluate — a
     * month filter prunes the v2 group's directories while the flat
     * group's rows drop via the residual NULL test; a tid range prunes
     * v1's stats files while v2's stats-less files are kept. Three SQL
     * probes (full union / month slice / tid range + point), each
     * answer re-derived by the oracle from the raw rows; the entry
-    * also pins rows == the Scala `readEvolved` and that the pruned
+    * also pins rows == the Scala `SnapshotStore.read` and that the pruned
     * probes planned fewer files than the manifest lists. Round17cSpec
     * pins the per-shape ledgers and the cross-layout schema rules. */
   def s39SqlEvolvedRead(s: SparkSession, dir: String): DataFrame = {
@@ -2584,7 +2585,7 @@ object SystemQueries {
     // the SQL union must return exactly the Scala evolved read's rows
     val sqlN = s.sql("SELECT count(*) AS n FROM graft_snap.trades_ev")
       .head.getLong(0)
-    val scalaN = SnapshotStore.readEvolved(s, root).count()
+    val scalaN = SnapshotStore.read(s, root).count()
     def shape(phase: String, df: DataFrame, skipped: Boolean): DataFrame =
       df.select(lit(phase).as("phase"), col("n_rows"), col("amount_sum"),
         lit(skipped).as("files_skipped"),
@@ -2802,7 +2803,7 @@ object SystemQueries {
     * (`SnapshotRead.plan(strRanges = ...)`, new this round — the two
     * faces were asymmetric: str bounds pruned only through SQL) AND
     * through pure SQL text (pushed `tkey >= '...'` predicates resolve
-    * in [[graft.sources.SidecarPrune]]). The key is a zero-padded
+    * in [[graft.sources.SnapshotRead]]'s pruner). The key is a zero-padded
     * decimal render of the trade id, so lexicographic order equals
     * numeric order and the range-partitioned layout gives tight
     * per-file string bounds — both probes must actually skip files
@@ -2879,7 +2880,7 @@ object SystemQueries {
     * probes read back through the same face: `VERSION AS OF 3` is
     * exactly ALL rows (insert landed, delete not yet), the head is
     * the tid <= hi half, `matches_scala` pins SQL rows == the Scala
-    * `readEvolved`, and `four_versions` pins the statement-to-commit
+    * `SnapshotStore.read`, and `four_versions` pins the statement-to-commit
     * mapping. Round18Spec pins the byte-identical-committed-files
     * invariant across the evolved INSERT. */
   def s44SqlEvolvedDml(s: SparkSession, dir: String): DataFrame = {
@@ -2916,7 +2917,7 @@ object SystemQueries {
     val fourVersions = SnapshotStore.versions(root) == Seq(1, 2, 3, 4)
     val sqlN = s.sql("SELECT count(*) AS n FROM graft_snap.trades_evw")
       .head.getLong(0)
-    val scalaN = SnapshotStore.readEvolved(s, root).count()
+    val scalaN = SnapshotStore.read(s, root).count()
     val dsumSql = "CAST(sum(CAST(amount AS DECIMAL(28,6))) AS DOUBLE)"
     s.sql(
       s"""SELECT 'pre_delete' AS phase, count(*) AS n_rows,
@@ -3190,7 +3191,7 @@ object SystemQueries {
     * shard slice prunes the partitioned commit's directories
     * (planned-file ledger), `layout_evolved` pins the physical fact
     * (v2 files under `shard=` directories, v4 files not), and rows ==
-    * the Scala `readEvolved`. Round18bSpec pins INSERT OVERWRITE
+    * the Scala `SnapshotStore.read`. Round18bSpec pins INSERT OVERWRITE
     * under a spec and the schema guard on CREATE. */
   def s47SqlPartitionedCreate(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.SnapshotStore
@@ -3224,7 +3225,7 @@ object SystemQueries {
       v4Fresh.forall(!_.contains("/shard="))
     val sqlN = s.sql("SELECT count(*) AS n FROM graft_snap.trades_pc")
       .head.getLong(0)
-    val scalaN = SnapshotStore.readEvolved(s, root).count()
+    val scalaN = SnapshotStore.read(s, root).count()
     val total = SnapshotStore.filesAt(root, 4).size
     def planned(df: DataFrame): Int =
       df.queryExecution.sparkPlan.collect {

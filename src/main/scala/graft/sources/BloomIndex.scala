@@ -5,63 +5,71 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.Base64
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-file Bloom-filter sidecar over a point-lookup key — the file-
   * skipping index for needle queries the min/max stats sidecar
   * (s21) cannot serve: a `trade_id` is uniformly distributed, so
   * every file's [min, max] straddles every probe and zone maps prune
-  * NOTHING; a 2 KiB Bloom per file prunes almost everything
-  * (Iceberg/Delta ship exactly this as parquet bloom columns /
-  * data-skipping indexes).
+  * NOTHING; a Bloom per file prunes almost everything (Iceberg/Delta
+  * ship exactly this as parquet bloom columns / data-skipping
+  * indexes).
   *
-  * Scale shape: the index is file-count-sized metadata (MBits/8 bytes
-  * per file — ~2 KiB at the default), read on the DRIVER before
-  * planning, like the manifest itself. The build is one distributed
-  * pass over the snapshot: per (file, key) the K probe positions,
-  * collapsed per file with `collect_set` — bounded state because the
-  * set is capped by MBits, NOT by row count. Lookup evaluates the
-  * SAME Catalyst hash expression on the driver (`XxHash64.eval` over
-  * literals — bit-identical with the build pass, zero jobs; parity
-  * property-pinned), keeps the files whose bitset covers all K
-  * positions, and scans only those.
+  * Scale shape: the index is file-count-sized metadata, read on the
+  * DRIVER before planning, like the manifest itself. Each file's
+  * filter is sized from its distinct-key count ([[bitsFor]]: a power
+  * of two, at least 16 bits per key, never below [[MBits]]), and the
+  * sidecar line's bitset length records that size. The build is two
+  * distributed passes over the snapshot: per-file distinct counts,
+  * then per (file, key) the K probe positions collapsed per file with
+  * `collect_set` — state bounded by the filter size, not the row
+  * count. The probe ([[SnapshotRead]]'s pruner) evaluates the SAME
+  * Catalyst hash expression on the driver ([[positions]] — zero jobs,
+  * bit-identical with the build, parity test-pinned) and keeps the
+  * files whose bitset covers all K positions.
   *
   * Guarantees: no false negatives EVER (a key's file always survives
-  * — Round15dSpec property-pins it); false positives cost one extra
-  * file scan and shrink with bits-per-key (default 16384 bits ≈ 19
-  * bits/key at 833 keys/file → ~1e-4). Size MBits ≥ ~10× expected
-  * distinct keys per file when row groups grow. */
+  * — Round15dSpec pins it); a false positive costs one extra file
+  * scan, ~7e-4 at 16 bits per key and K = 7. */
 object BloomIndex {
 
+  /** The smallest filter, in bits. */
   val MBits = 1 << 14
   val K = 7
+
+  /** Filter size for a file holding `distinctKeys` keys. */
+  private[sources] def bitsFor(distinctKeys: Long): Int = {
+    val want = math.max(MBits.toLong, 16 * distinctKeys)
+    require(want <= (1 << 30), s"bloom filter for $distinctKeys keys is too large")
+    Integer.highestOneBit((want - 1).toInt) << 1
+  }
 
   private def bloomFile(root: String, v: Int, keyCol: String) =
     new File(new File(root, "_manifests"), s"v$v.bloom.$keyCol")
 
-  /** The K probe positions of `key` via double hashing — Spark
-    * expressions so build and lookup share one hash codepath. */
-  private def posCols(key: Column): Seq[Column] = {
-    // reduce both hashes below MBits BEFORE combining — ANSI mode
-    // (Spark 4 default) throws on the wrapped h1 + i*h2 long add
-    val h1 = pmod(xxhash64(key), lit(MBits.toLong))
-    val h2 = pmod(xxhash64(key, lit(0x9E3779B9L)), lit(MBits.toLong - 1)) +
+  /** The K probe positions of `key` in an `m`-bit filter via double
+    * hashing — Spark expressions so build and lookup share one hash
+    * codepath. */
+  private def posCols(key: Column, m: Column): Seq[Column] = {
+    // reduce both hashes below m BEFORE combining — ANSI mode (Spark 4
+    // default) throws on the wrapped h1 + i*h2 long add
+    val h1 = pmod(xxhash64(key), m)
+    val h2 = pmod(xxhash64(key, lit(0x9E3779B9L)), m - 1) +
       lit(1L) // never a zero step
-    (0 until K).map(i => pmod(h1 + lit(i.toLong) * h2, lit(MBits.toLong))
-      .cast("int"))
+    (0 until K).map(i => pmod(h1 + lit(i.toLong) * h2, m).cast("int"))
   }
 
-  /** [[posCols]] for ONE key, evaluated on the driver through the
-    * SAME Catalyst expression the build pass runs (`XxHash64.eval`
-    * over literals) — bit-identical hashing with ZERO Spark jobs, so
-    * a probe inside query PLANNING (the catalog's `pushFilters`)
-    * costs arithmetic, not a scheduled job per key. Round17Props pins
-    * driver positions == expression-codepath positions. */
-  private[graft] def positions(key: Long): Seq[Int] = {
+  /** [[posCols]] for ONE key in an `m`-bit filter, evaluated on the
+    * driver through the SAME Catalyst expression the build pass runs
+    * (`XxHash64.eval` over literals) — bit-identical hashing with ZERO
+    * Spark jobs, so a probe inside query PLANNING (the catalog's
+    * `pushFilters`) costs arithmetic, not a scheduled job per key.
+    * Round17Spec pins driver positions == expression-codepath
+    * positions. */
+  private[graft] def positions(key: Long, m: Long = MBits): Seq[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     def pmodL(a: Long, n: Long): Long = { val r = a % n; if (r < 0) r + n else r }
-    val m = MBits.toLong
     val h1 = pmodL(
       XxHash64(Seq(Literal(key)), 42L).eval().asInstanceOf[Long], m)
     val h2 = pmodL(
@@ -70,9 +78,11 @@ object BloomIndex {
     (0 until K).map(i => pmodL(h1 + i.toLong * h2, m).toInt)
   }
 
-  /** Does `bits` cover every probe position of `key`? */
+  /** Does `bits` cover every probe position of `key`? The filter size
+    * is the bitset's length. */
   private[sources] def covers(bits: Array[Byte], key: Long): Boolean =
-    positions(key).forall(pos => (bits(pos >> 3) & (1 << (pos & 7))) != 0)
+    positions(key, bits.length * 8L)
+      .forall(pos => (bits(pos >> 3) & (1 << (pos & 7))) != 0)
 
   /** The whole sidecar for (`v`, `keyCol`), read ONCE: path → bitset.
     * None when no sidecar exists (probes then keep every file). */
@@ -87,8 +97,8 @@ object BloomIndex {
       }.toMap)
   }
 
-  /** Build the sidecar for the CURRENT version's manifest. One
-    * distributed pass; driver state is files × MBits/8 bytes.
+  /** Build the sidecar for the CURRENT version's manifest. Two
+    * distributed passes; driver state is the files' filter bytes.
     *
     * Hash-parity contract: probes ([[positions]]) hash a LONG literal
     * through `XxHash64`, so the build MUST hash the key column through
@@ -112,57 +122,26 @@ object BloomIndex {
         s"bloom key column $keyCol has unsupported type $other " +
           "(supported: integral, timestamp — probes hash long values)")
     }
-    val perFile = base
-      .select(input_file_name().as("f"), key.as("k"))
-      .select(col("f"), explode(array(posCols(col("k")): _*)).as("pos"))
+    val keyed = base.select(input_file_name().as("f"), key.as("k"))
+    val bits: Map[String, Int] = keyed.groupBy(col("f"))
+      .agg(count_distinct(col("k")))
+      .collect().map(r => r.getString(0) -> bitsFor(r.getLong(1))).toMap
+    val m = element_at(typedLit(bits.map { case (f, b) => f -> b.toLong }),
+      col("f"))
+    val perFile = keyed
+      .select(col("f"), explode(array(posCols(col("k"), m): _*)).as("pos"))
       .groupBy(col("f"))
       .agg(collect_set(col("pos")).as("ps"))
       .collect()
     val lines = perFile.map { r =>
       val path = new java.net.URI(r.getString(0)).getPath
-      val bits = new Array[Byte](MBits / 8)
-      r.getSeq[Int](1).foreach(p => bits(p >> 3) = (bits(p >> 3) |
+      val set = new Array[Byte](bits(r.getString(0)) / 8)
+      r.getSeq[Int](1).foreach(p => set(p >> 3) = (set(p >> 3) |
         (1 << (p & 7))).toByte)
-      s"$path\t${Base64.getEncoder.encodeToString(bits)}"
+      s"$path\t${Base64.getEncoder.encodeToString(set)}"
     }
     Files.write(bloomFile(root, v, keyCol).toPath,
       lines.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
     v
-  }
-
-  /** Files of version `v` whose Bloom covers every probe position of
-    * `key`; files absent from the sidecar (e.g. appended after the
-    * build) are conservatively kept. */
-  def survivors(spark: SparkSession, root: String, keyCol: String,
-      key: Long, version: Option[Int] = None): (Seq[String], Int) = {
-    val v = version.getOrElse(SnapshotStore.latestVersion(root))
-    val files = SnapshotStore.filesAt(root, v)
-    (survivorsAmong(root, keyCol, key, v, files), files.size)
-  }
-
-  /** [[survivors]] restricted to an explicit candidate list — the
-    * composable piece [[SnapshotRead]] stacks on top of stats
-    * pruning (a file already skipped by min/max never needs a Bloom
-    * probe). One sidecar read, driver-side probe arithmetic, zero
-    * Spark jobs. */
-  private[sources] def survivorsAmong(root: String,
-      keyCol: String, key: Long, v: Int, files: Seq[String])
-      : Seq[String] =
-    loadSidecar(root, v, keyCol) match {
-      case None => files
-      case Some(blooms) =>
-        files.filter(p => blooms.get(p).forall(covers(_, key)))
-    }
-
-  /** Point lookup: scan only the surviving files. Returns a frame
-    * with the snapshot's schema even when nothing survives. */
-  def lookup(spark: SparkSession, root: String, keyCol: String,
-      key: Long, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(SnapshotStore.latestVersion(root))
-    val (keep, _) = survivors(spark, root, keyCol, key, Some(v))
-    val all = SnapshotStore.filesAt(root, v)
-    if (keep.isEmpty)
-      spark.read.parquet(all.head).limit(0).filter(col(keyCol) === key)
-    else spark.read.parquet(keep: _*).filter(col(keyCol) === key)
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -23,16 +22,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * spec applies to). Each group plans as Spark's OWN ParquetTable —
   * its `basePath` pins where Hive-style partition directories start,
   * and the group schema rides in as the user-specified schema with
-  * partition columns as STRINGS (matching `readEvolved`'s
-  * no-type-inference contract, so the SQL and Scala faces return
-  * identical rows). The unified scan concatenates the groups'
+  * partition columns as STRINGS (the same groups and schemas the
+  * Scala planner's evolved scan reads, so the SQL and Scala faces
+  * return identical rows). The unified scan concatenates the groups'
   * input partitions and projects each group's rows into the unified
   * required schema by NAME, null-padding columns the group lacks.
   *
-  * Pushdown: sidecar pruning ([[SidecarPrune]]) runs ONCE over the
-  * union's files; each group then receives the pushed predicates it
-  * can evaluate (references ⊆ its columns) for ordinary partition-
-  * directory and row-group pruning. EVERY predicate stays residual at
+  * Pushdown: sidecar pruning ([[SnapshotRead.Snapshot.prune]]) runs
+  * ONCE over the union's files; each group then receives the pushed
+  * predicates it can evaluate (references ⊆ its columns) for ordinary
+  * partition-directory and row-group pruning. EVERY predicate stays
+  * residual at
   * the union level — Spark re-evaluates them on the padded rows,
   * which is exactly what makes a filter on a column some group lacks
   * correct (padded NULL → row dropped), and costs one extra codegen'd
@@ -72,25 +72,28 @@ private[graft] object EvolvedTable {
       val merged = new java.util.HashMap[String, String](
         options.asCaseSensitiveMap())
       merged.put("basePath", baseDir)
-      ParquetTable(name, SparkSession.active,
-        new CaseInsensitiveStringMap(merged), files.toIndexedSeq,
-        Some(groupSchema), classOf[ParquetFileFormat])
+      SnapshotRead.parquetTable(name, files, Some(groupSchema),
+        new CaseInsensitiveStringMap(merged))
     }
   }
 
-  /** Group `files` by commit directory under `<root>/data`, resolving
-    * each group's spec (`_spec.list`) and schema (`_schema.ddl`,
-    * falling back to one footer probe for legacy commits). */
-  def groupsOf(root: String, files: Seq[String]): Seq[LayoutGroup] = {
+  /** `files` grouped by their commit directory under `<root>/data`,
+    * in directory-name order — the store's one commit grouping. */
+  def commitDirs(root: String, files: Seq[String]): Seq[(File, Seq[String])] = {
     val dataDir = new File(root, "data").getCanonicalFile
-    def commitDirOf(p: String): String = {
+    files.groupBy { p =>
       var f = new File(p).getCanonicalFile
       while (f.getParentFile != null && f.getParentFile != dataDir)
         f = f.getParentFile
       f.getName
-    }
-    files.groupBy(commitDirOf).toSeq.sortBy(_._1).map { case (cdir, fs) =>
-      val dir = new File(dataDir, cdir)
+    }.toSeq.sortBy(_._1).map { case (cdir, fs) => new File(dataDir, cdir) -> fs }
+  }
+
+  /** [[commitDirs]]' groups with each one's spec (`_spec.list`) and
+    * schema (`_schema.ddl`, falling back to one footer probe for
+    * legacy commits) resolved. */
+  def groupsOf(dirs: Seq[(File, Seq[String])]): Seq[LayoutGroup] =
+    dirs.map { case (dir, fs) =>
       val specF = new File(dir, "_spec.list")
       val spec =
         if (!specF.isFile) Seq.empty[String]
@@ -110,13 +113,12 @@ private[graft] object EvolvedTable {
         spec.contains(f.name)))
       LayoutGroup(dir.getPath, fs.sorted, spec, data)
     }
-  }
 
   /** The V2 table over an evolved store. Throws [[graft.QueryError]]
     * at load when layouts disagree on a shared column's type (one
     * commit's data-Long vs another's directory-string cannot be
-    * flattened losslessly — the Scala `readEvolved` path remains for
-    * that rare shape).
+    * flattened losslessly — the Scala planner's by-name union remains
+    * for that rare shape).
     *
     * Writes are first-class (Iceberg writes under partition evolution
     * as a matter of course): `INSERT INTO` is a FLAT append commit —
@@ -129,17 +131,18 @@ private[graft] object EvolvedTable {
     * into the rewritten files — Round17gSpec). All through the same
     * CAS commit primitives and the same [[SnapshotDml]] seam as the
     * flat table. */
-  final class EvolvedSnapshotTable(tableName: String, root: String,
-      v: Int, groups: Seq[LayoutGroup]) extends Table with SupportsRead
+  final class EvolvedSnapshotTable(tableName: String,
+      snap: SnapshotRead.Snapshot) extends Table with SupportsRead
       with org.apache.spark.sql.connector.catalog.SupportsWrite
       with org.apache.spark.sql.connector.catalog.SupportsDeleteV2 {
+    private val root = snap.root
     private[sources] val unified: StructType =
-      try groups.map(_.groupSchema).reduceLeft(graft.util.SchemaMerge.merge)
+      try snap.groups.map(_.groupSchema).reduceLeft(graft.util.SchemaMerge.merge)
       catch {
         case e: graft.QueryError => throw new graft.QueryError(
           s"$tableName: partition-evolved layouts disagree on a " +
             s"column's type (${e.getMessage}); read it via " +
-            "SnapshotStore.readEvolved")
+            "SnapshotRead.plan")
       }
     override def name(): String = tableName
     override def schema(): StructType = unified
@@ -149,7 +152,7 @@ private[graft] object EvolvedTable {
         TableCapability.STREAMING_WRITE)
     override def newScanBuilder(options: CaseInsensitiveStringMap)
         : ScanBuilder =
-      new EvolvedScanBuilder(tableName, root, v, groups, unified, options)
+      new EvolvedScanBuilder(tableName, snap, unified, options)
     override def newWriteBuilder(
         info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
         : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -163,8 +166,8 @@ private[graft] object EvolvedTable {
       SnapshotDml.deleteWhere(SparkSession.active, root, predicates)
   }
 
-  private final class EvolvedScanBuilder(tableName: String, root: String,
-      v: Int, groups: Seq[LayoutGroup], unified: StructType,
+  private final class EvolvedScanBuilder(tableName: String,
+      snap: SnapshotRead.Snapshot, unified: StructType,
       options: CaseInsensitiveStringMap)
       extends org.apache.spark.sql.internal.connector
         .SupportsPushDownCatalystFilters
@@ -173,14 +176,14 @@ private[graft] object EvolvedTable {
 
     private var required: StructType = unified
     private var filters: Seq[Expression] = Nil
+    private val groups = snap.groups
     private var active: Seq[LayoutGroup] = groups
 
     override def pushFilters(fs: Seq[Expression]): Seq[Expression] = {
       filters = fs
       // ONE sidecar pass over the union's files; groups shrink to
       // their survivors, empty groups drop from the plan entirely
-      val keep = SidecarPrune
-        .survivors(root, v, fs, groups.flatMap(_.files)).toSet
+      val keep = snap.prune(SnapshotRead.Bounds.of(fs))._2.toSet
       val pruned = groups.map(g => g.copy(files = g.files.filter(keep)))
         .filter(_.files.nonEmpty)
       active =

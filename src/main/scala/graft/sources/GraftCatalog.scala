@@ -7,10 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL-text face of the snapshot store — a DataSourceV2
   * [[TableCatalog]] so a pure-SQL user gets Delta/Iceberg-style time
@@ -74,45 +72,18 @@ class GraftCatalog extends TableCatalog
     (ident.namespace() :+ ident.name())
       .foldLeft(new File(warehouse))(new File(_, _)).getPath
 
+  /** The table at version `v`. Partition-evolved commits store values
+    * in DIRECTORY names under a per-commit spec, so the planner's
+    * layout rule ([[SnapshotRead.Snapshot.evolved]]) decides: evolved
+    * versions plan as a per-layout union ([[EvolvedTable]]) that
+    * resolves every file against the spec its commit was written with
+    * — the Iceberg read contract, in pure SQL — and flat ones as one
+    * parquet table. */
   private def tableAt(ident: Identifier, v: Int): Table = {
-    val root = rootOf(ident)
-    val files = SnapshotStore.filesAt(root, v)
-    // partition-evolved commits store values in DIRECTORY names under
-    // a per-commit spec; a flat parquet scan over the leaf files would
-    // silently DROP those columns. Such tables plan as a per-layout
-    // union ([[EvolvedTable]]) that resolves every file against the
-    // spec its commit was written with — the Iceberg read contract,
-    // in pure SQL.
-    val dataDir = new File(root, "data").getCanonicalFile
-    def commitDirOf(p: String): File = {
-      var f = new File(p).getCanonicalFile
-      while (f.getParentFile != null && f.getParentFile != dataDir)
-        f = f.getParentFile
-      f
-    }
-    val commitDirs = files.map(commitDirOf).distinct
-    val anySpec = commitDirs.exists(d => new File(d, "_spec.list").isFile)
-    // heterogeneous FLAT commits without a pinned #schema also plan as
-    // the union: a single-footer inference would silently drop the
-    // wider commits' columns (the shape a copy-on-write rewrite leaves
-    // behind when it flattens the last spec'd files of an evolved
-    // store). Detection reads only the per-commit `_schema.ddl`
-    // markers — driver-side, commit-count-sized, zero data IO; a
-    // legacy store without markers keeps the old flat path.
-    lazy val ddlsDiffer = commitDirs.flatMap { d =>
-      val f = new File(d, "_schema.ddl")
-      if (!f.isFile) None
-      else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-    }.distinct.size > 1
-    val evolved = anySpec ||
-      (!SnapshotStore.manifestMeta(root, v).contains("schema") && ddlsDiffer)
+    val snap = SnapshotStore.snapshotAt(rootOf(ident), v)
     val tableName = s"$catalogName.${ident.toString}@v$v"
-    if (evolved)
-      new EvolvedTable.EvolvedSnapshotTable(tableName, root, v,
-        EvolvedTable.groupsOf(root, files))
-    else
-      new GraftCatalog.SnapshotTable(tableName, root, v, files)
+    if (snap.evolved) new EvolvedTable.EvolvedSnapshotTable(tableName, snap)
+    else new GraftCatalog.SnapshotTable(tableName, snap)
   }
 
   private def checkExists(ident: Identifier): String = {
@@ -142,7 +113,7 @@ class GraftCatalog extends TableCatalog
     val root = rootOf(ident)
     if (SnapshotStore.versions(root).isEmpty)
       metadataTable(ident).getOrElse(throw new NoSuchTableException(ident))
-    else tableAt(ident, SnapshotStore.latestVersion(root))
+    else tableAt(ident, SnapshotRead.resolve(root))
   }
 
   /** `VERSION AS OF <v>` — an integer version or a tag name. An
@@ -152,21 +123,17 @@ class GraftCatalog extends TableCatalog
     * typo'd a tag that a table they can SELECT from doesn't exist. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val root = checkExists(ident)
-    val v = version.toIntOption.getOrElse(
-      SnapshotStore.tags(root).getOrElse(version,
-        throw new graft.QueryError(
-          s"unknown version/tag '$version' for table ${ident.toString}: " +
-            s"known tags ${SnapshotStore.tags(root).keys.toSeq.sorted
-              .mkString("[", ", ", "]")}, " +
-            s"versions ${SnapshotStore.versions(root).headOption.getOrElse(0)}" +
-            s"..${SnapshotStore.latestVersion(root)}")))
-    tableAt(ident, v)
+    tableAt(ident, version.toIntOption match {
+      case Some(v) => SnapshotRead.resolve(root, version = Some(v))
+      case None => SnapshotRead.resolve(root, tag = Some(version),
+        table = ident.toString)
+    })
   }
 
   /** `TIMESTAMP AS OF <t>` — Spark hands epoch MICROseconds. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table =
-    tableAt(ident,
-      SnapshotStore.versionAsOf(checkExists(ident), timestampMicros / 1000L))
+    tableAt(ident, SnapshotRead.resolve(checkExists(ident),
+      asOfMillis = Some(timestampMicros / 1000L)))
 
   override def tableExists(ident: Identifier): Boolean =
     SnapshotStore.versions(rootOf(ident)).nonEmpty
@@ -297,29 +264,27 @@ object GraftCatalog {
   private[graft] val footerInferences =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  private final class SnapshotTable(tableName: String, root: String,
-      v: Int, files: Seq[String])
+  private final class SnapshotTable(tableName: String,
+      snap: SnapshotRead.Snapshot)
       extends Table with SupportsRead
       with org.apache.spark.sql.connector.catalog.SupportsWrite
       with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
       with org.apache.spark.sql.connector.catalog
         .SupportsRowLevelOperations {
+    private val root = snap.root
     // the pinned schema travels in manifest METADATA (#schema header,
     // written at commit) — resolving it is a string parse, not IO over
     // a 100 TB table's footers. Passed as the user-specified schema so
     // the delegate ParquetTable never infers either.
-    private val pinned: Option[org.apache.spark.sql.types.StructType] =
-      SnapshotStore.manifestMeta(root, v).get("schema")
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
+    private val pinned = snap.schema
     private[sources] def mk(fs: Seq[String]): ParquetTable =
-      ParquetTable(tableName, SparkSession.active,
-        new CaseInsensitiveStringMap(Collections.emptyMap()),
-        fs.toIndexedSeq, pinned, classOf[ParquetFileFormat])
+      SnapshotRead.parquetTable(tableName, fs, pinned,
+        new CaseInsensitiveStringMap(Collections.emptyMap()))
     override def name(): String = tableName
     override def schema(): org.apache.spark.sql.types.StructType =
       pinned.getOrElse {
         footerInferences.incrementAndGet()
-        mk(files).schema
+        mk(snap.files).schema
       }
     override def capabilities(): java.util.Set[TableCapability] =
       java.util.EnumSet.of(TableCapability.BATCH_READ,
@@ -328,7 +293,7 @@ object GraftCatalog {
         TableCapability.STREAMING_WRITE,
         TableCapability.MICRO_BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap)
-        : ScanBuilder = new SnapshotScanBuilder(root, v, files, mk, options)
+        : ScanBuilder = new SnapshotScanBuilder(snap, mk, options)
     override def newWriteBuilder(
         info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
         : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -365,21 +330,21 @@ object GraftCatalog {
     * list survives) — correctness never depends on the pruning, only
     * IO does. When everything is skipped, one file is kept so schema
     * inference and the (now trivially empty) row filter still work. */
-  private final class SnapshotScanBuilder(root: String, v: Int,
-      all: Seq[String], mk: Seq[String] => ParquetTable,
-      options: CaseInsensitiveStringMap)
+  private final class SnapshotScanBuilder(snap: SnapshotRead.Snapshot,
+      mk: Seq[String] => ParquetTable, options: CaseInsensitiveStringMap)
       extends org.apache.spark.sql.internal.connector
         .SupportsPushDownCatalystFilters
       with org.apache.spark.sql.connector.read
         .SupportsPushDownRequiredColumns {
     import org.apache.spark.sql.catalyst.expressions._
 
+    private val all = snap.files
     private var inner = mk(all).newScanBuilder(options)
     private var required: Option[org.apache.spark.sql.types.StructType] =
       None
 
     override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-      val pruned = SidecarPrune.survivors(root, v, filters, all)
+      val pruned = snap.prune(SnapshotRead.Bounds.of(filters))._2
       if (pruned.size != all.size)
         inner = mk(if (pruned.nonEmpty) pruned else all.take(1))
           .newScanBuilder(options)
@@ -399,7 +364,7 @@ object GraftCatalog {
     override def build(): org.apache.spark.sql.connector.read.Scan =
       // batch reads delegate straight through; the wrapper adds the
       // streaming face (readStream.table — version-diff micro-batches)
-      new SnapshotSource.WrappedScan(inner.build(), root, required, mk,
+      new SnapshotSource.WrappedScan(inner.build(), snap.root, required, mk,
         options)
   }
 }

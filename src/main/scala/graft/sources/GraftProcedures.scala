@@ -165,10 +165,11 @@ private[sources] object GraftProcedures {
       val root = rootOf(warehouse, a.getUTF8String(0).toString)
       val cols = a.getUTF8String(1).toString.split(",").toSeq
         .map(_.trim).filter(_.nonEmpty)
-      // evolved-safe: re-clustering flattens directory-encoded
-      // columns into data columns rather than dropping their values
+      // the planner's layout-aware scan: re-clustering flattens
+      // directory-encoded columns into data columns rather than
+      // dropping their values
       val v = SnapshotStore.commitReplaceWithStatsMulti(
-        SnapshotStore.readEvolved(spark, root), root, cols, a.getInt(2))
+        SnapshotStore.read(spark, root), root, cols, a.getInt(2))
       Array(v, UTF8String.fromString(
         SnapshotStore.statCols(root, v)
           .map { case (c, k) => s"$c:$k" }.mkString(",")))

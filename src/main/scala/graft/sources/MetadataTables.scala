@@ -50,20 +50,15 @@ private[sources] object MetadataTables {
             : InternalRow
         }.toArray
       case "files" =>
-        val head = SnapshotStore.latestVersion(root)
-        val dataDir = new File(root, "data").getCanonicalFile
-        def commitDirOf(p: String): String = {
-          // the COMMIT directory, not the immediate parent — a file
-          // under an evolved layout sits below partition directories
-          var f = new File(p).getCanonicalFile
-          while (f.getParentFile != null && f.getParentFile != dataDir)
-            f = f.getParentFile
-          f.getName
-        }
-        SnapshotStore.filesAt(root, head).map { p =>
+        val files = SnapshotStore.filesAt(root, SnapshotStore.latestVersion(root))
+        // the COMMIT directory, not the immediate parent — a file
+        // under an evolved layout sits below partition directories
+        val commitDir = EvolvedTable.commitDirs(root, files)
+          .flatMap { case (d, fs) => fs.map(_ -> d.getName) }.toMap
+        files.map { p =>
           new GenericInternalRow(Array[Any](UTF8String.fromString(p),
             new File(p).length(),
-            UTF8String.fromString(commitDirOf(p)))): InternalRow
+            UTF8String.fromString(commitDir(p)))): InternalRow
         }.toArray
       case "tags" =>
         SnapshotStore.tags(root).toSeq.sortBy(_._1).map { case (t, v) =>

@@ -1,34 +1,50 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 
-/** ONE composable snapshot read planner — the entry point a 100 TB
-  * user expects instead of four parallel ones (`read` / `readPruned`
-  * / `readEvolved` / `BloomIndex.lookup`, which did not compose: a
-  * range predicate against a partition-evolved table got no stats
-  * pruning, and a Bloom point lookup was blind to evolved layouts).
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The snapshot store's ONE read planner. Every read face — `plan`,
+  * [[SnapshotStore.read]], the SQL catalog's tables and scan builders,
+  * and the base reads of the rewriting commits (delete, compaction,
+  * merge, re-index) — turns (version, predicate) into files and files
+  * into rows through its three parts:
   *
-  * The plan applies, in order:
-  *   1. version resolution — explicit version, `TIMESTAMP AS OF`
-  *      (manifest-carried publication instants), or a named tag;
-  *   2. manifest min/max stats pruning for a range predicate
-  *      (`v<N>.stats` sidecar — driver-side, file-count-sized, no
-  *      IO; files without stats lines are conservatively kept);
-  *   3. per-file Bloom skipping for a point predicate (`v<N>.bloom.*`
-  *      sidecar) — probed only on the stats survivors, never on
-  *      files min/max already excluded;
-  *   4. the spec-aware evolved read: every surviving file resolves
-  *      against the partition spec ITS commit was written with
-  *      (Iceberg's read contract under partition evolution);
-  *   5. the row-level predicates on top (sidecars bound FILES, they
-  *      never filter rows).
+  *  1. the resolver ([[resolve]]): latest, an explicit version,
+  *     `TIMESTAMP AS OF` (the manifests' `#ts` instants) or a tag;
+  *  2. the pruner ([[Snapshot.prune]] over [[Bounds]]): per-column long
+  *     bounds and string bounds against the version's stats sidecar
+  *     (column identity through the `#statcol` header — bounds of one
+  *     column never prune by another's predicate), then per-column key
+  *     sets against the Bloom sidecars, probed only on the stats
+  *     survivors. Driver-side metadata, never a Spark job. Two
+  *     translations feed it: pushed Catalyst filters ([[Bounds.of]],
+  *     where an equality feeds both the bounds and the key set) and
+  *     `plan`'s arguments (a `point` feeds only the key set);
+  *  3. the scan ([[Snapshot.scan]]), under a layout decided once per
+  *     version: EVOLVED when any commit directory carries `_spec.list`,
+  *     or when the manifest pins no `#schema` and the commits'
+  *     `_schema.ddl` markers differ; FLAT otherwise. A flat table is
+  *     one parquet scan under its pinned schema (no footer job) or,
+  *     unpinned, under footer inference; an evolved table reads each
+  *     commit group ([[EvolvedTable.groupsOf]]) under its group schema
+  *     and `basePath` — partition directories as STRING, so the layout
+  *     never changes a column's type — and unions the groups by name.
+  *     A version without files is an empty frame of its pinned schema.
   *
-  * Both predicates address DATA columns; a column that is a partition
-  * directory in some commit's layout still surfaces (readEvolved
-  * recovers it as a string) but carries no sidecar lines there.
-  * Returns the pruning ledger alongside the frame so callers (and the
-  * plan audit) can pin skipped-file counts from BOTH sidecars. */
+  * Sidecars bound FILES, never rows: `plan` re-applies every predicate
+  * as a row filter, and a file without a sidecar line is kept. */
 object SnapshotRead {
 
   /** The planned scan: `df` is the final filtered frame; the counts
@@ -43,12 +59,8 @@ object SnapshotRead {
   /** Plan a snapshot read. At most one of `version` / `asOfMillis` /
     * `tag` may be given (default: latest). `range` = (statCol, lo,
     * hi) enables stats pruning + the row filter `lo <= c <= hi`;
-    * `ranges` adds FURTHER range predicates (per-column typed stats
-    * sidecars prune on every indexed column at once — Iceberg-style
-    * per-column bounds); `strRanges` = (col, lo, hi) STRING bounds,
-    * pruned against `str`-kind sidecar lines with the same byte-wise
-    * unsigned UTF8String ordering the SQL face uses (Spark's string
-    * order — what min/max computed when the sidecar was built);
+    * `ranges` adds further range predicates (every indexed column
+    * prunes at once); `strRanges` = (col, lo, hi) STRING bounds;
     * `point` = (keyCol, key) enables Bloom skipping + the row filter
     * `c = key`. All together express their conjunction. A range on a
     * `ts`-kind column takes epoch-MICROS bounds (the sidecar's
@@ -61,57 +73,20 @@ object SnapshotRead {
       point: Option[(String, Long)] = None,
       ranges: Seq[(String, Long, Long)] = Nil,
       strRanges: Seq[(String, String, String)] = Nil): ScanPlan = {
-    require(Seq(version, asOfMillis, tag).count(_.isDefined) <= 1,
-      "give at most one of version / asOfMillis / tag")
-    val v = version
-      .orElse(asOfMillis.map(SnapshotStore.versionAsOf(root, _)))
-      .orElse(tag.map(t => SnapshotStore.tags(root).getOrElse(t,
-        throw new graft.QueryError(s"unknown tag: $t"))))
-      .getOrElse(SnapshotStore.latestVersion(root))
-    val all = SnapshotStore.filesAt(root, v)
-    val kinds = SnapshotStore.statCols(root, v)
+    val snap = SnapshotStore.snapshotAt(root,
+      resolve(root, version, asOfMillis, tag))
     val allRanges = range.toSeq ++ ranges
-    // stats pruning applies ONLY when a range's column IS one the
-    // sidecar indexes (the manifest's #statcol header) — bounds of
-    // a different column would prune files that still hold matching
-    // rows, silently dropping them. A range on any other column keeps
-    // every file (the row filter below still applies), mirroring the
-    // SQL catalog's conservative contract.
-    val afterLong = allRanges.foldLeft(all) {
-      case (fs, (c, lo, hi))
-          if kinds.get(c).exists(k => k == "long" || k == "ts") =>
-        val stats = SnapshotStore.boundsFor(root, v, c)
-        fs.filter(f => stats.get(f).forall { case (mn, mx) =>
-          mx >= lo && mn <= hi })
-      case (fs, _) => fs
+    val withLongs = allRanges.foldLeft(
+      Bounds(keys = point.map { case (c, k) => c -> Seq(k) }.toMap)) {
+      case (b, (c, lo, hi)) => b.atLeast(c, lo).atMost(c, hi)
     }
-    // str-kind bounds prune with byte-wise unsigned UTF8String order —
-    // same identity guard: only a column the header names as `str`
-    // prunes, anything else keeps every file
-    val afterStats = strRanges.foldLeft(afterLong) {
-      case (fs, (c, lo, hi)) if kinds.get(c).contains("str") =>
-        import org.apache.spark.unsafe.types.UTF8String
-        val stats = SnapshotStore.strBoundsFor(root, v, c)
-        val (loU, hiU) = (UTF8String.fromString(lo), UTF8String.fromString(hi))
-        fs.filter(f => stats.get(f).forall { case (mn, mx) =>
-          UTF8String.fromString(mx).compareTo(loU) >= 0 &&
-            UTF8String.fromString(mn).compareTo(hiU) <= 0 })
-      case (fs, _) => fs
+    val bounds = strRanges.foldLeft(withLongs) { case (b, (c, lo, hi)) =>
+      b.strAtLeast(c, UTF8String.fromString(lo))
+        .strAtMost(c, UTF8String.fromString(hi))
     }
-    val afterBloom = point match {
-      case Some((keyCol, key)) =>
-        BloomIndex.survivorsAmong(root, keyCol, key, v, afterStats)
-      case None => afterStats
-    }
-    val base =
-      if (afterBloom.nonEmpty)
-        SnapshotStore.readFilesEvolved(spark, root, afterBloom)
-      else if (all.nonEmpty)
-        // schema-preserving empty frame when every file was skipped
-        SnapshotStore.readFilesEvolved(spark, root, all).limit(0)
-      else throw new graft.QueryError(s"version $v of $root lists no files")
+    val (afterStats, afterBloom) = snap.prune(bounds)
     def rangeFilter(c: String, lo: Long, hi: Long) =
-      if (kinds.get(c).contains("ts"))
+      if (snap.statCols.get(c).contains("ts"))
         col(c) >= timestamp_micros(lit(lo)) &&
           col(c) <= timestamp_micros(lit(hi))
       else col(c) >= lo && col(c) <= hi
@@ -119,19 +94,222 @@ object SnapshotRead {
       allRanges.map { case (c, lo, hi) => rangeFilter(c, lo, hi) } ++
       strRanges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi } ++
       point.map { case (c, k) => col(c) === k })
-      .foldLeft(base)(_.filter(_))
-    ScanPlan(v, all.size, afterStats.size, afterBloom.size, filtered)
+      .foldLeft(snap.scan(spark, afterBloom))(_.filter(_))
+    ScanPlan(snap.version, snap.files.size, afterStats.size,
+      afterBloom.size, filtered)
   }
 
-  /** The frame alone, for callers that don't need the ledger. */
-  def read(spark: SparkSession, root: String,
-      version: Option[Int] = None,
-      asOfMillis: Option[Long] = None,
-      tag: Option[String] = None,
-      range: Option[(String, Long, Long)] = None,
-      point: Option[(String, Long)] = None,
-      ranges: Seq[(String, Long, Long)] = Nil,
-      strRanges: Seq[(String, String, String)] = Nil): DataFrame =
-    plan(spark, root, version, asOfMillis, tag, range, point, ranges,
-      strRanges).df
+  // ---- the resolver ----
+
+  /** The version a read sees: at most one of `version`, `asOfMillis`
+    * and `tag`, else the latest. An unknown tag is a VERSION error
+    * naming `table`, the known tags and the live version range. */
+  private[sources] def resolve(root: String, version: Option[Int] = None,
+      asOfMillis: Option[Long] = None, tag: Option[String] = None,
+      table: String = ""): Int = {
+    require(Seq(version, asOfMillis, tag).count(_.isDefined) <= 1,
+      "give at most one of version / asOfMillis / tag")
+    version
+      .orElse(asOfMillis.map(SnapshotStore.versionAsOf(root, _)))
+      .orElse(tag.map { t =>
+        val tags = SnapshotStore.tags(root)
+        tags.getOrElse(t, throw new graft.QueryError(
+          s"unknown version/tag '$t' for table " +
+            s"${if (table.nonEmpty) table else root}: known tags " +
+            s"${tags.keys.toSeq.sorted.mkString("[", ", ", "]")}, " +
+            s"versions ${SnapshotStore.versions(root).headOption.getOrElse(0)}" +
+            s"..${SnapshotStore.latestVersion(root)}"))
+      })
+      .getOrElse(SnapshotStore.latestVersion(root))
+  }
+
+  // ---- the pruner ----
+
+  /** A conjunctive predicate as the pruner sees it: per-column long
+    * bounds (kinds `long` and `ts`, a ts bound in epoch-micros),
+    * per-column string bounds (byte-wise unsigned UTF8String order —
+    * what Spark's min/max used when the sidecar was built), and
+    * per-column key SETS (a file survives a set when its Bloom may
+    * hold ANY member). */
+  private[sources] final case class Bounds(
+      lo: Map[String, Long] = Map.empty,
+      hi: Map[String, Long] = Map.empty,
+      sLo: Map[String, UTF8String] = Map.empty,
+      sHi: Map[String, UTF8String] = Map.empty,
+      keys: Map[String, Seq[Long]] = Map.empty) {
+    def atLeast(c: String, x: Long): Bounds =
+      copy(lo = lo + (c -> math.max(x, lo.getOrElse(c, Long.MinValue))))
+    def atMost(c: String, x: Long): Bounds =
+      copy(hi = hi + (c -> math.min(x, hi.getOrElse(c, Long.MaxValue))))
+    def strAtLeast(c: String, x: UTF8String): Bounds =
+      copy(sLo = sLo + (c -> sLo.get(c).filter(_.compareTo(x) >= 0).getOrElse(x)))
+    def strAtMost(c: String, x: UTF8String): Bounds =
+      copy(sHi = sHi + (c -> sHi.get(c).filter(_.compareTo(x) <= 0).getOrElse(x)))
+    /** A key set also bounds the column by its min and max. */
+    def keySet(c: String, ks: Seq[Long]): Bounds =
+      copy(keys = keys + (c -> ks)).atLeast(c, ks.min).atMost(c, ks.max)
+  }
+
+  private[sources] object Bounds {
+
+    private def longOf(l: Literal): Option[Long] = l.dataType match {
+      case org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.ShortType =>
+        Option(l.value).map(_.toString.toLong)
+      // a timestamp literal's Catalyst value IS epoch-micros — the
+      // same domain the `ts`-kind sidecar stores bounds in
+      case org.apache.spark.sql.types.TimestampType =>
+        Option(l.value).map(_.asInstanceOf[Long])
+      case _ => None
+    }
+
+    private def strOf(l: Literal): Option[UTF8String] = l.dataType match {
+      case org.apache.spark.sql.types.StringType =>
+        Option(l.value).map(_.asInstanceOf[UTF8String])
+      case _ => None
+    }
+
+    private def equal(b: Bounds, a: String, l: Literal): Bounds = {
+      val withKey = longOf(l).fold(b)(k => b.keySet(a, Seq(k)))
+      strOf(l).fold(withKey)(x => withKey.strAtLeast(a, x).strAtMost(a, x))
+    }
+
+    /** Strict long bounds tighten by one; strict string bounds relax to
+      * inclusive — conservative, keeps at most the boundary file. */
+    private def bound(b: Bounds, a: String, l: Literal, isLo: Boolean,
+        strict: Boolean): Bounds = {
+      val withLong = longOf(l).fold(b) { k =>
+        if (isLo) b.atLeast(a, if (strict) k + 1 else k)
+        else b.atMost(a, if (strict) k - 1 else k)
+      }
+      strOf(l).fold(withLong)(x =>
+        if (isLo) withLong.strAtLeast(a, x) else withLong.strAtMost(a, x))
+    }
+
+    /** The Catalyst translation: pushed filters the scan builders
+      * receive. Unsupported shapes prune nothing — correctness never
+      * depends on pruning, only IO does. */
+    def of(filters: Seq[Expression]): Bounds =
+      filters.foldLeft(Bounds()) { (b, f) =>
+        f match {
+          case EqualTo(a: AttributeReference, l: Literal) => equal(b, a.name, l)
+          case EqualTo(l: Literal, a: AttributeReference) => equal(b, a.name, l)
+          case In(a: AttributeReference, vs)
+              if vs.nonEmpty && vs.size <= 64 &&
+                vs.forall(_.isInstanceOf[Literal]) =>
+            val ks = vs.flatMap(x => longOf(x.asInstanceOf[Literal]))
+            if (ks.size == vs.size) b.keySet(a.name, ks) else b
+          case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
+            bound(b, a.name, l, isLo = true, strict = false)
+          case GreaterThan(a: AttributeReference, l: Literal) =>
+            bound(b, a.name, l, isLo = true, strict = true)
+          case LessThanOrEqual(a: AttributeReference, l: Literal) =>
+            bound(b, a.name, l, isLo = false, strict = false)
+          case LessThan(a: AttributeReference, l: Literal) =>
+            bound(b, a.name, l, isLo = false, strict = true)
+          case _ => b
+        }
+      }
+  }
+
+  // ---- one resolved version: pruner and scan ----
+
+  /** One version of a table, from ONE manifest read: its files and
+    * headers. Version 0 is the table that does not exist yet. The
+    * commit core pins its base as a Snapshot too. */
+  private[sources] final case class Snapshot(root: String, version: Int,
+      files: Seq[String], meta: Map[String, String]) {
+
+    /** The pinned `#schema` header. */
+    def schema: Option[StructType] = meta.get("schema").map(StructType.fromDDL)
+    def spec: Seq[String] =
+      meta.get("spec").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    def statCols: ListMap[String, String] =
+      SnapshotStore.parseStatCols(meta.get("statcol"), s"$root v$version")
+    def requireTable(): Unit =
+      if (version == 0)
+        throw new graft.QueryError(s"no snapshot table under $root")
+
+    /** (stats survivors, Bloom survivors) among this version's files:
+      * every `#statcol` column the bounds constrain filters the list,
+      * then every key set probes its Bloom sidecar on what is left
+      * (absent sidecars and absent lines keep the file). */
+    def prune(b: Bounds): (Seq[String], Seq[String]) = {
+      val afterStats = statCols.foldLeft(files) { case (fs, (c, kind)) =>
+        kind match {
+          case "long" | "ts" if b.lo.contains(c) || b.hi.contains(c) =>
+            val (l, h) = (b.lo.getOrElse(c, Long.MinValue),
+              b.hi.getOrElse(c, Long.MaxValue))
+            val stats = SnapshotStore.boundsFor(root, version, c)
+            fs.filter(f => stats.get(f).forall { case (mn, mx) =>
+              mx >= l && mn <= h })
+          case "str" if b.sLo.contains(c) || b.sHi.contains(c) =>
+            val stats = SnapshotStore.strBoundsFor(root, version, c)
+            fs.filter(f => stats.get(f).forall { case (mn, mx) =>
+              b.sLo.get(c).forall(l =>
+                UTF8String.fromString(mx).compareTo(l) >= 0) &&
+              b.sHi.get(c).forall(h =>
+                UTF8String.fromString(mn).compareTo(h) <= 0) })
+          case _ => fs
+        }
+      }
+      val afterBloom = b.keys.foldLeft(afterStats) { case (fs, (c, ks)) =>
+        BloomIndex.loadSidecar(root, version, c) match {
+          case None => fs
+          case Some(blooms) => fs.filter(p =>
+            blooms.get(p).forall(bits => ks.exists(BloomIndex.covers(bits, _))))
+        }
+      }
+      (afterStats, afterBloom)
+    }
+
+    private lazy val commitDirs = EvolvedTable.commitDirs(root, files)
+
+    /** The layout rule: a spec'd commit, or differing schema markers
+      * under no pinned schema (the shape a rewrite leaves when it
+      * flattens the last spec'd files), make the version evolved.
+      * Markers only — driver-side, commit-count-sized, zero data IO. */
+    lazy val evolved: Boolean =
+      commitDirs.exists(d => new File(d._1, "_spec.list").isFile) ||
+        (schema.isEmpty && commitDirs.flatMap { case (d, _) =>
+          val f = new File(d, "_schema.ddl")
+          if (!f.isFile) None
+          else Some(new String(Files.readAllBytes(f.toPath),
+            StandardCharsets.UTF_8))
+        }.distinct.size > 1)
+
+    lazy val groups: Seq[EvolvedTable.LayoutGroup] =
+      EvolvedTable.groupsOf(commitDirs)
+
+    /** The rows of `subset` (files of this version) under the
+      * version's layout. An empty subset keeps the table's columns. */
+    def scan(spark: SparkSession, subset: Seq[String] = files): DataFrame =
+      if (subset.isEmpty) (schema, files) match {
+        case (Some(s), _) if !evolved =>
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+        case (_, fs) if fs.nonEmpty => scan(spark, fs).limit(0)
+        case _ => throw new graft.QueryError(
+          s"version $version of $root lists no files and pins no #schema")
+      } else if (evolved) {
+        val keep = subset.toSet
+        groups.map(g => g.copy(files = g.files.filter(keep)))
+          .filter(_.files.nonEmpty)
+          .map(g => spark.read.schema(g.groupSchema)
+            .option("basePath", g.baseDir).parquet(g.files: _*))
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+      } else schema match {
+        case Some(s) => spark.read.schema(s).parquet(subset: _*)
+        case None => spark.read.parquet(subset: _*)
+      }
+  }
+
+  /** The DSv2 form of the scan: Spark's own ParquetTable over `files`.
+    * A pinned or group schema rides in as the user schema, so the
+    * table infers none from footers. */
+  private[sources] def parquetTable(name: String, files: Seq[String],
+      schema: Option[StructType], options: CaseInsensitiveStringMap)
+      : ParquetTable =
+    ParquetTable(name, SparkSession.active, options, files.toIndexedSeq,
+      schema, classOf[ParquetFileFormat])
 }

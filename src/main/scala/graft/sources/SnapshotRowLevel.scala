@@ -6,7 +6,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -64,14 +63,9 @@ private[graft] object SnapshotRowLevel {
     override def newScanBuilder(options: CaseInsensitiveStringMap)
         : ScanBuilder = new ScanBuilder {
       override def build(): Scan = {
-        val files = SnapshotStore.filesAt(root, baseV)
-        val pinned = SnapshotStore.manifestMeta(root, baseV).get("schema")
-          .map(StructType.fromDDL)
-        ParquetTable(s"graft-rowlevel $root@v$baseV",
-          org.apache.spark.sql.SparkSession.active,
-          CaseInsensitiveStringMap.empty(), files.toIndexedSeq, pinned,
-          classOf[org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat])
+        val base = SnapshotStore.snapshotAt(root, baseV)
+        SnapshotRead.parquetTable(s"graft-rowlevel $root@v$baseV",
+          base.files, base.schema, CaseInsensitiveStringMap.empty())
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       }
     }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max, max_by, min, not, struct, unix_micros}
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import SnapshotRead.Snapshot
+
 /** Manifest-based snapshot isolation over plain parquet — the
   * time-travel core of a lakehouse table format (Delta/Iceberg's
   * essential mechanism) built from two primitives Spark already has:
@@ -205,7 +207,7 @@ object SnapshotStore {
   private[graft] def statCols(root: String, v: Int): ListMap[String, String] =
     parseStatCols(manifestMeta(root, v).get("statcol"), s"$root v$v")
 
-  private def parseStatCols(header: Option[String], where: String)
+  private[sources] def parseStatCols(header: Option[String], where: String)
       : ListMap[String, String] =
     ListMap(header.toSeq.flatMap(_.split(",")).filter(_.nonEmpty).map { e =>
       e.split(":", 2) match {
@@ -261,28 +263,18 @@ object SnapshotStore {
 
   // ---- the commit core ----
 
-  /** The version a commit builds on, pinned ONCE: number, file list
-    * and headers all come from one manifest read (version 0 = no
-    * table yet: no files, no headers). */
-  private final case class Base(root: String, version: Int,
-      files: Seq[String], meta: Map[String, String]) {
-    def schema: Option[StructType] = meta.get("schema").map(StructType.fromDDL)
-    def spec: Seq[String] =
-      meta.get("spec").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    def statCols: ListMap[String, String] =
-      parseStatCols(meta.get("statcol"), s"$root v$version")
-    def requireTable(): Unit =
-      if (version == 0)
-        throw new graft.QueryError(s"no snapshot table under $root")
+  /** Version `v` of the table from ONE manifest read: number, file
+    * list and headers ([[SnapshotRead]]'s unit of planning). */
+  private[sources] def snapshotAt(root: String, v: Int): Snapshot = {
+    val (header, files) = manifestLines(root, v).partition(_.startsWith("#"))
+    Snapshot(root, v, files, headerMap(header))
   }
 
-  private def pin(root: String): Base = {
+  /** The version a commit builds on, pinned ONCE (version 0 = no
+    * table yet: no files, no headers). */
+  private def pin(root: String): Snapshot = {
     val v = latestVersion(root)
-    if (v == 0) Base(root, 0, Seq.empty, Map.empty)
-    else {
-      val (header, files) = manifestLines(root, v).partition(_.startsWith("#"))
-      Base(root, v, files, headerMap(header))
-    }
+    if (v == 0) Snapshot(root, 0, Seq.empty, Map.empty) else snapshotAt(root, v)
   }
 
   /** A commit's fresh files: a frame the core writes through
@@ -345,7 +337,7 @@ object SnapshotStore {
     * [[expireVersions]]); a crash between 5 and 6 leaves a version
     * whose files have no bounds, which readers keep conservatively. */
   private def commit(root: String, writerToken: Option[String] = None,
-      expectedBase: Option[Int] = None)(plan: Base => Option[Change]): Int =
+      expectedBase: Option[Int] = None)(plan: Snapshot => Option[Change]): Int =
     writerToken.flatMap(committedVersionFor(root, _)).getOrElse {
       val base = pin(root)
       if (expectedBase.exists(_ != base.version))
@@ -542,13 +534,11 @@ object SnapshotStore {
     }
   }
 
-
-  /** Snapshot read at a version (defaults to latest). */
+  /** Snapshot read at a version (defaults to latest) — the planner's
+    * unfiltered scan. */
   def read(spark: SparkSession, root: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(root))
-    spark.read.parquet(filesAt(root, v): _*)
-  }
+      version: Option[Int] = None): DataFrame =
+    SnapshotRead.plan(spark, root, version).df
 
   // ---- time travel by timestamp (AS OF) ----
 
@@ -576,11 +566,6 @@ object SnapshotStore {
     vs.max
   }
 
-  /** SELECT ... AS OF <timestamp>. */
-  def readAsOf(spark: SparkSession, root: String,
-      tsMillis: Long): DataFrame =
-    read(spark, root, Some(versionAsOf(root, tsMillis)))
-
   /** Test/maintenance hook: pin a manifest's publication instant so
     * time-travel reads are deterministic under test (two commits can
     * otherwise land in the same millisecond). Rewrites the `#ts`
@@ -599,60 +584,6 @@ object SnapshotStore {
       .mkString("\n").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestFile(root, v).toPath,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Layout-aware snapshot read: manifest files are grouped by their
-    * commit directory and each group is read under its OWN basePath,
-    * so Hive-style partition directories resolve against the spec
-    * the commit was written with; groups union BY NAME (a column is
-    * data in one layout and a partition directory in another — both
-    * reads surface it). Filters on a partition column prune
-    * directories in the commits that partition by it and fall back
-    * to row filters in the ones that don't — the exact Iceberg
-    * read-side contract. Partition values are recovered as strings
-    * (no type inference) so the layout never changes a column's
-    * type; reads cast explicitly where needed. */
-  def readEvolved(spark: SparkSession, root: String,
-      version: Option[Int] = None): DataFrame =
-    readFilesEvolved(spark, root,
-      filesAt(root, version.getOrElse(latestVersion(root))))
-
-  /** [[readEvolved]] over an explicit file subset — the composable
-    * piece [[SnapshotRead]] stacks under stats/Bloom pruning: a
-    * pruned file list still resolves each survivor against the
-    * partition spec its commit was written with. */
-  private[sources] def readFilesEvolved(spark: SparkSession,
-      root: String, files: Seq[String]): DataFrame = {
-    val dataDir = new File(root, "data").getCanonicalFile
-    val groups = files.groupBy { p =>
-      var f = new File(p).getCanonicalFile
-      while (f.getParentFile != null && f.getParentFile != dataDir)
-        f = f.getParentFile
-      f.getName
-    }
-    // the no-type-inference setting lives on a CLONED session (own
-    // sessionState, shared SparkContext), so a concurrent query on the
-    // caller's session can never observe the flipped value or race a
-    // try/finally restore. The clone starts from builder-time defaults,
-    // so the caller's RUNTIME conf (ANSI mode, timezone, registered
-    // catalogs set via spark.conf.set after startup) is carried over
-    // explicitly — otherwise an evolved read silently runs under stale
-    // configuration. Static/immutable entries are skipped.
-    val reader = spark.newSession()
-    spark.conf.getAll.foreach { case (k, value) =>
-      if (reader.conf.isModifiable(k) &&
-          !reader.conf.getOption(k).contains(value))
-        reader.conf.set(k, value)
-    }
-    reader.conf
-      .set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    groups.toSeq.sortBy(_._1)
-      .map { case (cdir, fs) =>
-        reader.read
-          .option("basePath", new File(dataDir, cdir).getPath)
-          .parquet(fs.sorted: _*)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Incremental small-file compaction — the real-world OPTIMIZE:
@@ -675,14 +606,12 @@ object SnapshotStore {
       val (small, big) =
         b.files.partition(f => new File(f).length() < minBytes)
       counts = (small.size, big.size)
-      // spec-aware read: a small file under an evolved layout carries
-      // column VALUES in its directory names — a flat parquet read
-      // would silently drop them from the merged rewrite. The merged
-      // files then store those columns as ordinary (string) data,
-      // which the evolved union surfaces identically.
+      // the planner's layout-aware scan: a small file under an evolved
+      // layout carries column VALUES in its directory names, which the
+      // merged files then store as ordinary (string) data — the evolved
+      // union surfaces them identically
       if (small.isEmpty) None
-      else Some(Change(big, Frame(
-        readFilesEvolved(spark, root, small).coalesce(targetFiles)),
+      else Some(Change(big, Frame(b.scan(spark, small).coalesce(targetFiles)),
         KeepSchema))
     }
     (v, counts._1, counts._2)
@@ -723,19 +652,17 @@ object SnapshotStore {
     var counts = (0, 0)
     val v = commit(root) { b =>
       b.requireTable()
-      val candidates = pruneRange match {
-        case Some((c, lo, hi)) =>
-          pruneFiles(root, c, lo, hi, Some(b.version))._1
-        case None => b.files
+      val candidates = pruneRange.fold(b.files) { case (c, lo, hi) =>
+        b.prune(SnapshotRead.Bounds().atLeast(c, lo).atMost(c, hi))._1
       }
-      // spec-aware reads throughout: files under an evolved layout keep
-      // their directory-encoded column values through both the probe
-      // and the rewrite (a flat read would drop them from the rewritten
-      // rows — silent data loss), and a predicate over a partition
-      // column resolves instead of failing
+      // the planner's layout-aware scan throughout: files under an
+      // evolved layout keep their directory-encoded column values
+      // through both the probe and the rewrite (a flat read would drop
+      // them from the rewritten rows — silent data loss), and a
+      // predicate over a partition column resolves instead of failing
       val hit: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else readFilesEvolved(spark, root, candidates)
+        else b.scan(spark, candidates)
           .filter(predicate)
           .select(input_file_name().as("f")).distinct()
           .collect()
@@ -744,7 +671,7 @@ object SnapshotStore {
       counts = (hit.size, keep.size)
       if (hit.isEmpty) None
       else Some(Change(keep, Frame(
-        readFilesEvolved(spark, root, hit.toSeq.sorted)
+        b.scan(spark, hit.toSeq.sorted)
           .filter(not(coalesce(predicate, lit(false))))),
         KeepSchema))
     }
@@ -776,8 +703,7 @@ object SnapshotStore {
       idCol: String, writerToken: Option[String] = None): Int =
     commit(root, writerToken) { b =>
       b.requireTable()
-      val base = readFilesEvolved(spark, root, b.files)
-        .select(col(keyCol), col("val"), col("us"))
+      val base = b.scan(spark).select(col(keyCol), col("val"), col("us"))
       val latest = graft.operators.CdcMerge.latestState(
         changes, keyCol, opCol, valCol, usCol, idCol)
       val merged = graft.operators.CdcMerge.merge(base, latest, keyCol)
@@ -810,7 +736,7 @@ object SnapshotStore {
       b.requireTable()
       // evolved-safe: directory-encoded columns surface (as strings)
       // and ride into the merged replace-commit as data columns
-      val base = readFilesEvolved(spark, root, b.files)
+      val base = b.scan(spark)
       val cols = base.columns.toSeq
       require(cols.contains(keyCol), s"key column $keyCol not in table")
       val payload = cols.filterNot(_ == keyCol) :+ opCol
@@ -988,13 +914,6 @@ object SnapshotStore {
         .mkString("\n").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, tagsFile(root).toPath, StandardCopyOption.ATOMIC_MOVE)
     v
-  }
-
-  /** Read the snapshot a tag points at. */
-  def readTag(spark: SparkSession, root: String, name: String): DataFrame = {
-    val v = tags(root).getOrElse(name,
-      throw new graft.QueryError(s"unknown tag: $name"))
-    read(spark, root, Some(v))
   }
 
   // ---- per-file min/max stats: manifest-level data skipping ----
@@ -1177,47 +1096,6 @@ object SnapshotStore {
             render(r, k, s"mn_$c"), render(r, k, s"mx_$c")))
         }
       }
-  }
-
-  /** The manifest's file list at `v` split by the skipping decision
-    * for `[lo, hi]` on `statCol`: (kept, skipped). The column is
-    * resolved through the manifest's `#statcol` identity map FIRST —
-    * on a multi-column-indexed store, pruning `statCol`'s range
-    * against a DIFFERENT column's bounds would silently drop files
-    * that still hold matching rows (the one failure mode a reader can
-    * never have; found on `SnapshotRead.plan` in round 16 and on this
-    * legacy face in round 17). When `statCol` is not an indexed
-    * long/ts column, NOTHING prunes — the caller's row filter still
-    * applies, so correctness never depends on the sidecar. A file is
-    * skipped ONLY when its recorded [min, max] provably misses the
-    * range; files without stats lines are conservatively kept.
-    * Driver-side metadata — file-count-sized, no data IO. */
-  def pruneFiles(root: String, statCol: String, lo: Long, hi: Long,
-      version: Option[Int] = None): (Seq[String], Seq[String]) = {
-    val v = version.getOrElse(latestVersion(root))
-    val all = filesAt(root, v)
-    if (!statCols(root, v).get(statCol).exists(k => k == "long" || k == "ts"))
-      (all, Seq.empty)
-    else {
-      val stats = boundsFor(root, v, statCol)
-      all.partition { f =>
-        stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-  }
-
-  /** Range read with manifest-level file skipping: only files whose
-    * [min, max] of `statCol` overlaps `[lo, hi]` reach the parquet
-    * scan (the row-level predicate still applies on top — stats
-    * bound files, they don't filter rows). Semantically identical to
-    * `read(...).filter(lo <= statCol <= hi)` ALWAYS: the column
-    * resolves through the `#statcol` identity map inside
-    * [[pruneFiles]], and a non-indexed column simply prunes nothing. */
-  def readPruned(spark: SparkSession, root: String, statCol: String,
-      lo: Long, hi: Long, version: Option[Int] = None): DataFrame = {
-    val (kept, _) = pruneFiles(root, statCol, lo, hi, version)
-    spark.read.parquet(kept: _*)
-      .filter(col(statCol) >= lo && col(statCol) <= hi)
   }
 
   /** Row-level changelog between two versions (the Iceberg

@@ -511,16 +511,18 @@ class Round12Spec extends AnyFunSuite {
       Seq((3L, 3.0)).toDF("k", "v").coalesce(1), root)
     SnapshotStore.commitReplace(
       SnapshotStore.read(spark, root).coalesce(1), root)
+    def tagged(t: String) =
+      graft.sources.SnapshotRead.plan(spark, root, tag = Some(t)).df
     // the tag still reads the 2-row v1 snapshot after compaction
-    assert(SnapshotStore.readTag(spark, root, "t").count() == 2L)
+    assert(tagged("t").count() == 2L)
     // re-tagging the same name moves it to the requested version
     SnapshotStore.tag(root, "t", Some(3))
-    assert(SnapshotStore.readTag(spark, root, "t").count() == 3L)
+    assert(tagged("t").count() == 3L)
     assert(SnapshotStore.tags(root) == Map("t" -> 3))
     // unknown tag raises the typed QueryError (round-15 exception
     // hierarchy: snapshot tag/version resolution is API validation)
     intercept[graft.QueryError] {
-      SnapshotStore.readTag(spark, root, "nope")
+      tagged("nope")
     }
   }
 
@@ -712,7 +714,8 @@ class Round12Spec extends AnyFunSuite {
     assert(merged == 5 && carried == 1, s"merged=$merged carried=$carried")
     assert(SnapshotStore.read(spark, root, Some(v)).count() == total)
     // the pre-compaction tag still reads the original files
-    assert(SnapshotStore.readTag(spark, root, "pre").count() == total)
+    assert(graft.sources.SnapshotRead.plan(spark, root, tag = Some("pre"))
+      .df.count() == total)
     // a store with nothing small is a no-op (same version back)
     val root2 = graft.util.TempDirs.scoped("r12-compact2")
     SnapshotStore.commitAppend(big.coalesce(1), root2)
@@ -771,27 +774,27 @@ class Round12Spec extends AnyFunSuite {
     val root = graft.util.TempDirs.scoped("r12-prune")
     val df = (1L to 4000L).map(i => (i, i * 2.0)).toDF("k", "v")
     SnapshotStore.commitAppendWithStats(df, root, "k", nFiles = 8)
-    val (kept, skipped) = SnapshotStore.pruneFiles(root, "k", 1000L, 1500L)
-    assert(skipped.nonEmpty, "range-partitioned commit must skip files")
-    assert(kept.nonEmpty)
-    val pruned = SnapshotStore
-      .readPruned(spark, root, "k", 1000L, 1500L).collect()
+    def plan = graft.sources.SnapshotRead.plan(spark, root,
+      range = Some(("k", 1000L, 1500L)))
+    val (kept, skipped) = (plan.filesAfterStats, plan.statsSkipped)
+    assert(skipped > 0, "range-partitioned commit must skip files")
+    assert(kept > 0)
+    val pruned = plan.df.collect()
     assert(pruned.length == 501)
     assert(pruned.map(_.getAs[Double]("v")).sum
       == (1000L to 1500L).map(_ * 2.0).sum)
     // a file WITHOUT a stats line (its frame lacks the indexed
     // column) is conservatively kept even out of range
     SnapshotStore.commitAppend(Seq(1.0).toDF("v").coalesce(1), root)
-    val (k2, s2) = SnapshotStore.pruneFiles(root, "k", 1000L, 1500L)
-    assert(k2.size == kept.size + 1 && s2.size == skipped.size)
-    assert(SnapshotStore
-      .readPruned(spark, root, "k", 1000L, 1500L).count() == 501L)
+    val (k2, s2) = (plan.filesAfterStats, plan.statsSkipped)
+    assert(k2 == kept + 1 && s2 == skipped)
+    assert(plan.df.count() == 501L)
     // the DEFAULT append keeps the index fresh: the new file carries
     // bounds and an out-of-range read now skips it
     SnapshotStore.commitAppend(
       Seq((8888L, 1.0)).toDF("k", "v").coalesce(1), root)
-    val (k3, s3) = SnapshotStore.pruneFiles(root, "k", 1000L, 1500L)
-    assert(k3.size == k2.size && s3.size == s2.size + 1,
+    val (k3, s3) = (plan.filesAfterStats, plan.statsSkipped)
+    assert(k3 == k2 && s3 == s2 + 1,
       "an indexed append's fresh file must be stats-skippable")
   }
 

@@ -139,9 +139,10 @@ class Round13Spec extends AnyFunSuite {
     assert(headKeys == ((0L to 9L) ++ (21L to 99L)))
     // carried files keep their stats lines: a pruned read outside the
     // deleted range still skips correctly
-    val (kept, skipped) = SnapshotStore.pruneFiles(root, "k", 80L, 99L, Some(5))
-    assert(skipped.nonEmpty, "stats survived for carried files")
-    assert(kept.forall(after.contains))
+    val p = graft.sources.SnapshotRead.plan(spark, root, version = Some(5),
+      range = Some(("k", 80L, 99L)))
+    assert(p.statsSkipped > 0, "stats survived for carried files")
+    assert(p.df.inputFiles.map(new java.net.URI(_).getPath).forall(after.contains))
   }
 
   test("deleteRows with a null-valued predicate keeps null rows (SQL DELETE semantics)") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotRead, SnapshotStore}
 
 /** Round-14 wave: snapshot retention (expireVersions — the VACUUM
   * step deleteRows' contract defers to) and MERGE INTO the snapshot
@@ -29,7 +29,8 @@ class Round14Spec extends AnyFunSuite {
     SnapshotStore.commitAppend(df.filter(col("k") >= 40), root)  // v2
     SnapshotStore.commitReplace(                                  // v3
       SnapshotStore.read(spark, root).filter(col("k") % 2 === 0), root)
-    val taggedBefore = SnapshotStore.readTag(spark, root, "audit")
+    def tagged = SnapshotRead.plan(spark, root, tag = Some("audit")).df
+    val taggedBefore = tagged
       .collect().map(_.toSeq).toSet
     val headBefore = SnapshotStore.read(spark, root)
       .collect().map(_.toSeq).toSet
@@ -41,7 +42,7 @@ class Round14Spec extends AnyFunSuite {
     assert(res.deletedFiles > 0, "v2's fresh files are orphaned and purged")
 
     // tagged and live versions read byte-identically after the purge
-    assert(SnapshotStore.readTag(spark, root, "audit")
+    assert(tagged
       .collect().map(_.toSeq).toSet == taggedBefore)
     assert(SnapshotStore.read(spark, root)
       .collect().map(_.toSeq).toSet == headBefore)

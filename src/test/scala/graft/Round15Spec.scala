@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotRead, SnapshotStore}
 
 /** Round-15 wave: the vacuum-vs-commit race fix (referenced-file
   * re-list immediately before the physical sweep), the conservative
@@ -113,7 +113,7 @@ class Round15Spec extends AnyFunSuite {
     }
     assert(q.isInstanceOf[QueryError])
     val t = intercept[GraftException] {
-      SnapshotStore.readTag(spark, root, "nope")
+      SnapshotRead.plan(spark, root, tag = Some("nope"))
     }
     assert(t.isInstanceOf[QueryError])
     assert(classOf[GraftException]

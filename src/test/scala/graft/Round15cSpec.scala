@@ -15,19 +15,19 @@ class Round15cSpec extends AnyFunSuite {
   private def store(rows: Seq[(Long, String, Double)]): org.apache.spark.sql.DataFrame =
     rows.toDF("k", "cat", "v")
 
-  test("readEvolved unions layouts by name; nothing lost or duplicated") {
+  test("evolved read unions layouts by name; nothing lost or duplicated") {
     val root = graft.util.TempDirs.scoped("r15c-pevo")
     val a = store((1L to 10L).map(i => (i, if (i % 2 == 0) "x" else "y", i * 1.0)))
     val b = store((11L to 20L).map(i => (i, if (i % 3 == 0) "x" else "y", i * 1.0)))
     SnapshotStore.commitAppend(a, root, spec = Seq("cat"))
     SnapshotStore.commitAppend(b, root, spec = Seq("cat", "k"))
-    val out = SnapshotStore.readEvolved(spark, root)
+    val out = SnapshotStore.read(spark, root)
     assert(out.count() == 20)
     assert(out.select(sum(col("v"))).as[Double].head() == (1 to 20).sum.toDouble)
     // partition values recover as strings (no inference flip)
     assert(out.schema("cat").dataType.typeName == "string")
     // version-pinned evolved read still sees only v1
-    assert(SnapshotStore.readEvolved(spark, root, Some(1)).count() == 10)
+    assert(SnapshotStore.read(spark, root, Some(1)).count() == 10)
   }
 
   test("a plain commit and a partitioned commit coexist in one evolved read") {
@@ -35,7 +35,7 @@ class Round15cSpec extends AnyFunSuite {
     SnapshotStore.commitAppend(store(Seq((1L, "x", 1.0), (2L, "y", 2.0))), root)
     SnapshotStore.commitAppend(
       store(Seq((3L, "x", 3.0))), root, spec = Seq("cat"))
-    val out = SnapshotStore.readEvolved(spark, root)
+    val out = SnapshotStore.read(spark, root)
     assert(out.count() == 3)
     assert(out.filter(col("cat") === "x").count() == 2)
   }
@@ -44,7 +44,7 @@ class Round15cSpec extends AnyFunSuite {
     val root = graft.util.TempDirs.scoped("r15c-prune")
     SnapshotStore.commitAppend(
       store((1L to 40L).map(i => (i, s"c${i % 4}", 1.0))), root, spec = Seq("cat"))
-    val q = SnapshotStore.readEvolved(spark, root)
+    val q = SnapshotStore.read(spark, root)
       .filter(col("cat") === "c1")
     val scans = q.queryExecution.executedPlan.collect {
       case s: FileSourceScanExec => s

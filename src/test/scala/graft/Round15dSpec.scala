@@ -2,12 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.{BloomIndex, SnapshotStore}
+import graft.sources.{BloomIndex, SnapshotRead, SnapshotStore}
 
 /** Round-15 fourth wave: the per-file Bloom sidecar (x9). */
 class Round15dSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def lookup(root: String, k: Long) =
+    SnapshotRead.plan(spark, root, point = Some(("k", k)))
 
   private def freshStore(n: Long, parts: Int): String = {
     val root = graft.util.TempDirs.scoped("r15d-bloom")
@@ -22,7 +25,7 @@ class Round15dSpec extends AnyFunSuite {
     val root = freshStore(2000, 10)
     // a deterministic sample across the key space
     (0L until 2000L by 97).foreach { k =>
-      val rows = BloomIndex.lookup(spark, root, "k", k).collect()
+      val rows = lookup(root, k).df.collect()
       assert(rows.length == 1 && rows.head.getLong(0) == k,
         s"key $k must survive its own Bloom")
     }
@@ -30,13 +33,13 @@ class Round15dSpec extends AnyFunSuite {
 
   test("point probes prune most files; absent key prunes all") {
     val root = freshStore(2000, 10)
-    val (keepPresent, total) = BloomIndex.survivors(spark, root, "k", 1234L)
-    assert(total == 10)
-    assert(keepPresent.size <= 3,
-      s"expected <=3 surviving files, got ${keepPresent.size}")
-    val (keepAbsent, _) = BloomIndex.survivors(spark, root, "k", 999999L)
-    assert(keepAbsent.size <= 2)
-    assert(BloomIndex.lookup(spark, root, "k", 999999L).count() == 0)
+    val present = lookup(root, 1234L)
+    assert(present.filesTotal == 10)
+    assert(present.filesAfterBloom <= 3,
+      s"expected <=3 surviving files, got ${present.filesAfterBloom}")
+    val absent = lookup(root, 999999L)
+    assert(absent.filesAfterBloom <= 2)
+    assert(absent.df.count() == 0)
   }
 
   test("files appended after the build are conservatively kept") {
@@ -44,17 +47,18 @@ class Round15dSpec extends AnyFunSuite {
     SnapshotStore.commitAppend(
       Seq((5000L, 1.0)).toDF("k", "v").coalesce(1), root)
     // no rebuild: the new file has no sidecar line -> always scanned
-    val (keep, total) = BloomIndex.survivors(spark, root, "k", 5000L)
-    assert(total == 5)
+    val p = lookup(root, 5000L)
+    assert(p.filesTotal == 5)
     val all = SnapshotStore.filesAt(root, SnapshotStore.latestVersion(root))
     val newFile = (all.toSet -- SnapshotStore.filesAt(root, 1).toSet).head
-    assert(keep.contains(newFile), "unindexed file must be kept")
-    assert(BloomIndex.lookup(spark, root, "k", 5000L).count() == 1)
+    assert(p.df.inputFiles.map(new java.net.URI(_).getPath).contains(newFile),
+      "unindexed file must be kept")
+    assert(p.df.count() == 1)
   }
 
   test("lookup with nothing surviving returns an empty schema-correct frame") {
     val root = freshStore(100, 4)
-    val out = BloomIndex.lookup(spark, root, "k", Long.MaxValue - 7)
+    val out = lookup(root, Long.MaxValue - 7).df
     assert(out.columns.toSeq == Seq("k", "v"))
     assert(out.count() == 0)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotRead, SnapshotStore}
 
 /** Round-15 sixth wave: timestamp time travel. */
 class Round15fSpec extends AnyFunSuite {
@@ -21,8 +21,9 @@ class Round15fSpec extends AnyFunSuite {
     assert(SnapshotStore.versionAsOf(root, t0) == 1)
     assert(SnapshotStore.versionAsOf(root, t0 + 999L) == 1)
     assert(SnapshotStore.versionAsOf(root, t0 + 1000L) == 2)
-    assert(SnapshotStore.readAsOf(spark, root, t0 + 500L).count() == 1)
-    assert(SnapshotStore.readAsOf(spark, root, t0 + 5000L).count() == 2)
+    def asOf(ms: Long) = SnapshotRead.plan(spark, root, asOfMillis = Some(ms)).df
+    assert(asOf(t0 + 500L).count() == 1)
+    assert(asOf(t0 + 5000L).count() == 2)
   }
 
   test("AS OF before the table existed raises the typed QueryError") {

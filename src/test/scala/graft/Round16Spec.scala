@@ -4,7 +4,7 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotRead, SnapshotStore}
 
 /** Round-16 first wave: batchId-idempotent streaming snapshot
   * commits, manifest-carried commit instants, and the cache-key
@@ -102,7 +102,8 @@ class Round16Spec extends AnyFunSuite {
       "publication instants live in the manifest content, not mtimes")
     assert(SnapshotStore.versionAsOf(root, t0 + 999L) == 1)
     assert(SnapshotStore.versionAsOf(root, t0 + 1000L) == 2)
-    assert(SnapshotStore.readAsOf(spark, root, t0 + 500L).count() == 1)
+    assert(SnapshotRead.plan(spark, root, asOfMillis = Some(t0 + 500L))
+      .df.count() == 1)
   }
 
   test("tokenizer trainers retrain when the dir is regenerated") {

@@ -149,7 +149,7 @@ class Round16bSpec extends AnyFunSuite {
   test("the SQL face reads a partition-evolved table (round 17)") {
     // round 16 refused these tables; round 17 plans them as the
     // per-layout union — a flat scan would silently DROP the month
-    // column, the union surfaces it as a string like readEvolved
+    // column, the union surfaces it as a string like SnapshotStore.read
     val wh = graft.util.TempDirs.scoped("r16b-evo")
     val root = s"$wh/evo"
     SnapshotStore.commitAppend(

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.{BloomIndex, SnapshotRead, SnapshotStore}
 
 /** Round-17 first wave: the stats-pruning column guard, driver-side
-  * Bloom probes, the durable writer-token log, and the cloned-session
-  * conf carry for evolved reads. */
+  * Bloom probes, the durable writer-token log, and evolved reads on
+  * the caller's session. */
 class Round17Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -95,21 +95,29 @@ class Round17Spec extends AnyFunSuite {
     assert(SnapshotStore.read(spark, root).count() == 30)
   }
 
-  test("evolved reads see the caller's runtime conf on the cloned session") {
+  test("evolved reads keep numeric partition dirs STRING under the caller's timezone") {
     val root = graft.util.TempDirs.scoped("r17-conf")
     val t = spark.range(6).select(col("id").as("tid"),
-      (col("id") % 2).cast("string").as("p"))
+      (col("id") % 2).cast("string").as("p"),
+      timestamp_seconds(col("id") * 3600L).as("ts"))
     SnapshotStore.commitAppend(t, root, spec = Seq("p"))
     val key = "spark.sql.session.timeZone"
     val orig = spark.conf.get(key)
     try {
       spark.conf.set(key, "America/New_York")
-      val df = SnapshotStore.readEvolved(spark, root)
+      val df = SnapshotStore.read(spark, root)
       assert(df.sparkSession.conf.get(key) == "America/New_York",
-        "runtime conf set after startup must reach the clone")
+        "the read runs on the caller's session and its runtime conf")
       assert(df.count() == 6)
-      assert(df.sparkSession.conf.get(
-        "spark.sql.sources.partitionColumnTypeInference.enabled") == "false")
+      // directories named p=0 / p=1 stay STRING with inference on
+      assert(spark.conf.get(
+        "spark.sql.sources.partitionColumnTypeInference.enabled") == "true")
+      assert(df.schema("p").dataType == org.apache.spark.sql.types.StringType)
+      assert(df.filter(col("p") === "1").count() == 3)
+      // epoch 0 renders in the caller's zone: 1969-12-31 19:00 EST
+      assert(df.filter(col("tid") === 0L)
+        .select(date_format(col("ts"), "yyyy-MM-dd HH")).head.getString(0)
+        == "1969-12-31 19")
     } finally spark.conf.set(key, orig)
   }
 

@@ -49,14 +49,14 @@ class Round17cSpec extends AnyFunSuite {
       case _ => 0
     }.sum
 
-  test("SQL union over evolved layouts equals readEvolved exactly") {
+  test("SQL union over evolved layouts equals the Scala read exactly") {
     val root = evolvedStore("evo")
     registerCatalog()
     val viaSql = spark.sql(
       "SELECT tid, amount, month FROM r17c_snap.evo").collect()
       .map(r => (r.getLong(0), r.getDouble(1), Option(r.getString(2))))
       .toSet
-    val viaScala = SnapshotStore.readEvolved(spark, root)
+    val viaScala = SnapshotStore.read(spark, root)
       .select(col("tid"), col("amount"), col("month")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), Option(r.getString(2))))
       .toSet
@@ -126,7 +126,7 @@ class Round17cSpec extends AnyFunSuite {
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(c => c.isInstanceOf[graft.QueryError] &&
-      c.getMessage.contains("readEvolved")), s"got: $e")
+      c.getMessage.contains("SnapshotRead.plan")), s"got: $e")
   }
 
   test("the evolved SQL table accepts writes (round 18) — own store") {
@@ -135,9 +135,9 @@ class Round17cSpec extends AnyFunSuite {
     // read-path tests
     val root = evolvedStore("evo_w")
     registerCatalog()
-    val before = SnapshotStore.readEvolved(spark, root).count()
+    val before = SnapshotStore.read(spark, root).count()
     spark.sql("INSERT INTO r17c_snap.evo_w VALUES (999, 9.0, '202601')")
-    assert(SnapshotStore.readEvolved(spark, root).count() == before + 1)
+    assert(SnapshotStore.read(spark, root).count() == before + 1)
   }
 
   test("same-layout groups keep the VECTORIZED reader (identity path)") {

@@ -118,7 +118,7 @@ class Round17fSpec extends AnyFunSuite {
     // (correct by the union-read contract — Round18Spec pins the
     // byte-identity invariant and the DELETE path)
     spark.sql("INSERT INTO r17f_snap.ro VALUES (2, '202602')")
-    assert(SnapshotStore.readEvolved(spark, root).count() == 2)
+    assert(SnapshotStore.read(spark, root).count() == 2)
   }
 
   test("a delete on the whole table truncates via copy-on-write") {

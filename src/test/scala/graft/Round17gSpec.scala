@@ -29,7 +29,7 @@ class Round17gSpec extends AnyFunSuite {
   }
 
   private def monthsOf(root: String): Map[Long, String] =
-    SnapshotStore.readEvolved(spark, root)
+    SnapshotStore.read(spark, root)
       .select(col("tid"), col("month")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
@@ -64,7 +64,7 @@ class Round17gSpec extends AnyFunSuite {
       .toDF("tid", "amount", "month", "op", "seq", "id")
     SnapshotStore.commitMergeRows(spark, root, changes,
       "tid", "op", "seq", "id")
-    val rows = SnapshotStore.readEvolved(spark, root)
+    val rows = SnapshotStore.read(spark, root)
       .collect().map(r => (r.getAs[Long]("tid"),
         r.getAs[Double]("amount"), r.getAs[String]("month"))).toSet
     assert(rows == Set((1L, 10.0, "202601"), (3L, 33.0, "202601"),

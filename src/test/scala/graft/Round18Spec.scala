@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.sources.{BloomIndex, SnapshotRead, SnapshotStore}
 
 /** Round-18 first wave: the wrong-column pruning hazard class closed
-  * on the LEGACY faces (pruneFiles/readPruned/deleteRows.pruneRange —
-  * the same failure mode r16 found on SnapshotRead.plan and r17 found
-  * here), Bloom build/probe hash parity for sub-long key columns,
+  * on every range face (the planner's ranges and deleteRows'
+  * pruneRange — the failure mode r16 found on SnapshotRead.plan and
+  * r17 on the since-removed legacy range reads), Bloom build/probe
+  * hash parity for sub-long key columns,
   * bloom-sidecar expiry, memoized evolved-scan planning, namespaced
   * procedure resolution, and string ranges on the Scala planner. */
 class Round18Spec extends AnyFunSuite {
@@ -24,36 +25,37 @@ class Round18Spec extends AnyFunSuite {
     root
   }
 
-  test("legacy pruneFiles/readPruned: non-indexed column prunes NOTHING") {
+  private def ranged(root: String, c: String, lo: Long, hi: Long) =
+    SnapshotRead.plan(spark, root, range = Some((c, lo, hi)))
+
+  test("a range on a non-indexed column prunes NOTHING, exact file counts") {
     val root = antiStore("r18-legacy-guard")
     // amount in [0, 95] lives in the HIGHEST-tid file; before the
-    // column guard, pruneFiles consulted the tid bounds and kept only
-    // the LOWEST files — silently dropping every matching row
-    val (kept, skipped) = SnapshotStore.pruneFiles(root, "amount", 0L, 95L)
-    assert(skipped.isEmpty && kept.size == 4,
+    // column guard, a range read consulted the tid bounds and kept
+    // only the LOWEST files — silently dropping every matching row
+    val p = ranged(root, "amount", 0L, 95L)
+    assert(p.statsSkipped == 0 && p.filesAfterStats == 4,
       "amount is not the indexed column: nothing may prune")
-    val rows = SnapshotStore.readPruned(spark, root, "amount", 0L, 95L)
-      .collect()
+    val rows = p.df.collect()
     assert(rows.length == 10)
     assert(rows.map(_.getAs[Long]("tid")).sorted.toSeq == (70L to 79L))
     // the indexed column still prunes, with exact file counts
-    val (k2, s2) = SnapshotStore.pruneFiles(root, "tid", 0L, 19L)
-    assert(k2.size == 1 && s2.size == 3)
-    assert(SnapshotStore.readPruned(spark, root, "tid", 0L, 19L)
-      .count() == 20L)
+    val q = ranged(root, "tid", 0L, 19L)
+    assert(q.filesAfterStats == 1 && q.statsSkipped == 3)
+    assert(q.df.count() == 20L)
   }
 
-  test("legacy pruneFiles resolves the SECOND indexed column's own bounds") {
+  test("a range resolves the SECOND indexed column's own bounds") {
     val root = graft.util.TempDirs.scoped("r18-second-col")
     val t = spark.range(80).select(col("id").as("a"),
       (lit(790) - col("id") * 10).cast("long").as("b"))
     SnapshotStore.commitAppendWithStatsMulti(t, root, Seq("a", "b"), 4)
     // b = 790 - 10a: file a∈[60,79] has b∈[0,190] — a range on b must
     // prune by B's bounds (the head #statcol entry is a)
-    val (kept, skipped) = SnapshotStore.pruneFiles(root, "b", 0L, 95L)
-    assert(kept.size == 1 && skipped.size == 3,
-      s"b bounds prune to the one overlapping file, got ${kept.size}")
-    val rows = SnapshotStore.readPruned(spark, root, "b", 0L, 95L).collect()
+    val p = ranged(root, "b", 0L, 95L)
+    assert(p.filesAfterStats == 1 && p.statsSkipped == 3,
+      s"b bounds prune to the one overlapping file, got ${p.filesAfterStats}")
+    val rows = p.df.collect()
     assert(rows.map(_.getAs[Long]("a")).sorted.toSeq == (70L to 79L))
   }
 
@@ -92,7 +94,8 @@ class Round18Spec extends AnyFunSuite {
     val v = SnapshotStore.latestVersion(root)
     val files = SnapshotStore.filesAt(root, v)
     (0L until 100L).foreach { key =>
-      val surv = BloomIndex.lookup(spark, root, "k", key).count()
+      val surv = SnapshotRead.plan(spark, root, point = Some(("k", key)))
+        .df.count()
       assert(surv == 1L, s"key $key lost to a bloom false negative")
     }
     // and the index actually skips: a point probe keeps < all files

@@ -49,8 +49,8 @@ class Round18bSpec extends AnyFunSuite {
       Seq((3.5, "x")).toDF("amount2", "note").coalesce(1), root)
     assert(lines(root, 2).size == 2, "no line for a tid-less file")
     // the unindexed file survives every range (conservative keep)
-    val (kept, skipped) = SnapshotStore.pruneFiles(root, "tid", 1000L, 2000L)
-    assert(kept.size == 1 && skipped.size == 2,
+    val p = SnapshotRead.plan(spark, root, range = Some(("tid", 1000L, 2000L)))
+    assert(p.filesAfterStats == 1 && p.statsSkipped == 2,
       "two v1 files skipped, the line-less file kept")
   }
 

@@ -4,10 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -85,8 +82,8 @@ class SnapshotCommitSpec extends AnyFunSuite {
       "the replacement's files are indexed in-commit")
     val v3 = SnapshotStore.commitAppend(trades(100, 110).coalesce(1), root)
     assert(indexed(root, v3) == SnapshotStore.filesAt(root, v3).toSet)
-    val (_, skipped) = SnapshotStore.pruneFiles(root, "tid", 0L, 50L)
-    assert(skipped.size == 1, "the appended file misses [0, 50]")
+    val p = graft.sources.SnapshotRead.plan(spark, root, range = Some(("tid", 0L, 50L)))
+    assert(p.statsSkipped == 1, "the appended file misses [0, 50]")
   }
 
   test("commitMergeRows keeps the stats index: later appends stay indexed") {
@@ -181,23 +178,6 @@ class SnapshotCommitSpec extends AnyFunSuite {
 
   // ---- the ingest commits' Spark job counts ----
 
-  /** Properties of every Spark job started while `action` runs
-    * (listener delivery is async: wait until the count stops moving). */
-  private def jobsDuring(action: => Unit): Seq[java.util.Properties] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      var prev = -1
-      while (prev != seen.size) { prev = seen.size; Thread.sleep(300) }
-      seen.asScala.toSeq
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("an unindexed store's toTable epoch and commitMergeRows run no stats job") {
     val schema = StructType.fromDDL("k BIGINT, val STRING, seq BIGINT")
     val src = graft.util.TempDirs.scoped("commit-jobs-src")
@@ -210,7 +190,7 @@ class SnapshotCommitSpec extends AnyFunSuite {
     val root = s"$wh/jobs"
     SnapshotStore.createEmpty(root, schema)
     var qid = ""
-    val streamJobs = jobsDuring {
+    val streamJobs = TestSpark.jobsDuring {
       val q = ss.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(s"$src/pages/*")
         .writeStream.option("checkpointLocation", ckpt)
@@ -227,13 +207,13 @@ class SnapshotCommitSpec extends AnyFunSuite {
       s"one write job per epoch, nothing else: $perEpoch")
     val changes = Seq((1L, "x", 5L, "U", 1L), (20L, "y", 5L, "D", 2L))
       .toDF("k", "val", "seq", "op", "cid").coalesce(1)
-    val mergeJobs = jobsDuring {
+    val mergeJobs = TestSpark.jobsDuring {
       spark.sparkContext.setJobGroup("commit-merge-jobs", "merge", false)
       try SnapshotStore.commitMergeRows(spark, root, changes,
         "k", "op", "seq", "cid")
       finally spark.sparkContext.clearJobGroup()
     }.count(_.getProperty("spark.jobGroup.id") == "commit-merge-jobs")
-    assert(mergeJobs == 5, s"merge jobs: $mergeJobs")
+    assert(mergeJobs == 2, s"merge jobs: $mergeJobs")
     assert(SnapshotStore.read(spark, root).count() == 5L)
   }
 }
