@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.Try
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures are reported honestly: a crashed query
@@ -13,91 +14,26 @@ object Bench {
     * every query ~1.5-2x uniformly.
     */
   private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+").head.toDouble
-    catch { case _: Throwable => -1.0 }
+    Try(scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split("\\s+").head.toDouble).getOrElse(-1.0)
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // JVM/codegen warmup so the first timed query doesn't eat ~5s of
-    // first-action noise (scan each table once + one tiny aggregate).
-    try {
-      graft.util.Tables.names.foreach { t =>
-        try graft.util.Tables.load(spark, sfDir, t).count()
-        catch { case _: Throwable => () }
-      }
-    } catch { case _: Throwable => () }
-    // Build the day-partitioned sorted store up front: it is one-time
-    // ETL (like loading a ClickHouse table), and the BASELINE claim
-    // s8_fetch_pruned measures — time-range seek speedup — is defined
-    // over an already-built layout.
-    try graft.queries.SystemQueries.prunedStore(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.ScaleQueries.ensureX2Tables(spark, sfDir)
-    catch { case _: Throwable => () }
-    // FrameMemo side-tables are first-consumer-pays: without this,
-    // alphabetical order charges the whole PPJoin exact-truth pass to
-    // llm_minhash_recall while llm_ppjoin reads a parquet file in
-    // 0.2 s, and per-query numbers stop being comparable across
-    // rounds whenever memo ownership shifts. Pre-pay them here and
-    // report the build cost as its own metric field.
-    val memoT0 = System.nanoTime()
-    try graft.queries.LlmQueries.warmMemos(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.RetrievalQueries.warmMemos(spark, sfDir)
-    catch { case _: Throwable => () }
-    val memoSec = (System.nanoTime() - memoT0) / 1e9
-
-    // iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run (the
-    // driver never sets it, so the recorded bench always covers all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      // GC between measurements (outside the timed window) so one
-      // query's garbage is not attributed to the next — standard
-      // isolation; the timed window still includes planning + caches.
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // drop caches a query materialized (signature tables etc.) so
-      // they cannot crowd later queries' memory — outside the window.
-      // catalog.clearCache misses localCheckpoint RDD blocks (they are
-      // persisted RDDs, not cached plans, and ContextCleaner only
-      // frees them after a driver GC happens to collect the RDD
-      // object) — unpersist every persistent RDD explicitly so one
-      // query's snapshots can never crowd a later query's execution
-      // memory nondeterministically.
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
-      (name, sec, ok)
-    }
-    val qs = results.map { case (k, v, ok) =>
-      s""""$k":{"sec":$v,"ok":$ok}"""
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val failed = results.count(!_._3)
+    val names = Harness.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Harness.session()
+    val warm = Harness.warmUp(spark, sfDir)
+    // the timed window: build + count(); planning and caches included
+    val results = Harness.run(spark, sfDir, names)((_, df) => df.count())
+      .tapEach(e => e.result.left.foreach(err =>
+        System.err.println(s"[bench] ${e.name} FAILED: ${err.getMessage}")))
+      .toVector
+    val qs = results.map(e =>
+      s""""${e.name}":{"sec":${e.sec},"ok":${e.result.isRight}}""").mkString("{", ",", "}")
+    val total = results.map(_.sec).sum
+    val failed = results.count(_.result.isLeft)
     val loadEnd = loadavg()
+    val warmFailed = warm.failed.map(n => s""""$n"""").mkString("[", ",", "]")
     // contamination stamp: timings recorded while the machine was
     // already busy (round-end sbt churn etc.) inflate every query
     // ~1.5-2x uniformly and MUST NOT be treated as a regression
@@ -106,13 +42,13 @@ object Bench {
     // cpus/8; stamp rather than refuse so the driver still gets an
     // artifact, but one that carries its own invalidity evidence.
     val contaminated =
-      loadStart > math.max(1.0, cpus.toDouble / 8)
+      loadStart > math.max(1.0, Harness.cpus.toDouble / 8)
     if (contaminated)
       System.err.println(
-        s"[bench] WARNING loadavg_start=$loadStart on $cpus cpus — " +
+        s"[bench] WARNING loadavg_start=$loadStart on ${Harness.cpus} cpus — " +
           "timings are contaminated; re-run on an idle machine")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"memo_build_sec":$memoSec,"contaminated":$contaminated}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"memo_build_sec":${warm.memoSec},"contaminated":$contaminated,"warmup_failed":$warmFailed}""")
     // Second, COMPACT summary line, printed last on purpose: the round
     // driver records only a fixed-size tail of this process's output,
     // and the full per-query line above outgrew it rounds ago (231
@@ -123,18 +59,18 @@ object Bench {
     // emit comma decimal separators and break the JSON line.
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val slowest = results.sortBy(-_._2).take(12)
-      .map { case (k, v, _) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
+    val slowest = results.sortBy(-_.sec).take(12)
+      .map(e => s""""${e.name}":${r3(e.sec)}""").mkString("{", ",", "}")
     val famOf = (n: String) => {
       val p = n.takeWhile(c => c.isLetter)
       if (p.isEmpty) "other" else p
     }
-    val families = results.groupBy(t => famOf(t._1)).toSeq
-      .map { case (f, rs) => (f, rs.map(_._2).sum) }
+    val families = results.groupBy(e => famOf(e.name)).toSeq
+      .map { case (f, rs) => (f, rs.map(_.sec).sum) }
       .sortBy(-_._2)
       .map { case (f, s) => s""""$f":${r3(s)}""" }.mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"n_queries":${results.size},"sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"memo_build_sec":${r3(memoSec)},"contaminated":$contaminated,"slowest":$slowest,"family_sec":$families}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"n_queries":${results.size},"sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":$loadEnd,"memo_build_sec":${r3(warm.memoSec)},"contaminated":$contaminated,"slowest":$slowest,"family_sec":$families,"warmup_failed":$warmFailed}"""
     println(compact)
     // Round 13's recorded tail carried the compact line but the
     // driver's parse came back null — sbt frames stdout with

@@ -1,51 +1,28 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): runs the named
-  * registry queries one at a time, dumps `.explain("formatted")` to
-  * `plans/<query>.txt`, and prints a per-stage time/shuffle breakdown
-  * so stage-level hot spots are attributable without the UI (which the
-  * bench disables). Never invoked by the driver — a diagnostic main
-  * only; the timed contract stays in [[Bench]].
+  * registry queries one at a time after Bench's warm-up, dumps
+  * `.explain("formatted")` to `plans/<query>.txt`, and prints a
+  * per-stage time/shuffle breakdown so stage-level hot spots are
+  * attributable without the UI (which the bench disables). A
+  * diagnostic main only; the timed contract stays in [[Bench]].
   *
   * Usage: runMain graft.PlanProbe <sfDir> <outDir> <q1,q2,...>
   */
 object PlanProbe {
+  private type Stage = (Int, String, Long, Long, Long, Long, Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = Harness.select(Some(args(2)))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
+    Harness.warmUp(spark, sfDir)
 
-    // mirror Bench's warmups so the first probe isn't charged for them
-    try graft.util.Tables.names.foreach { t =>
-      try graft.util.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    } catch { case _: Throwable => () }
-    try graft.queries.SystemQueries.prunedStore(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.ScaleQueries.ensureX2Tables(spark, sfDir)
-    catch { case _: Throwable => () }
-    if (sys.env.get("SPARK_GRAFT_PROBE_MEMOS").forall(_ == "1")) {
-      try graft.queries.LlmQueries.warmMemos(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.queries.RetrievalQueries.warmMemos(spark, sfDir)
-      catch { case _: Throwable => () }
-    }
-
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Int, String, Long, Long, Long, Long, Int)]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
@@ -60,38 +37,33 @@ object PlanProbe {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"[probe] NO SUCH QUERY: $name")
-        case Some(fn) =>
+    Harness.run(spark, sfDir, names) { (name, df) =>
+      val t0 = System.nanoTime()
+      val n = df.count()
+      val execSec = (System.nanoTime() - t0) / 1e9
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val w = new java.io.PrintWriter(s"$outDir/$name.txt", "UTF-8")
+      try w.println(plan) finally w.close()
+      // give the async listener bus a moment to drain, then take this
+      // entry's stages (its build's and its action's) off the queue
+      Thread.sleep(300)
+      val own = Iterator.continually(stages.poll()).takeWhile(_ != null).toVector
+      (n, execSec, own)
+    }.foreach { e =>
+      e.result match {
+        case Left(err) =>
           stages.clear()
-          System.gc()
-          spark.sparkContext.setJobDescription(s"probe:$name")
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val tPlan = System.nanoTime()
-          val n = df.count()
-          val t1 = System.nanoTime()
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val w = new java.io.PrintWriter(s"$outDir/$name.txt", "UTF-8")
-          try w.println(plan) finally w.close()
-          println(f"[probe] $name rows=$n build=${(tPlan - t0) / 1e9}%.3fs " +
-            f"exec=${(t1 - tPlan) / 1e9}%.3fs total=${(t1 - t0) / 1e9}%.3fs")
-          // give the async listener bus a moment to drain
-          Thread.sleep(300)
-          val arr = stages.toArray(Array.empty[
-            (Int, String, Long, Long, Long, Long, Int)])
-          arr.sortBy(-_._3).take(14).foreach {
+          println(s"[probe] ${e.name} FAILED: ${err.getMessage}")
+        case Right((n, execSec, own)) =>
+          println(f"[probe] ${e.name} rows=$n build=${e.buildSec}%.3fs " +
+            f"exec=$execSec%.3fs total=${e.buildSec + execSec}%.3fs")
+          own.sortBy(-_._3).take(14).foreach {
             case (id, nm, ms, sr, sw, run, nt) =>
               println(f"[stage] $id%5d ${ms}%6d ms run=${run}%6d ms " +
                 f"tasks=$nt%4d sRead=${sr / 1024}%8d KB " +
                 f"sWrite=${sw / 1024}%8d KB  $nm")
           }
-          try spark.catalog.clearCache() catch { case _: Throwable => () }
-          try spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          catch { case _: Throwable => () }
       }
     }
     spark.stop()

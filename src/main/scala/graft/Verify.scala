@@ -1,30 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run and its
-    // oracle_sql.json to those entries (a recorded verify leaves it
-    // unset and covers all). A name that is no entry refuses before
-    // any work: it would otherwise vanish silently.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no registry entry: " +
-      unknown.toSeq.sorted.mkString(", "))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY restricts the run and its oracle_sql.json to
+    // those entries (a recorded verify leaves it unset and covers all)
+    val names = Harness.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
+    Harness.warmUp(spark, sfDir)
     // A query that throws must still leave a trace: errors.json gets one
     // entry per failure, and a ZERO-row parquet with a lone `err` column
     // is written in the query's place — the driver's compare then
@@ -32,27 +18,16 @@ object Verify {
     // silently vanishing from the correctness file (round-6 lesson:
     // 5 breakages read as "fewer queries").
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        try {
-          import spark.implicits._
-          Seq.empty[String].toDF("err").coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+    Harness.run(spark, sfDir, names) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach { e =>
+      e.result.left.foreach { err =>
+        System.err.println(s"[verify] ${e.name} failed: ${err.getMessage}")
+        errors(e.name) = Option(err.getMessage).getOrElse(err.getClass.getName)
+        import spark.implicits._
+        Seq.empty[String].toDF("err").coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${e.name}")
       }
-      // per-query caches (signature tables etc.) are dead once the
-      // result is written — drop them before the next query, including
-      // localCheckpoint RDD blocks clearCache does not reach
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -66,8 +41,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val ran = names.toSet
     val json = SparkEntry.oracleSql.iterator
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => ran.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors

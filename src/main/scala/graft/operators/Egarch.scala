@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -220,7 +222,7 @@ object Egarch {
     * non-convergent fits — `egarch.py:133-208`. */
   def autoSelect(x: Array[Double], criterion: String = "aic"): Option[Fit] = {
     val fits = for (p <- 1 to 2; q <- 1 to 2) yield
-      try Some(fit(x, p, q)) catch { case _: Throwable => None }
+      try Some(fit(x, p, q)) catch { case NonFatal(_) => None }
     val ok = fits.flatten.filter(_.converged)
     val pool = if (ok.nonEmpty) ok else fits.flatten
     if (pool.isEmpty) None
@@ -329,7 +331,7 @@ object Egarch {
     else {
       val fitOpt =
         if (auto) autoSelect(x)
-        else (try Some(fit(x)) catch { case _: Throwable => None })
+        else (try Some(fit(x)) catch { case NonFatal(_) => None })
       fitOpt.map(f => (x, f))
     }
   }
@@ -374,7 +376,7 @@ object Egarch {
         if (obs.length < MinObservations) Iterator.empty
         else {
           val fitted = try Some(fit(obs.map(_._2)))
-            catch { case _: Throwable => None }
+            catch { case NonFatal(_) => None }
           fitted.iterator.flatMap { f =>
             obs.iterator.zipWithIndex.map { case ((ord, v), t) =>
               SpreadRow(key, ord, v, f.condVol(t), f.residuals(t),

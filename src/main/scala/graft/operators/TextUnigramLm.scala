@@ -331,38 +331,9 @@ object TextUnigramLm {
     * can compare them cross-engine. */
   def trainSoft(docs: DataFrame, textCol: String = "text",
       targetMultis: Int = TargetMultis)
-      : (Map[String, Long], Seq[IterStat], DataFrame) = {
-    val words = graft.util.Caches.snapshot(wordFreq(docs, textCol))
-    val seed = graft.util.Caches.snapshot(
-      words.select(col("freq"), explode(allSubstrings(col("word")))
-        .as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("cnt")))
-    // bounded-collect(alphabet): distinct single characters
-    val singleRows = seed.filter(length(col("piece")) === 1)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    // bounded-collect(SeedMultis): top-k via TakeOrderedAndProject
-    val multiRows = seed.filter(length(col("piece")) > 1)
-      .orderBy(col("cnt").desc, col("piece")).limit(SeedMultis)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val singles = singleRows.map(_._1).toSet
-    var model = mstep(singleRows ++ multiRows, singles, SeedMultis)
-    val stats = scala.collection.mutable.ArrayBuffer.empty[IterStat]
-    var segmented: DataFrame = null
-    for (t <- 1 to Iterations) {
-      segmented = graft.util.Caches.snapshot(segment(words, model))
-      val ll = segmented
-        .agg(sum(col("freq") * col("score_micro")).cast("long"))
-        .head().getLong(0)
-      stats += IterStat(t, ll)
-      if (t < Iterations) {
-        // bounded-collect(vocab): expected counts are model-sized
-        val cnts = softCounts(words, model).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        model = mstep(cnts, singles, targetMultis)
-      }
-    }
-    (model, stats.toSeq, segmented)
-  }
+      : (Map[String, Long], Seq[IterStat], DataFrame) =
+    em(docs, textCol, targetMultis, pruneByLoss = false)(
+      (words, _, model) => softCounts(words, model))
 
   /** Train the unigram LM. Returns (final model, per-iteration
     * log-lik stats, the FINAL segmented word table under that model —
@@ -377,6 +348,18 @@ object TextUnigramLm {
   def train(docs: DataFrame, textCol: String = "text",
       pruneByLoss: Boolean = false,
       targetMultis: Int = TargetMultis)
+      : (Map[String, Long], Seq[IterStat], DataFrame) =
+    em(docs, textCol, targetMultis, pruneByLoss)(
+      (_, segmented, _) => pieceCounts(segmented))
+
+  /** The one EM loop behind [[train]] and [[trainSoft]]: seed model
+    * from the top substrings, then [[Iterations]] rounds of Viterbi
+    * segmentation (the per-iteration stat) and, between rounds, an
+    * M-step over the counts `estep` derives from (word table, this
+    * round's segmented table, current model). */
+  private def em(docs: DataFrame, textCol: String, targetMultis: Int,
+      pruneByLoss: Boolean)
+      (estep: (DataFrame, DataFrame, Map[String, Long]) => DataFrame)
       : (Map[String, Long], Seq[IterStat], DataFrame) = {
     val words = graft.util.Caches.snapshot(wordFreq(docs, textCol))
     // snapshot, not materialize: two bounded collects read this, and
@@ -405,7 +388,7 @@ object TextUnigramLm {
       stats += IterStat(t, ll)
       if (t < Iterations) {
         // bounded-collect(vocab): piece counts are model-sized
-        val cnts = pieceCounts(segmented).collect()
+        val cnts = estep(words, segmented, model).collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq
         model = mstep(cnts, singles, targetMultis,
           if (pruneByLoss) Some(model) else None)

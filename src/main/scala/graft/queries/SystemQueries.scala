@@ -160,7 +160,9 @@ object SystemQueries {
     val q = StreamingIngest.startIngest(ss, s"$src/pages", trades.schema,
       tgt, ckpt)
     try q.processAllAvailable() finally q.stop()
-    val written = s.read.parquet(s"$tgt/ingest_batch=*")
+    // the directory itself, not an `ingest_batch=*` glob: FileStreamSink
+    // logs a FileNotFoundException trace probing a glob for metadata
+    val written = s.read.parquet(tgt)
     Seq((written.count(),
       written.select(countDistinct(col("trade_id"))).head().getLong(0)))
       .toDF("rows_written", "unique_ids")
@@ -408,10 +410,13 @@ object SystemQueries {
        |  volume
        |FROM agg, wm WHERE end_ms <= wm_ms""".stripMargin
 
-  /** Day-partitioned sorted store per sf dir, built once per JVM-host
-    * (keyed by the read-only sf path; rebuilt only if absent). */
+  /** Day-partitioned sorted store per sf dir, built once per host and
+    * data version: keyed by the sf path AND its
+    * [[graft.util.FrameMemo.dirFingerprint]], so a dir regenerated in
+    * place gets a fresh store instead of the old one's rows. */
   private[graft] def prunedStore(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_store/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val path = s"/tmp/graft_store/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_" +
+      graft.util.FrameMemo.dirFingerprint(dir)
     val done = new java.io.File(s"$path/_SUCCESS")
     if (!done.exists()) {
       TradesStore.write(SyntheticTrades.trades(s, dir), path,
@@ -484,7 +489,7 @@ object SystemQueries {
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    val landed = s.read.parquet(s"$tgt/ingest_batch=*")
+    val landed = s.read.parquet(tgt) // the directory, as in st1
       .groupBy(col("text_hash"))
       .agg(count(lit(1)).as("_rows"), max(col("n_words")).as("_nw"))
     val canonSrc = docs

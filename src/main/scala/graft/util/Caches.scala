@@ -29,7 +29,10 @@ object Caches {
     * explode and its map-side partial aggregation run wide instead of
     * single-task (guide §2.5 input skew). An already-parallel input
     * (any real multi-file table, and 100 TB in particular) passes
-    * through untouched, paying no exchange. */
+    * through untouched, paying no exchange. The input must be
+    * exchange-free: `df.rdd.getNumPartitions` plans it physically, and
+    * under AQE that runs every upstream shuffle stage before the
+    * check. */
   def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val spark = df.sparkSession
     if (df.rdd.getNumPartitions * 2 < spark.sparkContext.defaultParallelism)

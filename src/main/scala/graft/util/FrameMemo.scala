@@ -19,9 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dir is REGENERATED within one application (same path, new bytes),
   * which would otherwise silently serve a stale frame that disagrees
   * with the oracle's live scan. Bounded: one entry per (dir, version,
-  * name) an application ever touches. On a cluster the same pattern
-  * targets a job-scoped path on the shared filesystem (java.io.tmpdir
-  * here; local mode has no HDFS). */
+  * name) an application ever touches. Each table lives in a
+  * [[TempDirs.scoped]] directory, deleted at JVM exit. On a cluster
+  * the same pattern targets a job-scoped path on the shared
+  * filesystem (java.io.tmpdir here; local mode has no HDFS). */
 object FrameMemo {
 
   private val memo = scala.collection.concurrent.TrieMap
@@ -77,12 +78,7 @@ object FrameMemo {
       (build: => DataFrame): DataFrame = {
     val path = memo.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, fp, name), {
-        val key = java.util.UUID.nameUUIDFromBytes(
-          s"${s.sparkContext.applicationId}|$dir|$fp|$name"
-            .getBytes("UTF-8"))
-        val out = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_memo_${name}_$key").getAbsolutePath
+        val out = TempDirs.scoped(s"graft_memo_${name}_")
         build.write.mode("overwrite").parquet(out)
         out
       })

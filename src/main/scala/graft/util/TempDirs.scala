@@ -31,6 +31,10 @@ object TempDirs {
     p.toString
   }
 
+  /** Whether `path` is a directory [[scoped]] handed out. */
+  private[graft] def isScoped(path: String): Boolean =
+    registered.synchronized(registered.exists(_.toString == path))
+
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val children = Files.list(p)

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ import graft.operators.{TextAnalysis, TextPii, VectorOps}
   * PII tokens and filler, including the adversarial adjacencies a
   * unit test wouldn't enumerate (digit runs touching masked tokens,
   * emails chained with '@' leftovers, 5-octet IP runs). */
-object CurationProps extends Properties("Curation") {
+object CurationProps extends SparkProperties("Curation") {
   private lazy val spark = TestSpark.spark
 
   // filler: letters/digits but never '@' (emails are injected, not

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,7 @@ import graft.operators.{TextDedup, VectorOps}
   *  - pqEncode: codes are in-range, deterministic, and identical
   *    subvectors get identical codes.
   */
-object DedupProps extends Properties("Dedup") {
+object DedupProps extends SparkProperties("Dedup") {
   private lazy val spark = TestSpark.spark
 
   private val wordGen = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import graft.operators.{EventsAnalytics, TextAnalysis}
   * in-memory reference implementation on random inputs, so the
   * operator semantics (not just the fixed spec fixtures) are pinned.
   */
-object EventsProps extends Properties("Events") {
+object EventsProps extends SparkProperties("Events") {
   private lazy val spark = TestSpark.spark
 
   /** (user, epoch-µs, type) triples over a tiny key space so gaps,

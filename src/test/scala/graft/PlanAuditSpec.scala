@@ -37,7 +37,10 @@ class PlanAuditSpec extends AnyFunSuite {
     * at construction time. One build per query for the whole suite
     * keeps the suite inside the driver's test budget; the audits are
     * plan-shape assertions, so sharing one built plan across tests
-    * checks exactly what three rebuilds checked. */
+    * checks exactly what three rebuilds checked. This holds only while
+    * no test in this spec mutates session conf: a conf-dependent audit
+    * would silently assert against the plan built under the first
+    * test's conf (key the cache on that conf if one ever needs to). */
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[SparkPlan]]
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import graft.operators.{EventsAnalytics, NearestJoin, TextDedup}
   * comparisons against straight-line in-memory references
   * (nearest-temporal join), the closed-form-vs-recursion identity
   * (CUSUM), and the winnowing shared-run guarantee. */
-object Round10Props extends Properties("Round10") {
+object Round10Props extends SparkProperties("Round10") {
   private lazy val spark = TestSpark.spark
 
   // ---- nearest join vs brute force ----

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import graft.operators.{MarkovAttribution, Microstructure}
   * Kaplan–Meier curve, translation invariance of the Roll estimator,
   * scale invariance of the variance ratio, and the
   * removal-can-only-hurt monotonicity of Markov attribution. */
-object Round11Props extends Properties("Round11") {
+object Round11Props extends SparkProperties("Round11") {
   private lazy val spark = TestSpark.spark
 
   private def ticksDf(closes: List[Double]) = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import graft.operators.{LshPlanner, Multimodal, TailDynamics, TermStructure}
   * OU fit, bounds and budget-totality of the LSH planner, slope-range
   * and translation invariance of Theil–Sen, and permutation/reversal
   * invariants of the VAD segmenter. */
-object Round12Props extends Properties("Round12") {
+object Round12Props extends SparkProperties("Round12") {
   private lazy val spark = TestSpark.spark
 
   private def ticksDf(closes: List[Double]) = {

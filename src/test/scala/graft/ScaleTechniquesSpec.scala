@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import graft.util.Parity
   * keyed doubles — including heavy skew (many rows on one key), the
   * case the rewrite exists for. Decimal partials make the
   * re-association exact, so equality is ==, not approx. */
-object ScaleTechniquesSpec extends Properties("ScaleTechniques") {
+object ScaleTechniquesSpec extends SparkProperties("ScaleTechniques") {
   private lazy val spark = TestSpark.spark
 
   private val rowGen = for {

@@ -4,10 +4,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Properties, Test}
 
 /** One shared local session for all suites (sbt forks a single test
   * JVM; building a session per suite would dominate test time). */
 object TestSpark {
+  /** The smallest generated scale (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -37,4 +41,13 @@ object TestSpark {
       seen.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+}
+
+/** A ScalaCheck suite whose properties run Spark jobs per case: 25
+  * cases per property instead of ScalaCheck's 100 — at 100 the Spark
+  * property layer alone runs ~10 minutes, past the test budget. Pure
+  * driver-side suites extend `Properties` and keep 100. */
+abstract class SparkProperties(name: String) extends Properties(name) {
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(25)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.forAll
 
 import graft.operators.TextBpe
@@ -11,7 +11,7 @@ import graft.operators.TextBpe
   * ASCII with a supplementary-plane character and characters in
   * U+E000–U+FFFF, where UTF-8 byte order and UTF-16 order disagree,
   * so a tie broken in the wrong order shows. */
-object TextBpeProps extends Properties("TextBpe") {
+object TextBpeProps extends SparkProperties("TextBpe") {
   private lazy val spark = TestSpark.spark
 
   // lowercase-stable, non-space symbols: normalization leaves them be

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import graft.operators.TextDedup
   * distinct -> sha256/conv) on arbitrary ASCII text with arbitrary
   * whitespace runs — they are two implementations of the same spec and
   * the DuckDB oracle mirrors the second. */
-object TextHashProps extends Properties("TextHash") {
+object TextHashProps extends SparkProperties("TextHash") {
   private lazy val spark = TestSpark.spark
 
   private val wordGen = Gen.nonEmptyListOf(
