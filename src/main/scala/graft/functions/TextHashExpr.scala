@@ -39,6 +39,41 @@ object TextHash {
       ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
   }
 
+  /** First 60 bits of the sha256 of the string's UTF-8 bytes — equal
+    * to parsing the first 15 hex chars of `sha2(w, 256)`. */
+  def hash60(s: UTF8String): Long = {
+    val d = digest.get()
+    d.reset()
+    val b = d.digest(s.getBytes)
+    var v = 0L
+    var k = 0
+    while (k < 8) { v = (v << 8) | (b(k) & 0xffL); k += 1 }
+    v >>> 4
+  }
+
+  /** 60-bit SimHash of a word array: each word's [[hash60]] votes +1 on
+    * its set bits and -1 on the others; a bit is set where its vote
+    * total is above 0. A null word votes like hash 0 (-1 everywhere),
+    * as a null `sha2` does in the SQL spelling. */
+  def simhash60(words: ArrayData): Long = {
+    val votes = new Array[Int](60)
+    val n = words.numElements()
+    var i = 0
+    while (i < n) {
+      val h = if (words.isNullAt(i)) 0L else hash60(words.getUTF8String(i))
+      var b = 0
+      while (b < 60) {
+        votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
+        b += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < 60) { if (votes(b) > 0) out |= 1L << b; b += 1 }
+    out
+  }
+
   /** Exactly Java regex `\s` (what the Column pipeline's
     * regexp_replace uses; RE2's `\s` omits \v — an edge shared by
     * every normText oracle, unreachable in the ASCII corpus):
@@ -176,6 +211,37 @@ case class MinhashSigs(child: Expression, a: Seq[Long], b: Seq[Long],
     copy(child = newChild)
 }
 
+/** `simhash60(words)`: a document's 60-bit SimHash
+  * ([[TextHash.simhash60]]) in one pass over its word array — the
+  * explode + sha2-per-word + 60 `sum(when)` aggregate, without the
+  * explode, the shuffle or the 60-column aggregate. A null or empty
+  * array has no votes and gives null, where the aggregate form has no
+  * row (explode drops both). */
+case class SimHash60(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_simhash60"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ARRAY<STRING> input, got ${t.sql}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val words = input.asInstanceOf[ArrayData]
+    if (words.numElements() == 0) null else TextHash.simhash60(words)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""if ($c.numElements() == 0) { ${ev.isNull} = true; }
+         |else { ${ev.value} = graft.functions.TextHash.simhash60($c); }""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash60 =
+    copy(child = newChild)
+}
+
 object TextHashColumns {
   /** Distinct word n-gram hash32 array of `text` in one compiled pass. */
   def ngramHashes(text: Column, n: Int): Column =
@@ -184,4 +250,8 @@ object TextHashColumns {
   /** k MinHash permutation minima of a hash array in one traversal. */
   def minhashSigs(hs: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     GraftBridge.column(MinhashSigs(GraftBridge.expression(hs), a, b, p))
+
+  /** 60-bit SimHash of a word array in one pass (null when empty). */
+  def simhash60(words: Column): Column =
+    GraftBridge.column(SimHash60(GraftBridge.expression(words)))
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,17 +16,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape (100 TB): one corpus-sized shuffle builds the word
   * frequency table (map-side partial counts into a Heaps-law-bounded
-  * vocabulary, orders of magnitude smaller than the corpus). The merge
-  * loop then runs over a cached RDD of (word, freq, symbols), ONE
-  * Spark job per merge: the map side folds the previous merge into
-  * each word ([[fold]]) and emits its adjacent pairs, which
-  * `reduceByKey` combines per map partition in a hash map and sums
-  * into `parts` partitions, each of which keeps only its local best; the driver collects at most
-  * `parts` candidates and picks the exact global argmax. No pair table
-  * ever reaches the driver — its state is O(nMerges + parts). Lineage
-  * is truncated every iteration by the rule of
-  * [[graft.util.Caches.snapshot]] and each superseded state released,
-  * so the loop's plan and its cache footprint stay constant-size.
+  * vocabulary, orders of magnitude smaller than the corpus). The
+  * [[RowsPerPartition]] rule then picks the merge path. A vocabulary
+  * that fits one partition (every test and benchmark scale) learns
+  * every merge inside ONE task ([[learn]]): one job for the whole
+  * training instead of one per merge. A larger one runs [[mergeLoop]]
+  * over a cached RDD of (word, freq, symbols), ONE Spark job per
+  * merge: the map side folds the previous merge into each word
+  * ([[fold]]) and emits its adjacent pairs, which `reduceByKey`
+  * combines per map partition in a hash map and sums into `parts`
+  * partitions, each of which keeps only its local best; the driver
+  * collects at most `parts` candidates and picks the exact global
+  * argmax. No pair table ever reaches the driver — its state is
+  * O(nMerges + parts). Lineage is truncated every iteration by the
+  * rule of [[graft.util.Caches.snapshot]] and each superseded state
+  * released, so the loop's plan and its cache footprint stay
+  * constant-size.
   *
   * Determinism: argmax ties break (count DESC, left ASC, right ASC)
   * in Spark's UTF-8 byte order ([[Utf8Order]]); the merge fold is the
@@ -94,9 +100,10 @@ object TextBpe {
 
   /** Target vocab rows per partition for the merge loop. The vocab
     * table is Heaps-law-bounded (≈√corpus): at test scale it fits one
-    * partition (per-iteration task overhead would otherwise dominate
-    * the loop 10:1 — measured 22 s → ~4 s at sf0.1), at 100 TB a
-    * ~100M-word vocab still spreads over ~200 partitions. */
+    * partition, and so one task (per-iteration task overhead would
+    * otherwise dominate the loop 10:1 — measured 22 s → ~4 s at
+    * sf0.1), at 100 TB a ~100M-word vocab still spreads over ~200
+    * partitions. */
   val RowsPerPartition: Long = 500000L
 
   /** Apply a learned merge list to the corpus vocabulary: the
@@ -136,20 +143,82 @@ object TextBpe {
       initCounts: Map[(String, String), Long], vocab: DataFrame,
       release: () => Unit)
 
-  private type State = RDD[(String, Long, Array[String])]
+  private[graft] type State = RDD[(String, Long, Array[String])]
 
-  /** The merge loop — see the object doc for its job shape. */
-  def trainFull(docs: DataFrame, nMerges: Int, textCol: String = "text")
-      : Trained = {
-    val sc = docs.sparkSession.sparkContext
-    val symbols: State = wordSymbols(docs, textCol)
+  /** The vocabulary (word, freq, initial symbols) as an RDD. */
+  private[graft] def symbolState(docs: DataFrame, textCol: String = "text")
+      : State =
+    wordSymbols(docs, textCol)
       .select(col("word"), col("freq"), col("syms")).rdd
       .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
-    val first = graft.util.Caches.snapshotRdd(symbols)
-    // one count materializes the first state and sizes the loop's layout
+
+  /** Learn the merges. One job materializes the vocabulary and counts
+    * it; the [[RowsPerPartition]] rule then sizes the work. A
+    * vocabulary of one partition runs every merge inside ONE task
+    * ([[learn]]), whose job returns the merges, the initial counts and
+    * the final vocabulary; a larger one runs [[mergeLoop]], one job per
+    * merge. */
+  def trainFull(docs: DataFrame, nMerges: Int, textCol: String = "text")
+      : Trained = {
+    val first = symbolState(docs, textCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocabRows = first.count()
     val parts = math.max(1L, math.min(first.getNumPartitions.toLong,
       vocabRows / RowsPerPartition + 1)).toInt
+    if (parts > 1) mergeLoop(docs.sparkSession, first, parts, nMerges)
+    else {
+      val (merges, initCounts, words) =
+        try first.coalesce(1)
+          .mapPartitions(it => Iterator(learn(it.toArray, nMerges)))
+          .collect().headOption
+          .getOrElse(learn(Array.empty, nMerges))
+        finally first.unpersist(blocking = false)
+      val rows = words.toSeq.map { case (w, f, s) => Row(w, f, s.toSeq) }
+      Trained(merges, initCounts,
+        docs.sparkSession.createDataFrame(rows.asJava, VocabSchema), () => ())
+    }
+  }
+
+  /** Every merge over a vocabulary held in memory: the same pair
+    * totals, [[Rank]] argmax and [[fold]] as [[mergeLoop]], so both
+    * learn the same merges. Returns (merges, initial count of each
+    * learned pair, final vocabulary). */
+  private def learn(words: Array[(String, Long, Array[String])], nMerges: Int)
+      : (Seq[Merge], Map[(String, String), Long],
+        Array[(String, Long, Array[String])]) = {
+    def totals(ws: Array[(String, Long, Array[String])]) = {
+      val m = mutable.HashMap.empty[(String, String), Long]
+      for ((_, f, s) <- ws; i <- 1 until s.length)
+        m.updateWith((s(i - 1), s(i)))(c => Some(c.getOrElse(0L) + f))
+      m
+    }
+    val init = totals(words)
+    val merges = mutable.ArrayBuffer.empty[Merge]
+    var cur = words
+    var counts = init
+    var drained = false
+    while (merges.size < nMerges && !drained) {
+      counts.iterator.map { case ((l, r), c) => (l, r, c) }.minOption(Rank) match {
+        case Some((l, r, c)) =>
+          merges += Merge(merges.size + 1, l, r, l + r, c)
+          cur = cur.map { case (w, f, s) => (w, f, fold(s, l, r)) }
+          if (merges.size < nMerges) counts = totals(cur)
+        case None => drained = true
+      }
+    }
+    val learned = merges.map(m => (m.l_sym, m.r_sym)).toSet
+    (merges.toSeq, init.filter { case (p, _) => learned(p) }.toMap, cur)
+  }
+
+  private val VocabSchema = StructType(Seq(StructField("word", StringType),
+    StructField("freq", LongType, nullable = false),
+    StructField("syms", ArrayType(StringType, containsNull = false))))
+
+  /** The per-merge loop over a materialized `first` state (released
+    * with the result) — see the object doc for its job shape. */
+  private[graft] def mergeLoop(spark: SparkSession, first: State, parts: Int,
+      nMerges: Int): Trained = {
+    val sc = first.sparkContext
     val base = if (parts < first.getNumPartitions) first.coalesce(parts)
       else first
     // `base` may be a coalesced view: its blocks are `first`'s
@@ -189,11 +258,8 @@ object TextBpe {
       case Some((l, r)) => folded(state, l, r)
       case None => state
     }
-    val vocab = docs.sparkSession.createDataFrame(
-      last.map { case (w, f, s) => Row(w, f, s.toSeq) },
-      StructType(Seq(StructField("word", StringType),
-        StructField("freq", LongType, nullable = false),
-        StructField("syms", ArrayType(StringType, containsNull = false)))))
+    val vocab = spark.createDataFrame(
+      last.map { case (w, f, s) => Row(w, f, s.toSeq) }, VocabSchema)
     Trained(merges.toSeq, initCounts, vocab, () => release(state))
   }
 

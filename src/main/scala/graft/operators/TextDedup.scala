@@ -250,22 +250,6 @@ object TextDedup {
   def wordHash60(w: Column): Column =
     conv(substring(sha2(w, 256), 1, 15), 16, 10).cast("long")
 
-  /** SimHash per doc from an exploded (doc_id, word-hash) frame:
-    * per bit, +1/-1 majority vote over token hashes; set bit where the
-    * vote is positive. One hash-aggregate pass. */
-  def simhashAgg(exploded: DataFrame, idCol: String = "doc_id",
-      hashCol: String = "h", bits: Int = SimhashBits): DataFrame = {
-    val bitSums = (0 until bits).map { b =>
-      sum(when(shiftright(col(hashCol), b).bitwiseAND(lit(1L)) === 1L,
-        lit(1)).otherwise(lit(-1))).as(s"_bs$b")
-    }
-    val agg = exploded.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-    val simhash = (0 until bits)
-      .map(b => when(col(s"_bs$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    agg.select(col(idCol), simhash.as("simhash"))
-  }
-
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
@@ -599,27 +583,87 @@ object TextDedup {
       .filter(col("jaccard") >= t)
   }
 
+  /** Directed-edge bound (both directions of every pair) up to which
+    * [[dedupClusters]] computes components in one task: the node and
+    * edge arrays of a graph this size are a few tens of MB. */
+  private val SmallGraphEdges: Long = 2000000L
+
   /** Connected components over a near-dup pair graph: every document
     * that appears in a pair gets its component's minimum doc id as
-    * `cluster_id` (`keep` = it IS that minimum — the survivor).
+    * `cluster_id` (`keep` = it IS that minimum — the survivor). Ids are
+    * integral; the output carries the input's id type.
     *
-    * Alternating min-label propagation + pointer jumping (label :=
-    * label's label) to a fixpoint — the jump halves the distance to
-    * the component minimum every round, so convergence is
-    * O(log diameter) rounds, each one join+aggregate plus one
-    * self-join over the (small) label table. Inputs and intermediates
-    * stay distributed; only the per-round changed flag hits the
-    * driver. */
+    * The pair list is materialized once — one job, which also sizes
+    * the graph. Up to [[SmallGraphEdges]] edges, [[components]] runs
+    * union-find over the coalesced pair list in ONE task, inside the
+    * caller's action (no further job here). A larger graph runs the
+    * distributed [[labelPropagation]] loop. */
   def dedupClusters(pairs: DataFrame): DataFrame = {
-    // Materialize the pair pipeline ONCE before mirroring it: the
-    // unionAll below reads its input twice, and without the cache
-    // each read re-runs the whole upstream candidate+verify plan
-    // (measured ~1.5 s of the cluster query at sf0.1).
-    val p = materialize(pairs.select(col("id_a"), col("id_b")))
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val idType = pairs.schema("id_a").dataType
+    val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edgeCount = 2 * p.count()
+    val labels =
+      if (edgeCount <= SmallGraphEdges)
+        p.coalesce(1).mapPartitions(components).toDF("doc_id", "cluster_id")
+      else
+        try labelPropagation(p.toDF("id_a", "id_b"), edgeCount)
+        finally p.unpersist()
+    labels.select(col("doc_id").cast(idType).as("doc_id"),
+      col("cluster_id").cast(idType).as("cluster_id"),
+      (col("doc_id") === col("cluster_id")).as("keep"))
+  }
+
+  /** Union-find over an edge list held in one task: (node, component
+    * root) for every node, in node order. Nodes are sorted and
+    * numbered, and a union links the larger root under the smaller,
+    * so each root is its component's smallest id. Path halving keeps
+    * the finds short. */
+  private def components(edges: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val src = new scala.collection.mutable.ArrayBuilder.ofLong
+    val dst = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { case (a, b) => src += a; dst += b }
+    val from = src.result()
+    val to = dst.result()
+    val ids = from ++ to
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) {
+      ids(n) = ids(i); n += 1
+    }
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def node(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (e <- from.indices) {
+      val ra = find(node(from(e)))
+      val rb = find(node(to(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Distributed connected components of the (id_a, id_b) pair graph:
+    * (doc_id, cluster_id = component minimum). Alternating min-label
+    * propagation + pointer jumping (label := label's label) to a
+    * fixpoint — the jump halves the distance to the component minimum
+    * every round, so convergence is O(log diameter) rounds, each one
+    * join+aggregate plus one self-join over the label table. Inputs
+    * and intermediates stay distributed; only the per-round changed
+    * flag hits the driver. `edgeCount` (both directions) sizes the
+    * loop's shuffles. */
+  private[graft] def labelPropagation(pairs: DataFrame, edgeCount: Long)
+      : DataFrame = {
     val edges = materialize(
-      p.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionAll(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    p.unpersist()
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Size the loop's shuffles to the GRAPH, not the session's scan
     // parallelism: the label/edge tables are tiny relative to the
     // corpus (only near-dup participants), and every round runs ~4
@@ -627,7 +671,6 @@ object TextDedup {
     // partitions. ~250k edges per partition; grows with the graph, so
     // the knob is scale-correct at 100 TB too.
     val spark = pairs.sparkSession
-    val edgeCount = edges.count()
     val loopParts = math.max(4L,
       math.min(4096L, edgeCount / 250000L + 4L)).toString
     // lineage MUST be truncated every round (it grows exponentially);
@@ -651,30 +694,21 @@ object TextDedup {
     var converged = false
     var rounds = 0
     val maxRounds = 64 // log2-diameter rounds suffice; 64 is unreachable
-    // Label tables are node-sized (near-dup participants only). AQE
-    // cannot convert the loop's joins to broadcasts (checkpointed
-    // leaves carry no stats), so hint them explicitly while the graph
-    // is broadcastable and fall back to shuffle joins beyond that —
-    // the same decision AQE would make with stats. One shuffle per
-    // round instead of three.
-    val smallGraph = edgeCount <= 2000000L
-    def maybeBc(df: DataFrame): DataFrame =
-      if (smallGraph) broadcast(df) else df
     while (!converged && rounds < maxRounds) {
       // (a) min over self + neighbor labels, carrying the round-start
       // label as _old so convergence needs no second join afterwards
       val neighborMin = loopEdges
-        .join(maybeBc(labels.withColumnRenamed("id", "dst")), "dst")
+        .join(labels.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("label")).as("_nbr"))
-      val propagated = labels.join(maybeBc(neighborMin), Seq("id"), "left")
+      val propagated = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("label").as("_old"),
           least(col("label"), coalesce(col("_nbr"), col("label"))).as("label"))
       // (b) pointer jump: follow the label's own label (labels are
       // node ids, so the self-join is total on the left)
       val parent = propagated
         .select(col("id").as("label"), col("label").as("_ll"))
-      val jumped = snapshot(propagated.join(maybeBc(parent), Seq("label"), "left")
+      val jumped = snapshot(propagated.join(parent, Seq("label"), "left")
         .select(col("id"), col("_old"),
           least(col("label"), coalesce(col("_ll"), col("label"))).as("label")))
       // the snapshot already materialized the round; the convergence
@@ -693,8 +727,7 @@ object TextDedup {
     // bind the (checkpointed) result back to the caller's session so
     // downstream plans use the caller's conf, not the loop's
     org.apache.spark.sql.GraftBridge.bindTo(
-      labels.select(col("id").as("doc_id"), col("label").as("cluster_id"),
-        (col("id") === col("label")).as("keep")),
+      labels.select(col("id").as("doc_id"), col("label").as("cluster_id")),
       spark)
   }
 
@@ -786,7 +819,7 @@ object TextDedup {
         shiftright(col("simhash"), c * chunkBits).bitwiseAND(lit(chunkMask)))
     }
     // both sides of the chunk self-join read the signatures — cache
-    // them or the full token-explode simhash aggregation runs twice.
+    // them or the whole simhash pass runs twice.
     // Like the signature tables in minhashNearDups/invertedIndexPairs,
     // the cache lives until the session drops it: the returned plan is
     // lazy, so unpersisting here would un-cache before the caller's

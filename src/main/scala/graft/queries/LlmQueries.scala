@@ -703,12 +703,14 @@ object LlmQueries {
 
   // ---- SimHash ----
 
-  def simhash(s: SparkSession, dir: String): DataFrame = {
-    val exploded = docs(s, dir).select(col("doc_id"),
-      explode(TextDedup.words(col("text"))).as("word"))
-      .select(col("doc_id"), TextDedup.wordHash60(col("word")).as("h"))
-    TextDedup.simhashAgg(exploded)
-  }
+  /** One projection: each document's word array to its 60-bit SimHash
+    * ([[graft.functions.SimHash60]]); a document without words has
+    * none. */
+  def simhash(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir)
+      .select(col("doc_id"), graft.functions.TextHashColumns
+        .simhash60(TextDedup.words(col("text"))).as("simhash"))
+      .filter(col("simhash").isNotNull)
 
   /** DuckDB twin of wordHash32: first 8 sha256 hex chars as a 32-bit
     * int, via per-char digit values (DuckDB has no hex→int conv).
@@ -718,10 +720,10 @@ object LlmQueries {
     """CAST(list_sum([(strpos('0123456789abcdef', sha[i]) - 1)
       |      * (16.0 ** (8 - i)) for i in range(1, 9)]) AS BIGINT)""".stripMargin
 
-  /** DuckDB twin of wordHash60: first 15 sha256 hex chars as a 60-bit
-    * int. Integer shifts, not `16.0 **` doubles — 16^14 exceeds 2^53,
-    * so the double form would silently round; `digit << 4k` stays
-    * exact BIGINT arithmetic all the way up. */
+  /** DuckDB twin of SimHash60's word hash: first 15 sha256 hex chars
+    * as a 60-bit int. Integer shifts, not `16.0 **` doubles — 16^14
+    * exceeds 2^53, so the double form would silently round;
+    * `digit << 4k` stays exact BIGINT arithmetic all the way up. */
   private def duckHash60 =
     """CAST(list_sum([(strpos('0123456789abcdef', sha[i]) - 1)::BIGINT
       |      << (4 * (15 - i)) for i in range(1, 16)]) AS BIGINT)""".stripMargin
@@ -1000,8 +1002,8 @@ object LlmQueries {
     var model: (Seq[TextBpe.Merge], Map[(String, String), Long]) = _
   }
 
-  /** Train-once cache: the 24-merge training loop (one Spark job per
-    * merge, the most expensive loop in the registry) runs exactly once
+  /** Train-once cache: the 24-merge training (one task on a vocabulary
+    * of one partition, one Spark job per merge beyond) runs exactly once
     * per (applicationId, sf dir, dir fingerprint) — the same key as
     * trainedClassifier: an identity hash is reusable after GC, and
     * without the fingerprint an in-process regeneration of the data

@@ -413,17 +413,25 @@ object SystemQueries {
   /** Day-partitioned sorted store per sf dir, built once per host and
     * data version: keyed by the sf path AND its
     * [[graft.util.FrameMemo.dirFingerprint]], so a dir regenerated in
-    * place gets a fresh store instead of the old one's rows. */
+    * place gets a fresh store instead of the old one's rows. Every
+    * call deletes the dir's superseded stores: its stores under another
+    * fingerprint and the path-only store of earlier layouts. */
   private[graft] def prunedStore(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_store/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_" +
-      graft.util.FrameMemo.dirFingerprint(dir)
-    val done = new java.io.File(s"$path/_SUCCESS")
-    if (!done.exists()) {
+    val name = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val path = s"$StoreRoot/${name}_${graft.util.FrameMemo.dirFingerprint(dir)}"
+    val superseded = (java.util.regex.Pattern.quote(name) +
+      "(_([0-9a-f]{32}|absent|unreadable))?").r
+    Option(new java.io.File(StoreRoot).listFiles()).toSeq.flatten
+      .filter(f => superseded.matches(f.getName) && f.getPath != path)
+      .foreach(org.apache.commons.io.FileUtils.forceDelete)
+    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
       TradesStore.write(SyntheticTrades.trades(s, dir), path,
         partKey = ("date", "yyyyMMdd"))
     }
     path
   }
+
+  private val StoreRoot = "/tmp/graft_store"
 
   /** S8-over-the-store: the BASELINE headline ("time-range query
     * 10-100x via index seek") Spark-style — the fetch's time-range

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 object Caches {
 
@@ -15,12 +16,18 @@ object Caches {
     * row-level Filter where HOF lambdas re-evaluate their captured
     * expressions per element (measured ~50x). The cache is a hard
     * barrier against both. At cluster scale this is the standard
-    * "signature table" materialization of a multi-branch pipeline. */
-  def materialize(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    cached
-  }
+    * "signature table" materialization of a multi-branch pipeline.
+    *
+    * A plan some earlier call already materialized (the cache manager
+    * matches equal plans, e.g. the tf table BM25 and tf·idf share) is
+    * returned as is: no second persist, no second count. */
+  def materialize(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      cached.count()
+      cached
+    }
 
   /** Scale-adaptive repartition ahead of a per-row-heavy stage
     * (explode, shingle hashing): when the frame plans NARROWER than
@@ -73,7 +80,7 @@ object Caches {
     * RDD kernels whose every iteration is already one job. */
   def snapshotRdd[T](rdd: RDD[T]): RDD[T] =
     if (rdd.sparkContext.getCheckpointDir.isDefined) {
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
       rdd.checkpoint()
       rdd
     } else rdd.localCheckpoint()

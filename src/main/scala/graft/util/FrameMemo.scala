@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Write-once parquet side-table memos for registry entries that
   * share an expensive upstream pass (the LSH pair set, the BM25 /
@@ -25,8 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * filesystem (java.io.tmpdir here; local mode has no HDFS). */
 object FrameMemo {
 
+  /** Path and written schema of each memo table. */
   private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String, String), String]
+    .empty[(String, String, String, String), (String, StructType)]
 
   /** Cheap dataset fingerprint: relative path + length + full-
     * precision mtime + filesystem fileKey (inode on POSIX — changes
@@ -66,7 +68,9 @@ object FrameMemo {
 
   /** Return the memoized frame for (app, dir-version, name), building
     * and writing it on first use. Column order/types round-trip
-    * through parquet unchanged. */
+    * through parquet unchanged, so each read-back takes the schema
+    * the write had instead of inferring it from the footers (a Spark
+    * job per read). */
   def cached(s: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame =
     cached(s, dir, name, dirFingerprint(dir))(build)
@@ -76,12 +80,13 @@ object FrameMemo {
     * different dir version than the memo. */
   def cached(s: SparkSession, dir: String, name: String, fp: String)
       (build: => DataFrame): DataFrame = {
-    val path = memo.getOrElseUpdate(
+    val (path, schema) = memo.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, fp, name), {
         val out = TempDirs.scoped(s"graft_memo_${name}_")
-        build.write.mode("overwrite").parquet(out)
-        out
+        val df = build
+        df.write.mode("overwrite").parquet(out)
+        (out, df.schema)
       })
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
   }
 }

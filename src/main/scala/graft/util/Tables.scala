@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md). */
 object Tables {
@@ -26,7 +27,7 @@ object Tables {
     name match {
       case "events" =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val df = spark.read.parquet(s"$sfDir/events.parquet")
+        val df = read(spark, s"$sfDir/events.parquet")
         df.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -36,6 +37,24 @@ object Tables {
           case _ => df
         }
       case _ =>
-        spark.read.parquet(s"$sfDir/$name.parquet")
+        read(spark, s"$sfDir/$name.parquet")
     }
+
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, String), StructType]
+
+  /** A parquet table read under the schema inferred at its first load.
+    * Inference reads the footers in a Spark job (35–110 ms cold); the
+    * schema is keyed by the table's [[FrameMemo.dirFingerprint]], so a
+    * table regenerated in place is inferred again. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, FrameMemo.dirFingerprint(path))
+    schemas.get(key) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.putIfAbsent(key, df.schema)
+        df
+    }
+  }
 }

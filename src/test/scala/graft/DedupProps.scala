@@ -14,6 +14,8 @@ import graft.operators.{TextDedup, VectorOps}
   *  - decontaminate against a DISJOINT benchmark flags nothing.
   *  - pqEncode: codes are in-range, deterministic, and identical
   *    subvectors get identical codes.
+  *  - dedupClusters' one-task union-find labels every node exactly as
+  *    the distributed label-propagation loop does.
   */
 object DedupProps extends SparkProperties("Dedup") {
   private lazy val spark = TestSpark.spark
@@ -72,5 +74,36 @@ object DedupProps extends SparkProperties("Dedup") {
             code == VectorOps.nearestCentroid(sub, books(s))
           }
       })
+    }
+
+  /** Random pair graphs: chains, stars and isolated pairs over shuffled
+    * (possibly negative) ids, plus duplicated and reversed edges. */
+  private val graphGen: Gen[List[(Long, Long)]] = for {
+    shapes <- Gen.nonEmptyListOf(Gen.zip(Gen.oneOf("chain", "star", "pair"),
+      Gen.choose(2, 7))).map(_.take(6))
+    seed <- Gen.long
+    dupes <- Gen.choose(0, 3)
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val sizes = shapes.map { case (k, n) => if (k == "pair") 2 else n }
+    val ids = rnd.shuffle((0 until sizes.sum).map(i => i * 7L - 40L)).iterator
+    val edges = shapes.zip(sizes).flatMap { case ((kind, _), n) =>
+      val c = List.fill(n)(ids.next())
+      if (kind == "star") c.tail.map(c.head -> _) else c.zip(c.tail)
+    }
+    edges ++ rnd.shuffle(edges).take(dupes).map(_.swap)
+  }
+
+  property("one-task union-find == label-propagation loop on random graphs") =
+    forAll(graphGen) { edges =>
+      import spark.implicits._
+      val pairs = edges.toDF("id_a", "id_b")
+      val uf = TextDedup.dedupClusters(pairs).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+      val loop = TextDedup.labelPropagation(pairs, 2L * edges.size).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Prop(uf.map { case (id, (root, _)) => id -> root } == loop) :|
+        s"union-find $uf != label propagation $loop" &&
+      Prop(uf.forall { case (id, (root, keep)) => keep == (id == root) })
     }
 }

@@ -65,4 +65,19 @@ class HarnessSpec extends AnyFunSuite {
       Harness.run(spark, dir, names)((_, _) => throw new InterruptedException("stop")).toVector
     }
   }
+
+  test("the retrieval warm-up persists each shared plan once") {
+    // bm25 and tf-idf materialize the same tf and postings plans: the
+    // second builder finds them cached and starts no job
+    import spark.implicits._
+    val docs = Seq((1L, "a b c"), (2L, "b c d"), (3L, "c d e"))
+      .toDF("doc_id", "text")
+    val terms = Seq((1, "b"), (1, "d")).toDF("query_id", "term")
+    try {
+      graft.operators.TextRetrieval.bm25TopK(docs, terms, 2)
+      val jobs = TestSpark.jobsDuring(
+        graft.operators.TextRetrieval.tfidfTopK(docs, terms, 2))
+      assert(jobs.size == 0, "tf-idf re-materialized")
+    } finally Harness.isolate(spark)
+  }
 }

@@ -107,13 +107,28 @@ class LlmOperatorsSpec extends AnyFunSuite {
     assert(out.length == 200)
     assert(out.forall(_.getLong(1) == 0L))
     assert(out.count(_.getBoolean(2)) == 1)
+    // the graph fits one task's union-find; the distributed loop the
+    // large graphs take must label it the same
+    val loop = TextDedup.labelPropagation(chain, 2L * 199).collect()
+    assert(loop.length == 200)
+    assert(loop.forall(_.getLong(1) == 0L))
+  }
+
+  test("dedupClusters runs at most two jobs on a small graph") {
+    import spark.implicits._
+    val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L), (5L, 6L))
+      .toDF("id_a", "id_b")
+    var rows = 0
+    val jobs = TestSpark.jobsDuring {
+      rows = TextDedup.dedupClusters(pairs).collect().length
+    }
+    assert(rows == 6)
+    assert(jobs.size <= 2, s"dedupClusters ran ${jobs.size} jobs")
   }
 
   test("simhash: identical normalized docs hash equal; hamming 0") {
-    val exploded = docs.select(col("doc_id"),
-      explode(TextDedup.words(col("text"))).as("w"))
-      .select(col("doc_id"), TextDedup.wordHash60(col("w")).as("h"))
-    val sims = TextDedup.simhashAgg(exploded)
+    val sims = docs.select(col("doc_id"), graft.functions.TextHashColumns
+      .simhash60(TextDedup.words(col("text"))).as("simhash"))
     val byId = sims.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byId(1L) == byId(2L))
     assert(byId.values.forall(v =>

@@ -5,9 +5,11 @@ import org.scalacheck.Prop.forAll
 
 import graft.operators.TextBpe
 
-/** The distributed BPE kernel against a straight-line driver-only
-  * reference trainer on random corpora: same merges, same pair counts,
-  * same initial counts, same final symbol arrays. The alphabet mixes
+/** Both BPE trainers — the one-task path `trainFull` takes on a small
+  * vocabulary and the per-merge loop on a multi-partition one — against
+  * a straight-line driver-only reference trainer on random corpora:
+  * same merges, same pair counts, same initial counts, same final
+  * symbol arrays. The alphabet mixes
   * ASCII with a supplementary-plane character and characters in
   * U+E000–U+FFFF, where UTF-8 byte order and UTF-16 order disagree,
   * so a tie broken in the wrong order shows. */
@@ -69,20 +71,29 @@ object TextBpeProps extends SparkProperties("TextBpe") {
       val freqs = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
         .groupMapReduce(identity)(_ => 1L)(_ + _)
       val (refMerges, refInit, refFinal) = reference(freqs, n)
-      val t = TextBpe.trainFull(docs, n)
-      val finals = try t.vocab.collect()
-        .map(r => r.getString(0) -> r.getSeq[String](2).toList).toMap
-      finally t.release()
       val dfInit = TextBpe.pairCounts(TextBpe.wordSymbols(docs)).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val learned = refMerges.map { case (l, r, _) => (l, r) }
-      val got = t.merges.map(m => (m.l_sym, m.r_sym, m.pair_count))
-      Prop(got == refMerges) :| s"merges $got != reference $refMerges" &&
-      Prop(t.merges.map(m => (m.rank, m.merged)) ==
-        refMerges.indices.map(i => (i + 1, refMerges(i)._1 + refMerges(i)._2))) &&
+      // a vocabulary this small takes the one-task path; the per-merge
+      // loop runs over the same vocabulary spread on three partitions
+      val spread = TextBpe.symbolState(docs).repartition(3)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val trainers = Seq(
+        "one-task" -> (() => TextBpe.trainFull(docs, n)),
+        "per-merge" -> (() => TextBpe.mergeLoop(spark, spread, 3, n)))
       Prop(dfInit == refInit) :| "pairCounts table != reference" &&
-      Prop(t.initCounts == learned.flatMap(p => dfInit.get(p).map(p -> _)).toMap) :|
-        s"initial counts ${t.initCounts}" &&
-      Prop(finals == refFinal) :| s"final symbols $finals != $refFinal"
+      Prop.all(trainers.map { case (name, train) =>
+        val t = train()
+        val finals = try t.vocab.collect()
+          .map(r => r.getString(0) -> r.getSeq[String](2).toList).toMap
+        finally t.release()
+        val got = t.merges.map(m => (m.l_sym, m.r_sym, m.pair_count))
+        (Prop(got == refMerges) :| s"$name merges $got != reference $refMerges" &&
+        Prop(t.merges.map(m => (m.rank, m.merged)) ==
+          refMerges.indices.map(i => (i + 1, refMerges(i)._1 + refMerges(i)._2))) &&
+        Prop(t.initCounts == learned.flatMap(p => dfInit.get(p).map(p -> _)).toMap) :|
+          s"$name initial counts ${t.initCounts}" &&
+        Prop(finals == refFinal) :| s"$name final symbols $finals != $refFinal")
+      }: _*)
     }
 }

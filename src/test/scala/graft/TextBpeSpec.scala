@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.operators.TextBpe
 
@@ -88,39 +85,37 @@ class TextBpeSpec extends AnyFunSuite {
       Seq(("x", TextBpe.EndToken, 2L)))
   }
 
-  test("train runs at most one Spark job per merge plus four") {
-    // job counts are deterministic where wall time is not: this pins
-    // the one-job-per-merge shape of the merge loop
-    val docs = docsOf(
-      "low low low low low",
-      "lower lower",
-      "newest newest newest newest newest newest",
-      "widest widest widest")
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val marker = "textbpe-job-count-marker"
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.job.description") == marker)
-          markerSeen = true
-        else jobs.incrementAndGet()
+  private val golden = Seq(
+    "low low low low low",
+    "lower lower",
+    "newest newest newest newest newest newest",
+    "widest widest widest")
+
+  /** Jobs `body` starts: job counts are deterministic where wall time
+    * is not. */
+  private def jobs(body: => Unit): Int = TestSpark.jobsDuring(body).size
+
+  test("train on a one-partition vocabulary runs at most four jobs for any n") {
+    val docs = docsOf(golden: _*)
+    for (n <- Seq(1, 8, 30)) {
+      var merges = Seq.empty[TextBpe.Merge]
+      val ran = jobs { merges = TextBpe.train(docs, n)._1 }
+      assert(merges.nonEmpty)
+      assert(ran <= 4, s"train($n) ran $ran jobs")
     }
+  }
+
+  test("the per-merge loop runs at most one Spark job per merge plus four") {
     val n = 8
-    sc.addSparkListener(listener)
-    try {
-      val (merges, _) = TextBpe.train(docs, n)
-      assert(merges.size == n)
-      // listener delivery is async but ordered: once the marker job is
-      // seen, every job the trainer started has been counted
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "the marker job never reached the listener")
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= n + 4, s"train($n) ran ${jobs.get} jobs")
+    val state = TextBpe.symbolState(docsOf(golden: _*)).repartition(3)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var merges = Seq.empty[TextBpe.Merge]
+    val ran = jobs {
+      val t = TextBpe.mergeLoop(spark, state, 3, n)
+      t.release()
+      merges = t.merges
+    }
+    assert(merges.size == n)
+    assert(ran <= n + 4, s"mergeLoop($n) ran $ran jobs")
   }
 }
