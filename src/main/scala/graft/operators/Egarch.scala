@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** EGARCH(p, o=1, q) volatility modelling with Student-t innovations —
@@ -291,122 +291,37 @@ object Egarch {
     out
   }
 
-  // ---- Spark integration: per-group fit over bar series ----
+  // ---- Spark integration: one fit per bar series ----
 
-  final case class EgarchRow(
-      underlying: String, p: Int, q: Int, mu: Double, omega: Double,
-      alpha1: Double, gamma: Double, beta1: Double, nu: Double,
-      log_lik: Double, aic: Double, bic: Double, persistence: Double,
-      n_obs: Int, converged: Boolean, vol_forecast_1: Double,
-      resid_mean: Double, resid_std: Double, iv_egarch_spread_last: Double)
+  /** One fitted series of [[fitSeries]]: the group key, the bar order
+    * keys and values the fit consumed (ascending, NaN dropped) and the
+    * fit, whose `condVol` and `residuals` align with them. */
+  final case class SeriesFit(key: String, order: Array[Long],
+      x: Array[Double], fit: Fit)
 
-  final case class ForecastRow(
-      underlying: String, horizon: Int, vol_forecast: Double,
-      persistence: Double, n_obs: Int, converged: Boolean)
-
-  final case class SpreadRow(
-      underlying: String, bucket_start: Long, iv_close: Double,
-      cond_vol: Double, residual: Double, iv_egarch_spread: Double)
-
-  /** Shared per-group scaffolding for [[fitPerGroup]] and
-    * [[forecastPerGroup]]: (key, order, value) triples keyed by the
-    * group column, ready for flatMapGroups. */
-  private def groupedBars(bars: DataFrame, keyCol: String,
-      valueCol: String, orderCol: String)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, (String, Long, Double)] = {
+  /** Fit one EGARCH per `keyCol` group over the `valueCol` bar series
+    * ordered by `orderCol` (`autoSelect`'s grid when `auto`). bars is
+    * SMALL (one row per 15-min bar); each group's series is collected,
+    * ordered, NaN-filtered and fit inside its executor task, so a
+    * deployment fits thousands of series in parallel. A series below
+    * MinObservations, or one no fit succeeds on, emits nothing. */
+  def fitSeries(bars: DataFrame, auto: Boolean = false,
+      keyCol: String = "underlying", valueCol: String = "iv_close",
+      orderCol: String = "bucket_start"): Dataset[SeriesFit] = {
     val spark = bars.sparkSession
     import spark.implicits._
     bars.select(col(keyCol).cast("string"), col(orderCol).cast("long"),
       col(valueCol).cast("double"))
       .as[(String, Long, Double)]
       .groupByKey(_._1)
-  }
-
-  /** Order the group's rows, drop NaNs, fit if long enough. One
-    * definition of "prepare + fit" so M3/M4 and M5 cannot drift. */
-  private def prepareAndFit(it: Iterator[(String, Long, Double)],
-      auto: Boolean): Option[(Array[Double], Fit)] = {
-    val x = it.toArray.sortBy(_._2).map(_._3).filter(v => !v.isNaN)
-    if (x.length < MinObservations) None
-    else {
-      val fitOpt =
-        if (auto) autoSelect(x)
-        else (try Some(fit(x)) catch { case NonFatal(_) => None })
-      fitOpt.map(f => (x, f))
-    }
-  }
-
-  /** M5 as a first-class per-group operator: fit + multi-step
-    * volatility forecast (step 1 analytic, steps 2+ seeded
-    * simulation), one row per (group, horizon). Same distribution
-    * story as [[fitPerGroup]] — thousands of series fit in parallel,
-    * one executor task each. */
-  def forecastPerGroup(bars: DataFrame, horizon: Int,
-      keyCol: String = "underlying", valueCol: String = "iv_close",
-      orderCol: String = "bucket_start"): Dataset[ForecastRow] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    groupedBars(bars, keyCol, valueCol, orderCol)
       .flatMapGroups { (key, it) =>
-        prepareAndFit(it, auto = false).iterator.flatMap { case (_, f) =>
-          forecast(f, horizon).iterator.zipWithIndex.map {
-            case (v, h) =>
-              ForecastRow(key, h + 1, v, f.persistence, f.nObs, f.converged)
-          }
-        }
-      }
-  }
-
-  /** M6 as a full per-bar series: fit, then emit one row per
-    * observation with the fitted conditional volatility, standardized
-    * residual, and the IV-vs-EGARCH spread (`egarch.py:247-310` —
-    * the reference returns these as aligned pandas Series; here each
-    * group's series is produced inside its executor task and the
-    * result stays a distributed frame keyed by (group, bar)). */
-  def spreadSeriesPerGroup(bars: DataFrame, keyCol: String = "underlying",
-      valueCol: String = "iv_close", orderCol: String = "bucket_start")
-      : Dataset[SpreadRow] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    groupedBars(bars, keyCol, valueCol, orderCol)
-      .flatMapGroups { (key, it) =>
-        val obs = it.toArray.sortBy(_._2).collect {
-          case (_, ord, v) if !v.isNaN => (ord, v)
-        }
-        if (obs.length < MinObservations) Iterator.empty
-        else {
-          val fitted = try Some(fit(obs.map(_._2)))
-            catch { case NonFatal(_) => None }
-          fitted.iterator.flatMap { f =>
-            obs.iterator.zipWithIndex.map { case ((ord, v), t) =>
-              SpreadRow(key, ord, v, f.condVol(t), f.residuals(t),
-                v - f.condVol(t))
-            }
-          }
-        }
-      }
-  }
-
-  /** Fit one EGARCH per `keyCol` group over the `valueCol` bar series
-    * ordered by `orderCol`. bars is SMALL (one row per 15-min bar);
-    * each group's series is collected inside its executor task. */
-  def fitPerGroup(bars: DataFrame, keyCol: String = "underlying",
-      valueCol: String = "iv_close", orderCol: String = "bucket_start",
-      auto: Boolean = false): Dataset[EgarchRow] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    groupedBars(bars, keyCol, valueCol, orderCol)
-      .flatMapGroups { (key, it) =>
-        prepareAndFit(it, auto).iterator.map { case (x, f) =>
-          val fc = forecast(f, 1)
-          val rm = f.residuals.sum / f.residuals.length
-          val rs = math.sqrt(f.residuals.map(r => (r - rm) * (r - rm)).sum /
-            f.residuals.length)
-          EgarchRow(key, f.p, f.q, f.mu, f.omega, f.alpha.head, f.gamma,
-            f.beta.head, f.nu, f.logLik, f.aic, f.bic, f.persistence,
-            f.nObs, f.converged, fc(0), rm, rs,
-            x.last - f.condVol.last)
-        }
+        val obs = it.toArray.sortBy(_._2).filter(!_._3.isNaN)
+        val x = obs.map(_._3)
+        val fitted =
+          if (x.length < MinObservations) None
+          else if (auto) autoSelect(x)
+          else (try Some(fit(x)) catch { case NonFatal(_) => None })
+        fitted.iterator.map(SeriesFit(key, obs.map(_._2), x, _))
       }
   }
 }

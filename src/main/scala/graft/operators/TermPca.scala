@@ -19,9 +19,10 @@ import graft.util.Parity
   * groupless aggregate reduces the panel to the exact 4×4 moment
   * matrix (10 distinct sums + n). Only the 4×4 covariance matrix is
   * collected — O(buckets²) driver state, independent of data volume,
-  * the same bounded-collect contract as the k-means centroids. Power
-  * iteration (100 rounds on a 4×4, machine-precision convergence)
-  * runs on the driver.
+  * the same bounded-collect contract as the k-means centroids. The
+  * covariance and the power iteration (100 rounds on a 4×4,
+  * machine-precision convergence) are [[EmbedPca]]'s at d = 4, run on
+  * the driver.
   *
   * Exactness/verification: bucket means are 6-dp-quantized, so every
   * covariance entry is a closed-form function of decimal-exact sums
@@ -69,37 +70,5 @@ object TermPca {
         (for (i <- 0 until 4; j <- i until 4)
           yield Parity.dsum(col(s"b$i") * col(s"b$j")).as(s"s${i}_$j"))
     panel.agg(count(lit(1)).as("n"), sums: _*)
-  }
-
-  /** cov(i,j) = (Σxy − Σx·Σy/n) / (n−1), from the collected moment
-    * row — the identical closed form the oracle spells in SQL. */
-  def covFromMoments(m: org.apache.spark.sql.Row): (Array[Array[Double]], Long) = {
-    val n = m.getAs[Long]("n")
-    val nd = n.toDouble
-    val s = (0 until 4).map(i => m.getAs[Double](s"s$i")).toArray
-    val c = Array.ofDim[Double](4, 4)
-    for (i <- 0 until 4; j <- i until 4) {
-      val sxy = m.getAs[Double](s"s${i}_$j")
-      val v = (sxy - s(i) * s(j) / nd) / (nd - 1.0)
-      c(i)(j) = v; c(j)(i) = v
-    }
-    (c, n)
-  }
-
-  /** Top eigenpair by power iteration; sign fixed so the first
-    * loading is non-negative, vector 2-normalized. */
-  def topEigen(c: Array[Array[Double]], iters: Int = 100)
-      : (Double, Array[Double]) = {
-    var v = Array.fill(4)(0.5)
-    for (_ <- 0 until iters) {
-      val w = Array.tabulate(4)(i =>
-        (0 until 4).map(j => c(i)(j) * v(j)).sum)
-      val nrm = math.sqrt(w.map(x => x * x).sum)
-      v = w.map(_ / nrm)
-    }
-    val lambda = (0 until 4).map(i =>
-      (0 until 4).map(j => v(i) * c(i)(j) * v(j)).sum).sum
-    if (v(0) < 0) v = v.map(-_)
-    (lambda, v)
   }
 }

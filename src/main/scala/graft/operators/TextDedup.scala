@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.Caches
+
 /** Deduplication operators for large-scale text corpora: exact
   * (hash-groupBy), MinHash+LSH near-dup (shingle → signature → band →
   * bucket-join → verify), SimHash, n-gram Jaccard, and winnowing-style
@@ -24,11 +26,6 @@ import org.apache.spark.sql.types.DecimalType
   *    permutation family.
   */
 object TextDedup {
-
-  /** See [[graft.util.Caches.materialize]] — kept as an alias because
-    * every dedup pipeline stage below depends on it. */
-  def materialize(df: DataFrame): DataFrame =
-    graft.util.Caches.materialize(df)
 
   /** Canonical normalization: lowercase, trim, collapse whitespace. */
   def normText(c: Column): Column =
@@ -270,7 +267,7 @@ object TextDedup {
       idCol: String = "doc_id",
       k: Int = 12,
       threshold: Double = 0.5): DataFrame = {
-    val hashed = materialize(corpus)
+    val hashed = Caches.materialize(corpus)
     // all k permutation minima in ONE codegen'd traversal per doc
     // (the k-lambda Column formulation was the pipeline's measured
     // hot spot at sf1), staged as an attribute so the band builder
@@ -284,7 +281,7 @@ object TextDedup {
     // thing that makes this not-all-pairs at scale). Materialized:
     // it feeds BOTH sides of the band self-join — without the barrier
     // each side recomputes the full signature pass.
-    val exploded = materialize(sigd.select(col(idCol),
+    val exploded = Caches.materialize(sigd.select(col(idCol),
       explode(array(bands(sigCols): _*)).as("band_val")))
     val candidates = exploded.select(col(idCol).as("id_a"), col("band_val"))
       .join(exploded.select(col(idCol).as("id_b"), col("band_val")), "band_val")
@@ -313,8 +310,8 @@ object TextDedup {
   def minhashProbe(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", k: Int = 12,
       threshold: Double = 0.5): DataFrame = {
-    val newH = materialize(newDocs)
-    val oldH = materialize(oldDocs)
+    val newH = Caches.materialize(newDocs)
+    val oldH = Caches.materialize(oldDocs)
     def explodeBands(df: DataFrame) = {
       val sigd = df.select(col(idCol),
         graft.functions.TextHashColumns.minhashSigs(col("hs"),
@@ -360,7 +357,7 @@ object TextDedup {
     // cost more than it saved (idle A/B: ngram 2.8 vs 3.1 s,
     // containment 3.2 vs 3.8 s). Contrast TextRetrieval's
     // string-shingle explode, where widen is a 2x win.
-    val cachedCorpus = materialize(corpus)
+    val cachedCorpus = Caches.materialize(corpus)
     val posting = cachedCorpus
       .select(col(idCol), explode(col(tokensCol)).as("shingle"))
     val rare = posting.groupBy(col("shingle"))
@@ -369,7 +366,7 @@ object TextDedup {
       .select(col("shingle"))
     // pruned feeds three branches (sizes + both sides of the posting
     // self-join) — materialize so they don't each re-run the explode
-    val pruned = materialize(posting.join(rare, "shingle"))
+    val pruned = Caches.materialize(posting.join(rare, "shingle"))
     val sizes = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("_sz"))
     val common = pruned.select(col(idCol).as("id_a"), col("shingle"))
       .join(pruned.select(col(idCol).as("id_b"), col("shingle")), "shingle")
@@ -429,7 +426,7 @@ object TextDedup {
     // materialized: the frame feeds the posting explode AND the final
     // survivor pass (two branches — without the barrier the word
     // split and gram build run twice)
-    val staged = materialize(
+    val staged = Caches.materialize(
       docs.select(col(idCol), words(col(textCol)).as("_w"))
         .select(col(idCol), col("_w"),
           rawWordShingles(col("_w"), k).as("_g")))
@@ -493,14 +490,14 @@ object TextDedup {
     // cost more than it saved (idle A/B: ngram 2.8 vs 3.1 s,
     // containment 3.2 vs 3.8 s). Contrast TextRetrieval's
     // string-shingle explode, where widen is a 2x win.
-    val cachedCorpus = materialize(corpus)
+    val cachedCorpus = Caches.materialize(corpus)
     val posting = cachedCorpus
       .select(col(idCol), explode(col(tokensCol)).as("shingle"))
     val rare = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("_df"))
       .filter(col("_df") <= maxDf)
       .select(col("shingle"))
-    val pruned = materialize(posting.join(rare, "shingle"))
+    val pruned = Caches.materialize(posting.join(rare, "shingle"))
     val sizes = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("_sz"))
     val common = pruned.select(col(idCol).as("id_a"), col("shingle"))
       .join(pruned.select(col(idCol).as("id_b"), col("shingle")), "shingle")
@@ -547,14 +544,14 @@ object TextDedup {
       thresholdNum: Int = 3, thresholdDen: Int = 10,
       idCol: String = "doc_id",
       tokensCol: String = "shingles"): DataFrame = {
-    val posting = materialize(
+    val posting = Caches.materialize(
       corpus.select(col(idCol), explode(col(tokensCol)).as("shingle")))
     val dfreq = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("_df"))
     val sizes = posting.groupBy(col(idCol)).agg(count(lit(1)).as("_sz"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("_df"), col("shingle"))
-    val prefix = materialize(posting
+    val prefix = Caches.materialize(posting
       .join(dfreq, "shingle")
       .join(sizes, idCol)
       .withColumn("_rn", row_number().over(w))
@@ -661,7 +658,7 @@ object TextDedup {
     * loop's shuffles. */
   private[graft] def labelPropagation(pairs: DataFrame, edgeCount: Long)
       : DataFrame = {
-    val edges = materialize(
+    val edges = Caches.materialize(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Size the loop's shuffles to the GRAPH, not the session's scan
@@ -825,7 +822,7 @@ object TextDedup {
     // lazy, so unpersisting here would un-cache before the caller's
     // action runs. Signatures are one row per doc — small relative to
     // the corpus by construction.
-    val cached = materialize(sims)
+    val cached = Caches.materialize(sims)
     val exploded = cached.select(col(idCol), col("simhash"),
       explode(array(chunks: _*)).as("chunk"))
     exploded.select(col(idCol).as("id_a"), col("simhash").as("_h_a"), col("chunk"))
@@ -859,7 +856,7 @@ object TextDedup {
     * DISTINCT over it equals DISTINCT over the shingle). */
   def sourceOverlap(docs: DataFrame, n: Int = 5,
       textCol: String = "text", srcCol: String = "source"): DataFrame = {
-    val hs = materialize(
+    val hs = Caches.materialize(
       docs.select(col(srcCol).as("src"), words(col(textCol)).as("_w"))
         .filter(size(col("_w")) >= n)
         .select(col("src"),

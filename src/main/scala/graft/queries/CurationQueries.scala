@@ -392,6 +392,7 @@ object CurationQueries {
     // 41x for 10x data at sf0.1 (67 s) — distinct-first brought it
     // to ~0.5 s and sublinear, because distinct names grow like the
     // vocabulary, not like the table.
+    // snapshot: both blocking passes self-join this one table
     val names = graft.util.Caches.snapshot(
       Tables.load(s, dir, "part").groupBy(col("p_name"))
         .agg(count(lit(1)).as("cnt")))

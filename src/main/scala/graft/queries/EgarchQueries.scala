@@ -18,13 +18,9 @@ import graft.options.SyntheticTrades
   * EgarchSpec. */
 object EgarchQueries {
 
-  private def bars(s: SparkSession, dir: String): DataFrame =
-    IvResampler.resample(
-      SyntheticTrades.trades(s, dir), "15 minutes", col("underlying"))
-
   /** Bars + per-underlying series stats the oracles re-derive from
     * the raw trades: n_obs = bar count, the fit's observation count
-    * (Egarch.prepareAndFit consumes one value per bar and drops NaN
+    * (Egarch.fitSeries consumes one value per bar and drops NaN
     * bar values — NaN is not NULL in DuckDB, so the count filters
     * `NOT isnan(iv_close)` to keep the two definitions identical). */
   private def statsCtes: String =
@@ -40,7 +36,63 @@ object EgarchQueries {
        |  FROM bars WHERE NOT isnan(iv_close) GROUP BY underlying
        |)""".stripMargin
 
-  /** M3/M5/M6: EGARCH(1,1,1) per underlying + 1-step vol forecast +
+  /** The EGARCH fit of every underlying's bar series, in underlying
+    * order: m3-m6 build their rows and their oracle pins from it, so
+    * each entry's output is a local relation and its action runs no
+    * job. */
+  private def seriesFits(s: SparkSession, dir: String,
+      auto: Boolean): Array[Egarch.SeriesFit] = {
+    import s.implicits._
+    val bars = IvResampler.resample(
+      SyntheticTrades.trades(s, dir), "15 minutes", col("underlying"))
+    // bounded-collect(one fitted series per underlying)
+    Egarch.fitSeries(bars, auto = auto).collect().sortBy(_.key)
+  }
+
+  final case class FitRow(
+      underlying: String, p: Int, q: Int, mu: Double, omega: Double,
+      alpha1: Double, gamma: Double, beta1: Double, nu: Double,
+      log_lik: Double, aic: Double, bic: Double, persistence: Double,
+      n_obs: Int, converged: Boolean, vol_forecast_1: Double,
+      resid_mean: Double, resid_std: Double, iv_egarch_spread_last: Double)
+
+  final case class ForecastRow(
+      underlying: String, horizon: Int, vol_forecast: Double,
+      persistence: Double, n_obs: Int, converged: Boolean)
+
+  final case class SpreadRow(
+      underlying: String, bucket_start: Long, iv_close: Double,
+      cond_vol: Double, residual: Double, iv_egarch_spread: Double)
+
+  /** m3/m4: the fit, its 1-step forecast, residual moments and the
+    * last bar's IV-vs-EGARCH spread. */
+  def fitRow(sf: Egarch.SeriesFit): FitRow = {
+    val f = sf.fit
+    val rm = f.residuals.sum / f.residuals.length
+    val rs = math.sqrt(f.residuals.map(r => (r - rm) * (r - rm)).sum /
+      f.residuals.length)
+    FitRow(sf.key, f.p, f.q, f.mu, f.omega, f.alpha.head, f.gamma,
+      f.beta.head, f.nu, f.logLik, f.aic, f.bic, f.persistence,
+      f.nObs, f.converged, Egarch.forecast(f, 1)(0), rm, rs,
+      sf.x.last - f.condVol.last)
+  }
+
+  /** m5: one row per horizon step (step 1 analytic, 2+ simulated). */
+  def forecastRows(sf: Egarch.SeriesFit, horizon: Int): Seq[ForecastRow] =
+    Egarch.forecast(sf.fit, horizon).toSeq.zipWithIndex.map { case (v, h) =>
+      ForecastRow(sf.key, h + 1, v, sf.fit.persistence, sf.fit.nObs,
+        sf.fit.converged)
+    }
+
+  /** m6: one row per bar the fit consumed (`egarch.py:247-310` returns
+    * these as aligned pandas Series). */
+  def spreadRows(sf: Egarch.SeriesFit): Seq[SpreadRow] =
+    sf.order.indices.map { t =>
+      SpreadRow(sf.key, sf.order(t), sf.x(t), sf.fit.condVol(t),
+        sf.fit.residuals(t), sf.x(t) - sf.fit.condVol(t))
+    }
+
+  /** M3: EGARCH(1,1,1) per underlying + 1-step vol forecast +
     * residual stats + IV-vs-EGARCH spread. */
   def m3Fit(s: SparkSession, dir: String): DataFrame =
     gatedFit("m3_egarch_fit", s, dir, auto = false)
@@ -51,26 +103,21 @@ object EgarchQueries {
 
   /** Shared m3/m4 gate: fit params pinned as literals (echo); n_obs
     * re-derived by the oracle from raw trades, so a drift in the bars
-    * pipeline the fit consumed hash-mismatches. The collect is one
-    * row per underlying. EgarchRow field order is the contract here:
-    * 0 underlying, 1 p, 2 q, 3-12 doubles (mu..persistence),
-    * 13 n_obs, 14 converged, 15-18 doubles (vol_forecast_1,
-    * resid_mean, resid_std, iv_egarch_spread_last). */
+    * pipeline the fit consumed hash-mismatches. */
   private def gatedFit(name: String, s: SparkSession, dir: String,
       auto: Boolean): DataFrame = {
-    val out = graft.util.Caches.materialize(
-      Egarch.fitPerGroup(bars(s, dir), auto = auto).toDF())
-    // bounded-collect(one fitted-parameter row per underlying)
-    val rows = out.collect().sortBy(_.getString(0))
+    import s.implicits._
+    val rows = seriesFits(s, dir, auto).map(fitRow)
     val sql =
       if (rows.isEmpty) emptyM3Oracle
       else {
         val values = rows.map { r =>
-          val dbl = (i: Int) => dlit(r.getDouble(i))
-          s"('${r.getString(0)}', ${r.getInt(1)}, ${r.getInt(2)}, " +
-            (3 to 12).map(dbl).mkString(", ") +
-            s", ${r.getBoolean(14)}, " +
-            (15 to 18).map(dbl).mkString(", ") + ")"
+          s"('${r.underlying}', ${r.p}, ${r.q}, " +
+            Seq(r.mu, r.omega, r.alpha1, r.gamma, r.beta1, r.nu, r.log_lik,
+              r.aic, r.bic, r.persistence).map(dlit).mkString(", ") +
+            s", ${r.converged}, " +
+            Seq(r.vol_forecast_1, r.resid_mean, r.resid_std,
+              r.iv_egarch_spread_last).map(dlit).mkString(", ") + ")"
         }.mkString(",\n    ")
         s"""WITH $statsCtes,
            |fitted(underlying, p, q, mu, omega, alpha1, gamma, beta1, nu,
@@ -85,7 +132,7 @@ object EgarchQueries {
            |FROM fitted f JOIN stats s USING (underlying)""".stripMargin
       }
     DynamicOracles.put(name, sql)
-    out
+    rows.toSeq.toDF()
   }
 
   /** Empty-branch oracles must still project the full typed column
@@ -117,16 +164,15 @@ object EgarchQueries {
     * seeded simulation for 2..5). Gate: forecasts pinned, n_obs
     * re-derived from the bars pipeline. */
   def m5Forecast(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.util.Caches.materialize(
-      Egarch.forecastPerGroup(bars(s, dir), horizon = 5).toDF())
-    // bounded-collect(underlyings x horizon=5 forecast rows)
-    val rows = out.collect().sortBy(r => (r.getString(0), r.getInt(1)))
+    import s.implicits._
+    val rows = seriesFits(s, dir, auto = false)
+      .flatMap(forecastRows(_, horizon = 5))
     val sql =
       if (rows.isEmpty) emptyM5Oracle
       else {
         val values = rows.map { r =>
-          s"('${r.getString(0)}', ${r.getInt(1)}, ${dlit(r.getDouble(2))}, " +
-            s"${dlit(r.getDouble(3))}, ${r.getBoolean(5)})"
+          s"('${r.underlying}', ${r.horizon}, ${dlit(r.vol_forecast)}, " +
+            s"${dlit(r.persistence)}, ${r.converged})"
         }.mkString(",\n    ")
         s"""WITH $statsCtes,
            |fc(underlying, horizon, vol_forecast, persistence, converged)
@@ -137,7 +183,7 @@ object EgarchQueries {
            |FROM fc f JOIN stats s USING (underlying)""".stripMargin
       }
     DynamicOracles.put("m5_egarch_forecast", sql)
-    out
+    rows.toSeq.toDF()
   }
 
   /** M6: full per-bar residual / conditional-vol / IV-spread series
@@ -147,27 +193,18 @@ object EgarchQueries {
     * recomputes iv_close from the trades derivation, joins on
     * (underlying, bucket_start), and recomputes the spread; any drift
     * in the bars pipeline or the alignment hash-mismatches. The
-    * collect is bounded by bar count (one row / 15 min / underlying —
-    * the EGARCH operator already collects each group's series inside
-    * its executor task by design, Egarch.scala:390). */
+    * pins are bounded by bar count (one row / 15 min / underlying —
+    * [[Egarch.fitSeries]] already holds each series in one task). */
   def m6Spread(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.util.Caches.materialize(
-      Egarch.spreadSeriesPerGroup(bars(s, dir)).toDF())
-    import out.sparkSession.implicits._
-    val fitted = out
-      .select(col("underlying"), col("bucket_start"),
-        col("cond_vol"), col("residual"))
-      // bounded-collect(underlyings x 15-min calendar buckets: the
-      // spread series is time-bounded, not corpus-proportional)
-      .as[(String, Long, Double, Double)].collect()
-      .sortBy(r => (r._1, r._2)).toSeq
-    DynamicOracles.put("m6_egarch_spread", m6Oracle(fitted))
-    out
+    import s.implicits._
+    val rows = seriesFits(s, dir, auto = false).flatMap(spreadRows)
+    DynamicOracles.put("m6_egarch_spread", m6Oracle(rows))
+    rows.toSeq.toDF()
   }
 
   private def dlit(d: Double): String = graft.util.Parity.duckDoubleLit(d)
 
-  private def m6Oracle(fitted: Seq[(String, Long, Double, Double)]): String =
+  private def m6Oracle(fitted: Seq[SpreadRow]): String =
     if (fitted.isEmpty)
       """SELECT CAST(NULL AS VARCHAR) AS underlying,
         |  CAST(NULL AS BIGINT) AS bucket_start,
@@ -176,8 +213,9 @@ object EgarchQueries {
         |  CAST(NULL AS DOUBLE) AS iv_egarch_spread
         |WHERE false""".stripMargin
     else {
-      val values = fitted.map { case (u, b, cv, r) =>
-        s"('$u', $b, ${dlit(cv)}, ${dlit(r)})"
+      val values = fitted.map { r =>
+        s"('${r.underlying}', ${r.bucket_start}, ${dlit(r.cond_vol)}, " +
+          s"${dlit(r.residual)})"
       }.mkString(",\n    ")
       s"""WITH ${OracleCtes.enriched},
          |bars AS (

@@ -1354,10 +1354,10 @@ object EventsQueries {
     * the pinned estimate and the independently-derived exact WAU, so
     * the ±5% accuracy claim itself is oracle-verified, not echoed. */
   def ev20SketchWau(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.util.Caches.materialize(
-      EventsAnalytics.sketchRollingActive(events(s, dir)))
     // bounded-collect(calendar days: one (day, estimate) row per
     // distinct day in the window — time-bounded, not corpus-bounded)
+    val out = graft.util.Caches.local(
+      EventsAnalytics.sketchRollingActive(events(s, dir)))
     val est = out.select(col("day"), col("wau_est"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     DynamicOracles.put("ev20_sketch_wau", ev20Oracle(est))

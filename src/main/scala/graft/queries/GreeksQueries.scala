@@ -205,13 +205,13 @@ object GreeksQueries {
       .select(col("trade_id"), Parity.epochS(col("timestamp")).as("ep"),
         col("option_type"), col("iv"), col("spot_price"), col("strike"),
         col("T"), col("target_px"), col("solved_iv"))
-    val cached = graft.util.Caches.materialize(priced)
     // bounded-collect(IvPanelRows: the panel is .limit(IvPanelRows)
     // rows by construction — never corpus-proportional)
-    val pins = cached.select(col("trade_id"), col("solved_iv")).collect()
+    val solved = graft.util.Caches.local(priced)
+    val pins = solved.select(col("trade_id"), col("solved_iv")).collect()
       .map(row => row.getString(0) -> row.getDouble(1))
     DynamicOracles.put("m20_implied_vol", m20Oracle(pins))
-    cached.select(
+    solved.select(
       col("trade_id"), col("ep"), col("option_type"),
       Parity.roundTo(col("iv"), 9).as("iv_quoted"),
       Parity.roundTo(col("target_px"), 6).as("target_px"),
@@ -365,6 +365,7 @@ object GreeksQueries {
       .withColumn("ep", Parity.epochS(col("timestamp")))
     val wLast = Window.partitionBy(col("underlying"), col("expiry"))
       .orderBy(col("ep").desc, col("trade_id").desc)
+    // materialized: the t_ref aggregate and the ladder both read it
     val lastQ = graft.util.Caches.materialize(atm
       .withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
       .select(col("underlying"), col("expiry"), col("iv"), col("ep")))

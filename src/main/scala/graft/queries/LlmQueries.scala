@@ -1422,6 +1422,7 @@ object LlmQueries {
   def unigramTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (model, stats) = trainedUnigram(s, dir)
+    // snapshot: a pieces consumer must not re-run the Viterbi fold
     val seg = graft.util.Caches.snapshot(TextUnigramLm.segment(
       TextUnigramLm.wordFreq(docs(s, dir)), model))
     val cnts = TextUnigramLm.pieceCounts(seg)
@@ -1521,6 +1522,7 @@ object LlmQueries {
   def unigramLossPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ((hard, hardStats), (loss, lossStats)) = trainedUnigramPair(s, dir)
+    // snapshot: a pieces consumer must not re-run the Viterbi fold
     val seg = graft.util.Caches.snapshot(TextUnigramLm.segment(
       TextUnigramLm.wordFreq(docs(s, dir)), loss))
     // bounded-collect(vocab): final-model piece counts
@@ -1623,6 +1625,7 @@ object LlmQueries {
     import s.implicits._
     val ((hard, hardStats), _) = trainedUnigramPair(s, dir)
     val (soft, softStats) = trainedUnigramSoft(s, dir)
+    // snapshot: a pieces consumer must not re-run the Viterbi fold
     val seg = graft.util.Caches.snapshot(TextUnigramLm.segment(
       TextUnigramLm.wordFreq(docs(s, dir)), soft))
     // bounded-collect(vocab): final-model piece counts
@@ -1680,6 +1683,7 @@ object LlmQueries {
     * on both engines). */
   def unigramEncode(s: SparkSession, dir: String): DataFrame = {
     val (model, _) = trainedUnigram(s, dir)
+    // snapshot: a pieces consumer must not re-run the Viterbi fold
     val seg = graft.util.Caches.snapshot(TextUnigramLm.segment(
       TextUnigramLm.wordFreq(docs(s, dir)), model))
     val tot = seg
@@ -2237,10 +2241,10 @@ object LlmQueries {
     val e = emb(s, dir)
     // the literal-bounded query subset feeds FOUR plan branches (two
     // broadcast builds, the ANN query side, the post-hits attach) —
-    // materialize it once so the corpus is not re-scanned per branch
-    // (the plan audit pins the per-table scan count; the subset is
-    // AnnQueries-bounded, so the cache is O(queries), never corpus-sized)
-    val qBase = graft.util.Caches.materialize(
+    // collect it once so the corpus is not re-scanned per branch
+    // (the plan audit pins the per-table scan count)
+    // bounded-collect(AnnQueries query vectors)
+    val qBase = graft.util.Caches.local(
       e.filter(col("vec_id") < AnnQueries))
     val q = broadcast(qBase
       .select(col("vec_id").as("query_id"), col("embedding").as("_qv"),
@@ -2862,9 +2866,10 @@ object LlmQueries {
     * scoring tail. */
   def annIvfRecall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    // the query panel is bounded by construction — materialize it so
-    // the audit's three query-side branches read one cached scan
-    val q = graft.util.Caches.materialize(
+    // the query panel is bounded by construction — collect it so the
+    // audit's three query-side branches read one local relation
+    // bounded-collect(AnnQueries query vectors)
+    val q = graft.util.Caches.local(
       e.filter(col("vec_id") < AnnQueries))
     val (centroids, out) = VectorOps.ivfRecallAudit(
       e, q, AnnK, IvfClusters, IvfProbe)
@@ -2882,7 +2887,8 @@ object LlmQueries {
     * and the overlap are all re-derived in SQL. */
   def annIvfRecallCurve(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val q = graft.util.Caches.materialize(
+    // bounded-collect(AnnQueries query vectors)
+    val q = graft.util.Caches.local(
       e.filter(col("vec_id") < AnnQueries))
     val (centroids, out) = VectorOps.ivfRecallSweep(
       e, q, AnnK, IvfClusters, IvfSweepProbes)

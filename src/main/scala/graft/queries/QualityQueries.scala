@@ -181,7 +181,8 @@ object QualityQueries {
     val exact = t.agg(
       countDistinct(col("trade_id")).as("unique_trades"),
       countDistinct(col("instrument_name")).as("unique_instruments"))
-    val out = graft.util.Caches.materialize(
+    // bounded-collect(one row: two groupless aggregates cross-joined)
+    val out = graft.util.Caches.local(
       sketch.crossJoin(broadcast(exact))
         // scalars, not an array<double>: the driver's rows-only gate
         // pandas-sorts every output column, and numpy arrays are

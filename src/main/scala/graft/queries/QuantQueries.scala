@@ -500,10 +500,11 @@ object QuantQueries {
 
   def m24TermPca(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.operators.TermPca
+    import graft.operators.{EmbedPca, TermPca}
     val panel = TermPca.dailyPanel(trades(s, dir))
-    val (c, _) = TermPca.covFromMoments(TermPca.momentSums(panel).head())
-    val (lambda, v) = TermPca.topEigen(c)
+    val (c, _) = EmbedPca.covFromMoments(
+      TermPca.momentSums(panel).head(), dim = 4)
+    val (lambda, v) = EmbedPca.topEigen(c, iters = 100)
     val trace = (0 until 4).map(i => c(i)(i)).sum
     val resid = (0 until 4).map { i =>
       math.abs((0 until 4).map(j => c(i)(j) * v(j)).sum - lambda * v(i))

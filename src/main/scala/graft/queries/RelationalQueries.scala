@@ -488,6 +488,7 @@ object RelationalQueries {
     * decimal-gated sum, so the cross-engine equality compare is safe
     * where a float sum would tie-break differently per run. */
   def q16ViewMax(s: SparkSession, dir: String): DataFrame = {
+    // snapshot: the max and the filter branch both read the view
     val rev = graft.util.Caches.snapshot(
       li(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -580,6 +581,7 @@ object RelationalQueries {
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"), col("s_name"))
+    // snapshot: the per-part min and the join-back both read it
     val offers = graft.util.Caches.snapshot(
       li(s, dir)
         .groupBy(col("l_partkey"), col("l_suppkey"))

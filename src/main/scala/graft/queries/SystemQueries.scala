@@ -2113,6 +2113,7 @@ object SystemQueries {
             else IncrementalMv.maintain(mv,
               SnapshotStore.snapshotDiff(s, root, vPrev, vNew),
               Seq("underlying"), "amount")
+          // snapshot: the next batch maintains this view; truncate lineage
           mv = graft.util.Caches.snapshot(upd)
           ()
         }

@@ -29,6 +29,18 @@ object Caches {
       cached
     }
 
+  /** One `collect()` of a frame that is bounded by construction (an
+    * oracle gate's pins, an `AnnQueries`-sized query panel), returned
+    * as a local relation with the same rows, column order, types and
+    * nullability. Later reads run no Spark job: the gate's pins, every
+    * branch of a plan over it, the entry's action (projections and
+    * filters fold into the relation). Nothing stays persisted or
+    * registered with the cache manager, so no other query's plan is
+    * rewritten to read it. */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Scale-adaptive repartition ahead of a per-row-heavy stage
     * (explode, shingle hashing): when the frame plans NARROWER than
     * half the session's parallelism — the harness corpus is ONE

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Egarch
+import graft.queries.EgarchQueries
 
 /** Statistical-property tests for the EGARCH engine, mirroring the
   * reference's bounded-range test style (SURVEY §5.1): parameters in
@@ -70,7 +71,7 @@ class EgarchSpec extends AnyFunSuite {
     assert(Egarch.forecast(f, 5).toSeq == fc.toSeq)
   }
 
-  test("per-group fit over Spark bars yields one row per key") {
+  test("fitSeries over Spark bars yields one fit per key; m3 rows from it") {
     val spark = TestSpark.spark
     import spark.implicits._
     val s1 = series(300, 1).zipWithIndex.map { case (v, i) =>
@@ -79,7 +80,7 @@ class EgarchSpec extends AnyFunSuite {
       ("ETH", i.toLong * 900, v) }
     val bars = (s1 ++ s2).toSeq
       .toDF("underlying", "bucket_start", "iv_close")
-    val out = Egarch.fitPerGroup(bars).collect()
+    val out = Egarch.fitSeries(bars).collect().map(EgarchQueries.fitRow)
     assert(out.map(_.underlying).sorted.toSeq == Seq("BTC", "ETH"))
     out.foreach { r =>
       assert(r.vol_forecast_1 > 0)
@@ -88,15 +89,16 @@ class EgarchSpec extends AnyFunSuite {
     }
   }
 
-  test("M6 spread series: one row per bar, spread = iv - cond_vol") {
+  test("fitSeries keeps each bar's order and value: m6 rows, spread = iv - cond_vol") {
     val spark = TestSpark.spark
     import spark.implicits._
     val vals = series(300, 5)
     val bars = vals.zipWithIndex.map { case (v, i) =>
       ("BTC", i.toLong * 900, v) }.toSeq
-      .toDF("underlying", "bucket_start", "iv_close")
-    val out = Egarch.spreadSeriesPerGroup(bars).collect()
-      .sortBy(_.bucket_start)
+      // shuffled: the operator orders each series itself
+      .reverse.toDF("underlying", "bucket_start", "iv_close")
+    val out = Egarch.fitSeries(bars).collect()
+      .flatMap(EgarchQueries.spreadRows)
     assert(out.length == 300)
     assert(out.map(_.bucket_start).toSeq == (0 until 300).map(_.toLong * 900))
     out.foreach { r =>
@@ -108,17 +110,35 @@ class EgarchSpec extends AnyFunSuite {
     assert(out.map(_.iv_close).toSeq == vals.toSeq)
   }
 
-  test("per-group multi-horizon forecast emits one row per (key, h)") {
+  test("fitSeries drops NaN bars and skips short series") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val vals = series(300, 6)
+    val bars = (vals.zipWithIndex.map { case (v, i) =>
+      ("BTC", i.toLong * 900, if (i % 10 == 3) Double.NaN else v) } ++
+      series(50, 7).zipWithIndex.map { case (v, i) =>
+        ("ETH", i.toLong * 900, v) }).toSeq
+      .toDF("underlying", "bucket_start", "iv_close")
+    val fits = Egarch.fitSeries(bars).collect()
+    assert(fits.map(_.key).toSeq == Seq("BTC"))
+    val kept = vals.indices.filter(_ % 10 != 3)
+    assert(fits.head.order.toSeq == kept.map(_.toLong * 900))
+    assert(fits.head.x.toSeq == kept.map(vals(_)))
+    assert(fits.head.fit.nObs == 270 && fits.head.fit.condVol.length == 270)
+  }
+
+  test("m5 rows from fitSeries: one row per (key, h)") {
     val spark = TestSpark.spark
     import spark.implicits._
     val bars = series(300, 3).zipWithIndex.map { case (v, i) =>
       ("BTC", i.toLong * 900, v) }.toSeq
       .toDF("underlying", "bucket_start", "iv_close")
-    val out = Egarch.forecastPerGroup(bars, horizon = 4).collect()
+    val fits = Egarch.fitSeries(bars).collect()
+    val out = fits.flatMap(EgarchQueries.forecastRows(_, horizon = 4))
     assert(out.map(_.horizon).sorted.toSeq == Seq(1, 2, 3, 4))
     assert(out.forall(r => r.vol_forecast > 0 && !r.vol_forecast.isNaN))
-    // horizon-1 row agrees with the single-step fit path
-    val one = Egarch.fitPerGroup(bars).collect().head.vol_forecast_1
+    // horizon-1 row agrees with the m3 row's 1-step forecast
+    val one = EgarchQueries.fitRow(fits.head).vol_forecast_1
     assert(math.abs(out.minBy(_.horizon).vol_forecast - one) < 1e-12)
   }
 

@@ -647,8 +647,10 @@ class PlanAuditSpec extends AnyFunSuite {
       val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
       // `.collect()` exactly: the zero-arg Dataset materializer.
       // (`Backfill.collect(pager, ...)` is the ingest driver loop, a
-      // different method that never holds a Dataset.)
-      for (i <- lines.indices if lines(i).contains(".collect()")) {
+      // different method that never holds a Dataset.) `Caches.local`
+      // collects its frame, so it carries the same annotation.
+      for (i <- lines.indices if lines(i).contains(".collect()") ||
+          lines(i).contains("Caches.local(")) {
         val window = lines.slice(math.max(0, i - 8), i + 1)
         assert(window.exists(_.contains("bounded-collect(")),
           s"${f.getName}:${i + 1} has a .collect() without a " +

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{TermPca, TextRetrieval, ZOrderLayout}
+import graft.operators.{EmbedPca, TermPca, TextRetrieval, ZOrderLayout}
 
 /** Round-10 fourth batch: Z-order layout audit (x7), TF-IDF cosine
   * pairs (llm_tfidf_cosine), term-structure PCA (m24), Taylor P&L
@@ -89,7 +89,7 @@ class Round10dSpec extends AnyFunSuite {
       Array(0.0, 1.0, 0.0, 0.0),
       Array(0.0, 0.0, 1.0, 0.0),
       Array(0.0, 0.0, 0.0, 1.0))
-    val (lambda, v) = TermPca.topEigen(c)
+    val (lambda, v) = EmbedPca.topEigen(c, iters = 100)
     assert(math.abs(lambda - 4.0) < 1e-10)
     assert(math.abs(v(0) - 1.0) < 1e-8 && v.drop(1).forall(math.abs(_) < 1e-8))
   }
@@ -100,7 +100,7 @@ class Round10dSpec extends AnyFunSuite {
       Array(0.5, 1.5, 0.2, 0.4),
       Array(0.3, 0.2, 1.0, 0.6),
       Array(0.1, 0.4, 0.6, 0.8))
-    val (lambda, v) = TermPca.topEigen(c)
+    val (lambda, v) = EmbedPca.topEigen(c, iters = 100)
     val resid = (0 until 4).map { i =>
       math.abs((0 until 4).map(j => c(i)(j) * v(j)).sum - lambda * v(i))
     }.max
