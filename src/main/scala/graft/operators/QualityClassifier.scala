@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.util.Iterate
 
 /** Trainable document classifier in the fastText / CCNet lineage —
   * the classifier-based quality gate every large pre-training corpus
@@ -14,17 +16,14 @@ import org.apache.spark.sql.functions._
   * belong to the high-resource slice", i.e. lang == 'en', whose
   * signal the English stopword-ratio feature carries).
   *
-  * Scale design — this is distributed FULL-BATCH gradient descent
-  * with nothing but O(d) state on the driver:
-  *  - the feature frame is computed once (one corpus scan, all
-  *    codegen'd column expressions) and cached;
-  *  - every GD iteration is ONE aggregation over the cache: the
-  *    gradient is d+1 partial sums (map-side combine, bytes per
-  *    partition), so an iteration costs one cached-columnar pass no
-  *    matter the corpus size — no per-row collect, no UDF, no RDD;
-  *  - weights/means/stds are d doubles on the driver by construction
-  *    (the 100 TB analog of "broadcast the model, aggregate the
-  *    gradient" — exactly how parameter-server-free LR scales).
+  * Scale design — distributed FULL-BATCH gradient descent through
+  * [[graft.util.Iterate]] with nothing but O(d) state on the driver:
+  * the feature frame is computed once (one corpus scan, all codegen'd
+  * column expressions) into the kernel's cached rows, whose counting
+  * job also takes the standardization moments, and every step is one
+  * partial gradient (d+1 sums plus the loss) per partition — the
+  * 100 TB analog of "broadcast the model, aggregate the gradient",
+  * exactly how parameter-server-free LR scales.
   *
   * Scoring is a pure column expression (broadcast-free: the weights
   * are literals folded into codegen), built in a FIXED left-to-right
@@ -49,85 +48,64 @@ object QualityClassifier {
       .select(col("doc_id") +: label.cast("double").as("_y") +:
         FeatureCols.map(c => col(c).cast("double").as(c)): _*)
 
-  /** Standardized feature columns in model order. */
-  private def zCols(m: Model): Seq[Column] =
-    m.features.zipWithIndex.map { case (f, j) =>
-      (col(f) - lit(m.mean(j))) / lit(m.std(j))
-    }
-
-  /** The margin expression: bias + Σ z_j * w_j in FIXED left-to-right
-    * fold order — the order the oracle's SQL `+` chain reproduces. */
+  /** The margin expression: bias + Σ z_j * w_j, z_j = (f_j − mean_j)
+    * / std_j, in FIXED left-to-right fold order — the order the
+    * oracle's SQL `+` chain reproduces. */
   def marginCol(m: Model): Column =
-    zCols(m).zip(m.weights.toSeq).foldLeft(lit(m.bias)) {
-      case (acc, (z, w)) => acc + z * lit(w)
+    m.features.indices.foldLeft(lit(m.bias)) { (acc, j) =>
+      acc + (col(m.features(j)) - lit(m.mean(j))) / lit(m.std(j)) *
+        lit(m.weights(j))
     }
 
-  def train(feats: DataFrame, iters: Int = 40, lr: Double = 0.5): Model = {
+  /** Rows are (label, features in [[FeatureCols]] order); one with a
+    * null label or feature carries no gradient. */
+  def train(feats: DataFrame, iters: Int = 40, lr: Double = 0.5): Model =
+    Iterate(feats.select(col("_y") +: FeatureCols.map(col): _*).na.drop()
+      .rdd.map(r => Array.tabulate(FeatureCols.length + 1)(r.getDouble)),
+      iters, gd(lr))
+
+  /** GD on the mean log-loss. The seed pass sums each feature and its
+    * square for the mean and population deviation (a zero deviation
+    * standardizes by 1). A step's partial is [Σ err, Σ err·z_j,
+    * Σ loss, rows], err = sigmoid(margin) − y with the margin folded in
+    * [[marginCol]]'s order; the step records the mean loss at the
+    * weights it starts from. */
+  private[graft] def gd(lr: Double)
+      : Iterate.Loop[Array[Double], Array[Double], Model, Array[Double]] = {
     val d = FeatureCols.length
-    val cached = feats.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val stats = cached.agg(
-        count(lit(1)).as("n"),
-        FeatureCols.flatMap(f =>
-          Seq(avg(col(f)), stddev_pop(col(f)))): _*).head()
-      val n = stats.getLong(0)
-      if (n == 0L)
-        return Model(FeatureCols, Array.fill(d)(0.0), Array.fill(d)(1.0),
-          Array.fill(d)(0.0), 0.0, Array.empty)
-      def safe(x: Any): Double = x match {
-        case null => 0.0
-        case v: Double if v.isNaN => 0.0
-        case v: Double => v
-      }
-      val mean = Array.tabulate(d)(j => safe(stats.get(1 + 2 * j)))
-      val std = Array.tabulate(d) { j =>
-        val s = safe(stats.get(2 + 2 * j)); if (s > 0.0) s else 1.0
-      }
-      // Project the STANDARDIZED features once over the cache: every
-      // GD iteration's margin/gradient references the z attributes
-      // instead of re-inlining the six ((f - mean)/std) subtrees per
-      // occurrence (the margin tree is duplicated ~9x inside the
-      // gradient/loss aggregate, so inlined z-subtrees made each
-      // per-iteration plan hundreds of nodes — measured ~200 ms per
-      // iteration of pure driver planning+codegen at ANY data size,
-      // guide §1.2 step 2 / §7.3). Each z_j is the identical double
-      // expression over the same cached rows — evaluated per pass as
-      // a trivial columnar projection — so every gradient/loss sum is
-      // bit-identical to the inlined form.
-      val statsM = Model(FeatureCols, mean, std, Array.fill(d)(0.0), 0.0,
-        Array.empty)
-      val zFrame = cached.select(
-        col("_y") +: zCols(statsM).zipWithIndex.map {
-          case (z, j) => z.as(s"_z$j")
-        }: _*)
-      var m = statsM
-      val losses = Array.newBuilder[Double]
-      // margin over the projected z attributes, same left-to-right
-      // fold (and therefore the same doubles) as [[marginCol]]
-      def marginZ(mm: Model): Column =
-        (0 until d).foldLeft(lit(mm.bias)) {
-          case (acc, j) => acc + col(s"_z$j") * lit(mm.weights(j))
+    Iterate.Loop(
+      seed = it => it.foldLeft(new Array[Double](2 * d + 1)) { (acc, r) =>
+        for (j <- 0 until d) { acc(j) += r(j + 1); acc(d + j) += r(j + 1) * r(j + 1) }
+        acc(2 * d) += 1
+        acc
+      },
+      seedMerge = Iterate.sum,
+      start = acc => {
+        val n = math.max(acc(2 * d), 1.0)
+        val mean = Array.tabulate(d)(j => acc(j) / n)
+        val std = Array.tabulate(d) { j =>
+          val s = math.sqrt(acc(d + j) / n - mean(j) * mean(j))
+          if (s > 0.0) s else 1.0
         }
-      for (_ <- 0 until iters) {
-        val p = lit(1.0) / (lit(1.0) + exp(-marginZ(m)))
-        val pc = least(greatest(p, lit(1e-12)), lit(1.0 - 1e-12))
-        val err = p - col("_y")
-        val gradRow: Row = zFrame.agg(
-          sum(err).as("g_b"),
-          (0 until d).map(j => sum(err * col(s"_z$j"))) :+
-            sum(-(col("_y") * log(pc) +
-              (lit(1.0) - col("_y")) * log(lit(1.0) - pc))).as("loss"): _*
-        ).head()
-        val gb = gradRow.getDouble(0) / n
-        val g = Array.tabulate(d)(j => gradRow.getDouble(1 + j) / n)
-        losses += gradRow.getDouble(1 + d) / n
-        m = m.copy(
-          weights = Array.tabulate(d)(j => m.weights(j) - lr * g(j)),
-          bias = m.bias - lr * gb)
-      }
-      m.copy(losses = losses.result())
-    } finally { cached.unpersist(); () }
+        Model(FeatureCols, mean, std, new Array[Double](d), 0.0, Array.empty)
+      },
+      partial = (m, it) => it.foldLeft(new Array[Double](d + 3)) { (g, r) =>
+        val z = Array.tabulate(d)(j => (r(j + 1) - m.mean(j)) / m.std(j))
+        val margin = (0 until d).foldLeft(m.bias)((acc, j) => acc + z(j) * m.weights(j))
+        val p = 1.0 / (1.0 + math.exp(-margin))
+        val pc = math.min(math.max(p, 1e-12), 1.0 - 1e-12)
+        val err = p - r(0)
+        g(0) += err
+        for (j <- 0 until d) g(1 + j) += err * z(j)
+        g(d + 1) -= r(0) * math.log(pc) + (1.0 - r(0)) * math.log(1.0 - pc)
+        g(d + 2) += 1
+        g
+      },
+      merge = Iterate.sum,
+      next = (m, g) => m.copy(
+        weights = Array.tabulate(d)(j => m.weights(j) - lr * (g(1 + j) / g(d + 2))),
+        bias = m.bias - lr * (g(0) / g(d + 2)),
+        losses = m.losses :+ g(d + 1) / g(d + 2)))
   }
 
   /** Per-doc scoring: margin (the gate-exact linear score), hard

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Iterate
+
 /** Vector similarity operators over an `array<float>` embedding column:
   * brute-force cosine top-k (the exact baseline) and an LSH/IVF-style
   * bucketed nearest-neighbour pass (the 100 TB path).
@@ -199,61 +201,80 @@ object VectorOps {
 
   /** Deterministic k-means for the IVF coarse quantizer: centroids
     * seeded from the k lowest-id vectors, fixed iteration count,
-    * assignment by squared L2 with lowest-centroid-index tie-break.
-    * Per-iteration centroid update is an elementwise reduceGroups sum
-    * + count — a streaming pairwise reduction, never a per-group
-    * collect, so it holds at any cluster size. Centroids themselves
-    * are k x dim doubles on the driver (tiny by construction). */
+    * assignment by squared L2 with lowest-centroid-index tie-break —
+    * [[pqTrain]] with one subspace. Centroids are k x dim doubles on
+    * the driver (tiny by construction). */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding")
-      : Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // one source scan: the seed collect + every iteration read from
-    // the cache (iters+1 scans of 100 TB otherwise)
-    val vecs = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var centroids = vecs.orderBy(col(idCol)).limit(k).collect()
-        .map(_._2.map(_.toDouble))
-      for (_ <- 0 until iters) {
-        val bc = spark.sparkContext.broadcast(centroids)
-        val sums = vecs
-          .map { case (_, v) => (nearestCentroid(v, bc.value),
-            (v.map(_.toDouble), 1L)) }
-          .groupByKey(_._1)
-          .mapValues(_._2)
-          .reduceGroups { (a: (Array[Double], Long), b: (Array[Double], Long)) =>
-            val s = new Array[Double](a._1.length)
-            var i = 0
-            while (i < s.length) { s(i) = a._1(i) + b._1(i); i += 1 }
-            (s, a._2 + b._2)
+      : Array[Array[Double]] =
+    pqTrain(corpus, 1, k, idCol, vecCol, iters).head
+
+  /** Seeded Lloyd iterations through [[Iterate]] over `m` contiguous
+    * subspaces at once: the `k` lowest-id vectors seed every subspace's
+    * centroids; each step sums every partition's members per (subspace,
+    * centroid) — rows folded in order — and moves each centroid that
+    * won members to their mean (one that won none stays). A partial is
+    * flat: per (subspace, centroid), the member sum then the count. */
+  private[graft] def lloyd(m: Int, k: Int): Iterate.Loop[(Long, Array[Float]),
+      Array[(Long, Array[Float])], Array[Array[Array[Double]]],
+      Array[Double]] = {
+    def lowest(a: Array[(Long, Array[Float])], b: Array[(Long, Array[Float])]) =
+      (a ++ b).sortBy(_._1).take(k)
+    Iterate.Loop(
+      seed = it => lowest(it.toArray, Array.empty),
+      seedMerge = lowest,
+      start = seeds => {
+        val dim = seeds.headOption.fold(0)(_._2.length)
+        require(dim % m == 0, s"dim $dim not divisible by m=$m")
+        Array.tabulate(m, seeds.length, dim / m)(
+          (s, c, i) => seeds(c)._2(s * dim / m + i).toDouble)
+      },
+      partial = (books, it) => {
+        val (kk, dsub) = (books(0).length, books(0)(0).length)
+        val acc = new Array[Double](m * kk * (dsub + 1))
+        it.foreach { case (_, v) =>
+          for (s <- 0 until m) {
+            val sub = if (m == 1) v
+              else java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)
+            val at = (s * kk + nearestCentroid(sub, books(s))) * (dsub + 1)
+            for (i <- 0 until dsub) acc(at + i) += sub(i)
+            acc(at + dsub) += 1
           }
-          .collect()
-        bc.destroy()
-        val next = centroids.clone()
-        sums.foreach { case (c, (sum, n)) => next(c) = sum.map(_ / n) }
-        centroids = next
-      }
-      centroids
-    } finally vecs.unpersist()
+        }
+        acc
+      },
+      merge = Iterate.sum,
+      next = (books, acc) => {
+        val (kk, dsub) = (books(0).length, books(0)(0).length)
+        Array.tabulate(m, kk) { (s, c) =>
+          val at = (s * kk + c) * (dsub + 1)
+          if (acc(at + dsub) == 0) books(s)(c)
+          else Array.tabulate(dsub)(i => acc(at + i) / acc(at + dsub))
+        }
+      })
   }
 
   /** Index of the nearest centroid by squared L2 (first wins ties). */
   def nearestCentroid(v: Array[Float], centroids: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      var d = 0.0; var i = 0
-      val ct = centroids(c)
-      while (i < ct.length) {
-        val diff = v(i) - ct(i); d += diff * diff; i += 1
-      }
+    for (c <- centroids.indices) {
+      val d = sqDist(v, centroids(c))
       if (d < bestD) { bestD = d; best = c }
-      c += 1
     }
     best
+  }
+
+  /** Centroid indices nearest first (index breaks ties): a query's
+    * probe order. */
+  private def probeOrder(v: Array[Float], centroids: Array[Array[Double]])
+      : IndexedSeq[Int] =
+    centroids.indices.sortBy(c => (sqDist(v, centroids(c)), c))
+
+  /** Squared L2 folded left to right over the centroid's dims. */
+  private def sqDist(v: Array[Float], ct: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < ct.length) { val diff = v(i) - ct(i); d += diff * diff; i += 1 }
+    d
   }
 
   /** TwoNN intrinsic-dimension estimate (Facco et al. 2017) — the
@@ -312,14 +333,14 @@ object VectorOps {
     * tighter, better-separated clusters; null when only one cluster
     * survives).
     *
-    * Scale shape: training is [[kmeansCentroids]] (broadcast
-    * centroids, streaming reduce); the panel itself is ONE map pass
-    * (assignment + distance — the same left-to-right squared-L2 fold
-    * the quantizer uses, so the oracle's list_reduce recomputes it
-    * bit-identically) and one k-row aggregate; the k×k centroid
-    * geometry is driver math joined back as a literal table. Echo +
-    * verify gate: only the trained centroids are echoed — DuckDB
-    * re-derives assignment, scatter, and the DB terms from raw
+    * Scale shape: training is [[kmeansCentroids]] (per-partition
+    * centroid sums, merged in partition order); the panel itself is
+    * ONE map pass (assignment + distance — the same left-to-right
+    * squared-L2 fold the quantizer uses, so the oracle's list_reduce
+    * recomputes it bit-identically) and one k-row aggregate; the k×k
+    * centroid geometry is driver math joined back as a literal table.
+    * Echo + verify gate: only the trained centroids are echoed —
+    * DuckDB re-derives assignment, scatter, and the DB terms from raw
     * embeddings. Per-member distances are 6-dp-quantized before the
     * exact decimal mean (the dsum contract); centroid-pair distances
     * stay raw doubles (identical IEEE op sequence on identical
@@ -336,12 +357,7 @@ object VectorOps {
       .as[(Long, Array[Float])]
       .map { case (_, v) =>
         val c = nearestCentroid(v, bc.value)
-        val ct = bc.value(c)
-        var d = 0.0; var i = 0
-        while (i < ct.length) {
-          val diff = v(i) - ct(i); d += diff * diff; i += 1
-        }
-        (c, math.sqrt(d))
+        (c, math.sqrt(sqDist(v, bc.value(c))))
       }
       .toDF("cluster_id", "_d")
     val per = assigned
@@ -429,16 +445,7 @@ object VectorOps {
     val probeDf = broadcast(queries
       .select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
       .flatMap { case (qid, qv) =>
-        val cs = bc.value
-        cs.indices
-          .sortBy { c =>
-            var d = 0.0; var i = 0
-            while (i < qv.length) {
-              val diff = qv(i) - cs(c)(i); d += diff * diff; i += 1 }
-            (d, c)
-          }
-          .take(nprobe)
-          .map(c => (qid, c))
+        probeOrder(qv, bc.value).take(nprobe).map(c => (qid, c))
       }
       .toDF("query_id", "cluster"))
     assigned.join(probeDf, "cluster")
@@ -520,15 +527,7 @@ object VectorOps {
     val probesRanked = queries
       .select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
       .flatMap { case (qid, qv) =>
-        val cs = bc.value
-        cs.indices
-          .sortBy { c =>
-            var d = 0.0; var i = 0
-            while (i < qv.length) {
-              val diff = qv(i) - cs(c)(i); d += diff * diff; i += 1 }
-            (d, c)
-          }
-          .take(maxNp).zipWithIndex
+        probeOrder(qv, bc.value).take(maxNp).zipWithIndex
           .map { case (c, r) => (qid, c, r + 1) }
       }
       .toDF("query_id", "cluster", "probe_rank")
@@ -577,9 +576,8 @@ object VectorOps {
     * contiguous subspaces and each gets its own `ksub`-entry codebook
     * by deterministic seeded k-means (seeds = the k lowest-id vectors'
     * subvectors; squared-L2 assignment, lowest-index tie-break; fixed
-    * iteration count). ALL m codebooks train together: one cached
-    * corpus, one map + one (subspace, code)-keyed reduce per
-    * iteration — m times fewer passes than training each subspace
+    * iteration count). ALL m codebooks train together in one [[lloyd]]
+    * loop — m times fewer passes than training each subspace
     * separately. Codebooks are m x ksub x (dim/m) doubles on the
     * driver — bytes, by construction. At 100 TB you train on a
     * bounded sample instead (swap `corpus` for `corpus.limit(n)`);
@@ -589,44 +587,8 @@ object VectorOps {
       iters: Int = 3): Array[Array[Array[Double]]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val vecs = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seeds = vecs.orderBy(col(idCol)).limit(ksub).collect().map(_._2)
-      val dim = seeds.head.length
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val dsub = dim / m
-      var books = Array.tabulate(m) { s =>
-        seeds.map(v => Array.tabulate(dsub)(i => v(s * dsub + i).toDouble))
-      }
-      for (_ <- 0 until iters) {
-        val bc = spark.sparkContext.broadcast(books)
-        val sums = vecs
-          .flatMap { case (_, v) =>
-            val bks = bc.value
-            (0 until bks.length).iterator.map { s =>
-              val sub = java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)
-              ((s, nearestCentroid(sub, bks(s))),
-                (sub.map(_.toDouble), 1L))
-            }
-          }
-          .groupByKey(_._1)
-          .mapValues(_._2)
-          .reduceGroups { (a: (Array[Double], Long), b: (Array[Double], Long)) =>
-            val acc = new Array[Double](a._1.length)
-            var i = 0
-            while (i < acc.length) { acc(i) = a._1(i) + b._1(i); i += 1 }
-            (acc, a._2 + b._2)
-          }
-          .collect()
-        bc.destroy()
-        val next = books.map(_.clone())
-        sums.foreach { case ((s, c), (sum, n)) => next(s)(c) = sum.map(_ / n) }
-        books = next
-      }
-      books
-    } finally vecs.unpersist()
+    Iterate(corpus.select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Array[Float])].rdd, iters, lloyd(m, ksub))
   }
 
   /** Nearest code per subspace for one full vector. */
@@ -749,29 +711,21 @@ object VectorOps {
         .flatMap { case (qid, qv) =>
           val cs = bcC.value; val bks = bcB.value
           val dsub = qv.length / bks.length
-          cs.indices
-            .sortBy { c =>
-              var d = 0.0; var i = 0
-              while (i < qv.length) {
-                val diff = qv(i) - cs(c)(i); d += diff * diff; i += 1 }
-              (d, c)
-            }
-            .take(nprobe)
-            .map { c =>
-              val ct = cs(c)
-              val table = Array.tabulate(bks.length) { s =>
-                Array.tabulate(bks(s).length) { code =>
-                  var d = 0.0; var i = 0
-                  val bk = bks(s)(code)
-                  while (i < dsub) {
-                    val diff = qv(s * dsub + i) - ct(s * dsub + i) - bk(i)
-                    d += diff * diff; i += 1
-                  }
-                  d
+          probeOrder(qv, cs).take(nprobe).map { c =>
+            val ct = cs(c)
+            val table = Array.tabulate(bks.length) { s =>
+              Array.tabulate(bks(s).length) { code =>
+                var d = 0.0; var i = 0
+                val bk = bks(s)(code)
+                while (i < dsub) {
+                  val diff = qv(s * dsub + i) - ct(s * dsub + i) - bk(i)
+                  d += diff * diff; i += 1
                 }
+                d
               }
-              (qid, c, table)
             }
+            (qid, c, table)
+          }
         }
         .toDF("query_id", "cluster", "_table"))
       val adc = codes.join(probeDf, "cluster")

@@ -42,7 +42,6 @@ object EgarchQueries {
     * job. */
   private def seriesFits(s: SparkSession, dir: String,
       auto: Boolean): Array[Egarch.SeriesFit] = {
-    import s.implicits._
     val bars = IvResampler.resample(
       SyntheticTrades.trades(s, dir), "15 minutes", col("underlying"))
     // bounded-collect(one fitted series per underlying)

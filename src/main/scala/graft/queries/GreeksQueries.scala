@@ -365,10 +365,9 @@ object GreeksQueries {
       .withColumn("ep", Parity.epochS(col("timestamp")))
     val wLast = Window.partitionBy(col("underlying"), col("expiry"))
       .orderBy(col("ep").desc, col("trade_id").desc)
-    // materialized: the t_ref aggregate and the ladder both read it
-    val lastQ = graft.util.Caches.materialize(atm
+    val lastQ = atm
       .withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
-      .select(col("underlying"), col("expiry"), col("iv"), col("ep")))
+      .select(col("underlying"), col("expiry"), col("iv"), col("ep"))
     val tref = lastQ.agg(max(col("ep")).as("tref"))
     val lad = Window.partitionBy(col("underlying")).orderBy(col("expiry"))
     lastQ

@@ -66,11 +66,6 @@ object LlmQueries {
        |  FROM wrds WHERE len(w) >= $n
        |)""".stripMargin
 
-  private val jaccardSql =
-    """len(list_intersect(x.shingles, y.shingles))::DOUBLE
-      |    / (len(x.shingles) + len(y.shingles)
-      |       - len(list_intersect(x.shingles, y.shingles)))""".stripMargin
-
   // ---- exact dedup ----
 
   def dedupExact(s: SparkSession, dir: String): DataFrame =
@@ -1005,7 +1000,7 @@ object LlmQueries {
   /** Train-once cache: the 24-merge training (one task on a vocabulary
     * of one partition, one Spark job per merge beyond) runs exactly once
     * per (applicationId, sf dir, dir fingerprint) — the same key as
-    * trainedClassifier: an identity hash is reusable after GC, and
+    * [[trainedQualModel]]: an identity hash is reusable after GC, and
     * without the fingerprint an in-process regeneration of the data
     * would be served a stale model the echo+verify oracle cannot
     * catch. llm_bpe_train, llm_bpe_encode and llm_tok_compare all
@@ -2615,25 +2610,22 @@ object LlmQueries {
     * constants (FP-order-dependent, not SQL-derivable) are echoed as
     * literals, the same echo+verify split the EGARCH and trained-ANN
     * gates use. */
-  /** Trained-model memo (the minhash-pair pattern): the 25-pass GD
-    * train is the registry's single slowest stage and both the
-    * classifier and calibration entries consume the SAME model —
-    * keyed by (applicationId, dir), O(feature-count) driver state. */
+  /** Trained-model memo shared by the classifier and calibration
+    * entries, keyed like [[bpeCache]]: a dir regenerated in-process
+    * retrains instead of serving stale weights. */
   private val qualModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), graft.operators.QualityClassifier.Model]
+    .empty[(String, String, String), graft.operators.QualityClassifier.Model]
 
   private def trainedQualModel(s: SparkSession, dir: String)
       : graft.operators.QualityClassifier.Model =
     qualModelCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
+      (s.sparkContext.applicationId, dir,
+        graft.util.FrameMemo.dirFingerprint(dir)), {
         val feats = graft.operators.QualityClassifier
           .featureFrame(docs(s, dir), col("lang") === "en")
-        // 25 full-batch passes: each iteration is one aggregation job
-        // over the cached feature frame, so wall-clock is iteration
-        // count x job latency (data-size-independent until the cache
-        // outgrows memory). 25 is past the loss plateau on this
-        // corpus; the gate is exact at ANY count (it echoes whatever
-        // converged).
+        // 25 GD steps (two jobs within the kernel's size rule) are past
+        // the loss plateau on this corpus; the gate is exact at ANY
+        // count (it echoes whatever converged).
         graft.operators.QualityClassifier.train(feats, iters = 25)
       })
 

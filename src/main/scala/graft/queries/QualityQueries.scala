@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.options.SyntheticTrades
-import graft.util.Parity._
 
 /** Correctness entries for data quality (A10/A11), gap analysis
   * (W1/O3), and rolling IV percentile/rank (W2/W3). */

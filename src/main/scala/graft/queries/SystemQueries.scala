@@ -477,7 +477,6 @@ object SystemQueries {
     * (a re-delivered or duplicate hash landing twice) inflates it
     * past `texts_kept` and breaks the hash match. */
   def st7StreamDocs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val src = graft.util.TempDirs.scoped("st7-src")
     val tgt = graft.util.TempDirs.scoped("st7-tgt")
     val ckpt = graft.util.TempDirs.scoped("st7-ckpt")
@@ -1470,7 +1469,6 @@ object SystemQueries {
   }
 
   def st15StreamSnapshot(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     import graft.sources.SnapshotStore
     val root = graft.util.TempDirs.scoped("st15-snap")
     val src = graft.util.TempDirs.scoped("st15-src")
@@ -1517,11 +1515,13 @@ object SystemQueries {
        |  true AS versions_monotone
        |FROM trades WHERE CAST(trade_id AS BIGINT) % 53 = 0""".stripMargin
 
-  /** Shared CDC era derivation for s17 (batch) and st14 (streaming):
-    * the events tape split at its temporal midpoint ('purchase'
-    * acting as the delete op), returned as the materialized tagged
+  /** Shared CDC era derivation for s17 and s29 (batch) and st14
+    * (streaming): the events tape split at its temporal midpoint
+    * ('purchase' acting as the delete op), returned as the tagged
     * frame (u, event_id, op, v, us, is_base). The midpoint bound
-    * rides a broadcast one-row aggregate (the a18 pattern). */
+    * rides a broadcast one-row aggregate (the a18 pattern). Not
+    * materialized: each consumer re-reads events, which runs fewer
+    * jobs than the barrier did and stays within the scan audit's cap. */
   private def cdcTagged(s: SparkSession, dir: String): DataFrame = {
     val ev = graft.util.Tables.load(s, dir, "events")
       .select(col("user_id").as("u"), col("event_id"),
@@ -1529,13 +1529,10 @@ object SystemQueries {
           .as("op"),
         col("value").as("v"), unix_micros(col("ts")).as("us"))
     val bounds = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-    // one materialization: the tagged tape feeds both era collapses
-    // (without it each of the four consumers re-scans events)
-    graft.util.Caches.materialize(
-      ev.crossJoin(broadcast(bounds))
-        .withColumn("is_base",
-          col("us") < col("mn") + expr("(mx - mn) div 2"))
-        .drop("mn", "mx"))
+    ev.crossJoin(broadcast(bounds))
+      .withColumn("is_base",
+        col("us") < col("mn") + expr("(mx - mn) div 2"))
+      .drop("mn", "mx")
   }
 
   private def cdcSnapshot(tagged: DataFrame): DataFrame =
@@ -3423,9 +3420,10 @@ object SystemQueries {
     * stream into staged parquet (distributed, no driver buffering),
     * and the commit is ONE replace-shaped CAS manifest — v1
     * granularity is the whole table (the grammar at full-rewrite
-    * cost; `CALL system.merge_rows` remains the delta-efficient
-    * MERGE, and translatable DELETEs keep the targeted copy-on-write
-    * path — Round18eSpec pins that routing). The lifecycle: append →
+    * cost — as `CALL system.merge_rows` pays too: it replaces the
+    * table with base ∪ upserts minus the changed keys; translatable
+    * DELETEs keep the targeted copy-on-write path — Round18eSpec
+    * pins that routing). The lifecycle: append →
     * UPDATE (conditional amount bump) → MERGE (update-or-delete a
     * changes slice + insert genuinely new keys); the oracle
     * re-derives the final state from the raw trades with the same

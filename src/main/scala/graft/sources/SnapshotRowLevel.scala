@@ -25,12 +25,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * a pushed predicate would drop unmatched rows from the scan, and
   * ReplaceData would silently DELETE them (they'd never be copied
   * through). Iceberg's file-granular variant prunes whole FILES via
-  * runtime filtering and replaces only those; the Scala
-  * `commitMergeRows` / `CALL system.merge_rows` path remains this
-  * store's delta-efficient MERGE (one broadcast anti-join, no full
-  * rewrite) — the row-level face buys the full MERGE INTO / UPDATE
-  * SQL grammar at full-rewrite cost, the right trade for the
-  * occasional ad-hoc statement.
+  * runtime filtering and replaces only those. The Scala
+  * `commitMergeRows` / `CALL system.merge_rows` path rewrites the
+  * whole table too: it commits `base left_anti changes ∪ upserts` as
+  * a replace, keeping no file. The row-level face buys the full
+  * MERGE INTO / UPDATE SQL grammar at that same full-rewrite cost.
   *
   * Simple equality/range DELETEs never reach this path: the optimizer
   * swaps them back to [[SnapshotDml.deleteWhere]]'s targeted

@@ -401,6 +401,28 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val brute = VectorOps.annTopK(planted, queries, k = 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
     assert(ivf == brute)
+    // one partition: the centroids are a plain in-order Lloyd's, bit
+    // for bit, and training is the kernel's counting job plus one task
+    val rows = planted.as[(Long, Array[Float])].collect().toSeq
+    assert(VectorOps.kmeansCentroids(planted.coalesce(1), k = 3, iters = 5)
+      .map(_.toSeq).toSeq == TestSpark.lloydReference(rows, 3, 5))
+    for (iters <- Seq(1, 3, 25)) {
+      val ran = TestSpark.jobsDuring(
+        VectorOps.kmeansCentroids(planted.coalesce(1), 3, iters)).size
+      assert(ran <= 2, s"kmeansCentroids(iters = $iters) ran $ran jobs")
+    }
+    // three partitions: one task and one job per step agree bit for bit
+    val parts = spark.sparkContext.parallelize(rows, 3)
+    val loop = VectorOps.lloyd(1, 3)
+    val s0 = graft.util.Iterate(parts, 0, loop) // zero steps: the seeds
+    val deep = (b: Array[Array[Array[Double]]]) => b.map(_.map(_.toSeq).toSeq).toSeq
+    var stepped = s0
+    val perStep = TestSpark.jobsDuring {
+      stepped = graft.util.Iterate.stepLoop(parts, s0, 5, loop)
+    }.size
+    assert(perStep == 5)
+    assert(deep(graft.util.Iterate.oneTask(parts, s0, 5, loop)) == deep(stepped))
+    assert(deep(graft.util.Iterate(parts, 5, loop)) == deep(stepped))
   }
 
   test("PQ ANN: exact re-rank scores, high recall vs brute force") {
@@ -428,6 +450,22 @@ class LlmOperatorsSpec extends AnyFunSuite {
     assert(recall >= 0.5, s"PQ recall@5 = $recall")
     // shape: 5 rows per query, ranks 1..5
     assert(pq.length == 8 * 5)
+    // codebook training on one partition: two jobs at any iteration count
+    for (iters <- Seq(1, 3, 25)) {
+      val ran = TestSpark.jobsDuring(
+        VectorOps.pqTrain(emb.coalesce(1), 4, 16, iters = iters)).size
+      assert(ran <= 2, s"pqTrain(iters = $iters) ran $ran jobs")
+    }
+    // all four subspaces: one task and one job per step agree bit for bit
+    import spark.implicits._
+    val parts = spark.sparkContext.parallelize(
+      emb.select(col("vec_id").cast("long"), col("embedding"))
+        .as[(Long, Array[Float])].collect().toSeq, 3)
+    val loop = VectorOps.lloyd(4, 16)
+    val s0 = graft.util.Iterate(parts, 0, loop)
+    val deep = (b: Array[Array[Array[Double]]]) => b.map(_.map(_.toSeq).toSeq).toSeq
+    assert(deep(graft.util.Iterate.oneTask(parts, s0, 3, loop)) ==
+      deep(graft.util.Iterate.stepLoop(parts, s0, 3, loop)))
   }
 
   test("IVF-PQ: planted clusters recovered through residual codes") {

@@ -862,9 +862,13 @@ class Round12Spec extends AnyFunSuite {
       val blob = if (id % 2 == 1) a else b
       (id, v(blob, 0.01f * (i % 5)))
     }
-    val (cents, out) = graft.operators.VectorOps
-      .clusterMetrics(rows.toDF("vec_id", "embedding"), k = 2)
+    val df = rows.toDF("vec_id", "embedding")
+    val (cents, out) = graft.operators.VectorOps.clusterMetrics(df, k = 2)
     assert(cents.length == 2)
+    // on one partition the echoed centroids are a plain in-order
+    // Lloyd's, bit for bit
+    assert(graft.operators.VectorOps.kmeansCentroids(df.coalesce(1), 2)
+      .map(_.toSeq).toSeq == TestSpark.lloydReference(rows, 2, 3))
     val rs = out.collect()
     assert(rs.length == 2)
     assert(rs.forall(_.getAs[Long]("n_members") == 20L))

@@ -93,6 +93,23 @@ class SemDedupClassifierSpec extends AnyFunSuite {
       .map(r => (r.getBoolean(1), r.getBoolean(3)))
     val acc = out.count { case (y, p) => y == p }.toDouble / out.length
     assert(acc >= 0.75, s"train accuracy $acc on a separable toy set")
+    // one partition: the counting job plus one task at any step count
+    for (iters <- Seq(1, 3, 25)) {
+      val ran = TestSpark.jobsDuring(
+        QualityClassifier.train(feats.coalesce(1), iters)).size
+      assert(ran <= 3, s"train(iters = $iters) ran $ran jobs")
+    }
+    // three partitions: one task and one job per step give the same
+    // weights, bias and loss trace bit for bit
+    val parts = spark.sparkContext.parallelize(
+      feats.select(col("_y") +: QualityClassifier.FeatureCols.map(col): _*)
+        .collect().toSeq.map(r => Array.tabulate(r.length)(r.getDouble)), 3)
+    val loop = QualityClassifier.gd(0.5)
+    val s0 = graft.util.Iterate(parts, 0, loop)
+    val flat = (m: QualityClassifier.Model) =>
+      (m.mean.toSeq, m.std.toSeq, m.weights.toSeq, m.bias, m.losses.toSeq)
+    assert(flat(graft.util.Iterate.oneTask(parts, s0, 40, loop)) ==
+      flat(graft.util.Iterate.stepLoop(parts, s0, 40, loop)))
   }
 
   test("margin column reproduces the driver-side left-to-right fold") {
@@ -141,6 +158,25 @@ class SemDedupClassifierSpec extends AnyFunSuite {
     // OTHER query vector for both queries, while the full space picks
     // 3 (q1) and 4 (q2): zero overlap for both
     assert(res(1L) == 0 && res(2L) == 0)
+  }
+
+  test("the registry's classifier retrains when its dir is regenerated") {
+    val dir = graft.util.TempDirs.scoped("qual-cache")
+    def write(d: DataFrame): Unit =
+      d.withColumn("source", lit("web"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the echoed oracle carries the model's means, stds and weights
+    def echoed(): String = {
+      graft.queries.LlmQueries.qualClassifier(spark, dir)
+      graft.queries.DynamicOracles.snapshot("llm_qual_classifier")
+    }
+    write(docs)
+    val first = echoed()
+    write(docs.withColumn("lang",
+      when(col("lang") === "en", "xx").otherwise("en")))
+    assert(echoed() != first,
+      "qualModelCache served weights trained on the old documents")
   }
 
   test("classifier on empty input returns the zero model") {

@@ -41,6 +41,27 @@ object TestSpark {
       seen.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Plain-Scala Lloyd's k-means: the k lowest-id vectors seed the
+    * centroids; each iteration gives every row to its nearest centroid
+    * by squared L2 (lower index on ties), sums each centroid's members
+    * in row order from zero and moves it to their mean (a centroid
+    * with no members stays). */
+  def lloydReference(rows: Seq[(Long, Array[Float])], k: Int, iters: Int)
+      : Seq[Seq[Double]] =
+    (0 until iters).foldLeft(
+      rows.sortBy(_._1).take(k).map(_._2.toSeq.map(_.toDouble))) { (cents, _) =>
+      def dist(v: Array[Float], c: Seq[Double]) =
+        c.indices.foldLeft(0.0) { (d, i) => val diff = v(i) - c(i); d + diff * diff }
+      val members = rows.map(_._2).groupBy(v =>
+        cents.indices.minBy(c => dist(v, cents(c)))(Ordering.Double.TotalOrdering))
+      cents.indices.map { c =>
+        members.get(c).fold(cents(c)) { vs =>
+          vs.foldLeft(Seq.fill(cents(c).size)(0.0))((s, v) =>
+            s.indices.map(i => s(i) + v(i))).map(_ / vs.size)
+        }
+      }
+    }
 }
 
 /** A ScalaCheck suite whose properties run Spark jobs per case: 25
