@@ -292,19 +292,20 @@ object Multimodal {
       expr("phash div 1024").as("b0"),
       (expr("phash div 32") % 32).as("b1"),
       (col("phash") % 32).as("b2")))
+    // each side aliased, so the media_type key resolves per side
     def side(tag: String) = banded.select(
       col("media_type"), col("doc_id").as(s"doc_$tag"),
       col("phash").as(s"h_$tag"), col("b0").as(s"b0_$tag"),
-      col("b1").as(s"b1_$tag"), col("b2").as(s"b2_$tag"))
+      col("b1").as(s"b1_$tag"), col("b2").as(s"b2_$tag")).as(tag)
     val l = side("a")
     val r = side("b")
     val pair = col("doc_a") < col("doc_b")
     def bandJoin(b: String, excl: Seq[String]) =
-      l.join(r, l("media_type") === r("media_type")
+      l.join(r, col("a.media_type") === col("b.media_type")
         && col(s"${b}_a") === col(s"${b}_b") && pair
         && excl.map(e => col(s"${e}_a") =!= col(s"${e}_b"))
           .foldLeft(lit(true))(_ && _))
-        .select(l("media_type"), col("doc_a"), col("doc_b"),
+        .select(col("a.media_type"), col("doc_a"), col("doc_b"),
           col("h_a"), col("h_b"))
     bandJoin("b0", Nil)
       .union(bandJoin("b1", Seq("b0")))

@@ -113,8 +113,7 @@ object BloomIndex {
   def build(spark: SparkSession, root: String, keyCol: String): Int = {
     import org.apache.spark.sql.types._
     val v = SnapshotStore.latestVersion(root)
-    val files = SnapshotStore.filesAt(root, v)
-    val base = spark.read.parquet(files: _*)
+    val base = SnapshotStore.snapshotAt(root, v).scan(spark)
     val key = base.schema(keyCol).dataType match {
       case LongType | TimestampType => col(keyCol)
       case IntegerType | ShortType | ByteType => col(keyCol).cast("long")

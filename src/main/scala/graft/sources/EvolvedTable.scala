@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,13 +37,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * correct (padded NULL → row dropped), and costs one extra codegen'd
   * predicate pass, never extra IO.
   *
-  * Group schemas come from the per-commit `_schema.ddl` marker
-  * (written at commit — zero data IO at plan time); a legacy commit
-  * without one probes a single footer (counted by
-  * [[GraftCatalog.footerInferences]]). Rows flow through the
-  * row-based reader (the union projection is per-row) — the price of
-  * heterogeneous layouts; single-layout tables keep the vectorized
-  * [[GraftCatalog]] path. */
+  * Group schemas come from the per-commit `_schema.ddl` marker every
+  * commit writes (zero data IO at plan time); a commit directory
+  * without one refuses rather than open a footer. The table's schema
+  * is the groups' merge, [[SnapshotRead.Snapshot.readSchema]]. Rows
+  * flow through the row-based reader (the union projection is
+  * per-row) — the price of heterogeneous layouts; single-layout
+  * tables keep the vectorized [[GraftCatalog]] path. */
 private[graft] object EvolvedTable {
 
   /** Test seam: how many per-group listing/split passes evolved scans
@@ -67,14 +66,6 @@ private[graft] object EvolvedTable {
     def groupSchema: StructType = StructType(
       dataSchema.fields ++
         specCols.map(StructField(_, StringType, nullable = true)))
-    def mkTable(name: String, options: CaseInsensitiveStringMap)
-        : ParquetTable = {
-      val merged = new java.util.HashMap[String, String](
-        options.asCaseSensitiveMap())
-      merged.put("basePath", baseDir)
-      SnapshotRead.parquetTable(name, files, Some(groupSchema),
-        new CaseInsensitiveStringMap(merged))
-    }
   }
 
   /** `files` grouped by their commit directory under `<root>/data`,
@@ -89,26 +80,22 @@ private[graft] object EvolvedTable {
     }.toSeq.sortBy(_._1).map { case (cdir, fs) => new File(dataDir, cdir) -> fs }
   }
 
+  /** The text of commit directory `dir`'s marker file `name`. */
+  def marker(dir: File, name: String): Option[String] = {
+    val f = new File(dir, name)
+    if (f.isFile)
+      Some(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
+    else None
+  }
+
   /** [[commitDirs]]' groups with each one's spec (`_spec.list`) and
-    * schema (`_schema.ddl`, falling back to one footer probe for
-    * legacy commits) resolved. */
+    * schema (`_schema.ddl`) resolved. */
   def groupsOf(dirs: Seq[(File, Seq[String])]): Seq[LayoutGroup] =
     dirs.map { case (dir, fs) =>
-      val specF = new File(dir, "_spec.list")
-      val spec =
-        if (!specF.isFile) Seq.empty[String]
-        else new String(Files.readAllBytes(specF.toPath),
-          StandardCharsets.UTF_8).split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-      val ddlF = new File(dir, "_schema.ddl")
-      val full =
-        if (ddlF.isFile)
-          StructType.fromDDL(new String(Files.readAllBytes(ddlF.toPath),
-            StandardCharsets.UTF_8))
-        else {
-          GraftCatalog.footerInferences.incrementAndGet()
-          SparkSession.active.read.parquet(fs.head).schema
-        }
+      val spec = marker(dir, "_spec.list").toSeq.flatMap(_.split("\n"))
+        .map(_.trim).filter(_.nonEmpty)
+      val full = StructType.fromDDL(marker(dir, "_schema.ddl").getOrElse(
+        throw new graft.QueryError(s"commit directory $dir has no _schema.ddl")))
       val data = StructType(full.fields.filterNot(f =>
         spec.contains(f.name)))
       LayoutGroup(dir.getPath, fs.sorted, spec, data)
@@ -137,7 +124,7 @@ private[graft] object EvolvedTable {
       with org.apache.spark.sql.connector.catalog.SupportsDeleteV2 {
     private val root = snap.root
     private[sources] val unified: StructType =
-      try snap.groups.map(_.groupSchema).reduceLeft(graft.util.SchemaMerge.merge)
+      try snap.readSchema
       catch {
         case e: graft.QueryError => throw new graft.QueryError(
           s"$tableName: partition-evolved layouts disagree on a " +
@@ -205,7 +192,7 @@ private[graft] object EvolvedTable {
 
     override def build(): Scan = {
       val scans = active.map { g =>
-        val sb = g.mkTable(tableName, options).newScanBuilder(options)
+        val sb = snap.parquetTable(tableName, g, options).newScanBuilder(options)
         val gcols = g.groupSchema.fieldNames.toSet
         sb match {
           case c: org.apache.spark.sql.internal.connector

@@ -1,13 +1,11 @@
 package graft.sources
 
 import java.io.File
-import java.util.Collections
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The SQL-text face of the snapshot store — a DataSourceV2
@@ -26,13 +24,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (nested namespaces map to subdirectories). `loadTable` resolves
   * the requested version — Spark's parser hands `VERSION AS OF` /
   * `TIMESTAMP AS OF` straight to the catalog's overloads, timestamps
-  * in MICROSECONDS — to its manifest file list and hands EXACTLY
-  * those paths to Spark's own `ParquetTable`, so the SQL path and
-  * the Scala `SnapshotStore.read` path plan the same file-pruned
-  * parquet scan (filter pushdown, column pruning, and vectorized
-  * reading all come from the stock parquet source). A non-numeric
-  * `VERSION AS OF` string resolves as a TAG name — the natural SQL
-  * spelling for pinned snapshots.
+  * in MICROSECONDS — to one [[SnapshotRead.Snapshot]], whose DSv2
+  * face hands EXACTLY its paths, under its read schema, to Spark's
+  * own `ParquetTable`, so the SQL path and the Scala
+  * `SnapshotStore.read` path plan the same file-pruned parquet scan
+  * over the same columns (filter pushdown, column pruning, and
+  * vectorized reading all come from the stock parquet source). A
+  * non-numeric `VERSION AS OF` string resolves as a TAG name — the
+  * natural SQL spelling for pinned snapshots.
   *
   * DML routes THROUGH the store's one commit path, never around it:
   * INSERT INTO is a [[SnapshotStore.commitAppend]] and INSERT
@@ -247,23 +246,16 @@ class GraftCatalog extends TableCatalog
 }
 
 object GraftCatalog {
-  /** The catalog's table over Spark's own ParquetTable. Reads go
-    * through [[SnapshotScanBuilder]], which re-resolves the file list
-    * against the sidecar indexes at filter-pushdown time. Writes do
+  /** The catalog's table over a flat version: its schema is the
+    * snapshot's read schema, and reads go through
+    * [[SnapshotScanBuilder]], which re-resolves the file list against
+    * the sidecar indexes at filter-pushdown time. Writes do
     * NOT delegate to ParquetTable's writer (streaming parquet into
     * manifest-listed paths would mutate committed files behind every
     * version's back — the corruption the immutable-data-file contract
     * forbids); they ride [[SnapshotDml.SnapshotWriteBuilder]], whose
     * insert IS a CAS commit, and DELETE FROM is the copy-on-write
     * [[SnapshotStore.deleteRows]]. */
-  /** Test seam: how many times a table's schema had to be INFERRED
-    * from data-file footers because the manifest pins no `#schema`
-    * header. Stores written by current commits always pin one, so
-    * `loadTable` + scans are zero-data-IO at plan time; only legacy
-    * manifests pay inference. */
-  private[graft] val footerInferences =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
   private final class SnapshotTable(tableName: String,
       snap: SnapshotRead.Snapshot)
       extends Table with SupportsRead
@@ -272,20 +264,9 @@ object GraftCatalog {
       with org.apache.spark.sql.connector.catalog
         .SupportsRowLevelOperations {
     private val root = snap.root
-    // the pinned schema travels in manifest METADATA (#schema header,
-    // written at commit) — resolving it is a string parse, not IO over
-    // a 100 TB table's footers. Passed as the user-specified schema so
-    // the delegate ParquetTable never infers either.
-    private val pinned = snap.schema
-    private[sources] def mk(fs: Seq[String]): ParquetTable =
-      SnapshotRead.parquetTable(tableName, fs, pinned,
-        new CaseInsensitiveStringMap(Collections.emptyMap()))
     override def name(): String = tableName
     override def schema(): org.apache.spark.sql.types.StructType =
-      pinned.getOrElse {
-        footerInferences.incrementAndGet()
-        mk(snap.files).schema
-      }
+      snap.readSchema
     override def capabilities(): java.util.Set[TableCapability] =
       java.util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
@@ -293,7 +274,7 @@ object GraftCatalog {
         TableCapability.STREAMING_WRITE,
         TableCapability.MICRO_BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap)
-        : ScanBuilder = new SnapshotScanBuilder(snap, mk, options)
+        : ScanBuilder = new SnapshotScanBuilder(tableName, snap, options)
     override def newWriteBuilder(
         info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
         : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -328,10 +309,10 @@ object GraftCatalog {
     * `SnapshotRead.plan(point = ...)` scans, with zero extra syntax.
     * Unsupported predicate shapes simply prune nothing (the full
     * list survives) — correctness never depends on the pruning, only
-    * IO does. When everything is skipped, one file is kept so schema
-    * inference and the (now trivially empty) row filter still work. */
-  private final class SnapshotScanBuilder(snap: SnapshotRead.Snapshot,
-      mk: Seq[String] => ParquetTable, options: CaseInsensitiveStringMap)
+    * IO does. When everything is skipped, one file is kept and the
+    * row filter makes the scan empty. */
+  private final class SnapshotScanBuilder(tableName: String,
+      snap: SnapshotRead.Snapshot, options: CaseInsensitiveStringMap)
       extends org.apache.spark.sql.internal.connector
         .SupportsPushDownCatalystFilters
       with org.apache.spark.sql.connector.read
@@ -339,15 +320,15 @@ object GraftCatalog {
     import org.apache.spark.sql.catalyst.expressions._
 
     private val all = snap.files
-    private var inner = mk(all).newScanBuilder(options)
+    private var inner = snap.parquetTable(tableName).newScanBuilder(options)
     private var required: Option[org.apache.spark.sql.types.StructType] =
       None
 
     override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
       val pruned = snap.prune(SnapshotRead.Bounds.of(filters))._2
       if (pruned.size != all.size)
-        inner = mk(if (pruned.nonEmpty) pruned else all.take(1))
-          .newScanBuilder(options)
+        inner = snap.parquetTable(tableName,
+          if (pruned.nonEmpty) pruned else all.take(1)).newScanBuilder(options)
       inner.pushFilters(filters)
     }
 
@@ -364,7 +345,7 @@ object GraftCatalog {
     override def build(): org.apache.spark.sql.connector.read.Scan =
       // batch reads delegate straight through; the wrapper adds the
       // streaming face (readStream.table — version-diff micro-batches)
-      new SnapshotSource.WrappedScan(inner.build(), snap.root, required, mk,
+      new SnapshotSource.WrappedScan(inner.build(), tableName, snap, required,
         options)
   }
 }

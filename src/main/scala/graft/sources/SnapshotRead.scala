@@ -1,8 +1,6 @@
 package graft.sources
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import scala.collection.immutable.ListMap
 
@@ -15,11 +13,19 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The snapshot store's ONE read planner. Every read face — `plan`,
-  * [[SnapshotStore.read]], the SQL catalog's tables and scan builders,
-  * and the base reads of the rewriting commits (delete, compaction,
-  * merge, re-index) — turns (version, predicate) into files and files
-  * into rows through its three parts:
+/** The snapshot store's ONE read planner, and the only code in
+  * `graft.sources` that turns store files into rows or a schema. Its
+  * read faces:
+  *  - `plan` and [[SnapshotStore.read]];
+  *  - the SQL catalog's flat and evolved tables, their scan builders,
+  *    the streaming source's micro-batches and the row-level group
+  *    scan, all through the DSv2 face [[Snapshot.parquetTable]];
+  *  - [[SnapshotStore.snapshotDiff]], [[BloomIndex.build]] and the
+  *    commit core's stats pass;
+  *  - the base reads of the rewriting commits (delete, compaction,
+  *    merge, re-index).
+  * Each turns (version, predicate) into files and files into rows
+  * through three parts:
   *
   *  1. the resolver ([[resolve]]): latest, an explicit version,
   *     `TIMESTAMP AS OF` (the manifests' `#ts` instants) or a tag;
@@ -36,12 +42,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     version: EVOLVED when any commit directory carries `_spec.list`,
   *     or when the manifest pins no `#schema` and the commits'
   *     `_schema.ddl` markers differ; FLAT otherwise. A flat table is
-  *     one parquet scan under its pinned schema (no footer job) or,
-  *     unpinned, under footer inference; an evolved table reads each
-  *     commit group ([[EvolvedTable.groupsOf]]) under its group schema
-  *     and `basePath` — partition directories as STRING, so the layout
+  *     one parquet scan under its read schema ([[Snapshot.readSchema]]:
+  *     the pinned `#schema`, else the commits' marker — no footer
+  *     job); an evolved table reads each commit group
+  *     ([[EvolvedTable.groupsOf]]) under its group schema and
+  *     `basePath` — partition directories as STRING, so the layout
   *     never changes a column's type — and unions the groups by name.
-  *     A version without files is an empty frame of its pinned schema.
+  *     An empty file subset is an empty frame of the read schema.
   *
   * Sidecars bound FILES, never rows: `plan` re-applies every predicate
   * as a row filter, and a file without a sidecar line is kept. */
@@ -272,44 +279,56 @@ object SnapshotRead {
       * Markers only — driver-side, commit-count-sized, zero data IO. */
     lazy val evolved: Boolean =
       commitDirs.exists(d => new File(d._1, "_spec.list").isFile) ||
-        (schema.isEmpty && commitDirs.flatMap { case (d, _) =>
-          val f = new File(d, "_schema.ddl")
-          if (!f.isFile) None
-          else Some(new String(Files.readAllBytes(f.toPath),
-            StandardCharsets.UTF_8))
-        }.distinct.size > 1)
+        (schema.isEmpty && commitDirs.flatMap(d =>
+          EvolvedTable.marker(d._1, "_schema.ddl")).distinct.size > 1)
 
     lazy val groups: Seq[EvolvedTable.LayoutGroup] =
       EvolvedTable.groupsOf(commitDirs)
 
+    /** The ONE schema source of every read face: an evolved version's
+      * group schemas merged by name ([[graft.util.SchemaMerge]]); a
+      * flat version's pinned `#schema`, else the marker its commits
+      * share (one, by the layout rule). Never a data-file footer. */
+    lazy val readSchema: StructType =
+      if (evolved) groups.map(_.groupSchema).reduceLeft(graft.util.SchemaMerge.merge)
+      else schema.getOrElse(groups.map(_.dataSchema).headOption.getOrElse(
+        throw new graft.QueryError(
+          s"version $version of $root lists no files and pins no #schema")))
+
     /** The rows of `subset` (files of this version) under the
       * version's layout. An empty subset keeps the table's columns. */
     def scan(spark: SparkSession, subset: Seq[String] = files): DataFrame =
-      if (subset.isEmpty) (schema, files) match {
-        case (Some(s), _) if !evolved =>
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-        case (_, fs) if fs.nonEmpty => scan(spark, fs).limit(0)
-        case _ => throw new graft.QueryError(
-          s"version $version of $root lists no files and pins no #schema")
-      } else if (evolved) {
+      if (subset.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), readSchema)
+      else if (evolved) {
         val keep = subset.toSet
         groups.map(g => g.copy(files = g.files.filter(keep)))
           .filter(_.files.nonEmpty)
           .map(g => spark.read.schema(g.groupSchema)
             .option("basePath", g.baseDir).parquet(g.files: _*))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-      } else schema match {
-        case Some(s) => spark.read.schema(s).parquet(subset: _*)
-        case None => spark.read.parquet(subset: _*)
-      }
-  }
+      } else spark.read.schema(readSchema).parquet(subset: _*)
 
-  /** The DSv2 form of the scan: Spark's own ParquetTable over `files`.
-    * A pinned or group schema rides in as the user schema, so the
-    * table infers none from footers. */
-  private[sources] def parquetTable(name: String, files: Seq[String],
-      schema: Option[StructType], options: CaseInsensitiveStringMap)
-      : ParquetTable =
-    ParquetTable(name, SparkSession.active, options, files.toIndexedSeq,
-      schema, classOf[ParquetFileFormat])
+    /** The scan's DSv2 face: Spark's own ParquetTable over `subset`
+      * under the read schema, which rides in as the user schema, so
+      * the table infers none from footers. */
+    def parquetTable(name: String, subset: Seq[String] = files,
+        options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+        : ParquetTable =
+      ParquetTable(name, SparkSession.active, options, subset.toIndexedSeq,
+        Some(readSchema), classOf[ParquetFileFormat])
+
+    /** The DSv2 face of one layout group `g` of an evolved version:
+      * its files under its group schema, `basePath` at its commit
+      * directory so partition directories surface as columns. */
+    def parquetTable(name: String, g: EvolvedTable.LayoutGroup,
+        options: CaseInsensitiveStringMap): ParquetTable = {
+      val withBase = new java.util.HashMap[String, String](
+        options.asCaseSensitiveMap())
+      withBase.put("basePath", g.baseDir)
+      ParquetTable(name, SparkSession.active,
+        new CaseInsensitiveStringMap(withBase), g.files.toIndexedSeq,
+        Some(g.groupSchema), classOf[ParquetFileFormat])
+    }
+  }
 }

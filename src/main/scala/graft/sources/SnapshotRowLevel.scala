@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
@@ -61,12 +60,10 @@ private[graft] object SnapshotRowLevel {
       * rows), but the full-group read keeps the contract obvious. */
     override def newScanBuilder(options: CaseInsensitiveStringMap)
         : ScanBuilder = new ScanBuilder {
-      override def build(): Scan = {
-        val base = SnapshotStore.snapshotAt(root, baseV)
-        SnapshotRead.parquetTable(s"graft-rowlevel $root@v$baseV",
-          base.files, base.schema, CaseInsensitiveStringMap.empty())
+      override def build(): Scan =
+        SnapshotStore.snapshotAt(root, baseV)
+          .parquetTable(s"graft-rowlevel $root@v$baseV")
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      }
     }
 
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -106,14 +103,8 @@ private[graft] object SnapshotRowLevel {
         schema)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val staged = ParquetStage.stagedOf(messages)
-      // mkdirs: an EMPTY replacement (e.g. UPDATE on an empty table)
-      // ran no task, so no writer ever created the staging dir
-      stageDir.mkdirs()
-      Files.write(new File(stageDir, "_schema.ddl").toPath,
-        schema.toDDL.getBytes(StandardCharsets.UTF_8))
-      SnapshotStore.commitStagedReplace(root, staged, schema, None,
-        expectedPrev = Some(baseV))
+      SnapshotStore.commitStagedReplace(root, ParquetStage.stagedOf(messages),
+        schema, None, expectedPrev = Some(baseV))
       ()
     }
 

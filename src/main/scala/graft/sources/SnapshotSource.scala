@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -26,13 +25,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - `startingVersion` (default 0) picks where the initial snapshot
   *    begins: 0 streams the whole existing table as the first batch.
   *
-  * Reading rides Spark's OWN parquet machinery: each batch plans the
-  * added files through a stock ParquetScan (so splits, vectorization
-  * and column pruning are the batch path's), and the shared reader
-  * factory is built once from the pruned schema. Retention note: the
-  * stream resolves `filesAt(start)` on replay, so `expireVersions`
-  * retention must cover the checkpoint's replay horizon — the same
-  * contract Delta documents for its source. */
+  * Reading rides the planner's DSv2 face: each batch's file sets come
+  * from the two versions' snapshots, and the added files plan through
+  * the loaded version's [[SnapshotRead.Snapshot.parquetTable]] — a
+  * stock ParquetScan under the table's read schema, so splits,
+  * vectorization and column pruning are the batch path's. The shared
+  * reader factory is built once from the pruned schema. Retention
+  * note: the stream resolves `snapshotAt(start)` on replay, so
+  * `expireVersions` retention must cover the checkpoint's replay
+  * horizon — the same contract Delta documents for its source. */
 private[graft] object SnapshotSource {
 
   /** Version-number offset. */
@@ -50,8 +51,8 @@ private[graft] object SnapshotSource {
   /** The scan the catalog's builder returns: batch reads delegate to
     * the sidecar-pruned inner scan untouched; the streaming face
     * plans version-diff batches. */
-  final class WrappedScan(private[sources] val inner: Scan, root: String,
-      required: Option[StructType], mk: Seq[String] => ParquetTable,
+  final class WrappedScan(private[sources] val inner: Scan, name: String,
+      snap: SnapshotRead.Snapshot, required: Option[StructType],
       options: CaseInsensitiveStringMap) extends Scan {
     override def readSchema(): StructType = inner.readSchema()
     override def description(): String = inner.description()
@@ -63,12 +64,13 @@ private[graft] object SnapshotSource {
       inner.supportedCustomMetrics()
     override def toMicroBatchStream(checkpointLocation: String)
         : MicroBatchStream =
-      new TableStream(root, required.getOrElse(readSchema()), mk, options)
+      new TableStream(name, snap, required.getOrElse(readSchema()), options)
   }
 
-  private final class TableStream(root: String, required: StructType,
-      mk: Seq[String] => ParquetTable, options: CaseInsensitiveStringMap)
+  private final class TableStream(name: String, snap: SnapshotRead.Snapshot,
+      required: StructType, options: CaseInsensitiveStringMap)
       extends MicroBatchStream {
+    private val root = snap.root
     private val ignoreChanges = options.getBoolean("ignoreChanges", false)
     private val startingVersion =
       Option(options.get("startingVersion")).map(_.toInt).getOrElse(0)
@@ -86,8 +88,8 @@ private[graft] object SnapshotSource {
     private def filesBetween(a: Int, b: Int): Seq[String] = {
       val before =
         if (a <= 0) Set.empty[String]
-        else SnapshotStore.filesAt(root, a).toSet
-      val after = SnapshotStore.filesAt(root, b)
+        else SnapshotStore.snapshotAt(root, a).files.toSet
+      val after = SnapshotStore.snapshotAt(root, b).files
       val removed = before -- after.toSet
       if (removed.nonEmpty && !ignoreChanges)
         throw new graft.QueryError(
@@ -102,7 +104,7 @@ private[graft] object SnapshotSource {
     /** A stock parquet Batch over `files`, pruned to the streaming
       * query's required columns (same pruning the batch path got). */
     private def batchOver(files: Seq[String]): Batch = {
-      val sb = mk(files).newScanBuilder(options)
+      val sb = snap.parquetTable(name, files).newScanBuilder(options)
       sb match {
         case p: org.apache.spark.sql.connector.read
             .SupportsPushDownRequiredColumns => p.pruneColumns(required)

@@ -247,10 +247,13 @@ object SnapshotStore {
       Files.write(new File(dir, "_spec.list").toPath,
         spec.mkString("\n").getBytes(StandardCharsets.UTF_8))
     }
-    Files.write(new File(dir, "_schema.ddl").toPath,
-      df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
+    writeSchemaMarker(dir, df.schema)
     leafParquet(dir)
   }
+
+  private def writeSchemaMarker(dir: File, schema: StructType): Unit =
+    Files.write(new File(dir, "_schema.ddl").toPath,
+      schema.toDDL.getBytes(StandardCharsets.UTF_8))
 
   private def leafParquet(dir: File): Seq[String] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -280,7 +283,8 @@ object SnapshotStore {
   /** A commit's fresh files: a frame the core writes through
     * [[writeData]] (optionally partitioned and/or range-clustered), or
     * files a distributed writer already staged under `<root>/data`
-    * (the streaming sink, the row-level rewrite) with their schema. */
+    * (the streaming sink, the row-level rewrite) with their schema,
+    * which the core writes as their directories' `_schema.ddl`. */
   private sealed trait Fresh
   private final case class Frame(df: DataFrame, spec: Seq[String] = Seq.empty,
       clusterBy: Seq[String] = Seq.empty, nFiles: Int = 8) extends Fresh
@@ -296,16 +300,17 @@ object SnapshotStore {
   /** Metadata-only and rewrite commits: the base's header, unchanged. */
   private case object KeepSchema extends SchemaHeader
   /** Partitioned writes pin nothing: their per-commit `_schema.ddl`
-    * markers and footers are the schema source. */
+    * markers are the schema source. */
   private case object NoSchema extends SchemaHeader
   /** Replace-shaped commits: the table IS the new data. */
   private final case class PinSchema(s: StructType) extends SchemaHeader
   /** Append-shaped commits: the base's pinned schema widened by the
     * incoming one through [[graft.util.SchemaMerge]]. A base that pins
-    * no schema stays header-less — only footer inference can know the
-    * union of its historic commits — and so does an un-mergeable
+    * no schema stays header-less — its commits' `_schema.ddl` markers
+    * describe its files — and so does an un-mergeable
     * evolution (a column changing to an incompatible type): readers
-    * fall back to inference, never to a wrong pinned schema. */
+    * resolve the markers ([[SnapshotRead.Snapshot.readSchema]]), never
+    * a wrong pinned schema. */
   private final case class MergeSchema(s: StructType) extends SchemaHeader
 
   /** One commit's effect on its base: the base files it keeps, the
@@ -353,10 +358,13 @@ object SnapshotStore {
               if (spec.isEmpty) df.schema else new StructType(),
               () => df.sparkSession)
           case Staged(files, schema) =>
+            EvolvedTable.commitDirs(root, files)
+              .foreach(d => writeSchemaMarker(d._1, schema))
             (files, schema, () => SparkSession.active)
         }
-        val freshLines =
-          statsForFiles(spark(), fresh, usableKinds(indexable, statCols))
+        val freshLines = statsForFiles(spark(),
+          Snapshot(root, v, fresh, Map("schema" -> indexable.toDDL)),
+          usableKinds(indexable, statCols))
         val schemaDdl = c.schema match {
           case KeepSchema => base.meta.get("schema")
           case NoSchema => None
@@ -365,7 +373,7 @@ object SnapshotStore {
             if (base.version == 0) Some(s.toDDL)
             else base.schema.flatMap { pinned =>
               try Some(graft.util.SchemaMerge.merge(pinned, s).toDDL)
-              catch { case _: Exception => None }
+              catch { case _: graft.QueryError => None }
             }
         }
         val spec = c.spec.getOrElse(base.spec).mkString(",")
@@ -516,8 +524,8 @@ object SnapshotStore {
     * merge marks it nullable) and the next INSERT may populate it.
     * Zero data IO at any table size — additive DDL on a 100 TB table
     * is a manifest write. Refuses loudly when the column already
-    * exists, and on a store that pins no `#schema` (the union of its
-    * historic commits is unknowable without footer IO — publish one
+    * exists, and on a store that pins no `#schema` (its commits'
+    * markers may disagree on a column's type — publish one
     * replace-shaped commit first). Returns the new version. */
   def addColumns(root: String, cols: Seq[StructField]): Int = {
     require(cols.nonEmpty, "ADD COLUMN needs at least one column")
@@ -1058,7 +1066,8 @@ object SnapshotStore {
         PinSchema(df.schema), statCols = Some(statKinds(df, statColumns))))
     }
 
-  /** Typed per-file [min, max] bounds of already-written `files` on
+  /** Typed per-file [min, max] bounds of a commit's already-written
+    * `fresh` files, read under the schema the commit holds, on
     * `kinds` — the core the stats commits AND append-time index
     * maintenance share: ONE distributed aggregate whose output is
     * bounded by the file count, not the row count (a production
@@ -1066,9 +1075,9 @@ object SnapshotStore {
     * zero extra IO). All-null columns in a file get no line
     * (conservatively never skipped). No files or no kinds: no job,
     * and `spark` is never evaluated. */
-  private def statsForFiles(spark: => SparkSession, files: Seq[String],
+  private def statsForFiles(spark: => SparkSession, fresh: Snapshot,
       kinds: Seq[(String, String)]): Seq[ColStats] = {
-    if (files.isEmpty || kinds.isEmpty) return Seq.empty
+    if (fresh.files.isEmpty || kinds.isEmpty) return Seq.empty
     val aggs = kinds.flatMap { case (c, k) =>
       def b(agg: Column): Column = k match {
         case "long" => agg.cast("long")
@@ -1083,7 +1092,7 @@ object SnapshotStore {
         r.getAs[String](f).getBytes(StandardCharsets.UTF_8))
       else r.getAs[Long](f).toString
     // bounded collect: one row per file
-    spark.read.parquet(files: _*)
+    fresh.scan(spark)
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -1100,52 +1109,35 @@ object SnapshotStore {
 
   /** Row-level changelog between two versions (the Iceberg
     * `create_changelog_view` / Delta CDF-from-snapshots primitive),
-    * computed from the manifests ALONE: files carried by path between
+    * planned from the manifests ALONE: files carried by path between
     * the versions cancel by identity and are NEVER read, so the scan
     * is delta-proportional — after an append + a copy-on-write delete
     * on a 100 TB table, the diff reads the appended and rewritten
-    * files, not the table. Survivor rows that a rewrite copied into
-    * fresh files also sit in the dropped originals, so they cancel in
-    * the signed multiset aggregate (one shuffle keyed by the full
-    * row, no join) and only true adds/removes surface. Emits the
-    * table's columns plus `change` ∈ {added, removed} and the
-    * multiplicity `n`. */
+    * files, not the table. The removed files are read through
+    * `v1`'s snapshot and the added files through `v2`'s, each under
+    * its version's layout and read schema, and the two sides union by
+    * name: a column only one version has (an added column, a
+    * partition directory) reads null on the other side. Survivor rows
+    * that a rewrite copied into fresh files also sit in the dropped
+    * originals, so they cancel in the signed multiset aggregate (one
+    * shuffle keyed by the full row, no join) and only true
+    * adds/removes surface. Emits the columns every read face returns
+    * (`v2`'s, then any only `v1` has) plus `change` ∈ {added,
+    * removed} and the multiplicity `n`. */
   def snapshotDiff(spark: SparkSession, root: String, v1: Int, v2: Int)
       : DataFrame = {
-    import org.apache.spark.sql.functions.{abs => fabs, sum => fsum, _}
-    val s1 = filesAt(root, v1).toSet
-    val s2 = filesAt(root, v2).toSet
-    val onlyOld = (s1 -- s2).toSeq.sorted
-    val onlyNew = (s2 -- s1).toSeq.sorted
-    val allFiles = onlyOld ++ onlyNew ++ s1 ++ s2
-    // both versions file-less (e.g. two empty initial commits): the
-    // diff is empty by definition, and there is no data file to probe
-    // a table schema from — return the degenerate (change, n) frame
-    // instead of dereferencing .head
-    if (allFiles.isEmpty) {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("change", StringType),
-          StructField("n", LongType))))
-    }
-    val probe = allFiles.head
-    val schema = spark.read.parquet(probe).schema
-    val cols = schema.fieldNames.toSeq
-    def side(fs: Seq[String], w: Long): DataFrame = {
-      val base = if (fs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.parquet(fs: _*)
-      // normalize column order — unionAll is positional and a rewrite
-      // commit may have serialized columns in a different order
-      base.select(cols.map(col): _*).withColumn("__sd_w", lit(w))
-    }
-    side(onlyOld, -1L).unionAll(side(onlyNew, 1L))
-      .groupBy(cols.map(col): _*)
+    import org.apache.spark.sql.functions.{abs => fabs, sum => fsum, when}
+    val (from, to) = (snapshotAt(root, v1), snapshotAt(root, v2))
+    val (s1, s2) = (from.files.toSet, to.files.toSet)
+    val signed = to.scan(spark, to.files.filterNot(s1))
+      .withColumn("__sd_w", lit(1L))
+      .unionByName(from.scan(spark, from.files.filterNot(s2))
+        .withColumn("__sd_w", lit(-1L)), allowMissingColumns = true)
+    val cols = signed.columns.toSeq.filterNot(_ == "__sd_w").map(col)
+    signed.groupBy(cols: _*)
       .agg(fsum(col("__sd_w")).as("__sd_delta"))
       .where(col("__sd_delta") =!= 0L)
-      .select(cols.map(col) :+
+      .select(cols :+
         when(col("__sd_delta") > 0, "added").otherwise("removed")
           .as("change") :+
         fabs(col("__sd_delta")).as("n"): _*)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
@@ -17,8 +16,8 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
   *    are identical to a batch write's, and rows never buffer on the
   *    driver;
   *  - the driver's `commit(epochId, messages)` publishes ONE append
-  *    manifest listing exactly the staged files (plus the per-commit
-  *    `_schema.ddl` marker for zero-footer-IO planning), stamped with
+  *    manifest listing exactly the staged files (the commit core adds
+  *    the per-commit `_schema.ddl` marker), stamped with
   *    the writer token `toTable:<queryId>:<epochId>`;
   *  - exactly-once falls out of the token: Structured Streaming
   *    re-delivers the last epoch after a crash with the SAME queryId
@@ -50,9 +49,6 @@ private[graft] object SnapshotStreaming {
     private val schema = info.schema()
     private val qid = info.queryId()
 
-    private def stageDir(epochId: Long) =
-      new File(new File(root, "data"), s"st${qid.take(8)}-e$epochId")
-
     override def createStreamingWriterFactory(pInfo: PhysicalWriteInfo)
         : StreamingDataWriterFactory =
       ParquetStage.writers(schema, ParquetStage.epochDir(
@@ -63,16 +59,10 @@ private[graft] object SnapshotStreaming {
       val staged = ParquetStage.stagedOf(messages)
       val token = Some(s"toTable:$qid:$epochId")
       if (overwrite) {
-        // complete mode: this epoch's result IS the table. mkdirs: an
-        // EMPTY epoch ran no task, so no writer created the stage dir
-        stageDir(epochId).mkdirs()
-        Files.write(new File(stageDir(epochId), "_schema.ddl").toPath,
-          schema.toDDL.getBytes(StandardCharsets.UTF_8))
+        // complete mode: this epoch's result IS the table
         SnapshotStore.commitStagedReplace(root, staged, schema, token)
         ()
       } else if (staged.nonEmpty) {
-        Files.write(new File(stageDir(epochId), "_schema.ddl").toPath,
-          schema.toDDL.getBytes(StandardCharsets.UTF_8))
         SnapshotStore.commitStagedAppend(root, staged, schema, token)
         ()
       } // an empty append epoch publishes nothing — no version churn

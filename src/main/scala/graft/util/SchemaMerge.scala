@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * (e.g. decimal widening) are broader than what the vectorized
   * parquet reader can actually deliver under a user-specified schema
   * — so this merge is strictly conservative: same name must mean the
-  * SAME type, or the merge fails and the caller falls back to footer
-  * inference rather than pin a schema some data file can't satisfy.
+  * SAME type, or the merge fails and the caller pins no schema
+  * (readers resolve the commits' markers) rather than pin a schema
+  * some data file can't satisfy.
   * Nullability unions (a column absent from older files reads as
   * null). Field order: base fields first, then new fields in their
   * incoming order — stable across repeated appends. */

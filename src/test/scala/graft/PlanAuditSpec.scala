@@ -658,4 +658,28 @@ class PlanAuditSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("source audit: only SnapshotRead reads parquet in graft.sources") {
+    // Source-level twin of the snapshot store's one read planner: a
+    // reader that plans its own parquet read sees neither the store's
+    // layout nor its read schema, so it drops partition-directory and
+    // added columns. Only the planner may read parquet, build a
+    // ParquetTable or infer a schema from a footer.
+    val allowed = Map(
+      "SnapshotRead.scala" -> "the snapshot store's one read planner",
+      "TradesStore.scala" ->
+        "the day-partitioned trades table, not the snapshot store")
+    val forbidden =
+      """spark\.read\b|\.read\.parquet|\.read\.schema|ParquetTable\(""".r
+    val sdir = new java.io.File("src/main/scala/graft/sources")
+    assert(sdir.isDirectory, s"missing ${sdir.getAbsolutePath}")
+    val hits = for {
+      f <- sdir.listFiles().toSeq.sortBy(_.getName)
+      if f.getName.endsWith(".scala") && !allowed.contains(f.getName)
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .zipWithIndex.toSeq
+      m <- forbidden.findFirstIn(line)
+    } yield s"${f.getName}:${i + 1} contains $m"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

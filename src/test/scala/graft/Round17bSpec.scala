@@ -95,34 +95,45 @@ class Round17bSpec extends AnyFunSuite {
     assert(strRange.count() == 20)
   }
 
+  /** The SQL table's schema, resolved while every data file of the
+    * latest version is renamed away — so no footer can have been read
+    * — then the files are put back. */
+  private def schemaWithoutData(root: String, table: String)
+      : org.apache.spark.sql.types.StructType = {
+    val files = SnapshotStore.filesAt(root, SnapshotStore.latestVersion(root))
+      .map(f => java.nio.file.Paths.get(f))
+    def away(f: java.nio.file.Path) = f.resolveSibling(s"${f.getFileName}.away")
+    files.foreach(f => java.nio.file.Files.move(f, away(f)))
+    try spark.table(s"r17b_snap.$table").schema
+    finally files.foreach(f => java.nio.file.Files.move(away(f), f))
+  }
+
   test("loadTable on a pinned-schema store opens no data files") {
     val root = typedStore("typed")
     registerCatalog()
     assert(SnapshotStore.manifestMeta(root, 1).contains("schema"),
       "stats commits pin #schema")
-    val before = GraftCatalog.footerInferences.get()
-    val n = spark.sql("SELECT count(*) AS n FROM r17b_snap.typed")
-      .head.getLong(0)
-    assert(n == 80)
-    assert(GraftCatalog.footerInferences.get() == before,
-      "schema came from the manifest header, not footer inference")
+    assert(schemaWithoutData(root, "typed").fieldNames.toSeq ==
+      Seq("ts", "tid", "label", "amount"),
+      "schema came from the manifest header, not a footer")
+    assert(spark.sql("SELECT count(*) AS n FROM r17b_snap.typed")
+      .head.getLong(0) == 80)
   }
 
-  test("a legacy manifest without #schema falls back to inference") {
+  test("a manifest without #schema resolves its schema from the commit marker") {
     val root = s"$wh/legacy"
     SnapshotStore.commitAppend(
       spark.range(5).select(col("id").as("tid")), root)
-    // strip the #schema header the way a legacy manifest lacks it
+    // strip the #schema header
     val mf = new java.io.File(s"$root/_manifests/v1.list")
     val kept = new String(java.nio.file.Files.readAllBytes(mf.toPath))
       .split("\n").filterNot(_.startsWith("#schema")).mkString("\n")
     java.nio.file.Files.write(mf.toPath, kept.getBytes)
     registerCatalog()
-    val before = GraftCatalog.footerInferences.get()
+    assert(schemaWithoutData(root, "legacy").fieldNames.toSeq == Seq("tid"),
+      "no header: the commit's _schema.ddl marker, not a footer")
     assert(spark.sql("SELECT count(*) AS n FROM r17b_snap.legacy")
       .head.getLong(0) == 5)
-    assert(GraftCatalog.footerInferences.get() > before,
-      "no header → footer inference is the only source")
   }
 
   test("#schema merges across appends and survives compaction/delete") {

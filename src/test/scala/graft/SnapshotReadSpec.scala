@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import graft.sources.{BloomIndex, SnapshotRead, SnapshotStore}
 
 /** The snapshot store's one read planner: every read face returns the
-  * same columns and rows on every store shape, building a read runs no
+  * same columns and rows on every store shape (and `snapshotDiff` those
+  * columns and the rows the reads differ by), building a read runs no
   * Spark job, and Bloom filters are sized from the data they index. */
 class SnapshotReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -52,11 +53,52 @@ class SnapshotReadSpec extends AnyFunSuite {
     },
     "empty" -> { root =>
       SnapshotStore.createEmpty(root, StructType.fromDDL("k BIGINT, v DOUBLE"))
+    },
+    "added_column_deleted" -> { root =>
+      SnapshotStore.commitAppend(kv(0, 10), root)
+      SnapshotStore.addColumns(root, Seq(StructField("c", org.apache.spark.sql.types.LongType)))
+      SnapshotStore.commitAppend(
+        kv(10, 20).withColumn("c", col("k") * 100), root)
+      // one file written before the column was added, one after
+      SnapshotStore.deleteRows(spark, root, col("k") === 3L || col("k") === 13L)
     })
 
   private def shape(df: DataFrame): (Seq[(String, String)], Seq[String]) =
     (df.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq,
       df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+
+  /** `df`'s rows over `cols`, a column `df` lacks read as null. */
+  private def rowsOver(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(c =>
+      if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+      .collect().map(_.toSeq.mkString("|")).toSeq
+
+  /** Why `snapshotDiff(v1, latest)` disagrees with the reads of the two
+    * versions, for every version v1: its columns must be the read's
+    * plus (change, n), and its added and removed rows the multiset
+    * differences of the two reads. */
+  private def diffFailures(root: String): Seq[String] = {
+    val last = SnapshotStore.latestVersion(root)
+    val cols = SnapshotStore.read(spark, root).columns.toSeq
+    val lastRows = rowsOver(SnapshotStore.read(spark, root), cols)
+    SnapshotStore.versions(root).flatMap { v1 =>
+      try {
+        val d = SnapshotStore.snapshotDiff(spark, root, v1, last)
+        if (d.columns.toSeq != cols :+ "change" :+ "n")
+          Some(s"diff($v1,$last) columns ${d.columns.mkString(",")}")
+        else {
+          val v1Rows = rowsOver(SnapshotStore.read(spark, root, Some(v1)), cols)
+          val got = d.collect().toSeq
+          def side(change: String) = got.filter(_.getAs[String]("change") == change)
+            .flatMap(r => Seq.fill(r.getAs[Long]("n").toInt)(
+              r.toSeq.take(cols.size).mkString("|"))).sorted
+          if (side("added") == lastRows.diff(v1Rows).sorted &&
+              side("removed") == v1Rows.diff(lastRows).sorted) None
+          else Some(s"diff($v1,$last) rows ${got.mkString(" ")}")
+        }
+      } catch { case e: Exception => Some(s"diff($v1,$last): $e") }
+    }
+  }
 
   test("every read face returns the same columns and rows on every store shape") {
     val failures = shapes.flatMap { case (name, build) =>
@@ -70,8 +112,11 @@ class SnapshotReadSpec extends AnyFunSuite {
         face -> (try Right(shape(df())) catch { case e: Exception => Left(e.toString) })
       }
       val distinct = got.map(_._2).distinct
-      if (distinct.size == 1 && distinct.head.isRight) None
-      else Some(s"$name: " + got.map { case (f, r) => s"$f=$r" }.mkString("; "))
+      if (distinct.size == 1 && distinct.head.isRight) {
+        val diffs = diffFailures(root)
+        if (diffs.isEmpty) None
+        else Some(s"$name: snapshotDiff " + diffs.mkString("; "))
+      } else Some(s"$name: " + got.map { case (f, r) => s"$f=$r" }.mkString("; "))
     }
     assert(failures.isEmpty, failures.mkString("\n"))
     // the shapes' own contracts, on the agreed answer
@@ -81,6 +126,8 @@ class SnapshotReadSpec extends AnyFunSuite {
     assert(SnapshotStore.read(spark, s"$wh/partitioned").columns.toSeq == Seq("k", "p"))
     assert(SnapshotStore.read(spark, s"$wh/partition_evolved").count() == 24)
     assert(SnapshotStore.read(spark, s"$wh/empty").columns.toSeq == Seq("k", "v"))
+    val deleted = SnapshotStore.read(spark, s"$wh/added_column_deleted")
+    assert(deleted.count() == 18 && deleted.filter(col("c").isNotNull).count() == 9)
   }
 
   test("building a read of a pinned flat store runs no Spark job") {
