@@ -123,8 +123,8 @@ object TextAnalysis {
     *  - `dup_10gram_frac`: same over word 10-grams — catches long
     *    templated spans exact-line dedup misses;
     *  - `top_bigram_frac`: occurrence share of the most frequent word
-    *    bigram, via explode -> count -> max, both shuffles keyed by
-    *    doc_id (scales with corpus size, never all-pairs);
+    *    bigram, the longest run in the doc's sorted bigram array (array
+    *    ops, no shuffle);
     *  - `repetition_ok`: the conjunction gate (thresholds are the
     *    operator's parameters, defaults in the Gopher ballpark).
     *
@@ -132,21 +132,17 @@ object TextAnalysis {
     * engine. Divergence from the paper (documented): fractions count
     * repeated ITEMS, not characters inside repeated items. */
   def repetitionMetrics(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxDupLineFrac: Double = 0.3,
-      maxTopBigramFrac: Double = 0.2, maxDup10gramFrac: Double = 0.5)
+      maxDupLineFrac: Double = 0.3, maxTopBigramFrac: Double = 0.2,
+      maxDup10gramFrac: Double = 0.5)
       : DataFrame = {
     val lines = col("_lines")
     val tengrams = col("_tg")
-    // materialized: feeds BOTH the topBg explode branch and the final
-    // join, and explode's implicit size>0 filter would otherwise
-    // re-inline the shingle HOFs into a per-element Filter (the
-    // Caches.materialize contract)
-    val base = graft.util.Caches.materialize(docs
+    docs
       .withColumn("_lines",
         filter(split(col(textCol), "\n"), l => length(trim(l)) > 0))
       .withColumn("_w", TextDedup.words(col(textCol)))
       .withColumn("_tg", rawShingles(col("_w"), 10))
-      .withColumn("_bg", rawShingles(col("_w"), 2)))
+      .withColumn("_bg", rawShingles(col("_w"), 2))
       .withColumn("n_lines", size(lines))
       .withColumn("dup_line_frac",
         when(size(lines) > 0,
@@ -157,12 +153,16 @@ object TextAnalysis {
           (size(tengrams) - size(array_distinct(tengrams))).cast("double")
             / size(tengrams)))
       .withColumn("n_bigrams", size(col("_bg")))
-    // top-bigram share: explode -> per-(doc, bigram) counts -> per-doc
-    // max; join back on doc_id
-    val topBg = base.select(col(idCol), explode(col("_bg")).as("_b"))
-      .groupBy(col(idCol), col("_b")).agg(count(lit(1)).as("_c"))
-      .groupBy(col(idCol)).agg(max(col("_c")).as("_top"))
-    base.join(topBg, Seq(idCol), "left")
+      // the top bigram's count: the longest run of equal bigrams in the
+      // doc's sorted bigram array, one per-doc fold
+      .withColumn("_top", aggregate(array_sort(col("_bg")),
+        struct(lit(null).cast("string").as("p"), lit(0).as("c"),
+          lit(0).as("m")),
+        (acc, b) => {
+          val c = when(b === acc("p"), acc("c") + 1).otherwise(lit(1))
+          struct(b.as("p"), c.as("c"), greatest(acc("m"), c).as("m"))
+        },
+        acc => acc("m")))
       .withColumn("top_bigram_frac",
         when(col("n_bigrams") > 0,
           col("_top").cast("double") / col("n_bigrams")))
@@ -248,10 +248,8 @@ object TextAnalysis {
     * join of duplicated hashes. */
   def sourceStats(docs: DataFrame, textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    // hashed feeds the dup-hash aggregate AND the probe side of the
-    // join — materialize or the corpus is normalized+sha256'd twice
-    val hashed = graft.util.Caches.materialize(
-      docs.withColumn("_h", sha2(TextDedup.normText(col(textCol)), 256)))
+    val hashed =
+      docs.withColumn("_h", sha2(TextDedup.normText(col(textCol)), 256))
     val dupHashes = hashed.groupBy(col("_h"))
       .agg(count(lit(1)).as("_n")).filter(col("_n") >= 2)
       .select(col("_h"), lit(true).as("_dup"))
@@ -362,11 +360,9 @@ object TextAnalysis {
     * the driver-side merge, so `k` bounds memory at any corpus size. */
   def topNgrams(docs: DataFrame, n: Int = 2, k: Int = 100,
       textCol: String = "text"): DataFrame =
-    // materialized: explode's implicit size>0 pushdown would re-inline
-    // the words projection into the transform lambda (Caches contract)
-    graft.util.Caches.materialize(docs
+    docs
       .select(TextDedup.words(col(textCol)).as("_w"))
-      .filter(size(col("_w")) >= n))
+      .filter(size(col("_w")) >= n)
       .select(explode(rawShingles(col("_w"), n)).as("ngram"))
       .groupBy(col("ngram")).agg(count(lit(1)).as("n_occurrences"))
       .orderBy(col("n_occurrences").desc, col("ngram").asc)
@@ -385,8 +381,8 @@ object TextAnalysis {
   def dupNgramFrac(hashedCorpus: DataFrame, minDf: Int = 2,
       maxDupFrac: Double = 0.5, idCol: String = "doc_id",
       hashesCol: String = "hs"): DataFrame = {
-    val posting = graft.util.Caches.materialize(
-      hashedCorpus.select(col(idCol), explode(col(hashesCol)).as("_h")))
+    val posting =
+      hashedCorpus.select(col(idCol), explode(col(hashesCol)).as("_h"))
     val dup = posting.groupBy(col("_h"))
       .agg(count(lit(1)).as("_df")).filter(col("_df") >= minDf)
       .select(col("_h"), lit(true).as("_dup"))
@@ -413,9 +409,9 @@ object TextAnalysis {
     * aggregate + a map-side join, no corpus shuffle. */
   def langBalancedSample(docs: DataFrame, langCol: String = "lang",
       idCol: String = "doc_id"): DataFrame = {
-    // counts feeds BOTH the min aggregate and the rates join — without
-    // the barrier each branch re-scans the corpus (Caches contract)
-    val counts = graft.util.Caches.materialize(
+    // bounded-collect(one row per language): counts feeds BOTH the min
+    // aggregate and the rates join, which then run no corpus scan
+    val counts = graft.util.Caches.local(
       docs.groupBy(col(langCol)).agg(count(lit(1)).as("_n")))
     val minN = counts.agg(min(col("_n")).as("_mn"))
     val rates = counts.crossJoin(broadcast(minN))
@@ -441,13 +437,9 @@ object TextAnalysis {
     * rank order — not just the emitted score — is engine-exact. */
   def tfidfTopTerms(docs: DataFrame, k: Int = 5,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // tok has a single consumer (the tf aggregate) and words() holds
-    // no HOF lambda, so it needs no cache barrier; tf feeds BOTH the
-    // df roll-up and the scored join — that one is materialized
-    val tok = docs.select(col(idCol),
-      explode(TextDedup.words(col(textCol))).as("word"))
-    val tf = graft.util.Caches.materialize(
-      tok.groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
+    val tf = docs
+      .select(col(idCol), explode(TextDedup.words(col(textCol))).as("word"))
+      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("_n"))
     val scored = tf.join(dfreq, "word")
@@ -525,9 +517,8 @@ object TextAnalysis {
     * ulp, so raw doubles could never hash-match across engines. */
   def unigramLogprob(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val tok = graft.util.Caches.materialize(
-      docs.select(col(idCol),
-        explode(TextDedup.words(col(textCol))).as("word")))
+    val tok = docs.select(col(idCol),
+      explode(TextDedup.words(col(textCol))).as("word"))
     val counts = tok.groupBy(col("word")).agg(count(lit(1)).as("_c"))
     val totals = counts.agg(sum(col("_c")).as("_total"),
       count(lit(1)).as("_vocab"))
@@ -564,6 +555,8 @@ object TextAnalysis {
   def bigramLogprob(docs: DataFrame, lambda: Double = 0.7,
       backoff: Double = 0.3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
+    // kept: the words feed the unigram and the pair branches, and
+    // without it the plan scans the corpus 5 times (the audit's cap is 4)
     val base = graft.util.Caches.materialize(
       docs.select(col(idCol), TextDedup.words(col(textCol)).as("_w")))
     val tok = base.select(col(idCol), explode(col("_w")).as("word"))
@@ -571,10 +564,7 @@ object TextAnalysis {
     val totals = uni.agg(sum(col("_cu")).as("_total"),
       count(lit(1)).as("_vocab"))
     val pairs = base.filter(size(col("_w")) >= 2)
-      .select(col(idCol), explode(zip_with(
-        slice(col("_w"), lit(1), size(col("_w")) - 1),
-        slice(col("_w"), lit(2), size(col("_w")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("_p"))
+      .select(col(idCol), explode(adjacentPairs(col("_w"))).as("_p"))
       .select(col(idCol), col("_p.w1").as("_w1"), col("_p.w2").as("_w2"))
     val bigc = pairs.groupBy(col("_w1"), col("_w2"))
       .agg(count(lit(1)).as("_cb"))
@@ -598,18 +588,17 @@ object TextAnalysis {
   /** One-row corpus "dataset card" — the summary block a curation run
     * publishes with its output: volume (docs/chars/words), source and
     * language coverage, exact-duplicate rate, and language-balance
-    * entropy. One scan: the per-doc projection (word count + text
-    * hash) is materialized once and feeds both the global aggregate
-    * and the language-distribution entropy; the entropy terms are
+    * entropy. The per-doc projection (word count + text hash) feeds
+    * both the global aggregate and the language-distribution entropy;
+    * the entropy terms are
     * 6-decimal-quantized before the order-free decimal sum (ln parity,
     * same contract as [[unigramLogprob]]). Every aggregate is
     * map-side-combining; nothing collects. */
   def datasetCard(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val base = graft.util.Caches.materialize(
-      docs.select(col(idCol), col("source"), col("lang"), col("n_chars"),
-        size(TextDedup.words(col(textCol))).as("_nw"),
-        sha2(TextDedup.normText(col(textCol)), 256).as("_h")))
+    val base = docs.select(col(idCol), col("source"), col("lang"),
+      col("n_chars"), size(TextDedup.words(col(textCol))).as("_nw"),
+      sha2(TextDedup.normText(col(textCol)), 256).as("_h"))
     val card = base.agg(
       count(lit(1)).as("n_docs"),
       countDistinct(col("source")).as("n_sources"),
@@ -837,6 +826,25 @@ object TextAnalysis {
           .as("cum_frac"))
   }
 
+  /** Adjacent word pairs of a words array, as (w1, w2) structs. */
+  private def adjacentPairs(w: Column): Column =
+    zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
+      (a, b) => struct(a.as("w1"), b.as("w2")))
+
+  /** The corpus bigram count table (w1, w2, `countCol`) that
+    * [[kneserNeyBigrams]] and [[collocations]] both model: the pair
+    * stream collapses to it in ONE corpus-sized shuffle. Each model
+    * reads it four times (the table plus three aggregates over it)
+    * through one plan, with no barrier: persisting it measured no
+    * faster and no fewer jobs for either model. */
+  private def bigramCounts(docs: DataFrame, textCol: String,
+      countCol: String): DataFrame =
+    docs.select(TextDedup.words(col(textCol)).as("_w"))
+      .filter(size(col("_w")) >= 2)
+      .select(explode(adjacentPairs(col("_w"))).as("_p"))
+      .groupBy(col("_p.w1").as("w1"), col("_p.w2").as("w2"))
+      .agg(count(lit(1)).as(countCol))
+
   /** Shared algebra for the Kneser–Ney probability over pre-cast
     * double columns (cbd = bigram count, cctxd = context total, nfd =
     * distinct continuations of w1, npd = distinct predecessors of w2,
@@ -860,16 +868,8 @@ object TextAnalysis {
     * probability is a per-row exactly-rounded IEEE chain — no
     * cross-row float sums anywhere. */
   def kneserNeyBigrams(docs: DataFrame, k: Int = 100,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val base = docs.select(col(idCol), TextDedup.words(col(textCol)).as("_w"))
-    val pairs = base.filter(size(col("_w")) >= 2)
-      .select(explode(zip_with(
-        slice(col("_w"), lit(1), size(col("_w")) - 1),
-        slice(col("_w"), lit(2), size(col("_w")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("_p"))
-      .select(col("_p.w1").as("w1"), col("_p.w2").as("w2"))
-    val bigc = graft.util.Caches.materialize(
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))
+      textCol: String = "text"): DataFrame = {
+    val bigc = bigramCounts(docs, textCol, "cb")
     val ctx = bigc.groupBy(col("w1"))
       .agg(sum(col("cb")).as("cctx"), count(lit(1)).as("n_follow"))
     val prec = bigc.groupBy(col("w2")).agg(count(lit(1)).as("n_prec"))
@@ -975,9 +975,8 @@ object TextAnalysis {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val d6 = org.apache.spark.sql.types.DataTypes.createDecimalType(12, 6)
     val d22 = org.apache.spark.sql.types.DataTypes.createDecimalType(22, 8)
-    val base = graft.util.Caches.materialize(
-      docs.select(col(idCol).as("_id"),
-        TextDedup.words(col(textCol)).as("_w")))
+    val base =
+      docs.select(col(idCol).as("_id"), TextDedup.words(col(textCol)).as("_w"))
     val minmax = base.agg(min(col("_id")).as("_lo"), max(col("_id")).as("_hi"))
     def bucketOf(idc: org.apache.spark.sql.Column) =
       expr(s"((${idc.toString} - _lo) * $nBuckets) div (_hi - _lo + 1)")
@@ -1099,16 +1098,16 @@ object TextAnalysis {
     * llm_dup_ngram_frac representation) joined to the deterministic
     * [[splitAssign]] labels, so only 4-byte hashes cross the wire.
     *
-    * Shape: one posting explode (materialized — it feeds both the
-    * train-set distinct and the eval probe), a hash-keyed DISTINCT
+    * Shape: one posting explode (it feeds both the train-set distinct
+    * and the eval probe), a hash-keyed DISTINCT
     * over train postings, and a hash-keyed left join of the eval
     * postings against it — all equi-shuffles on the hash; output is
     * two rows. No corpus-sized collect, no cartesian. */
   def ngramNovelty(hashed: DataFrame, splits: DataFrame,
       idCol: String = "doc_id", hashesCol: String = "hs"): DataFrame = {
-    val posting = graft.util.Caches.materialize(
+    val posting =
       hashed.join(splits.select(col(idCol), col("split")), Seq(idCol))
-        .select(col(idCol), col("split"), explode(col(hashesCol)).as("_h")))
+        .select(col(idCol), col("split"), explode(col(hashesCol)).as("_h"))
     val trainSet = posting.filter(col("split") === "train")
       .select(col("_h")).distinct()
       .withColumn("_seen", lit(true))
@@ -1140,13 +1139,15 @@ object TextAnalysis {
   def klDrift(docs: DataFrame, splits: DataFrame,
       evalSplits: Seq[String] = Seq("val", "test"),
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val counts = graft.util.Caches.materialize(
-      docs.join(splits.select(col(idCol), col("split")), Seq(idCol))
-        .select(col("split"),
-          explode(TextDedup.words(col(textCol))).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("split"), col("w"))
-        .agg(count(lit(1)).as("c")))
+    // kept: each eval split reads the table twice and the train side
+    // twice more; without it the plan scans the corpus 16 times (the
+    // audit's cap is 4)
+    val counts = graft.util.Caches.materialize(docs
+      .join(splits.select(col(idCol), col("split")), Seq(idCol))
+      .select(col("split"), explode(TextDedup.words(col(textCol))).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy(col("split"), col("w"))
+      .agg(count(lit(1)).as("c")))
     val train = counts.filter(col("split") === "train")
       .select(col("w"), col("c").as("ct"))
     val frames = evalSplits.map { sp =>
@@ -1198,16 +1199,7 @@ object TextAnalysis {
     * 9-dp-quantized; ties on the rounded PMI break on (w1, w2). */
   def collocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
       textCol: String = "text"): DataFrame = {
-    val base = graft.util.Caches.materialize(
-      docs.select(TextDedup.words(col(textCol)).as("_w"))
-        .filter(size(col("_w")) >= 2))
-    val pairs = base.select(explode(zip_with(
-      slice(col("_w"), lit(1), size(col("_w")) - 1),
-      slice(col("_w"), lit(2), size(col("_w")) - 1),
-      (a, b) => struct(a.as("w1"), b.as("w2")))).as("_p"))
-      .select(col("_p.w1").as("w1"), col("_p.w2").as("w2"))
-    val bigc = graft.util.Caches.materialize(
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy")))
+    val bigc = bigramCounts(docs, textCol, "c_xy")
     val left = bigc.groupBy(col("w1")).agg(sum(col("c_xy")).as("c_x"))
     val right = bigc.groupBy(col("w2")).agg(sum(col("c_xy")).as("c_y"))
     val total = bigc.agg(sum(col("c_xy")).as("n_pairs"))

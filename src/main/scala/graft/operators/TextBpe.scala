@@ -167,6 +167,8 @@ object TextBpe {
       vocabRows / RowsPerPartition + 1)).toInt
     if (parts > 1) mergeLoop(docs.sparkSession, first, parts, nMerges)
     else {
+      // bounded-collect(one row: the model learned in one task over a
+      // vocabulary of at most RowsPerPartition words)
       val (merges, initCounts, words) =
         try first.coalesce(1)
           .mapPartitions(it => Iterator(learn(it.toArray, nMerges)))
@@ -235,6 +237,7 @@ object TextBpe {
         case Some((l, r)) => graft.util.Caches.snapshotRdd(folded(state, l, r))
         case None => state
       }
+      // bounded-collect(one row per partition: its best pair)
       val best = pairTotals(cur, parts, _ => true)
         .mapPartitions(it => it.map { case ((l, r), c) => (l, r, c) }
           .minOption(Rank).iterator)
@@ -250,6 +253,7 @@ object TextBpe {
       }
     }
     val wanted = sc.broadcast(merges.map(m => (m.l_sym, m.r_sym)).toSet)
+    // bounded-collect(nMerges rows: the learned pairs' counts)
     val initCounts = pairTotals(base, parts, p => wanted.value.contains(p))
       .collect().toMap
     wanted.destroy()

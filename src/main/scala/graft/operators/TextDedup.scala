@@ -309,8 +309,6 @@ object TextDedup {
   def minhashProbe(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", k: Int = 12,
       threshold: Double = 0.5): DataFrame = {
-    val newH = Caches.materialize(newDocs)
-    val oldH = Caches.materialize(oldDocs)
     def explodeBands(df: DataFrame) = {
       val sigd = df.select(col(idCol),
         graft.functions.TextHashColumns.minhashSigs(col("hs"),
@@ -319,15 +317,15 @@ object TextDedup {
       sigd.select(col(idCol),
         explode(array(bands(sigCols): _*)).as("band_val"))
     }
-    val candidates = explodeBands(newH)
+    val candidates = explodeBands(newDocs)
       .select(col(idCol).as("id_new"), col("band_val"))
-      .join(explodeBands(oldH)
+      .join(explodeBands(oldDocs)
         .select(col(idCol).as("id_old"), col("band_val")), "band_val")
       .select(col("id_new"), col("id_old")).distinct()
     candidates
-      .join(newH.select(col(idCol).as("id_new"), col("hs").as("_ha")),
+      .join(newDocs.select(col(idCol).as("id_new"), col("hs").as("_ha")),
         "id_new")
-      .join(oldH.select(col(idCol).as("id_old"), col("hs").as("_hb")),
+      .join(oldDocs.select(col(idCol).as("id_old"), col("hs").as("_hb")),
         "id_old")
       .select(col("id_new"), col("id_old"),
         jaccard(col("_ha"), col("_hb")).as("jaccard"))
@@ -349,36 +347,44 @@ object TextDedup {
       idCol: String = "doc_id",
       maxDf: Int = 20,
       threshold: Double = 0.3,
-      tokensCol: String = "shingles"): DataFrame = {
-    // NOTE (r20, measured): Caches.widen before this materialize was
-    // tried and REVERTED — the corpus here carries PRE-HASHED int
-    // arrays (cheap single-task explode), so the widening exchange
-    // cost more than it saved (idle A/B: ngram 2.8 vs 3.1 s,
-    // containment 3.2 vs 3.8 s). Contrast TextRetrieval's
-    // string-shingle explode, where widen is a 2x win.
-    val cachedCorpus = Caches.materialize(corpus)
-    val posting = cachedCorpus
+      tokensCol: String = "shingles"): DataFrame =
+    postingCounts(corpus, idCol, maxDf, tokensCol)
+      .select(col("id_a"), col("id_b"),
+        (col("common").cast("double") /
+          (col("sz_a") + col("sz_b") - col("common"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** The inverted-index kernel of [[invertedIndexPairs]] and
+    * [[containmentPairs]]: (id_a, id_b, common, sz_a, sz_b) for every
+    * pair id_a < id_b sharing a posting of df ≤ `maxDf`, where common
+    * counts the shared postings and sz the doc's postings in the same
+    * capped index.
+    *
+    * NOTE (r20, measured): Caches.widen ahead of the explode was
+    * tried and REVERTED — the corpus here carries PRE-HASHED int
+    * arrays (cheap single-task explode), so the widening exchange
+    * cost more than it saved (idle A/B: ngram 2.8 vs 3.1 s,
+    * containment 3.2 vs 3.8 s). Contrast TextRetrieval's
+    * string-shingle explode, where widen is a 2x win. */
+  private def postingCounts(corpus: DataFrame, idCol: String, maxDf: Int,
+      tokensCol: String): DataFrame = {
+    val posting = corpus
       .select(col(idCol), explode(col(tokensCol)).as("shingle"))
     val rare = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("_df"))
       .filter(col("_df") <= maxDf)
       .select(col("shingle"))
-    // pruned feeds three branches (sizes + both sides of the posting
-    // self-join) — materialize so they don't each re-run the explode
+    // kept: pruned feeds sizes and both sides of the self-join, and
+    // without it the plan scans the corpus 8 times (the audit's cap is 4)
     val pruned = Caches.materialize(posting.join(rare, "shingle"))
     val sizes = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("_sz"))
-    val common = pruned.select(col(idCol).as("id_a"), col("shingle"))
+    pruned.select(col(idCol).as("id_a"), col("shingle"))
       .join(pruned.select(col(idCol).as("id_b"), col("shingle")), "shingle")
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("_common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("_sz").as("_sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("_sz").as("_sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("_common").cast("double") /
-          (col("_sz_a") + col("_sz_b") - col("_common"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .agg(count(lit(1)).as("common"))
+      .join(sizes.select(col(idCol).as("id_a"), col("_sz").as("sz_a")), "id_a")
+      .join(sizes.select(col(idCol).as("id_b"), col("_sz").as("sz_b")), "id_b")
   }
 
   /** Exact substring dedup — the canonical LLM-curation technique of
@@ -421,14 +427,11 @@ object TextDedup {
       k: Int = 8,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    // tokens + positional grams staged per the HOF contract, then
-    // materialized: the frame feeds the posting explode AND the final
-    // survivor pass (two branches — without the barrier the word
-    // split and gram build run twice)
-    val staged = Caches.materialize(
-      docs.select(col(idCol), words(col(textCol)).as("_w"))
-        .select(col(idCol), col("_w"),
-          rawWordShingles(col("_w"), k).as("_g")))
+    // tokens staged per the HOF contract; the grams are built INSIDE
+    // the posexplode: over a `_g` attribute, Catalyst would infer
+    // size(_g) > 0, push it below the projection and re-inline the word
+    // split into the gram lambda per element (measured 13x)
+    val staged = docs.select(col(idCol), words(col(textCol)).as("_w"))
     // grams join on their 60-bit sha hash, not the raw ≥k-token
     // string: the k-gram text is ~50 bytes and crosses TWO shuffles
     // (dup-gram aggregate + flag join) at one posting per token —
@@ -437,7 +440,8 @@ object TextDedup {
     // are negligible (and a collision only over-removes one window);
     // the oracle hashes identically so parity is unaffected.
     val posGram = staged
-      .select(col(idCol), posexplode(col("_g")).as(Seq("_p0", "g")))
+      .select(col(idCol),
+        posexplode(rawWordShingles(col("_w"), k)).as(Seq("_p0", "g")))
       .select(col(idCol), (col("_p0") + 1).as("p"),
         wordHash60(col("g")).as("h"))
     val dupGrams = posGram.groupBy(col("h"))
@@ -473,46 +477,23 @@ object TextDedup {
     * C(A,B) = |A∩B|/|A| ≈ 1. Emits, per candidate pair above the
     * max-containment threshold, both directed containments plus the
     * dominant direction (Broder's resemblance-vs-containment split,
-    * the dedup literature's standard pairing). Same inverted-index
-    * shape, candidates, and df cap as [[invertedIndexPairs]] — only
-    * the final similarity algebra differs, so the scale story
-    * (posting equi-joins, no all-pairs) is identical. */
+    * the dedup literature's standard pairing). One select over the
+    * same [[postingCounts]] kernel as [[invertedIndexPairs]]: the
+    * candidates, df cap and scale story (posting equi-joins, no
+    * all-pairs) are shared, only the similarity algebra differs. */
   def containmentPairs(
       corpus: DataFrame,
       idCol: String = "doc_id",
       maxDf: Int = 20,
       threshold: Double = 0.9,
-      tokensCol: String = "shingles"): DataFrame = {
-    // NOTE (r20, measured): Caches.widen before this materialize was
-    // tried and REVERTED — the corpus here carries PRE-HASHED int
-    // arrays (cheap single-task explode), so the widening exchange
-    // cost more than it saved (idle A/B: ngram 2.8 vs 3.1 s,
-    // containment 3.2 vs 3.8 s). Contrast TextRetrieval's
-    // string-shingle explode, where widen is a 2x win.
-    val cachedCorpus = Caches.materialize(corpus)
-    val posting = cachedCorpus
-      .select(col(idCol), explode(col(tokensCol)).as("shingle"))
-    val rare = posting.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxDf)
-      .select(col("shingle"))
-    val pruned = Caches.materialize(posting.join(rare, "shingle"))
-    val sizes = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("_sz"))
-    val common = pruned.select(col(idCol).as("id_a"), col("shingle"))
-      .join(pruned.select(col(idCol).as("id_b"), col("shingle")), "shingle")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("_common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("_sz").as("_sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("_sz").as("_sz_b")), "id_b")
+      tokensCol: String = "shingles"): DataFrame =
+    postingCounts(corpus, idCol, maxDf, tokensCol)
       .select(col("id_a"), col("id_b"),
-        (col("_common").cast("double") / col("_sz_a")).as("contain_a_in_b"),
-        (col("_common").cast("double") / col("_sz_b")).as("contain_b_in_a"))
+        (col("common").cast("double") / col("sz_a")).as("contain_a_in_b"),
+        (col("common").cast("double") / col("sz_b")).as("contain_b_in_a"))
       .withColumn("containment",
         greatest(col("contain_a_in_b"), col("contain_b_in_a")))
       .filter(col("containment") >= threshold)
-  }
 
   /** EXACT all-pairs Jaccard similarity join via PREFIX FILTERING
     * (SSJoin/PPJoin, Chaudhuri et al. 2006 / Xiao et al. 2008) — the
@@ -654,12 +635,12 @@ object TextDedup {
     * join+aggregate plus one self-join over the label table. Inputs
     * and intermediates stay distributed; only the per-round changed
     * flag hits the driver. `edgeCount` (both directions) sizes the
-    * loop's shuffles. */
+    * loop's shuffles. Every round reads `pairs` again: the caller
+    * passes its persisted pair list. */
   private[graft] def labelPropagation(pairs: DataFrame, edgeCount: Long)
       : DataFrame = {
-    val edges = Caches.materialize(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
     // Size the loop's shuffles to the GRAPH, not the session's scan
     // parallelism: the label/edge tables are tiny relative to the
     // corpus (only near-dup participants), and every round runs ~4
@@ -717,9 +698,6 @@ object TextDedup {
     }
     require(converged,
       s"label propagation did not converge within $maxRounds rounds")
-    // the result plan reads only the final (checkpointed) labels —
-    // the edge cache is dead weight from here on
-    edges.unpersist()
     // bind the (checkpointed) result back to the caller's session so
     // downstream plans use the caller's conf, not the loop's
     org.apache.spark.sql.GraftBridge.bindTo(
@@ -770,8 +748,10 @@ object TextDedup {
       estimatedItems: Long = 1L << 16, numBits: Long = 1L << 20)
       : DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    // snapshot, not persist: the bench subtree also appears inside
-    // llm_decontaminate's plan (cache-manager rewrite gotcha)
+    // kept: the bench set feeds the Bloom subquery and the verify join,
+    // and without it the plan scans documents 5 times (the audit's cap
+    // is 4). A snapshot, not a persist: the same subtree also appears
+    // inside llm_decontaminate's plan (cache-manager rewrite gotcha)
     val bench = graft.util.Caches.snapshot(
       benchmark.select(explode(col(tokensCol)).as("_bh")).distinct())
     // scalar subquery, not a broadcast-join column: might_contain
@@ -814,15 +794,7 @@ object TextDedup {
       concat_ws(":", lit(c.toString),
         shiftright(col("simhash"), c * chunkBits).bitwiseAND(lit(chunkMask)))
     }
-    // both sides of the chunk self-join read the signatures — cache
-    // them or the whole simhash pass runs twice.
-    // Like the signature tables in minhashNearDups/invertedIndexPairs,
-    // the cache lives until the session drops it: the returned plan is
-    // lazy, so unpersisting here would un-cache before the caller's
-    // action runs. Signatures are one row per doc — small relative to
-    // the corpus by construction.
-    val cached = Caches.materialize(sims)
-    val exploded = cached.select(col(idCol), col("simhash"),
+    val exploded = sims.select(col(idCol), col("simhash"),
       explode(array(chunks: _*)).as("chunk"))
     exploded.select(col(idCol).as("id_a"), col("simhash").as("_h_a"), col("chunk"))
       .join(exploded.select(col(idCol).as("id_b"),
@@ -855,13 +827,11 @@ object TextDedup {
     * DISTINCT over it equals DISTINCT over the shingle). */
   def sourceOverlap(docs: DataFrame, n: Int = 5,
       textCol: String = "text", srcCol: String = "source"): DataFrame = {
-    val hs = Caches.materialize(
-      docs.select(col(srcCol).as("src"), words(col(textCol)).as("_w"))
-        .filter(size(col("_w")) >= n)
-        .select(col("src"),
-          explode(wordShingles(col("_w"), n)).as("sg"))
-        .distinct()
-        .select(col("sg").as("h"), col("src")))
+    val hs = docs.select(col(srcCol).as("src"), words(col(textCol)).as("_w"))
+      .filter(size(col("_w")) >= n)
+      .select(col("src"), explode(wordShingles(col("_w"), n)).as("sg"))
+      .distinct()
+      .select(col("sg").as("h"), col("src"))
     val totals = hs.groupBy(col("src")).agg(count(lit(1)).as("n"))
     hs.select(col("h"), col("src").as("source_a"))
       .join(hs.select(col("h"), col("src").as("source_b")), "h")

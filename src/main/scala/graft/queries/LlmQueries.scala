@@ -320,20 +320,16 @@ object LlmQueries {
     * unchanged), which makes ground-truth cost CONSTANT at any corpus
     * size, exactly like the ANN audit's bounded query set. The oracle
     * derives the same modulus from count(*). */
-  // keyed like FrameMemo: the dir fingerprint invalidates the cached
+  // a FrameMemo value: the dir fingerprint invalidates the cached
   // modulus if the data under dir is regenerated within one
   // application (a stale modulus would silently disagree with the
   // oracle's live count(*))
-  private val sampleModCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), Long]
-
   private def sampleMod(s: SparkSession, dir: String): Long =
-    sampleModCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir,
-        graft.util.FrameMemo.dirFingerprint(dir)),
+    graft.util.FrameMemo.value(s, dir, "sample_mod") {
       // bounded-collect(single scalar: the corpus count sizes the
       // truth-sample modulus; O(1) driver state)
-      math.max(3L, (docs(s, dir).count() + 1699L) / 1700L))
+      math.max(3L, (docs(s, dir).count() + 1699L) / 1700L)
+    }
 
   /** The identical modulus in DuckDB. */
   private val sampleModSql =
@@ -990,51 +986,36 @@ object LlmQueries {
 
   private val BpeMerges = 24
 
-  /** One train-once cache entry: the driver-side model (merge list,
-    * initial count of each learned pair), filled under the slot's
-    * lock by the first caller. */
-  private final class BpeSlot {
-    var model: (Seq[TextBpe.Merge], Map[(String, String), Long]) = _
-  }
-
-  /** Train-once cache: the 24-merge training (one task on a vocabulary
-    * of one partition, one Spark job per merge beyond) runs exactly once
-    * per (applicationId, sf dir, dir fingerprint) — the same key as
-    * [[trainedQualModel]]: an identity hash is reusable after GC, and
-    * without the fingerprint an in-process regeneration of the data
-    * would be served a stale model the echo+verify oracle cannot
-    * catch. llm_bpe_train, llm_bpe_encode and llm_tok_compare all
-    * consume it. `getOrElseUpdate` may evaluate `new BpeSlot` twice
-    * but returns one winner, and the winner's lock makes the build
-    * itself run once even under concurrent first callers. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), BpeSlot]
-
-  /** The cached model plus the trainer's FINAL folded vocabulary,
-    * which rides a [[FrameMemo]] parquet side-table keyed by the same
-    * fingerprint: the encode entry reads it back instead of re-folding
-    * (a cross-query cached DataFrame cannot carry it — Bench/Verify
-    * unpersist all cache and checkpoint blocks between queries, which
-    * the parquet memo survives). Identical to
-    * `encodeWords(docs, merges)` by construction: the same
-    * [[TextBpe.fold]] applied in the same order. */
+  /** Train-once BPE model (merge list, initial count of each learned
+    * pair) plus the trainer's FINAL folded vocabulary. The 24-merge
+    * training (one task on a vocabulary of one partition, one Spark
+    * job per merge beyond) runs once per [[FrameMemo.value]] key, and
+    * builds only once under concurrent first callers: without the
+    * fingerprint an in-process regeneration of the data would be
+    * served a stale model the echo+verify oracle cannot catch.
+    * llm_bpe_train, llm_bpe_encode and llm_tok_compare all consume it.
+    * The vocabulary rides a [[FrameMemo]] parquet side-table written
+    * by the same build under the same fingerprint: the encode entry
+    * reads it back instead of re-folding (a cross-query cached
+    * DataFrame cannot carry it — Bench/Verify unpersist all cache and
+    * checkpoint blocks between queries, which the parquet memo
+    * survives). Identical to `encodeWords(docs, merges)` by
+    * construction: the same [[TextBpe.fold]] applied in the same
+    * order. */
   private def trainedBpe(s: SparkSession, dir: String)
       : ((Seq[TextBpe.Merge], Map[(String, String), Long]), DataFrame) = {
     val fp = graft.util.FrameMemo.dirFingerprint(dir)
-    val slot = bpeCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir, fp), new BpeSlot)
-    slot.synchronized {
-      var trained: TextBpe.Trained = null
-      val vocab = graft.util.FrameMemo.cached(s, dir, "bpe_final_vocab", fp) {
-        trained = TextBpe.trainFull(docs(s, dir), BpeMerges)
-        trained.vocab
-      }
-      if (trained != null) {
-        slot.model = (trained.merges, trained.initCounts)
-        trained.release()
-      }
-      (slot.model, vocab)
+    def vocab(build: => DataFrame) =
+      graft.util.FrameMemo.cached(s, dir, "bpe_final_vocab", fp)(build)
+    val model = graft.util.FrameMemo.value(s, dir, "bpe_model", fp) {
+      val trained = TextBpe.trainFull(docs(s, dir), BpeMerges)
+      try {
+        vocab(trained.vocab)
+        (trained.merges, trained.initCounts)
+      } finally trained.release()
     }
+    (model, vocab(throw new IllegalStateException(
+      "bpe_final_vocab is written by the bpe_model build")))
   }
 
   private def trainedMerges(s: SparkSession, dir: String)
@@ -1299,25 +1280,18 @@ object LlmQueries {
 
   import graft.operators.TextUnigramLm
 
-  /** Train-once cache, mirroring [[bpeCache]]: only the DRIVER-SIDE
-    * model (piece → micro-nat log-prob) and the per-iteration
-    * likelihood stats are cached — each entry rebuilds its cheap
-    * DataFrame side (one Viterbi fold over the Heaps-bounded word
-    * table) from the cached model, because cached DataFrames would
-    * not survive Verify's per-query cache cleanup. */
-  private val unigramCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      (Map[String, Long], Seq[TextUnigramLm.IterStat])]
-
-  // (applicationId, dir, fingerprint) key — see bpeCache
+  /** Train-once model ([[FrameMemo.value]], like [[trainedBpe]]):
+    * only the DRIVER-SIDE model (piece → micro-nat log-prob) and the
+    * per-iteration likelihood stats are memoized — each entry rebuilds
+    * its cheap DataFrame side (one Viterbi fold over the Heaps-bounded
+    * word table) from the model, because cached DataFrames would not
+    * survive Verify's per-query cache cleanup. */
   private def trainedUnigram(s: SparkSession, dir: String)
       : (Map[String, Long], Seq[TextUnigramLm.IterStat]) =
-    unigramCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir,
-        graft.util.FrameMemo.dirFingerprint(dir)), {
+    graft.util.FrameMemo.value(s, dir, "unigram_model") {
       val (m, st, _) = TextUnigramLm.train(docs(s, dir))
       (m, st)
-    })
+    }
 
   /** Shared word-frequency CTE (the same symbolization as the Spark
     * side's [[TextUnigramLm.wordFreq]]). */
@@ -1477,25 +1451,18 @@ object LlmQueries {
     * different inventories. */
   private val LossCompareMultis = 24
 
-  /** Train-once cache for the tight-budget model PAIR (count-pruned,
-    * loss-pruned), same key scheme as the other trainers. */
-  private val unigramLossCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      ((Map[String, Long], Seq[TextUnigramLm.IterStat]),
-        (Map[String, Long], Seq[TextUnigramLm.IterStat]))]
-
+  /** Train-once tight-budget model PAIR (count-pruned, loss-pruned),
+    * memoized like the other trainers. */
   private def trainedUnigramPair(s: SparkSession, dir: String)
       : ((Map[String, Long], Seq[TextUnigramLm.IterStat]),
         (Map[String, Long], Seq[TextUnigramLm.IterStat])) =
-    unigramLossCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir,
-        graft.util.FrameMemo.dirFingerprint(dir)), {
+    graft.util.FrameMemo.value(s, dir, "unigram_loss_pair") {
       val (mc, stc, _) = TextUnigramLm.train(docs(s, dir),
         pruneByLoss = false, targetMultis = LossCompareMultis)
       val (ml, stl, _) = TextUnigramLm.train(docs(s, dir),
         pruneByLoss = true, targetMultis = LossCompareMultis)
       ((mc, stc), (ml, stl))
-    })
+    }
 
   /** Likelihood-loss pruning vs count pruning (Kudo 2018 §3.2's
     * criterion applied at the same vocab budget): the trainer run
@@ -1582,20 +1549,14 @@ object LlmQueries {
 
   private val UnigramTopWords = 200
 
-  /** Train-once cache for the soft-EM model at the binding budget. */
-  private val unigramSoftCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      (Map[String, Long], Seq[TextUnigramLm.IterStat])]
-
+  /** Train-once soft-EM model at the binding budget. */
   private def trainedUnigramSoft(s: SparkSession, dir: String)
       : (Map[String, Long], Seq[TextUnigramLm.IterStat]) =
-    unigramSoftCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir,
-        graft.util.FrameMemo.dirFingerprint(dir)), {
+    graft.util.FrameMemo.value(s, dir, "unigram_soft") {
       val (m, st, _) = TextUnigramLm.trainSoft(docs(s, dir),
         targetMultis = LossCompareMultis)
       (m, st)
-    })
+    }
 
   /** Soft-EM vs hard-EM unigram training (r16 item 5 — the upper half
     * of the r15 ask that likelihood-loss pruning closed the minimum
@@ -1926,22 +1887,21 @@ object LlmQueries {
   /** The full corpus-curation funnel as one plan: per source, how many
     * documents enter, how many survive quality + repetition filters
     * AND are the canonical copy of their exact-dup class, and the
-    * surviving whitespace-token budget. Each metric operator stays its
-    * own composable stage (joined by doc_id) — at 100 TB the four
-    * branches fuse into independent map stages over the same scan and
-    * one shuffle per aggregate, all keyed by doc_id/source. */
+    * surviving whitespace-token budget. The three per-doc metric
+    * operators compose as projections of one scan; only the exact-dup
+    * keep set joins back by doc_id, and each aggregate is one shuffle
+    * keyed by doc_id/source. */
   def curationE2e(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val q = TextAnalysis.qualityScore(d).select(col("doc_id"), col("quality_ok"))
-    val r = TextAnalysis.repetitionMetrics(d)
-      .select(col("doc_id"), col("repetition_ok"))
-    val t = TextAnalysis.tokenCounts(d).select(col("doc_id"), col("n_ws_tokens"))
+    // the three per-doc gates are projections of one scan, no joins
+    val gated = TextAnalysis.tokenCounts(
+      TextAnalysis.repetitionMetrics(TextAnalysis.qualityScore(d)))
     val keep = TextDedup.exactDedup(d)
       .select(col("keep_id").as("doc_id"), lit(true).as("_keep"))
     val surviving = col("quality_ok") && col("repetition_ok") &&
       coalesce(col("_keep"), lit(false))
-    d.select(col("doc_id"), col("source"))
-      .join(q, "doc_id").join(r, "doc_id").join(t, "doc_id")
+    gated.select(col("doc_id"), col("source"), col("quality_ok"),
+        col("repetition_ok"), col("n_ws_tokens"))
       .join(keep, Seq("doc_id"), "left")
       .groupBy(col("source"))
       .agg(
@@ -2611,23 +2571,18 @@ object LlmQueries {
     * literals, the same echo+verify split the EGARCH and trained-ANN
     * gates use. */
   /** Trained-model memo shared by the classifier and calibration
-    * entries, keyed like [[bpeCache]]: a dir regenerated in-process
+    * entries ([[FrameMemo.value]]): a dir regenerated in-process
     * retrains instead of serving stale weights. */
-  private val qualModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), graft.operators.QualityClassifier.Model]
-
   private def trainedQualModel(s: SparkSession, dir: String)
       : graft.operators.QualityClassifier.Model =
-    qualModelCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir,
-        graft.util.FrameMemo.dirFingerprint(dir)), {
-        val feats = graft.operators.QualityClassifier
-          .featureFrame(docs(s, dir), col("lang") === "en")
-        // 25 GD steps (two jobs within the kernel's size rule) are past
-        // the loss plateau on this corpus; the gate is exact at ANY
-        // count (it echoes whatever converged).
-        graft.operators.QualityClassifier.train(feats, iters = 25)
-      })
+    graft.util.FrameMemo.value(s, dir, "qual_model") {
+      val feats = graft.operators.QualityClassifier
+        .featureFrame(docs(s, dir), col("lang") === "en")
+      // 25 GD steps (two jobs within the kernel's size rule) are past
+      // the loss plateau on this corpus; the gate is exact at ANY
+      // count (it echoes whatever converged).
+      graft.operators.QualityClassifier.train(feats, iters = 25)
+    }
 
   def qualClassifier(s: SparkSession, dir: String): DataFrame = {
     val m = trainedQualModel(s, dir)

@@ -415,11 +415,15 @@ object SystemQueries {
     * [[graft.util.FrameMemo.dirFingerprint]], so a dir regenerated in
     * place gets a fresh store instead of the old one's rows. Every
     * call deletes the dir's superseded stores: its stores under another
-    * fingerprint and the path-only store of earlier layouts. */
+    * fingerprint and those of earlier layouts (path-only, or named
+    * without the `trades` prefix). The prefix keeps the store's name
+    * from starting with `_`, which Spark's file listing treats as
+    * hidden. */
   private[graft] def prunedStore(s: SparkSession, dir: String): String = {
     val name = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$StoreRoot/${name}_${graft.util.FrameMemo.dirFingerprint(dir)}"
-    val superseded = (java.util.regex.Pattern.quote(name) +
+    val path =
+      s"$StoreRoot/trades${name}_${graft.util.FrameMemo.dirFingerprint(dir)}"
+    val superseded = ("(trades)?" + java.util.regex.Pattern.quote(name) +
       "(_([0-9a-f]{32}|absent|unreadable))?").r
     Option(new java.io.File(StoreRoot).listFiles()).toSeq.flatten
       .filter(f => superseded.matches(f.getName) && f.getPath != path)

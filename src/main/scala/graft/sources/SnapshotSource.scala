@@ -113,17 +113,32 @@ private[graft] object SnapshotSource {
       sb.build().toBatch
     }
 
+    /** The reader factory of the batch last planned: Spark plans a
+      * micro-batch's partitions before it asks for the factory. A
+      * batch with no new files has no partitions, so no reader is ever
+      * asked of [[NoFiles]] — and no file-less parquet table is
+      * planned for it. */
+    @volatile private var factory: PartitionReaderFactory = NoFiles
+
     override def planInputPartitions(start: Offset,
         end: Offset): Array[InputPartition] = {
       val fs = filesBetween(start.asInstanceOf[VOffset].v,
         end.asInstanceOf[VOffset].v)
-      if (fs.isEmpty) Array.empty
-      else batchOver(fs).planInputPartitions()
+      if (fs.isEmpty) { factory = NoFiles; Array.empty }
+      else {
+        val batch = batchOver(fs)
+        factory = batch.createReaderFactory()
+        batch.planInputPartitions()
+      }
     }
 
-    override def createReaderFactory(): PartitionReaderFactory =
-      // the parquet reader factory closes over schema/conf, not the
-      // file list — one factory serves every batch's FilePartitions
-      batchOver(Seq.empty).createReaderFactory()
+    override def createReaderFactory(): PartitionReaderFactory = factory
+  }
+
+  private object NoFiles extends PartitionReaderFactory {
+    override def createReader(p: InputPartition)
+        : org.apache.spark.sql.connector.read.PartitionReader[
+          org.apache.spark.sql.catalyst.InternalRow] =
+      throw new IllegalStateException("a batch with no files has no partitions")
   }
 }

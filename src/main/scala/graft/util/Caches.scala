@@ -19,8 +19,8 @@ object Caches {
     * "signature table" materialization of a multi-branch pipeline.
     *
     * A plan some earlier call already materialized (the cache manager
-    * matches equal plans, e.g. the tf table BM25 and tf·idf share) is
-    * returned as is: no second persist, no second count. */
+    * matches equal plans) is returned as is: no second persist, no
+    * second count. */
   def materialize(df: DataFrame): DataFrame =
     if (df.storageLevel != StorageLevel.NONE) df
     else {
@@ -42,19 +42,22 @@ object Caches {
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Scale-adaptive repartition ahead of a per-row-heavy stage
-    * (explode, shingle hashing): when the frame plans NARROWER than
-    * half the session's parallelism — the harness corpus is ONE
-    * parquet file, i.e. one scan task — spread it by `key` so the
-    * explode and its map-side partial aggregation run wide instead of
-    * single-task (guide §2.5 input skew). An already-parallel input
+    * (explode, shingle hashing): when the frame's widest leaf scan is
+    * NARROWER than half the session's parallelism — the harness corpus
+    * is ONE parquet file, i.e. one scan task — spread it by `key` so
+    * the explode and its map-side partial aggregation run wide instead
+    * of single-task (guide §2.5 input skew). An already-parallel input
     * (any real multi-file table, and 100 TB in particular) passes
-    * through untouched, paying no exchange. The input must be
-    * exchange-free: `df.rdd.getNumPartitions` plans it physically, and
-    * under AQE that runs every upstream shuffle stage before the
-    * check. */
+    * through untouched, paying no exchange. The width is read from the
+    * leaves of the physical plan before any exchange is planned, so
+    * the check starts no Spark job whatever the input holds. */
   def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = df.sparkSession
-    if (df.rdd.getNumPartitions * 2 < spark.sparkContext.defaultParallelism)
+    val width = df.queryExecution.sparkPlan.collectLeaves().map {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.inputRDD.getNumPartitions
+      case leaf => leaf.execute().getNumPartitions
+    }.foldLeft(1)(math.max)
+    if (width * 2 < df.sparkSession.sparkContext.defaultParallelism)
       df.repartition(key)
     else df
   }

@@ -23,7 +23,11 @@ import org.apache.spark.sql.types.StructType
   * name) an application ever touches. Each table lives in a
   * [[TempDirs.scoped]] directory, deleted at JVM exit. On a cluster
   * the same pattern targets a job-scoped path on the shared
-  * filesystem (java.io.tmpdir here; local mode has no HDFS). */
+  * filesystem (java.io.tmpdir here; local mode has no HDFS).
+  *
+  * [[value]] keeps the trainers' driver-side results (models, a
+  * scalar) under the same key: values that are model-sized, never
+  * corpus-sized. */
 object FrameMemo {
 
   /** Path and written schema of each memo table. */
@@ -89,4 +93,26 @@ object FrameMemo {
       })
     s.read.schema(schema).parquet(path)
   }
+
+  /** A driver-side value built at most once per key. */
+  private final class Once(build: () => Any) { lazy val get: Any = build() }
+
+  /** Driver-side train-once values (trained models, a scalar). */
+  private val values = scala.collection.concurrent.TrieMap
+    .empty[(String, String, String, String), Once]
+
+  /** The driver-side value for (app, dir-version, name), built on first
+    * use: [[cached]]'s key for a model or a scalar rather than a
+    * table. The build runs once even under concurrent first callers
+    * (`getOrElseUpdate` may make two slots but returns one, whose
+    * lazy value the others wait on); a build that throws is retried by
+    * the next caller. */
+  def value[A](s: SparkSession, dir: String, name: String)(build: => A): A =
+    value(s, dir, name, dirFingerprint(dir))(build)
+
+  /** [[value]] under a fingerprint the caller already computed. */
+  def value[A](s: SparkSession, dir: String, name: String, fp: String)
+      (build: => A): A =
+    values.getOrElseUpdate((s.sparkContext.applicationId, dir, fp, name),
+      new Once(() => build)).get.asInstanceOf[A]
 }

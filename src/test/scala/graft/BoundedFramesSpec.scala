@@ -46,6 +46,14 @@ class BoundedFramesSpec extends AnyFunSuite {
     assert(jobs.isEmpty, s"${jobs.size} jobs over the local relation")
   }
 
+  test("Caches.widen over an input holding an exchange starts no Spark job") {
+    import org.apache.spark.sql.functions.col
+    val in = spark.range(0, 1000, 1, 1)
+      .groupBy((col("id") % 7).as("k")).count()
+    val jobs = TestSpark.jobsDuring(Caches.widen(in, col("k")))
+    assert(jobs.isEmpty, s"${jobs.size} jobs to read the input's width")
+  }
+
   /** The gated entries whose output is the collected bounded frame. */
   private val localOutputs = Seq("m3_egarch_fit", "m4_egarch_auto",
     "m5_egarch_forecast", "m6_egarch_spread", "m20_implied_vol",
@@ -59,6 +67,34 @@ class BoundedFramesSpec extends AnyFunSuite {
       assert(df.collect().nonEmpty, s"$name is empty at sf0.01")
       Harness.isolate(spark)
     }
+  }
+
+  /** Each entry whose text-operator barrier (TextDedup, TextAnalysis,
+    * TextRetrieval) was deleted or collected once, with the jobs its
+    * build and `collect()` ran at sf0.01 once it was. */
+  private val textOperatorJobs = Map(
+    "llm_incr_neardup" -> 5, "llm_ngram_jaccard" -> 12,
+    "llm_containment" -> 12, "llm_substr_dedup" -> 6,
+    "llm_simhash_pairs" -> 3, "llm_source_overlap" -> 7,
+    "llm_repetition" -> 1, "llm_curation_e2e" -> 7,
+    "llm_source_stats" -> 4, "llm_topk_ngrams" -> 2,
+    "llm_dup_ngram_frac" -> 4, "llm_lang_balance" -> 6,
+    "llm_tfidf_topterms" -> 8, "llm_unigram_logprob" -> 6,
+    "llm_dataset_card" -> 8, "llm_kn_bigram" -> 11,
+    "llm_heaps_fit" -> 8, "llm_ngram_novelty" -> 8,
+    "llm_colloc_pmi" -> 11, "llm_tfidf_cosine" -> 15)
+
+  test("at sf0.01 each text-operator entry without its barrier runs at most its measured jobs") {
+    Tables.names.foreach(Tables.load(spark, sf001, _))
+    val counts = textOperatorJobs.keys.toSeq.sorted.map { name =>
+      val jobs = TestSpark.jobsDuring(
+        SparkEntry.queries(name)(spark, sf001).collect())
+      Harness.isolate(spark)
+      name -> jobs.size
+    }
+    val over = counts.filter { case (name, n) => n > textOperatorJobs(name) }
+    assert(over.isEmpty, over.map { case (name, n) =>
+      s"$name: $n jobs > ${textOperatorJobs(name)}" }.mkString("; "))
   }
 
   test("m3_egarch_fit runs at most three jobs from build through action at sf0.01") {

@@ -67,17 +67,36 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("the retrieval warm-up persists each shared plan once") {
-    // bm25 and tf-idf materialize the same tf and postings plans: the
-    // second builder finds them cached and starts no job
+    // the bm25 and tf-idf ranked lists are FrameMemo side-tables: the
+    // first warm-up writes them, a second one and every consumer after
+    // it read the same files back and start no job
+    val d = graft.util.TempDirs.scoped("harness-retrieval")
+    spark.read.parquet(s"$dir/documents.parquet").write.parquet(s"$d/documents.parquet")
+    assert(TestSpark.jobsDuring(graft.queries.RetrievalQueries.warmMemos(spark, d)).nonEmpty)
+    val files = graft.queries.RetrievalQueries.bm25TopK(spark, d).inputFiles.toSet
+    assert(TestSpark.jobsDuring(graft.queries.RetrievalQueries.warmMemos(spark, d)).isEmpty,
+      "the second warm-up rebuilt a memo")
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsDuring {
+      again = graft.queries.RetrievalQueries.bm25TopK(spark, d)
+    }.isEmpty)
+    assert(files.nonEmpty && again.inputFiles.toSet == files)
+  }
+
+  test("bm25 and tf-idf build on one postings plan: no job before the action, the same matched docs") {
     import spark.implicits._
-    val docs = Seq((1L, "a b c"), (2L, "b c d"), (3L, "c d e"))
+    val docs = Seq((1L, "a b c"), (2L, "b c d"), (3L, "c d e"), (4L, "e f"))
       .toDF("doc_id", "text")
-    val terms = Seq((1, "b"), (1, "d")).toDF("query_id", "term")
-    try {
-      graft.operators.TextRetrieval.bm25TopK(docs, terms, 2)
-      val jobs = TestSpark.jobsDuring(
-        graft.operators.TextRetrieval.tfidfTopK(docs, terms, 2))
-      assert(jobs.size == 0, "tf-idf re-materialized")
-    } finally Harness.isolate(spark)
+    val terms = Seq((1, "b"), (1, "d"), (2, "e")).toDF("query_id", "term")
+    var bm25, tfidf: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsDuring {
+      bm25 = graft.operators.TextRetrieval.bm25TopK(docs, terms, 10)
+      tfidf = graft.operators.TextRetrieval.tfidfTopK(docs, terms, 10)
+    }
+    assert(jobs.isEmpty, s"${jobs.size} jobs while building")
+    def matched(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "doc_id").collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    assert(matched(bm25) == Set((1, 1L), (1, 2L), (1, 3L), (2, 3L), (2, 4L)))
+    assert(matched(tfidf) == matched(bm25))
   }
 }

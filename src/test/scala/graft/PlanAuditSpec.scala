@@ -77,9 +77,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // Legitimate multi-scans are joins of two projections of the same
     // table (trades x spot bars from the synthetic source, ANN corpus
     // x query subset, DPP dim + its filter subquery, the two
-    // verify-fetch sides of a candidate pair join) — all <= 4 today
-    // (llm_curation_e2e's staged composition is the maximum). A
-    // regression past that means a materialization barrier was lost
+    // verify-fetch sides of a candidate pair join) — all <= 4 today.
+    // A regression past that means a materialization barrier was lost
     // and a subtree is being recomputed per branch.
     for ((name, _) <- SparkEntry.queries if !driverSide(name)) {
       val perTable = planOf(name)
@@ -630,20 +629,20 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("driver-side audit: every .collect() in queries/ documents a bound") {
-    // Source-level twin of the plan audits above: a corpus-
-    // proportional `.collect()` is a driver OOM at 100 TB no matter
-    // what the executed plan looks like (round 12's LSH pair-set memo
-    // was exactly that — it is now a parquet side-table). Contract:
-    // each `.collect(` in the query layer must carry a
-    // `bounded-collect(<bound>)` annotation within the 8 preceding
-    // lines naming WHY the materialized set is O(1)-in-corpus
-    // (a literal limit, a calendar bound, a per-group row, a fixture
-    // harness). A new unannotated collect — bounded or not — fails
-    // here until its bound is written down next to it.
-    val qdir = new java.io.File("src/main/scala/graft/queries")
-    assert(qdir.isDirectory, s"missing ${qdir.getAbsolutePath}")
-    for (f <- qdir.listFiles().toSeq if f.getName.endsWith(".scala")) {
+  /** Source-level twin of the plan audits above: a corpus-
+    * proportional `.collect()` is a driver OOM at 100 TB no matter
+    * what the executed plan looks like (round 12's LSH pair-set memo
+    * was exactly that — it is now a parquet side-table). Contract:
+    * each `.collect(` in `layer` must carry a `bounded-collect(<bound>)`
+    * annotation within the 8 preceding lines naming WHY the
+    * materialized set is O(1)-in-corpus (a literal limit, a calendar
+    * bound, a per-group row, a fixture harness). A new unannotated
+    * collect — bounded or not — fails here until its bound is written
+    * down next to it. */
+  private def auditCollects(layer: String): Unit = {
+    val dir = new java.io.File(s"src/main/scala/graft/$layer")
+    assert(dir.isDirectory, s"missing ${dir.getAbsolutePath}")
+    for (f <- dir.listFiles().toSeq if f.getName.endsWith(".scala")) {
       val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
       // `.collect()` exactly: the zero-arg Dataset materializer.
       // (`Backfill.collect(pager, ...)` is the ingest driver loop, a
@@ -653,10 +652,18 @@ class PlanAuditSpec extends AnyFunSuite {
           lines(i).contains("Caches.local(")) {
         val window = lines.slice(math.max(0, i - 8), i + 1)
         assert(window.exists(_.contains("bounded-collect(")),
-          s"${f.getName}:${i + 1} has a .collect() without a " +
+          s"$layer/${f.getName}:${i + 1} has a .collect() without a " +
             "bounded-collect(<bound>) annotation in the preceding 8 lines")
       }
     }
+  }
+
+  test("driver-side audit: every .collect() in queries/ documents a bound") {
+    auditCollects("queries")
+  }
+
+  test("driver-side audit: every .collect() in operators/ documents a bound") {
+    auditCollects("operators")
   }
 
   test("source audit: only SnapshotRead reads parquet in graft.sources") {

@@ -362,6 +362,16 @@ class Round11Spec extends AnyFunSuite {
     val pairs = top.map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.contains(("alpha", "beta")))
     assert(first.getAs[Double]("pmi") >= top.last.getAs[Double]("pmi"))
+    // one bigram count table serves both models: every pair's PMI
+    // count is its Kneser-Ney count
+    def counts(df: org.apache.spark.sql.DataFrame, c: String) = df.collect()
+      .map(r => (r.getAs[String]("w1"), r.getAs[String]("w2")) -> r.getAs[Long](c))
+      .toMap
+    val pmi = counts(graft.operators.TextAnalysis.collocations(docs,
+      minCount = 1, k = 1000), "c_xy")
+    assert(pmi.size > pairs.size)
+    assert(pmi == counts(
+      graft.operators.TextAnalysis.kneserNeyBigrams(docs, k = 1000), "cb"))
   }
 
   // ---- J8 as-of tolerance ----

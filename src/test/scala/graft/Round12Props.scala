@@ -193,8 +193,12 @@ object Round12Props extends SparkProperties("Round12") {
         .collect()
         .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) ->
           r.getAs[Double]("jaccard")).toMap
+      // one posting-count kernel under both: with c common postings,
+      // ab = c/|A|, ba = c/|B| and jaccard = c/(|A|+|B|-c), so
+      // 1/jaccard = 1/ab + 1/ba - 1
       cont.keySet == jac.keySet && cont.forall { case (k, (ab, ba, mx)) =>
-        ab > 0 && ab <= 1 && ba > 0 && ba <= 1 && mx >= jac(k)
+        ab > 0 && ab <= 1 && ba > 0 && ba <= 1 && mx >= jac(k) &&
+          math.abs(1 / jac(k) - (1 / ab + 1 / ba - 1)) < 1e-9
       }
     }
 }

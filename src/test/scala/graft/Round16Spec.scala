@@ -133,9 +133,9 @@ class Round16Spec extends AnyFunSuite {
     writeDocs(corpusB)
     val bpeB = bpeRank1()
     val uniB = unigramPieces()
-    assert(bpeA != bpeB, "bpeCache served a stale model after regeneration")
+    assert(bpeA != bpeB, "the BPE memo served a stale model after regeneration")
     assert(uniA != uniB,
-      "unigramCache served a stale model after regeneration")
+      "the unigram memo served a stale model after regeneration")
   }
 
   test("cdc cut expression tolerates an empty document") {

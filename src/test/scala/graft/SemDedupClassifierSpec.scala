@@ -176,7 +176,7 @@ class SemDedupClassifierSpec extends AnyFunSuite {
     write(docs.withColumn("lang",
       when(col("lang") === "en", "xx").otherwise("en")))
     assert(echoed() != first,
-      "qualModelCache served weights trained on the old documents")
+      "the classifier memo served weights trained on the old documents")
   }
 
   test("classifier on empty input returns the zero model") {
