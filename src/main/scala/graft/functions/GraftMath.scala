@@ -31,10 +31,6 @@ object GraftMath {
   /** Standard normal CDF via erf. */
   def normCdf(x: Double): Double = 0.5 * (1.0 + erf(x / math.sqrt(2.0)))
 
-  /** Standard normal PDF. */
-  def normPdf(x: Double): Double =
-    math.exp(-(x * x) / 2.0) / math.sqrt(2.0 * math.Pi)
-
   /** DuckDB SQL spelling of [[erf]] applied to a column expression.
     * `x` must be a simple column reference (it is repeated). Must stay
     * op-for-op identical to the Scala body. */

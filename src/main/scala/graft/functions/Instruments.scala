@@ -13,10 +13,7 @@ final case class ParsedInstrument(
     underlying: String,
     expiry: LocalDate,
     strike: Double,
-    optionType: String) {
-  def isCall: Boolean = optionType == "C"
-  def isPut: Boolean = optionType == "P"
-}
+    optionType: String)
 
 /** Instrument-name parse/format (SURVEY §2.7 P1-P3), twice over:
   * pure Scala (driver-side validation, property tests) and columnar

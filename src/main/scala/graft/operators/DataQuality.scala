@@ -149,6 +149,7 @@ object DataQuality {
       .agg(min(col("gap_start")).as("_first"), max(col("gap_start")).as("_last"))
     val boundary = monthEdges
       .withColumn("gap_end",
+        // bounded-window(one row per calendar month: the month-edge table)
         lead(col("_first"), 1).over(Window.orderBy(col("_m"))))
       .filter(col("gap_end").isNotNull)
       .select(col("_last").as("gap_start"), col("gap_end"))

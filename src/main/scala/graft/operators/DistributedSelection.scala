@@ -203,6 +203,7 @@ object DistributedSelection {
         .withColumn("_gpid", spark_partition_id()))
     val subtot = ranged.groupBy(col("_gpid"))
       .agg(count(lit(1)).as("_ptot"))
+    // bounded-window(one subtotal per range partition)
     val wOff = Window.orderBy(col("_gpid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wAll = Window.orderBy(col("_gpid")).rowsBetween(

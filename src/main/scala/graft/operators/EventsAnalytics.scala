@@ -532,6 +532,7 @@ object EventsAnalytics {
         (col("_swb") / col("_nb").cast("double")
           - col("_swa") / col("_na").cast("double")).as("delta_b"))
       .withColumn("rk", row_number().over(
+        // bounded-window(nBoot rows (≤ 200): one per bootstrap replicate)
         Window.orderBy(col("delta_b"), col("b"))))
       // surviving-replicate count (a replicate whose arm got all-zero
       // weights is filtered above): the CI rank cutoffs must be
@@ -540,6 +541,7 @@ object EventsAnalytics {
       // The window is bounded by nBoot (≤200 rows), never
       // data-proportional.
       .withColumn("nl", count(lit(1)).over(
+        // bounded-window(nBoot rows (≤ 200): one per bootstrap replicate)
         Window.orderBy(col("delta_b"), col("b"))
           .rowsBetween(Window.unboundedPreceding,
             Window.unboundedFollowing)))
@@ -628,6 +630,7 @@ object EventsAnalytics {
     looks
       .withColumn("p_always_valid",
         min(expr("least(CAST(1 AS DOUBLE), 1.0 / lam)"))
+          // bounded-window(one row per calendar day: the look series)
           .over(Window.orderBy(col("day_ep"))
             .rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("day_ep"), col("n_a"), col("n_b"), col("delta"),
@@ -929,6 +932,7 @@ object EventsAnalytics {
     def dsumIf(v: String, c: Column) =
       sum(when(col("variant") === v, c).cast(createDecimalType(28, 6)))
         .cast("double")
+    // bounded-window(one row per segment: the per-segment test panel)
     val wRank = Window.orderBy(col("p_two"), col("segment"))
     val wRun = wRank.rowsBetween(Window.unboundedPreceding,
       Window.currentRow)
@@ -950,6 +954,7 @@ object EventsAnalytics {
       .withColumn("p_two", graft.util.Parity.roundTo(
         lit(1.0) - graft.functions.GraftColumns.erf(
           abs(col("t_stat")) / sqrt(lit(2.0))), 9))
+      // bounded-window(one row per segment: the per-segment test panel)
       .withColumn("m", count(lit(1)).over(Window.partitionBy()))
       .withColumn("rank_p", row_number().over(wRank))
       .withColumn("_raw", least(lit(1.0),
@@ -1063,6 +1068,7 @@ object EventsAnalytics {
     val epochDay = floor(unix_micros(col(tsCol)) / lit(86400000000L))
     val daily = events.groupBy(epochDay.as("day"))
       .agg(count(lit(1)).as("n_events"))
+    // bounded-window(one row per calendar day: the daily-count table)
     val w = Window.orderBy(col("day"))
       .rangeBetween(-7L, -1L)
     daily
@@ -1168,6 +1174,7 @@ object EventsAnalytics {
     val d18 = createDecimalType(18, 6)
     val daily = events.groupBy(epochDay.as("day"))
       .agg(count(lit(1)).as("n_events"))
+    // bounded-window(one row per calendar day: the daily-count table)
     val wAll = Window.partitionBy()
     val wRun = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1252,6 +1259,7 @@ object EventsAnalytics {
       .groupBy(col("u")).agg(count(lit(1)).as("active_days"))
     val hist = activeDays
       .groupBy(col("active_days")).agg(count(lit(1)).as("n_users"))
+    // bounded-window(distinct active-day counts (≤ days in the data))
     val wDesc = Window.orderBy(col("active_days").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy()
@@ -1348,6 +1356,7 @@ object EventsAnalytics {
         count(lit(1)).as("n_total"),
         count(when(col("churned"), 1)).as("n_churned"),
         count(when(!col("churned"), 1)).as("n_censored"))
+    // bounded-window(distinct lifetime durations (≤ days in the data))
     val wPrior = Window.orderBy(col("duration"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy(col("duration"))

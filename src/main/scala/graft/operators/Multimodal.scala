@@ -276,43 +276,20 @@ object Multimodal {
     * differs in at most 2 bands, so at least one band matches
     * exactly; two 8-bit bands would silently drop pairs with one
     * flipped bit in EACH band), verified by full 16-bit Hamming
-    * distance — the image-dedup shape of the MinHash-LSH pipeline,
-    * with popcount of XOR as the verify. Later joins exclude pairs an
-    * earlier band already found, so no dedup shuffle. The usual LSH
-    * caveat applies: a band value shared by a large fraction of the
-    * corpus makes that band's join quadratic — at production scale,
-    * widen the hash, not the verify (same rule the text SimHash
-    * chunks follow). */
+    * distance — the image-dedup shape of the MinHash-LSH pipeline
+    * ([[BandJoin]]), with popcount of XOR as the verify and the media
+    * type as an extra join key. The usual LSH caveat applies: a band
+    * value shared by a large fraction of the corpus makes that band's
+    * join quadratic — at production scale, widen the hash, not the
+    * verify (same rule the text SimHash chunks follow). */
   def phashPairs(hashes: DataFrame, maxHamming: Int = 2): DataFrame = {
     require(maxHamming <= 2, "3 bands over 16 bits guarantee radius 2")
-    // one row per doc, consumed by both sides of three self-joins —
-    // without the barrier the hash map and its input scan re-run 6x
-    val banded = graft.util.Caches.materialize(hashes.select(
-      col("media_type"), col("doc_id"), col("phash"),
-      expr("phash div 1024").as("b0"),
-      (expr("phash div 32") % 32).as("b1"),
-      (col("phash") % 32).as("b2")))
-    // each side aliased, so the media_type key resolves per side
-    def side(tag: String) = banded.select(
-      col("media_type"), col("doc_id").as(s"doc_$tag"),
-      col("phash").as(s"h_$tag"), col("b0").as(s"b0_$tag"),
-      col("b1").as(s"b1_$tag"), col("b2").as(s"b2_$tag")).as(tag)
-    val l = side("a")
-    val r = side("b")
-    val pair = col("doc_a") < col("doc_b")
-    def bandJoin(b: String, excl: Seq[String]) =
-      l.join(r, col("a.media_type") === col("b.media_type")
-        && col(s"${b}_a") === col(s"${b}_b") && pair
-        && excl.map(e => col(s"${e}_a") =!= col(s"${e}_b"))
-          .foldLeft(lit(true))(_ && _))
-        .select(col("a.media_type"), col("doc_a"), col("doc_b"),
-          col("h_a"), col("h_b"))
-    bandJoin("b0", Nil)
-      .union(bandJoin("b1", Seq("b0")))
-      .union(bandJoin("b2", Seq("b0", "b1")))
-      .withColumn("hamming", expr("bit_count(h_a ^ h_b)").cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("media_type"), col("doc_a"), col("doc_b"),
-        col("hamming"))
+    val bands = Seq(expr("phash div 1024"), expr("phash div 32") % 32,
+      col("phash") % 32)
+    BandJoin.pairs(hashes, None, "doc_id", bands, on = Seq("media_type"),
+      verify = Some(BandJoin.Verify("phash", "hamming",
+        TextDedup.hamming(_, _).cast("int"), _ <= maxHamming)))
+      .select(col("media_type"), col("id_a").as("doc_a"),
+        col("id_b").as("doc_b"), col("hamming"))
   }
 }

@@ -45,6 +45,7 @@ object SpotCorr {
   def rollingBeta(ticks: DataFrame, windowDays: Int = 7): DataFrame = {
     val d24 = org.apache.spark.sql.types.DataTypes.createDecimalType(24, 16)
     val aligned = alignedReturns(ticks)
+    // bounded-window(one row per aligned calendar day)
     val w = Window.orderBy(col("day"))
       .rangeBetween(-(windowDays - 1).toLong, 0L)
     val dbl = (c: org.apache.spark.sql.Column) => c.cast(d24).cast("double")

@@ -814,6 +814,7 @@ object TextAnalysis {
       .filter(length(col("ch")) > 0)
       .groupBy(col("ch"))
       .agg(count(lit(1)).as("cnt"))
+    // bounded-window(distinct characters: the alphabet)
     val ord = Window.orderBy(col("cnt").desc, col("ch"))
     counts
       .withColumn("rnk", row_number().over(ord).cast("long"))
@@ -933,6 +934,7 @@ object TextAnalysis {
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     val ranked = counts
       .withColumn("rnk",
+        // bounded-window(distinct words: the vocabulary, sublinear in the corpus)
         row_number().over(Window.orderBy(col("cnt").desc, col("w"))))
       .withColumn("n_vocab", count(lit(1)).over(Window.partitionBy()))
       .filter(col("rnk") <= topK)
@@ -994,6 +996,7 @@ object TextAnalysis {
       .crossJoin(broadcast(minmax))
       .select(bucketOf(col("_fd")).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("news"))
+    // bounded-window(nBuckets rows: the per-bucket token table)
     val wCum = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val points = tokPerBucket.join(firstPerBucket, Seq("b"), "left")
@@ -1177,9 +1180,12 @@ object TextAnalysis {
   }
 
   /** Add-one smoothing over the union vocab — shared text with the
-    * oracle (long + double literal promotes identically). */
-  val klQExpr: String = "(ce + 1.0) / (ns + v)"
-  val klPExpr: String = "(ct + 1.0) / (nt + v)"
+    * oracle. The count is cast to DOUBLE first: Spark types `1.0` as
+    * DECIMAL(2,1), so a long count plus it would make q and p
+    * DECIMAL(38,17) and round p / q to 6 decimals, while DuckDB
+    * computes all three in DOUBLE. */
+  val klQExpr: String = "(CAST(ce AS DOUBLE) + 1.0) / (ns + v)"
+  val klPExpr: String = "(CAST(ct AS DOUBLE) + 1.0) / (nt + v)"
 
   /** Collocation mining — top-k word bigrams by pointwise mutual
     * information over the bigram event space (PMI = ln(c_xy·N /

@@ -129,30 +129,13 @@ object TextDedup {
   val MinhashB: Seq[Long] = Seq(12345L, 1L, 362437L, 2531011L,
     1013904223L, 3L, 12820163L, 7L, 11L, 17L, 23L, 29L)
 
-  /** MinHash signature: k affine-permutation minima over the per-
-    * shingle 32-bit hashes (`hashesCol`: array<long>). The Column-HOF
-    * reference formulation — [[minhashNearDups]] computes the same k
-    * minima through the codegen'd
-    * [[graft.functions.MinhashSigs]] kernel (one array traversal for
-    * all k permutations instead of k interpreted-lambda passes, the
-    * measured hot spot of the pipeline at the sf1 decade). */
-  def minhashSignature(hashesCol: Column, k: Int): Seq[Column] =
-    (0 until k).map { s =>
-      array_min(transform(hashesCol,
-        h => (lit(MinhashA(s)) * h + lit(MinhashB(s))) % lit(MinhashP)))
-    }
-
   /** LSH bands: adjacent signature values concatenated in groups of
-    * `rowsPerBand`, prefixed with the band index so a single-key
-    * equi-join on the band value is sufficient. Two docs collide in a
-    * band iff all its minhashes match — P(collide) = J^rowsPerBand per
-    * band, so 4 rows/band keeps random pairs (J ~ 0.1) out of the
-    * candidate set while catching true near-dups (J >= 0.8) with
-    * probability >= 1-(1-0.8^4)^3 ~ 0.8. */
+    * `rowsPerBand`. Two docs collide in a band iff all its minhashes
+    * match — P(collide) = J^rowsPerBand per band, so 4 rows/band keeps
+    * random pairs (J ~ 0.1) out of the candidate set while catching
+    * true near-dups (J >= 0.8) with probability >= 1-(1-0.8^4)^3 ~ 0.8. */
   def bands(signature: Seq[Column], rowsPerBand: Int = 4): Seq[Column] =
-    signature.grouped(rowsPerBand).zipWithIndex.map { case (g, i) =>
-      concat_ws("|", lit(i.toString) +: g: _*)
-    }.toSeq
+    signature.grouped(rowsPerBand).map(g => concat_ws("|", g: _*)).toSeq
 
   /** Exact Jaccard of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -256,45 +239,14 @@ object TextDedup {
     * jaccard) with id_a < id_b and jaccard >= threshold; jaccard is
     * computed over the hash sets (collision probability ~ |S|²/2³³
     * per doc — immaterial, and the oracle mirrors the same sets).
-    *
-    * The corpus is persisted: it feeds three plan branches (band
-    * explode + both verify joins). At cluster scale this
-    * materialization is the standard "signature table" checkpoint of
-    * every LSH dedup pipeline. */
+    * Candidates come from [[BandJoin]] over the signature's bands. */
   def minhashNearDups(
       corpus: DataFrame,
       idCol: String = "doc_id",
       k: Int = 12,
-      threshold: Double = 0.5): DataFrame = {
-    val hashed = Caches.materialize(corpus)
-    // all k permutation minima in ONE codegen'd traversal per doc
-    // (the k-lambda Column formulation was the pipeline's measured
-    // hot spot at sf1), staged as an attribute so the band builder
-    // reads the array instead of re-evaluating the kernel per band
-    val sigd = hashed.select(col(idCol),
-      graft.functions.TextHashColumns.minhashSigs(col("hs"),
-        MinhashA.take(k), MinhashB.take(k), MinhashP).as("_sig"))
-    val sigCols = (0 until k).map(s => element_at(col("_sig"), s + 1))
-    // explode index-prefixed bands -> (id, band_val); candidate pairs
-    // are a self-equi-join on band_val (a shuffle keyed by bucket, the
-    // thing that makes this not-all-pairs at scale). Materialized:
-    // it feeds BOTH sides of the band self-join — without the barrier
-    // each side recomputes the full signature pass.
-    val exploded = Caches.materialize(sigd.select(col(idCol),
-      explode(array(bands(sigCols): _*)).as("band_val")))
-    val candidates = exploded.select(col(idCol).as("id_a"), col("band_val"))
-      .join(exploded.select(col(idCol).as("id_b"), col("band_val")), "band_val")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    // verify: fetch hash sets by id (no arrays through the bucket join)
-    val sh = hashed.select(col(idCol), col("hs"))
-    candidates
-      .join(sh.select(col(idCol).as("id_a"), col("hs").as("_hs_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("hs").as("_hs_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("_hs_a"), col("_hs_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    BandJoin.pairs(minhashSigned(corpus, k), None, idCol, minhashBands(k),
+      verify = Some(jaccardAtLeast(threshold)))
 
   /** Incremental MinHash near-dup probe — the production contract for
     * a GROWING corpus: an arriving batch is banded and probed against
@@ -302,35 +254,31 @@ object TextDedup {
     * re-examined (that work was done when those docs arrived), so the
     * per-batch cost is batch-proportional, not corpus-proportional —
     * the near-dup twin of [[incrementalDedup]]'s exact-hash probe.
-    * At 100 TB the old side's (band_val, id) index is a persisted
+    * At 100 TB the old side's (band, key, id) index is a persisted
     * table maintained across batches; here it is rebuilt per call
     * (the probe JOIN is the contract under test). Emits
     * (id_new, id_old, jaccard ≥ threshold). */
   def minhashProbe(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", k: Int = 12,
-      threshold: Double = 0.5): DataFrame = {
-    def explodeBands(df: DataFrame) = {
-      val sigd = df.select(col(idCol),
-        graft.functions.TextHashColumns.minhashSigs(col("hs"),
-          MinhashA.take(k), MinhashB.take(k), MinhashP).as("_sig"))
-      val sigCols = (0 until k).map(s => element_at(col("_sig"), s + 1))
-      sigd.select(col(idCol),
-        explode(array(bands(sigCols): _*)).as("band_val"))
-    }
-    val candidates = explodeBands(newDocs)
-      .select(col(idCol).as("id_new"), col("band_val"))
-      .join(explodeBands(oldDocs)
-        .select(col(idCol).as("id_old"), col("band_val")), "band_val")
-      .select(col("id_new"), col("id_old")).distinct()
-    candidates
-      .join(newDocs.select(col(idCol).as("id_new"), col("hs").as("_ha")),
-        "id_new")
-      .join(oldDocs.select(col(idCol).as("id_old"), col("hs").as("_hb")),
-        "id_old")
-      .select(col("id_new"), col("id_old"),
-        jaccard(col("_ha"), col("_hb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    BandJoin.pairs(minhashSigned(newDocs, k), Some(minhashSigned(oldDocs, k)),
+      idCol, minhashBands(k), verify = Some(jaccardAtLeast(threshold)))
+      .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
+        col("jaccard"))
+
+  /** `df` with all k permutation minima of `hs` staged as `_sig`, in
+    * ONE codegen'd traversal per doc (the k-lambda Column formulation
+    * was the pipeline's measured hot spot at sf1), so the band keys
+    * read the array instead of re-evaluating the kernel per band. */
+  private def minhashSigned(df: DataFrame, k: Int): DataFrame =
+    df.withColumn("_sig", graft.functions.TextHashColumns.minhashSigs(
+      col("hs"), MinhashA.take(k), MinhashB.take(k), MinhashP))
+
+  private def minhashBands(k: Int): Seq[Column] =
+    bands((1 to k).map(s => element_at(col("_sig"), s)))
+
+  private def jaccardAtLeast(threshold: Double) =
+    BandJoin.Verify("hs", "jaccard", jaccard, _ >= threshold)
 
   /** n-gram Jaccard near-dups via an inverted index: explode shingles,
     * drop "stop-shingles" whose document frequency exceeds `maxDf`
@@ -789,21 +737,10 @@ object TextDedup {
   def simhashPairs(sims: DataFrame, idCol: String = "doc_id",
       maxHamming: Int = 3): DataFrame = {
     val chunkBits = SimhashBits / 4
-    val chunkMask = (1L << chunkBits) - 1L
-    val chunks = (0 until 4).map { c =>
-      concat_ws(":", lit(c.toString),
-        shiftright(col("simhash"), c * chunkBits).bitwiseAND(lit(chunkMask)))
-    }
-    val exploded = sims.select(col(idCol), col("simhash"),
-      explode(array(chunks: _*)).as("chunk"))
-    exploded.select(col(idCol).as("id_a"), col("simhash").as("_h_a"), col("chunk"))
-      .join(exploded.select(col(idCol).as("id_b"),
-        col("simhash").as("_h_b"), col("chunk")), "chunk")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hamming(col("_h_a"), col("_h_b")).as("hamming_dist"))
-      .distinct()
-      .filter(col("hamming_dist") <= maxHamming)
+    val chunks = (0 until 4).map(c => shiftright(col("simhash"), c * chunkBits)
+      .bitwiseAND(lit((1L << chunkBits) - 1L)))
+    BandJoin.pairs(sims, None, idCol, chunks, verify = Some(BandJoin.Verify(
+      "simhash", "hamming_dist", hamming, _ <= maxHamming)))
   }
 
   /** Cross-source content overlap at word-5-gram granularity — which

@@ -107,30 +107,27 @@ object VectorOps {
         org.apache.spark.sql.GraftBridge.expression(vec),
         SignLshBands, SignLshBits))
 
-  /** Distinct candidate id pairs (id_a < id_b) from the LSH band
-    * bucket join — ids only; callers re-fetch vectors by id. Exposed
-    * so the candidate volume can be asserted directly in tests. */
+  /** Candidate id pairs (id_a < id_b, each once) from the LSH band
+    * bucket join — ids only. Exposed so the candidate volume can be
+    * asserted directly in tests. */
   def candidatePairs(corpus: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // materialized because the key table feeds both sides of the
-    // self-join and explode's implicit size>0 pushdown would
-    // re-inline the signature expression otherwise
-    val keyed = graft.util.Caches.materialize(corpus
-      .select(col(idCol), explode(signLshKeys(col(vecCol))).as("bucket")))
-    // eager snapshot (reliable checkpoint when a dir is configured) so
-    // the key cache can be dropped before returning — otherwise every
-    // call leaks a MEMORY_AND_DISK plan for the session's lifetime
-    // (the pairs themselves are ids only, far smaller than the
-    // exploded key table they replace)
-    try {
-      graft.util.Caches.snapshot(
-        keyed.select(col(idCol).as("id_a"), col("bucket"))
-          .join(keyed.select(col(idCol).as("id_b"), col("bucket")), "bucket")
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-          .distinct())
-    } finally keyed.unpersist()
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    BandJoin.pairs(signLshSigned(corpus, vecCol), None, idCol, signLshBands)
+
+  /** Every band-candidate pair with its exact cosine (fetched by id,
+    * see [[BandJoin.Verify]]), kept where `keep` holds. */
+  private def cosinePairs(corpus: DataFrame, idCol: String, vecCol: String,
+      keep: Column => Column): DataFrame =
+    BandJoin.pairs(signLshSigned(corpus, vecCol), None, idCol, signLshBands,
+      verify = Some(BandJoin.Verify(vecCol, "cos_sim", cosine, keep)))
+
+  /** The band keys staged as `_sig`: one kernel call per vector, read
+    * by every band key. */
+  private def signLshSigned(corpus: DataFrame, vecCol: String): DataFrame =
+    corpus.withColumn("_sig", signLshKeys(col(vecCol)))
+
+  private val signLshBands: Seq[Column] =
+    (1 to SignLshBands).map(b => element_at(col("_sig"), b))
 
   /** Exact brute-force cosine top-k: every corpus vector scored against
     * every query vector (queries broadcast), per-query top-k by
@@ -187,15 +184,8 @@ object VectorOps {
     * variant of the bucketed search — feeds the same cluster
     * assignment as the text near-dup pairs. */
   def cosineNearDups(corpus: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cand = candidatePairs(corpus, idCol, vecCol)
-    cand
-      .join(corpus.select(col(idCol).as("id_a"), col(vecCol).as("_va")), "id_a")
-      .join(corpus.select(col(idCol).as("id_b"), col(vecCol).as("_vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        cosine(col("_va"), col("_vb")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    cosinePairs(corpus, idCol, vecCol, _ >= threshold)
 
   // ---- trained IVF: seeded k-means coarse quantizer ----
 
@@ -452,15 +442,6 @@ object VectorOps {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
   }
-
-  /** Trained-IVF top-k: exact cosine over the probed candidate
-    * lists, deterministic ties. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nClusters: Int = 16, nprobe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    exactRerank(
-      ivfCandidates(corpus, queries, nClusters, nprobe, idCol, vecCol),
-      corpus, queries, k, idCol, vecCol)
 
   /** Recall@k audit of the trained IVF against exact brute force —
     * the acceptance gate run before trusting an ANN index at scale.
@@ -746,15 +727,6 @@ object VectorOps {
     } finally resid.unpersist()
   }
 
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nClusters: Int = 16, nprobe: Int = 2,
-      m: Int = 4, ksub: Int = 16, shortlist: Int = 32,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    exactRerank(
-      ivfPqShortlist(corpus, queries, nClusters, nprobe, m, ksub,
-        shortlist, idCol, vecCol),
-      corpus, queries, k, idCol, vecCol)
-
   /** LSH-bucketed nearest neighbour: per vector, the single most
     * cosine-similar other vector *among its pair-bucket candidates*
     * (ties broken by neighbor id). Vectors that share no bucket with
@@ -762,18 +734,15 @@ object VectorOps {
     * bucket join buys. */
   def bucketTop1(corpus: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // both directions in ONE pass over the candidate list (a union
-    // would read — and recompute — the candidate join twice)
-    val both = candidatePairs(corpus, idCol, vecCol)
+    // both directions in ONE pass over the scored pairs (cosine is
+    // symmetric bit for bit: the fold's products and the norms commute)
+    val pairs = cosinePairs(corpus, idCol, vecCol, _ => lit(true))
       .select(explode(array(
-        struct(col("id_a"), col("id_b")),
-        struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-    val pairs = both
-      .join(corpus.select(col(idCol).as("id_a"), col(vecCol).as("_va")), "id_a")
-      .join(corpus.select(col(idCol).as("id_b"), col(vecCol).as("_vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        cosine(col("_va"), col("_vb")).as("cos_sim"))
+        struct(col("id_a"), col("id_b"), col("cos_sim")),
+        struct(col("id_b").as("id_a"), col("id_a").as("id_b"),
+          col("cos_sim")))).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
+        col("p.cos_sim").as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id_a"))
       .orderBy(col("cos_sim").desc, col("id_b"))

@@ -143,6 +143,7 @@ object CoverageQueries {
         count(lit(1)).as("n_trades"))
     pages
       .withColumn("next_page_start_ep",
+        // bounded-window(one row per 15-minute page of the trade calendar)
         lead(col("page_start_ep"), 1).over(Window.orderBy(col("page"))))
       .withColumn("gap_ms",
         (col("next_page_start_ep") - col("page_end_ep")) * 1000L)
@@ -177,6 +178,7 @@ object CoverageQueries {
     val diffs = bars
       .select(col("bucket_start"))
       .withColumn("next_start",
+        // bounded-window(one row per 15-minute bar of the trade calendar)
         lead(col("bucket_start"), 1).over(Window.orderBy(col("bucket_start"))))
       .filter(col("next_start").isNotNull)
       .select((col("next_start") - col("bucket_start")).as("interval_s"))

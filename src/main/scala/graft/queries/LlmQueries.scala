@@ -3033,6 +3033,7 @@ object LlmQueries {
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     val tot = wf.agg(sum(col("freq")).cast("long").as("n"))
+    // bounded-window(distinct words: the vocabulary, sublinear in the corpus)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("freq").desc, col("word"))
     val sketchDf = sketch.toSeq.toDF("word", "est")

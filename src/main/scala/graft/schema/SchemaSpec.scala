@@ -85,17 +85,6 @@ object SchemaIntrospector {
     (missing ++ extra ++ mismatches).toSeq
   }
 
-  /** S10 against the live catalog (`system.columns` analog). A
-    * missing table raises the typed [[graft.SchemaError]] (reference
-    * `exceptions.py` SchemaError) — diffing against nothing would
-    * report every column as missing, which is a different claim. */
-  def diffCatalog(spark: SparkSession, spec: SchemaSpec): Seq[SchemaDiff] = {
-    if (!spark.catalog.tableExists(spec.qualified))
-      throw new graft.SchemaError(
-        s"table ${spec.qualified} does not exist")
-    diff(spec, spark.table(spec.qualified).schema)
-  }
-
   /** S9: initialize database + table from the spec. */
   def init(spark: SparkSession, spec: SchemaSpec): Unit = {
     spark.sql(spec.createDatabaseDdl)

@@ -73,9 +73,8 @@ class BoundedFramesSpec extends AnyFunSuite {
     * TextRetrieval) was deleted or collected once, with the jobs its
     * build and `collect()` ran at sf0.01 once it was. */
   private val textOperatorJobs = Map(
-    "llm_incr_neardup" -> 5, "llm_ngram_jaccard" -> 12,
-    "llm_containment" -> 12, "llm_substr_dedup" -> 6,
-    "llm_simhash_pairs" -> 3, "llm_source_overlap" -> 7,
+    "llm_ngram_jaccard" -> 12, "llm_containment" -> 12,
+    "llm_substr_dedup" -> 6, "llm_source_overlap" -> 7,
     "llm_repetition" -> 1, "llm_curation_e2e" -> 7,
     "llm_source_stats" -> 4, "llm_topk_ngrams" -> 2,
     "llm_dup_ngram_frac" -> 4, "llm_lang_balance" -> 6,
@@ -84,17 +83,33 @@ class BoundedFramesSpec extends AnyFunSuite {
     "llm_heaps_fit" -> 8, "llm_ngram_novelty" -> 8,
     "llm_colloc_pmi" -> 11, "llm_tfidf_cosine" -> 15)
 
-  test("at sf0.01 each text-operator entry without its barrier runs at most its measured jobs") {
+  /** Each near-duplicate entry on the LSH band-join kernel, with the
+    * jobs its build and `collect()` ran at sf0.01 on it. With a pair
+    * `distinct` and per-operator barriers they ran 5, 3, 7, 8, 9, 9. */
+  private val bandJoinJobs = Map(
+    "llm_incr_neardup" -> 4, "llm_simhash_pairs" -> 2,
+    "mm5_phash_neardup" -> 2, "llm_embed_neardup" -> 3,
+    "llm_embed_clusters" -> 4, "llm_ann_bucketed" -> 4)
+
+  private def assertJobsAtMost(pins: Map[String, Int]): Unit = {
     Tables.names.foreach(Tables.load(spark, sf001, _))
-    val counts = textOperatorJobs.keys.toSeq.sorted.map { name =>
+    val counts = pins.keys.toSeq.sorted.map { name =>
       val jobs = TestSpark.jobsDuring(
         SparkEntry.queries(name)(spark, sf001).collect())
       Harness.isolate(spark)
       name -> jobs.size
     }
-    val over = counts.filter { case (name, n) => n > textOperatorJobs(name) }
+    val over = counts.filter { case (name, n) => n > pins(name) }
     assert(over.isEmpty, over.map { case (name, n) =>
-      s"$name: $n jobs > ${textOperatorJobs(name)}" }.mkString("; "))
+      s"$name: $n jobs > ${pins(name)}" }.mkString("; "))
+  }
+
+  test("at sf0.01 each text-operator entry without its barrier runs at most its measured jobs") {
+    assertJobsAtMost(textOperatorJobs)
+  }
+
+  test("at sf0.01 each band-join entry runs at most its measured jobs") {
+    assertJobsAtMost(bandJoinJobs)
   }
 
   test("m3_egarch_fit runs at most three jobs from build through action at sf0.01") {

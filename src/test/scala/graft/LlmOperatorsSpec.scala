@@ -395,8 +395,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     }
     // IVF top-1 with nprobe=1 agrees with brute force inside clusters
     val queries = planted.filter(col("vec_id") < 3)
-    val ivf = VectorOps.ivfTopK(planted, queries, k = 1, nClusters = 3,
-      nprobe = 1).collect()
+    val ivf = VectorOps.exactRerank(VectorOps.ivfCandidates(planted, queries,
+      nClusters = 3, nprobe = 1), planted, queries, k = 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
     val brute = VectorOps.annTopK(planted, queries, k = 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
@@ -480,8 +480,9 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
     val queries = planted.filter(col("vec_id") < 3)
-    val ivfpq = VectorOps.ivfPqTopK(planted, queries, k = 1,
-      nClusters = 3, nprobe = 1, m = 3, ksub = 4, shortlist = 8).collect()
+    val ivfpq = VectorOps.exactRerank(VectorOps.ivfPqShortlist(planted,
+      queries, nClusters = 3, nprobe = 1, m = 3, ksub = 4, shortlist = 8),
+      planted, queries, k = 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
     val brute = VectorOps.annTopK(planted, queries, k = 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
@@ -490,7 +491,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val emb = graft.util.Tables.load(spark, "/root/testdata/sf0.001",
       "embeddings")
     val q8 = emb.filter(col("vec_id") < 8)
-    val pq = VectorOps.ivfPqTopK(emb, q8, k = 5).collect()
+    val pq = VectorOps.exactRerank(VectorOps.ivfPqShortlist(emb, q8), emb, q8,
+      k = 5).collect()
     val bf = VectorOps.annTopK(emb, q8, k = 5).collect()
     val bfScore = bf.map(r => (r.getAs[Long]("query_id"),
       r.getAs[Long]("neighbor_id")) -> r.getAs[Double]("cos_sim")).toMap

@@ -50,6 +50,19 @@ class PlanAuditSpec extends AnyFunSuite {
       nodes(df.queryExecution.executedPlan)
     })
 
+  /** [[nodes]] THROUGH materialization barriers: Caches.materialize
+    * hides upstream stages behind InMemoryTableScan, and an operator
+    * buried under a cache still runs. */
+  private def deepNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val more = p match {
+      case a: AdaptiveSparkPlanExec => deepNodes(a.executedPlan)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        deepNodes(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    Seq(p) ++ (p.children ++ p.subqueries).flatMap(deepNodes) ++ more
+  }
+
   /** Queries whose plan is driver-side work over a tiny materialized
     * result (system roundtrips) — no distributed plan to audit. */
   private val driverSide = Set(
@@ -587,19 +600,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // genuine 100× scale killer otherwise (the a21/ev8 class this
     // audit exists to keep extinct). Each allowlisted query names the
     // bound its global window rides; anything else fails.
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.WindowExec
-    // traverse THROUGH materialization barriers: Caches.materialize
-    // hides upstream stages behind InMemoryTableScan, and a global
-    // window buried under a cache is no less global
-    def deepNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val more = p match {
-        case a: AdaptiveSparkPlanExec => deepNodes(a.executedPlan)
-        case m: InMemoryTableScanExec => deepNodes(m.relation.cachedPlan)
-        case _ => Nil
-      }
-      Seq(p) ++ (p.children ++ p.subqueries).flatMap(deepNodes) ++ more
-    }
     val bounded = Map(
       "ev10_anomaly_days" -> "calendar-day series",
       "ev12_cusum_days" -> "calendar-day series",
@@ -629,34 +630,61 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  /** Source-level twin of the plan audits above: a corpus-
-    * proportional `.collect()` is a driver OOM at 100 TB no matter
-    * what the executed plan looks like (round 12's LSH pair-set memo
-    * was exactly that — it is now a parquet side-table). Contract:
-    * each `.collect(` in `layer` must carry a `bounded-collect(<bound>)`
-    * annotation within the 8 preceding lines naming WHY the
-    * materialized set is O(1)-in-corpus (a literal limit, a calendar
-    * bound, a per-group row, a fixture harness). A new unannotated
-    * collect — bounded or not — fails here until its bound is written
-    * down next to it. */
-  private def auditCollects(layer: String): Unit = {
+  test("band-join entries plan no aggregate over candidate pairs") {
+    // first band wins: the LSH band join emits each candidate pair once,
+    // so nothing may group by both ids of a pair (a pair `distinct`)
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.functions.{col, size}
+    val pairIds = Seq(Set("id_a", "id_b"), Set("id_new", "id_old"),
+      Set("doc_a", "doc_b"))
+    val corpus = graft.util.Tables.load(spark, dir, "documents")
+      .select(col("doc_id"), graft.functions.TextHashColumns
+        .ngramHashes(col("text"), 2).as("hs"))
+      .filter(size(col("hs")) > 0)
+    val plans = Seq("llm_incr_neardup", "llm_simhash_pairs",
+      "mm5_phash_neardup", "llm_embed_neardup", "llm_embed_clusters",
+      "llm_ann_bucketed").map(n => n -> planOf(n).head) :+
+      ("minhashNearDups" -> graft.operators.TextDedup.minhashNearDups(corpus)
+        .queryExecution.executedPlan)
+    for ((name, plan) <- plans) {
+      val byPair = deepNodes(plan).collect { case a: BaseAggregateExec
+        if pairIds.exists(_.subsetOf(a.groupingExpressions.map(_.name).toSet)) => a }
+      assert(byPair.isEmpty, s"$name aggregates over candidate pairs: $byPair")
+    }
+  }
+
+  /** Source-level twin of the plan audits above: each line of a file
+    * in `layer` that `sites` picks must carry a `<note>(<bound>)`
+    * annotation within the 8 preceding lines naming WHY what it gathers
+    * is O(1)-in-corpus (a literal limit, a calendar bound, a per-group
+    * row, a fixture harness). A new unannotated site — bounded or not —
+    * fails here until its bound is written down next to it. */
+  private def auditSites(layer: String, note: String, what: String)
+      (sites: Vector[String] => Seq[Int]): Unit = {
     val dir = new java.io.File(s"src/main/scala/graft/$layer")
     assert(dir.isDirectory, s"missing ${dir.getAbsolutePath}")
     for (f <- dir.listFiles().toSeq if f.getName.endsWith(".scala")) {
       val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
-      // `.collect()` exactly: the zero-arg Dataset materializer.
-      // (`Backfill.collect(pager, ...)` is the ingest driver loop, a
-      // different method that never holds a Dataset.) `Caches.local`
-      // collects its frame, so it carries the same annotation.
-      for (i <- lines.indices if lines(i).contains(".collect()") ||
-          lines(i).contains("Caches.local(")) {
+      for (i <- sites(lines)) {
         val window = lines.slice(math.max(0, i - 8), i + 1)
-        assert(window.exists(_.contains("bounded-collect(")),
-          s"$layer/${f.getName}:${i + 1} has a .collect() without a " +
-            "bounded-collect(<bound>) annotation in the preceding 8 lines")
+        assert(window.exists(_.contains(s"$note(")),
+          s"$layer/${f.getName}:${i + 1} has $what without a " +
+            s"$note(<bound>) annotation in the preceding 8 lines")
       }
     }
   }
+
+  /** A corpus-proportional `.collect()` is a driver OOM at 100 TB no
+    * matter what the executed plan looks like (round 12's LSH pair-set
+    * memo was exactly that — it is now a parquet side-table).
+    * `.collect()` exactly: the zero-arg Dataset materializer.
+    * (`Backfill.collect(pager, ...)` is the ingest driver loop, a
+    * different method that never holds a Dataset.) `Caches.local`
+    * collects its frame, so it carries the same annotation. */
+  private def auditCollects(layer: String): Unit =
+    auditSites(layer, "bounded-collect", "a .collect()")(lines =>
+      lines.indices.filter(i => lines(i).contains(".collect()") ||
+        lines(i).contains("Caches.local(")))
 
   test("driver-side audit: every .collect() in queries/ documents a bound") {
     auditCollects("queries")
@@ -664,6 +692,24 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("driver-side audit: every .collect() in operators/ documents a bound") {
     auditCollects("operators")
+  }
+
+  test("source audit: every unpartitioned window in operators/ and queries/ documents a bound") {
+    // a window spec with no partition key moves its whole input into
+    // ONE task: fine over a calendar series or a top-k table, a 100 TB
+    // killer over a corpus-sized one (the plan-level twin above only
+    // sees the entries the registry builds at sf0.001). Matched over
+    // the whole file, so a spec split as `Window` / `.orderBy(` across
+    // lines counts too; the site is the line the match ends on.
+    val global = ("""Window\s*\.\s*(orderBy|rowsBetween|rangeBetween)\(|""" +
+      """Window\s*\.\s*partitionBy\(\s*\)|\.over\(\s*\)""").r
+    val comment = (l: String) => Seq("*", "//", "/*").exists(l.trim.startsWith)
+    for (layer <- Seq("operators", "queries"))
+      auditSites(layer, "bounded-window", "an unpartitioned window") { lines =>
+        val code = lines.map(l => if (comment(l)) "" else l).mkString("\n")
+        global.findAllMatchIn(code).map(m =>
+          code.take(m.end).count(_ == '\n')).toSeq
+      }
   }
 
   test("source audit: only SnapshotRead reads parquet in graft.sources") {

@@ -767,6 +767,15 @@ class Round12Spec extends AnyFunSuite {
     assert(out("test")._1 > 0.3 && out("test")._2 > 0.3)
   }
 
+  test("klDrift's shared q, p and p / q are DOUBLE, as in the oracle") {
+    import graft.operators.TextAnalysis.{klPExpr, klQExpr}
+    val qp = Seq((3L, 5L, 40L, 70L, 12L)).toDF("ce", "ct", "ns", "nt", "v")
+      .select(expr(klQExpr).as("q"), expr(klPExpr).as("p"))
+      .select(col("q"), col("p"), (col("p") / col("q")).as("ratio"))
+    assert(qp.schema.map(_.dataType).forall(
+      _ == org.apache.spark.sql.types.DoubleType), qp.schema)
+  }
+
   // ---- S21: manifest-level data skipping ----
 
   test("manifest pruning drops files but never rows; no-stats files stay") {
